@@ -33,7 +33,7 @@ from swisscourtrulingcorpus_spark.extraction.composition import (  # noqa: F401
     extract_composition_udf,
 )
 from swisscourtrulingcorpus_spark.extraction.ids import (  # noqa: F401
-    uuid5_udf,
+    uuid5_col,
 )
 from swisscourtrulingcorpus_spark.extraction.lower_court import (  # noqa: F401
     extract_lower_court_udf,

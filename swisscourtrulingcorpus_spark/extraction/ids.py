@@ -32,58 +32,25 @@ def uuid5_py(name: str | None) -> str | None:
     return str(uuid.uuid5(_NAMESPACE, name))
 
 
-def uuid5_col(name: Column | str) -> Column:
-    """UUIDv5(namespace=UUID(int=0), name) as a JVM-side expression.
+def uuid5_col(name: str) -> Column:
+    """UUIDv5(namespace=UUID(int=0), name) over column ``name`` as a
+    JVM-side expression (body: :func:`uuid5_sql`)."""
+    return F.expr(uuid5_sql(f"`{name}`"))
+
+
+def uuid5_sql(expr: str) -> str:
+    """SQL text of UUIDv5(namespace=UUID(int=0), ``expr``).
 
     ``sha1`` emits 40 lowercase hex chars; the uuid is hex octets 0-15
     hyphenated 8-4-4-4-12, with hex char 13 (octet 6's high nibble)
     replaced by the version ``5`` and hex char 17 (octet 8's high
     nibble) re-coded to ``(nibble & 0x3) | 0x8`` — the RFC 4122
     variant-10 marker.  ``concat`` (not ``concat_ws``) so a NULL name
-    yields a NULL id, matching :func:`uuid5_py`.
-
-    String column names take the parsed-SQL twin (one py4j call instead
-    of ~127, analyzed-plan-identical — r12 session 2); Column inputs
-    keep the Column path below.
-    """
-    if isinstance(name, str) and name.isidentifier():
-        return F.expr(uuid5_sql(f"`{name}`"))
-    c = F.col(name) if isinstance(name, str) else name
-    h = F.sha1(F.concat(F.lit(bytes(16)), F.encode(c, "UTF-8")))
-    variant_nibble = F.lower(
-        F.conv(
-            (
-                F.conv(F.substring(h, 17, 1), 16, 10)
-                .cast("int")
-                .bitwiseAND(F.lit(3))
-                + F.lit(8)
-            ).cast("string"),
-            10,
-            16,
-        )
-    )
-    return F.concat(
-        F.substring(h, 1, 8),
-        F.lit("-"),
-        F.substring(h, 9, 4),
-        F.lit("-"),
-        F.lit("5"),
-        F.substring(h, 14, 3),
-        F.lit("-"),
-        variant_nibble,
-        F.substring(h, 18, 3),
-        F.lit("-"),
-        F.substring(h, 21, 12),
-    )
-
-
-def uuid5_sql(expr: str) -> str:
-    """SQL text of :func:`uuid5_col` over an expression string (r12,
-    session 2 — construction-cost twin; the Column form cost ~127 py4j
-    round trips per pipeline construction).  The sha1 text repeats per
-    reference exactly as the Column form's shared Column object embeds
-    as a repeated subtree; codegen CSE dedups the work at runtime in
-    both forms.  Keep in lockstep with :func:`uuid5_col`."""
+    yields a NULL id, matching :func:`uuid5_py`.  Parsed SQL text is
+    one py4j call per construction (r12, session 2).  The sha1 text
+    repeats per reference; codegen CSE evaluates it once per row.  The
+    pipeline plans that use it are pinned in
+    tests/fixtures/plan_fingerprints.json."""
     h = f"sha1(concat(X'{'00' * 16}', encode({expr}, 'UTF-8')))"
     variant_nibble = (
         f"lower(conv(cast(((cast(conv(substring({h}, 17, 1), 16, 10) as int)"
@@ -94,8 +61,3 @@ def uuid5_sql(expr: str) -> str:
         f"substring({h}, 14, 3), '-', {variant_nibble}, "
         f"substring({h}, 18, 3), '-', substring({h}, 21, 12))"
     )
-
-
-# Former pandas_udf name, kept for call-site/API continuity — the
-# expression form is a drop-in (same call shape, same output column).
-uuid5_udf = uuid5_col

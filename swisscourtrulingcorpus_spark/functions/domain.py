@@ -57,7 +57,7 @@ def year_of(col: Column | str) -> Column:
     return F.year(c)
 
 
-def normalize_binary_judgment(judgments: Column | str) -> Column:
+def normalize_binary_judgment(judgments: str) -> Column:
     """F9 ``convert_to_binary_judgments`` (`sql_select_utils.py:361-410`)
     over an ``array<string>`` of judgment outcomes:
 
@@ -72,36 +72,17 @@ def normalize_binary_judgment(judgments: Column | str) -> Column:
     then a CASE on the surviving set.  This is the highest-value oracle
     target per SURVEY.md §7.2 step 4 (subtle set semantics).
 
-    String column names take the parsed-SQL twin (one py4j call instead
-    of ~100, analyzed-plan-identical — r12 session 2); Column inputs
-    keep the Column path below.
+    Body: :func:`normalize_binary_judgment_sql` — parsed SQL text is
+    one py4j call per construction (r12 session 2).
     """
-    if isinstance(judgments, str) and judgments.isidentifier():
-        return F.expr(normalize_binary_judgment_sql(f"`{judgments}`"))
-    j = F.col(judgments) if isinstance(judgments, str) else judgments
-    stripped = F.array_distinct(
-        F.transform(j, lambda x: F.regexp_replace(x, "^partial_", ""))
-    )
-    substantive = F.array_remove(
-        F.array_remove(F.array_remove(stripped, "write_off"), "unification"),
-        "inadmissible",
-    )
-    has_app = F.array_contains(substantive, "approval")
-    has_dis = F.array_contains(substantive, "dismissal")
-    return (
-        F.when(j.isNull() | (F.size(j) == 0), F.lit(None).cast("string"))
-        .when(has_app & has_dis, F.lit(None).cast("string"))
-        .when(F.size(substantive) == 1, F.element_at(substantive, 1))
-        .when(F.size(substantive) == 0, F.lit(None).cast("string"))
-        .otherwise(F.lit(None).cast("string"))
-    )
+    return F.expr(normalize_binary_judgment_sql(f"`{judgments}`"))
 
 
 def normalize_binary_judgment_sql(expr: str) -> str:
     """SQL text of :func:`normalize_binary_judgment` over an expression
-    string (r12, session 2 — construction-cost twin; keep in lockstep
-    with the Column form above, including its repeated embedding of the
-    ``substantive`` subtree at each reference)."""
+    string.  The ``substantive`` subtree repeats at each reference;
+    the plans that use it are pinned in
+    tests/fixtures/plan_fingerprints.json."""
     stripped = (
         f"array_distinct(transform({expr}, "
         f"x -> regexp_replace(x, '^partial_', '')))"

@@ -92,23 +92,24 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     return word_shingles_from_words(F.split(normalize_ws(col), " "), k)
 
 
-# --- SQL-text twins (r11 optimization round) ---------------------------
+# --- SQL-text forms (r11 optimization round) ---------------------------
 #
-# Driver-side plan CONSTRUCTION is part of every benched query, and
-# profiling showed it is dominated by py4j round trips: each Column
-# operation is one socket round trip (~0.5 ms), and the lambda-bearing
-# higher-order functions cost several each — minhash_signatures alone
-# issued ~1.4k round trips ≈ 0.6 s per construction.  The twins below
-# build the SAME expressions as ONE SQL string, parsed JVM-side in a
-# single call via selectExpr/F.expr.  The resulting analyzed plans are
-# identical to the Column forms (verified by hash-identical gate
-# results), so execution is untouched — only driver-side build cost
-# drops.  Keep each twin textually in sync with its Column sibling.
+# Each Column operation is one py4j round trip (~0.5 ms; minhash
+# signatures alone issued ~1.4k per construction).  The forms below
+# build the SAME expressions as ONE SQL string parsed JVM-side; the
+# gates using either form are pinned by tests/fixtures/plan_fingerprints.json.
 
 
 def normalize_ws_sql(col_expr: str) -> str:
     """SQL text of :func:`normalize_ws` over an expression string."""
     return f"trim(regexp_replace(lower({col_expr}), '\\\\s+', ' '))"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL single-quoted string literal.  Backslash and
+    quote are backslash-escaped, so any Python string splices into
+    parsed SQL text as exactly itself (``d'un`` stays one literal)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _safe_seed(seed) -> str:

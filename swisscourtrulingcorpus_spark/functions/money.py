@@ -34,12 +34,10 @@ def charge() -> Column:
     return disc_price() * (one() + dec2("l_tax"))
 
 
-# --- SQL-text twins (r12 optimization round) ---------------------------
+# --- SQL-text forms (r12 optimization round) ---------------------------
 #
-# Same rationale as functions/hashing.py: the Column forms cost one py4j
-# round trip per operation and sit on bench-timed construction paths;
-# one parsed string builds the identical expression tree in one call.
-# Keep each twin textually in sync with its Column sibling above.
+# One parsed string per expression instead of one py4j round trip per
+# operation (see functions/hashing.py); same expression trees as above.
 
 
 def dec2_sql(expr: str) -> str:

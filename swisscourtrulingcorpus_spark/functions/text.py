@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from swisscourtrulingcorpus_spark.functions.hashing import sql_str
+
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic (E1 analogue: the reference uses a fastText model,
 # `scrc/preprocessors/language_identifier.py:18-58`; at 100 TB a
@@ -46,16 +48,10 @@ def clean_text_col(col: Column | str) -> Column:
     return F.trim(c)
 
 
-def token_count_ws(col: Column | str) -> Column:
-    """Whitespace token count (num_tokens analogue, SURVEY.md §1.2).
-
-    String column names take the parsed-SQL twin (one py4j call,
-    analyzed-plan-identical — r12 session 2); Column inputs keep the
-    Column path."""
-    if isinstance(col, str) and col.isidentifier():
-        return F.expr(token_count_ws_sql(f"`{col}`"))
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.split(F.trim(c), r"\s+"))
+def token_count_ws(col: str) -> Column:
+    """Whitespace token count (num_tokens analogue, SURVEY.md §1.2) of
+    column ``col`` (body: :func:`token_count_ws_sql`)."""
+    return F.expr(token_count_ws_sql(f"`{col}`"))
 
 
 # BPE-ish pre-tokenizer: words | single digits | single punctuation —
@@ -95,24 +91,16 @@ def quality_features(col: Column | str) -> dict[str, Column]:
     }
 
 
-def stopword_hits(col: Column | str, lang: str) -> Column:
-    """Count of words belonging to ``lang``'s stopword list."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(F.lower(c)), r"\s+")
-    stops = STOPWORDS[lang]
-    return F.size(F.filter(words, lambda w: w.isin(*[F.lit(s) for s in stops])))
-
-
 def token_count_ws_sql(col_expr: str) -> str:
-    """SQL text of :func:`token_count_ws` over an expression string
-    (r12, session 2 — construction-cost twin, same technique as
-    functions/hashing.py; keep in lockstep with the Column form)."""
+    """SQL text of the whitespace token count over an expression string
+    (parsed SQL text: one py4j call per construction, r12 session 2)."""
     return f"size(split(trim({col_expr}), '\\\\s+'))"
 
 
 def stopword_hits_sql(col_expr: str, lang: str) -> str:
-    """SQL text of :func:`stopword_hits` over an expression string."""
-    stops = ", ".join(f"'{s}'" for s in STOPWORDS[lang])
+    """SQL text counting the words of ``col_expr`` in ``lang``'s
+    stopword list."""
+    stops = ", ".join(sql_str(s) for s in STOPWORDS[lang])
     return (
         f"size(filter(split(trim(lower({col_expr})), '\\\\s+'), "
         f"w -> w IN ({stops})))"
@@ -121,13 +109,10 @@ def stopword_hits_sql(col_expr: str, lang: str) -> str:
 
 def language_id_score_sql(col_expr: str) -> str:
     """SQL text of :func:`language_id_score` over an expression string.
-    Mirrors the Column form exactly — including its re-expansion of
-    every per-language hit expression at each reference (the Column
-    object is one Python value but embeds as a repeated subtree;
+    Each per-language hit expression is re-expanded at every reference;
     codegen-level common-subexpression elimination dedups the work at
-    runtime in both forms).  Analyzed-plan identity with the Column
-    form is pinned by the pipeline fingerprint diff recorded in
-    OPTIMIZATION_r12.md and by tests/test_round12_ops.py."""
+    runtime.  The pipeline plans that use it are pinned in
+    tests/fixtures/plan_fingerprints.json."""
     langs = sorted(STOPWORDS)
     hits = {lang: stopword_hits_sql(col_expr, lang) for lang in langs}
     max_hits = "greatest(" + ", ".join(hits[lang] for lang in langs) + ")"
@@ -140,12 +125,13 @@ def language_id_score_sql(col_expr: str) -> str:
     branches = [
         f"WHEN (({max_hits} = 0) OR ({n_at_max} > 1)) THEN 'und'"
     ] + [
-        f"WHEN ({hits[lang]} = {max_hits}) THEN '{lang}'" for lang in langs
+        f"WHEN ({hits[lang]} = {max_hits}) THEN {sql_str(lang)}"
+        for lang in langs
     ]
     return "CASE " + " ".join(branches) + " ELSE 'und' END"
 
 
-def language_id_score(col: Column | str) -> Column:
+def language_id_score(col: str) -> Column:
     """Heuristic language ID: argmax over per-language stopword hit
     counts; zero-hit or tied docs -> 'und' (undetermined), mirroring the
     reference's language_id = -1 unknown state (`language_identifier.py:24`).
@@ -164,23 +150,10 @@ def language_id_score(col: Column | str) -> Column:
     tie-break semantics: first language in alphabetical order wins the
     argmax, but a tie for the max yields 'und'.
 
-    String column names take the parsed-SQL twin (one py4j call instead
-    of ~470, analyzed-plan-identical — r12 session 2); Column inputs
-    keep the Column path below.
+    Body: :func:`language_id_score_sql` — parsed SQL text is one py4j
+    call per construction (r12 session 2).
     """
-    if isinstance(col, str) and col.isidentifier():
-        return F.expr(language_id_score_sql(f"`{col}`"))
-    langs = sorted(STOPWORDS)
-    hits = {lang: stopword_hits(col, lang) for lang in langs}
-    max_hits = F.greatest(*[hits[lang] for lang in langs])
-    n_at_max = sum(
-        [F.when(hits[lang] == max_hits, 1).otherwise(0) for lang in langs],
-        F.lit(0),
-    )
-    expr = F.when((max_hits == 0) | (n_at_max > 1), F.lit("und"))
-    for lang in langs:
-        expr = expr.when(hits[lang] == max_hits, F.lit(lang))
-    return expr.otherwise(F.lit("und"))
+    return F.expr(language_id_score_sql(f"`{col}`"))
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,6 @@ from swisscourtrulingcorpus_spark.operators.dedup import (  # noqa: F401
     minhash_signatures,
     minhash_lsh_candidates,
     simhash64,
-    ngram_jaccard_pairs,
 )
 from swisscourtrulingcorpus_spark.operators.similarity import (  # noqa: F401
     cosine_topk_bruteforce,

@@ -112,17 +112,6 @@ def _shingle_sets(
     )
 
 
-def _shingled(
-    df: DataFrame, text_col: str, id_col: str, k: int, spread: bool = False
-) -> DataFrame:
-    """One row per (doc, distinct shingle). The explode happens AFTER
-    projecting away the document text, so the wide column never
-    shuffles."""
-    return _shingle_sets(df, text_col, id_col, k, spread=spread).select(
-        id_col, F.explode("__sh").alias("shingle")
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str,
@@ -461,8 +450,8 @@ def _minhash_signatures_select(
 ) -> str:
     """Whole-query SQL text of :func:`minhash_signatures` over a
     FROM-able table expression (r12, session 2 — see
-    :func:`ngram_jaccard_pairs_sql` for the why; plan equality is
-    pinned by tests/test_sql_construction.py)."""
+    :func:`ngram_jaccard_pairs_sql` for the why; gate plans pinned in
+    tests/fixtures/plan_fingerprints.json)."""
     norm = normalize_ws_sql(f"`{text_col}`")
     sh = word_shingles_from_words_sql("__w", k)
     n_seeds = (num_hashes + 3) // 4
@@ -523,8 +512,8 @@ def minhash_lsh_candidates_sql(
     spread_partitions: int | None = None,
 ) -> str:
     """Whole-query SQL text of :func:`minhash_lsh_candidates` (r12,
-    session 2; plan equality pinned by
-    tests/test_sql_construction.py)."""
+    session 2; the gate's plan is pinned in
+    tests/fixtures/plan_fingerprints.json)."""
     sig = _minhash_signatures_select(
         table, text_col, id_col, k, num_hashes, spread_partitions
     )
@@ -548,8 +537,8 @@ def minhash_dedup_groups_sql(
     spread_partitions: int | None = None,
 ) -> str:
     """Whole-query SQL text of :func:`minhash_dedup_groups` (r12,
-    session 2; plan equality pinned by
-    tests/test_sql_construction.py)."""
+    session 2; the gate's plan is pinned in
+    tests/fixtures/plan_fingerprints.json)."""
     sig = _minhash_signatures_select(
         table, text_col, id_col, k, num_hashes, spread_partitions
     )
@@ -793,160 +782,6 @@ def simhash_hamming_pairs(
     return pairs.withColumn("hamming", F.col("hamming").cast("bigint"))
 
 
-def contamination_check(
-    eval_df: DataFrame,
-    train_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 5,
-    spread: bool = False,
-) -> DataFrame:
-    """Test-set decontamination: per eval doc, how many of its distinct
-    k-gram shingles also occur ANYWHERE in the train corpus (the
-    standard train/test overlap check for LLM data pipelines).
-
-    Shingles are joined on their 32-bit md5 hash, not the raw string —
-    at 100 TB the shuffled keys are 8 bytes instead of ~50-byte
-    n-grams.  A hash collision can count one extra shared shingle per
-    ~4B distinct-pair comparisons; it is deterministic and identical in
-    the SQL oracle (same md5), so parity holds.  Output: id, n_shared,
-    n_total, contamination = n_shared / n_total (int/int division —
-    bit-identical across engines).
-
-    Plan: ONE eval shingle scan and one train shingle scan.  The train
-    side is distinct on the hash, so a LEFT join cannot fan out eval
-    rows — total and shared counts come from the same aggregation
-    (``count(*)`` vs ``count(__hit)``), with no second eval scan and no
-    totals⋈shared re-join.  Both shuffles move 8-byte keys only.
-    """
-    ev = _shingled(eval_df, text_col, id_col, k, spread=spread).selectExpr(
-        f"`{id_col}`", f"{h32_sql('shingle')} AS __h"
-    )
-    tr = (
-        _shingled(train_df, text_col, id_col, k, spread=spread)
-        .selectExpr(f"{h32_sql('shingle')} AS __h")
-        .distinct()
-        .selectExpr("*", "1 AS __hit")
-    )
-    return (
-        ev.join(tr, on="__h", how="left")
-        .groupBy(id_col)
-        .agg(
-            F.expr("count(__hit) AS n_shared"),
-            F.expr("count(1) AS n_total"),
-        )
-        .selectExpr(
-            f"`{id_col}`",
-            "n_shared",
-            "n_total",
-            "(n_shared / n_total) AS contamination",
-        )
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.2,
-    max_doc_freq: int = 100,
-    spread: bool = False,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs sharing >= 1 rare shingle.
-
-    Inverted-index self-join: explode distinct shingles, drop shingles
-    appearing in more than ``max_doc_freq`` docs (stop-shingle removal —
-    without it one ubiquitous shingle makes the join quadratic), join on
-    shingle, count shared, Jaccard = shared / (|A| + |B| - shared).
-
-    The per-doc shingle-set size is computed map-side (``size(__sh)``)
-    and carried THROUGH the explode, so the pair aggregation groups on
-    (id_a, id_b, n_a, n_b) and emits Jaccard directly — no size lookup
-    joins after the self-join (two fewer joins than the naive plan).
-
-    The inverted index is keyed on the 32-bit md5 hash of the shingle,
-    not the string: the shuffled/joined key is 8 bytes instead of a
-    ~20-byte n-gram, and the self-join compares longs.  The oracle
-    hashes identically (same md5 windows), so a collision — which would
-    merge two shingles' postings — is reproduced bit-for-bit there.
-
-    r11 optimization: the doc-frequency filter is a COUNT WINDOW over
-    the postings' __h Exchange instead of a separate groupBy+join.  The
-    r10 groupBy formulation intended one shared Exchange, but column
-    pruning narrowed the aggregation's subtree (only __h survives below
-    its Exchange) while the join sides kept (doc_id, n_sh, __h) — the
-    subtrees no longer canonicalized equal, so NOTHING was reused and
-    the scan + tokenize + shingle + md5 chain ran FOUR times (plan
-    evidence: plans/r11/ngram_jaccard_pairs_before.txt, four separate
-    `Scan parquet` subtrees).  With the window, the postings subtree is
-    defined ONCE; the self-join's two sides canonicalize identically
-    (the Window also blocks non-partition-key predicate pushdown, so
-    the join's isnotnull(id) filters stay ABOVE the shared Exchange)
-    and the second side becomes a ReusedExchange — one scan, one
-    tokenize pass, one shuffle of 24-byte posting rows
-    (plans/r11/ngram_jaccard_pairs_after.txt).  Trade-off, documented:
-    WindowExec buffers one bucket (= one shingle hash's postings) per
-    group; buckets above ``max_doc_freq`` are dropped right after
-    counting, and a hot stop-shingle bucket spills to disk rather than
-    OOM — far cheaper at any scale than re-reading and re-tokenizing
-    the corpus three extra times.
-    """
-    from pyspark.sql import Window
-
-    posts = (
-        _shingle_sets(df, text_col, id_col, k, drop_empty=True, spread=spread)
-        .selectExpr(
-            f"`{id_col}`",
-            "size(__sh) AS n_sh",
-            "explode(__sh) AS shingle",
-        )
-        .selectExpr(f"`{id_col}`", "n_sh", f"{h32_sql('shingle')} AS __h")
-        .repartition(F.col("__h"))
-    )
-    # Hot-bucket buffering (VERDICT r11 item 4, guide §2.5): the count
-    # window buffers one __h bucket (sort + WindowExec group buffer)
-    # before the __df filter can drop it, so a stop-shingle shared by
-    # a large corpus fraction spills its bucket to disk before being
-    # discarded.  Two bounded-buffer guards were built and A/B'd in
-    # r12, and both REJECTED on measurement (guide §1.1: the "ideal"
-    # plan lost to the empirical loop; OPTIMIZATION_r12.md §4, plans in
-    # plans/r12/ngram_jaccard_pairs_guard*.txt):
-    # - broadcast anti-join of over-threshold keys (rank probe off the
-    #   same exchange): adds a blocking stage + broadcast before the
-    #   pair join can start — 1.50 -> 2.05 s at sf0.1;
-    # - WindowGroupLimit cap (row_number <= max_doc_freq + 1 filter
-    #   below this count window; identical keep/drop set): bounds
-    #   every buffer at 101 rows but adds a second non-codegen window
-    #   pass on BOTH self-join sides — 1.47 -> 1.77 s at sf0.1.
-    # The uncapped count window stays: WindowExec spills (never OOMs)
-    # and the hot bucket is read/written once, which both measured
-    # guards exceeded in steady-state cost.  Revisit only with
-    # evidence of real stop-shingle spill at production scale.
-    rare = (
-        posts.selectExpr("*", "count(1) OVER (PARTITION BY __h) AS __df")
-        .where(f"__df <= {int(max_doc_freq)}")
-        .select(id_col, "n_sh", "__h")
-    )
-
-    a = rare.selectExpr(f"`{id_col}` AS id_a", "n_sh AS n_a", "__h")
-    b = rare.selectExpr(f"`{id_col}` AS id_b", "n_sh AS n_b", "__h")
-    return (
-        a.join(b, on="__h")
-        .where("id_a < id_b")
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.expr("count(1) AS shared"))
-        .selectExpr(
-            "id_a",
-            "id_b",
-            # int/int division -> identical double in Spark and DuckDB;
-            # no round() (engines' rounding of doubles differs).
-            "(shared / (n_a + n_b - shared)) AS jaccard",
-        )
-        .where(f"jaccard >= {threshold!r}D")
-    )
-
-
 def ngram_jaccard_pairs_sql(
     table: str,
     text_col: str,
@@ -956,18 +791,32 @@ def ngram_jaccard_pairs_sql(
     max_doc_freq: int = 100,
     spread_partitions: int | None = None,
 ) -> str:
-    """Whole-query SQL text of :func:`ngram_jaccard_pairs` over a
-    FROM-able table expression (r12, session 2) — ONE parsed statement
-    instead of ~250 py4j round trips of chained-DataFrame construction
-    (guide §1; the bench times construction 3× per query).  Keep in
-    lockstep with the DataFrame form above: the optimized plans are
-    asserted string-identical by
-    tests/test_sql_construction.py::test_sql_twin_plans_identical, so
-    the plan-shape guarantees documented there (single postings scan,
-    ReusedExchange on the self-join, count-window doc-frequency filter)
-    carry over unchanged.  ``spread_partitions`` is the SQL analogue of
-    ``spread=True`` (REPARTITION hint; pass
-    ``sc.defaultParallelism``)."""
+    """Exact n-gram Jaccard similarity for pairs sharing >= 1 rare
+    shingle, as ONE parsed statement over a FROM-able table expression
+    (r12, session 2: ~250 fewer py4j round trips than chained-DataFrame
+    construction).  The gate's optimized plan is pinned in
+    tests/fixtures/plan_fingerprints.json.  ``spread_partitions`` adds a
+    REPARTITION hint on the id (pass ``sc.defaultParallelism``).
+
+    Inverted-index self-join: explode distinct shingles, drop shingles
+    appearing in more than ``max_doc_freq`` docs (stop-shingle removal —
+    without it one ubiquitous shingle makes the join quadratic), join on
+    shingle, count shared, Jaccard = shared / (|A| + |B| - shared).
+    The per-doc set size is computed map-side (``size(__sh)``) and
+    carried THROUGH the explode, so the pair aggregation emits Jaccard
+    directly — no size lookup joins after the self-join.  Postings are
+    keyed on the 32-bit md5 hash of the shingle (8-byte keys instead of
+    ~20-byte n-grams); the oracle hashes identically, so a collision is
+    reproduced bit-for-bit there.  Jaccard is int/int division — an
+    identical double in Spark and DuckDB, no round().
+
+    The doc-frequency filter is a COUNT WINDOW over the postings' __h
+    Exchange, so the postings subtree is defined once and the
+    self-join's second side is a ReusedExchange: one scan, one shuffle
+    of posting rows (OPTIMIZATION_r11.md §2).  The window buffers one
+    __h bucket before the filter drops it, so a stop-shingle bucket
+    spills to disk (never OOMs); both bounded-buffer guards tried were
+    slower (OPTIMIZATION_r12.md §4)."""
     norm = normalize_ws_sql(f"`{text_col}`")
     sh = word_shingles_from_words_sql("__w", k)
     spread_hint = (
@@ -1014,11 +863,22 @@ def contamination_check_sql(
     k: int = 5,
     spread_partitions: int | None = None,
 ) -> str:
-    """Whole-query SQL text of :func:`contamination_check` (r12,
-    session 2; see :func:`ngram_jaccard_pairs_sql` for the why and the
-    equivalence pin).  ``eval_table`` / ``train_table`` are FROM-able
-    expressions — a view name or a parenthesized subquery like
-    ``(SELECT ... FROM v WHERE ...)``."""
+    """Test-set decontamination: per eval doc, how many of its distinct
+    k-gram shingles also occur ANYWHERE in the train corpus (the
+    standard train/test overlap check for LLM data pipelines), as one
+    parsed statement (see :func:`ngram_jaccard_pairs_sql` for the why).
+    ``eval_table`` / ``train_table`` are FROM-able expressions — a view
+    name or a parenthesized subquery like ``(SELECT ... FROM v WHERE
+    ...)``.
+
+    Shingles are joined on their 32-bit md5 hash (8-byte shuffle keys);
+    a collision is deterministic and identical in the SQL oracle, so
+    parity holds.  Output: id, n_shared, n_total, contamination =
+    n_shared / n_total (int/int division — bit-identical across
+    engines).  Plan: ONE eval and one train shingle scan.  The train
+    side is distinct on the hash, so the LEFT join cannot fan out eval
+    rows and total and shared counts come from the same aggregation
+    (``count(1)`` vs ``count(__hit)``)."""
     norm = normalize_ws_sql(f"`{text_col}`")
     sh = word_shingles_from_words_sql("__w", k)
     spread_hint = (
@@ -1028,9 +888,8 @@ def contamination_check_sql(
     )
 
     def shingled(table: str, cols: str) -> str:
-        # mirrors _shingled: spread -> split -> distinct shingle set ->
-        # explode in the select list (text projected away before the
-        # explode), exactly the Generate shape the DataFrame form makes
+        # spread -> split -> distinct shingle set -> explode in the
+        # select list (text projected away before the explode)
         return f"""
   SELECT {cols}explode(__sh) AS shingle FROM (
     SELECT `{id_col}`, array_distinct({sh}) AS __sh FROM (

@@ -50,12 +50,9 @@ def _norm(a: Column) -> Column:
     )
 
 
-# SQL-text twins of _dot/_norm (r12 optimization round, same technique
-# as functions/hashing.py): the lambda-bearing Column forms cost several
-# py4j round trips each and sit on every similarity query's timed
-# construction path; one parsed string is one round trip.  `0.0D` is the
-# SQL DOUBLE literal, matching F.lit(0.0) exactly, so the analyzed plan
-# is identical to the Column sibling.  Keep textually in sync.
+# SQL-text forms of _dot/_norm (r12, as functions/hashing.py): one parsed
+# string instead of several py4j round trips.  `0.0D` is the SQL DOUBLE
+# literal, matching F.lit(0.0), so the expression trees are identical.
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -136,9 +133,9 @@ def cosine_topk_bruteforce_sql(
     k: int = 5,
 ) -> str:
     """Whole-query SQL text of :func:`cosine_topk_bruteforce` over
-    FROM-able table expressions (r12, session 2 — one parsed statement;
-    guide §1).  Plan equality with the DataFrame form is pinned by
-    tests/test_sql_construction.py."""
+    FROM-able table expressions (r12, session 2 — one parsed
+    statement).  The gate's plan is pinned in
+    tests/fixtures/plan_fingerprints.json."""
     norm = _norm_sql(f"`{vec_col}`")
     over = (
         "OVER (PARTITION BY query_id"

@@ -1,7 +1,7 @@
 """Training-data preparation operators (beyond the reference's surface;
 BASELINE.md north star: the ops a 100 TB LLM-corpus pipeline needs).
 
-- ``chunk_documents``: split each document into token-bounded chunks
+- ``chunk_documents_sql``: split each document into token-bounded chunks
   with overlap — the standard pretraining/embedding preprocessing step.
   Pure map-side (sequence + slice + posexplode inside codegen): a doc
   becomes ceil((n - overlap) / step) rows with NO shuffle; the wide
@@ -33,54 +33,8 @@ from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import (
     md5_seeded,
-    normalize_ws,
     normalize_ws_sql,
 )
-
-
-def chunk_documents(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    chunk_size: int = 64,
-    overlap: int = 16,
-) -> DataFrame:
-    """One row per (doc, chunk): whitespace tokens ``[start, start +
-    chunk_size)`` with consecutive chunks overlapping by ``overlap``
-    tokens.  Chunk starts are ``1, 1+step, ...`` up to ``max(n -
-    overlap, 1)`` (step = chunk_size - overlap), so the trailing chunk
-    is never empty and never fully contained in its predecessor.
-
-    ``chunk_idx`` is derived as ``(start - 1) / step`` — arithmetic the
-    SQL oracle reproduces without needing ordinality.
-    """
-    if overlap >= chunk_size:
-        raise ValueError("overlap must be smaller than chunk_size")
-    step = chunk_size - overlap
-    # NULL text must drop out here: null-skipping greatest/least would
-    # otherwise fabricate a chunk_idx=0 row with empty text and a
-    # full-size token count.  ('' still chunks to one empty chunk — a
-    # defined value both engines agree on.)
-    # SQL-text construction (r12, same technique as functions/hashing.py
-    # twins): identical analyzed plan, ~6 py4j calls instead of ~160.
-    words = df.where(f"`{text_col}` IS NOT NULL").selectExpr(
-        f"`{id_col}`",
-        f"split({normalize_ws_sql(f'`{text_col}`')}, ' ') AS __w",
-    )
-    chunked = words.selectExpr(
-        f"`{id_col}`",
-        "size(__w) AS __n",
-        f"explode(sequence(1, greatest(size(__w) - {overlap}, 1), {step}))"
-        " AS __s",
-        "__w",
-    )
-    return chunked.selectExpr(
-        f"`{id_col}`",
-        f"cast((__s - 1) / {step} as int) AS chunk_idx",
-        f"concat_ws(' ', slice(__w, __s, {chunk_size})) AS chunk_text",
-        f"least({chunk_size}, __n - __s + 1) AS n_chunk_tokens",
-    )
-
 
 
 def chunk_documents_sql(
@@ -90,10 +44,19 @@ def chunk_documents_sql(
     chunk_size: int = 64,
     overlap: int = 16,
 ) -> str:
-    """Whole-query SQL text of :func:`chunk_documents` over a FROM-able
-    table expression (r12, session 2 — one parsed statement; guide §1).
-    Plan equality with the DataFrame form is pinned by
-    tests/test_sql_construction.py."""
+    """One row per (doc, chunk) over a FROM-able table expression, as
+    one parsed statement (r12, session 2): whitespace tokens
+    ``[start, start + chunk_size)`` with consecutive chunks overlapping
+    by ``overlap`` tokens.  Chunk starts are ``1, 1+step, ...`` up to
+    ``max(n - overlap, 1)`` (step = chunk_size - overlap), so the
+    trailing chunk is never empty and never fully contained in its
+    predecessor.  ``chunk_idx`` is ``(start - 1) / step`` — arithmetic
+    the SQL oracle reproduces without ordinality.
+
+    NULL text drops out: null-skipping greatest/least would otherwise
+    fabricate a chunk_idx=0 row with empty text and a full-size token
+    count ('' still chunks to one empty chunk — a defined value both
+    engines agree on)."""
     if overlap >= chunk_size:
         raise ValueError("overlap must be smaller than chunk_size")
     step = chunk_size - overlap
@@ -303,8 +266,8 @@ def deterministic_shuffle_sql(
     ``SELECT id, rank`` over a FROM-able table expression (r12,
     session 2 — one parsed statement instead of ~126 py4j round trips;
     guide §1).  Mirrors :func:`parallel_rank`'s mid-arithmetic shape
-    exactly; the optimized plan is pinned identical to the DataFrame
-    twin by tests/test_sql_construction.py, so the determinism
+    exactly (the gate's plan is pinned in
+    tests/fixtures/plan_fingerprints.json), so the determinism
     contract documented on ``parallel_rank`` (deterministic upstream +
     unique sort key ⇒ identical re-evaluation of the twice-referenced
     nondeterministic subtree) carries over: the ``rows`` text is

@@ -47,7 +47,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-independent).
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q3_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -77,33 +77,6 @@ LIMIT 10
     return catalog_sql(spark, build)
 
 
-def _q3_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    cust = load_table(spark, sf_dir, "customer").where(
-        "c_mktsegment = 'BUILDING'"
-    )
-    orders = load_table(spark, sf_dir, "orders").where(
-        "o_orderdate < '1998-07-01'"
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(
-        "l_shipdate > '1998-07-01'"
-    )
-    return (
-        li.join(orders, F.expr("l_orderkey = o_orderkey"))
-        .join(cust, F.expr("o_custkey = c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.expr(f"cast(sum({_revenue_sql()}) as double) AS revenue"))
-        .selectExpr(
-            "l_orderkey",
-            "date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate",
-            "o_orderpriority",
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
 Q3_ORACLE = """
 SELECT
   l_orderkey,
@@ -127,10 +100,12 @@ LIMIT 10
 def q5_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem ⋈ supplier with
     the classic c_nationkey = s_nationkey local-supplier condition.
-    Two fact tables meet on orderkey (SMJ); every dim broadcasts.
+    Two fact tables meet on orderkey (SMJ); region/nation broadcast.
+    supplier scales with the corpus, so it gets no hint: AQE
+    runtime-broadcasts it while small and shuffles it when it isn't.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q5_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -158,33 +133,6 @@ GROUP BY r_name, n_name
 """
 
     return catalog_sql(spark, build)
-
-
-def _q5_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    supp = load_table(spark, sf_dir, "supplier")
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(
-        "o_orderdate >= '1997-01-01' AND o_orderdate < '1999-01-01'"
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, F.expr("l_orderkey = o_orderkey"))
-        .join(cust, F.expr("o_custkey = c_custkey"))
-        # supplier scales with the corpus (unlike region/nation) — no
-        # forced broadcast; AQE runtime-broadcasts it while it's small
-        # and falls back to a shuffled join when it isn't.
-        .join(
-            supp,
-            F.expr("l_suppkey = s_suppkey AND c_nationkey = s_nationkey"),
-        )
-        .join(F.broadcast(nation), F.expr("s_nationkey = n_nationkey"))
-        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(F.expr(f"cast(sum({_revenue_sql()}) as double) AS revenue"))
-    )
 
 
 Q5_ORACLE = """
@@ -215,7 +163,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer join.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q18_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -241,30 +189,6 @@ JOIN {cust} ON o_custkey = c_custkey
 """
 
     return catalog_sql(spark, build)
-
-
-def _q18_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.expr("sum(l_quantity) AS sum_qty"))
-        .where("sum_qty > 300")
-    )
-    return (
-        big.join(orders, F.expr("l_orderkey = o_orderkey"))
-        .join(cust, F.expr("o_custkey = c_custkey"))
-        .selectExpr(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate",
-            "o_totalprice AS totalprice",
-            "cast(sum_qty as double) AS sum_qty",
-        )
-    )
 
 
 Q18_ORACLE = """

@@ -16,6 +16,8 @@ the groupBys on decision_id and the final split write.
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,11 +27,12 @@ from swisscourtrulingcorpus_spark.extraction import (
     extract_composition_udf,
     extract_judgments_udf,
     split_sections_udf,
-    uuid5_udf,
+    uuid5_col,
 )
 from swisscourtrulingcorpus_spark.functions.domain import (
     normalize_binary_judgment,
 )
+from swisscourtrulingcorpus_spark.functions.hashing import sql_str
 from swisscourtrulingcorpus_spark.functions.text import (
     language_id_score,
     token_count_ws,
@@ -41,45 +44,43 @@ from swisscourtrulingcorpus_spark.operators.relational import (
 )
 
 
-class LazyTables(dict):
+class LazyTables(Mapping):
     """Pipeline-table mapping whose values CONSTRUCT on first access
-    (r12, session 2).  ``run_extraction_pipeline`` used to build every
-    derived DataFrame eagerly; a consumer like the bench's
-    ``judgment_dataset`` path reads only ``section_arrays``, yet paid
-    the driver-side construction (py4j round trips) of citations /
-    composition / lower-court / participation it never touched —
-    inside the bench's timed region.  Plans are unchanged: the same
-    construction code runs, only when the table is first asked for.
-    Subclasses ``dict`` so every mapping idiom used by consumers
-    (``[]``, ``.get``, ``in``, iteration, ``.keys``) works; values are
-    memoized after the first build, preserving the old semantics where
-    two reads of one key return the SAME DataFrame object (cache()
-    marks, exactly-one-cache-entry behavior)."""
+    (r12, session 2), so a consumer that reads one table (the bench's
+    ``judgment_dataset`` path reads only ``section_arrays``) pays no
+    driver-side construction for the others.  Plans are unchanged.
+
+    A read-only ``Mapping`` over zero-arg thunks plus one memo dict, so
+    every mapping idiom (``[]``, ``.get``, ``in``, iteration,
+    ``dict(tables)``, ``{**tables}``) yields built DataFrames, never a
+    placeholder.  Two reads of one key return the SAME DataFrame object
+    (cache() marks, exactly-one-cache-entry behavior)."""
 
     def __init__(self, thunks: dict):
-        super().__init__({k: None for k in thunks})
         self._thunks = thunks
+        self._memo: dict = {}
+
+    def memoized(self, key: str, build):
+        """``build()`` once per ``key``; also holds shared intermediates
+        that are not tables themselves."""
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
 
     def __getitem__(self, key):
-        val = super().__getitem__(key)
-        if val is None:
-            val = self._thunks[key]()
-            super().__setitem__(key, val)
-        return val
+        return self.memoized(key, self._thunks[key])
 
-    def get(self, key, default=None):
-        if key not in self:
-            return default
-        return self[key]
+    def __contains__(self, key):
+        return key in self._thunks
 
-    def values(self):  # pragma: no cover - convenience for tests
-        return [self[k] for k in self]
+    def __iter__(self):
+        return iter(self._thunks)
 
-    def items(self):
-        return [(k, self[k]) for k in self]
+    def __len__(self):
+        return len(self._thunks)
 
 
-def run_extraction_pipeline(raw: DataFrame) -> dict[str, DataFrame]:
+def run_extraction_pipeline(raw: DataFrame) -> LazyTables:
     """raw(file_name, raw_text, spider, chamber, date, ...) → the core
     domain tables: decision, section, citation, judgment, composition.
 
@@ -93,7 +94,7 @@ def run_extraction_pipeline(raw: DataFrame) -> dict[str, DataFrame]:
     (tools/pipeline_fingerprint.py before/after).
     """
     base = raw.select(
-        uuid5_udf("file_name").alias("decision_id"),
+        uuid5_col("file_name").alias("decision_id"),
         "file_name",
         "spider",
         "chamber",
@@ -194,14 +195,11 @@ def run_extraction_pipeline(raw: DataFrame) -> dict[str, DataFrame]:
     # E7 court composition from the header; E6 lower court + E8
     # procedural participation share the cached header frame, built on
     # first access (one cache entry, like the former eager form)
-    _headers_memo: list[DataFrame] = []
-
     def _headers() -> DataFrame:
-        if not _headers_memo:
-            _headers_memo.append(
-                tables["section"].where(F.col("section") == "header").cache()
-            )
-        return _headers_memo[0]
+        return tables.memoized(
+            "__headers",
+            lambda: tables["section"].where(F.col("section") == "header").cache(),
+        )
 
     def _composition() -> DataFrame:
         return _headers().select(
@@ -305,7 +303,7 @@ def judgment_dataset(tables: dict[str, DataFrame]) -> DataFrame:
     if sa is not None:
         def pick(sec: str) -> F.Column:
             return F.get(
-                F.expr(f"filter(__secs, x -> x.section = '{sec}')"), 0
+                F.expr(f"filter(__secs, x -> x.section = {sql_str(sec)})"), 0
             )["text"]
 
         df = sa.select(

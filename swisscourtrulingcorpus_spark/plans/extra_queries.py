@@ -255,15 +255,11 @@ def uuid5_document_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`resources/uuid5_doc_ids.parquet`, doc_id 0..4999, generated once
     by Python's stdlib ``uuid.uuid5``) — a real value check instead of
     the rows-only fallback."""
-    from swisscourtrulingcorpus_spark.extraction.ids import uuid5_udf
+    from swisscourtrulingcorpus_spark.extraction.ids import uuid5_sql
 
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        uuid5_udf(F.concat(F.lit("doc_"), F.col("doc_id").cast("string"))).alias(
-            "decision_id"
-        ),
-    )
+    name = "concat('doc_', cast(doc_id as string))"
+    return docs.selectExpr("doc_id", f"{uuid5_sql(name)} AS decision_id")
 
 
 # --- real PNG/BMP decode (retires the r03 multimodal stub) -------------

@@ -68,24 +68,91 @@ def value_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
-def plan_fingerprint(df) -> str:
-    """Identity-normalized fingerprint of a DataFrame's OPTIMIZED
-    logical plan: exprIds (``#123``/``#123L``) and plan ids are
-    replaced with placeholders and whitespace collapsed, so two
-    constructions of the SAME query fingerprint identically while any
-    semantic difference (tables, predicates, literals, operator order)
-    survives.  The registry duplicate-lint
-    (tests/test_registry_lint.py) md5s this over every gate at
-    sf0.001 and fails when two gates with different names resolve to
-    the same plan — the mechanical guard VERDICT r08 item 5 asked for
-    after round 8 shipped (and had to hand-delete) two semantic
-    duplicates of existing operators."""
+def _split_top(s: str) -> list[str]:
+    """Split a plan list body on its top-level commas."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s + ","):
+        depth += (ch in "([{") - (ch in ")]}")
+        if ch == "," and depth == 0:
+            out.append(s[start:i].strip())
+            start = i + 1
+    return out
+
+
+def normalize_plan(plan: str) -> str:
+    """The identity-free text of an optimized plan's ``toString``:
+    what :func:`plan_fingerprint` hashes."""
     import re
 
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    p = re.sub(r"#\d+L?", "#x", plan)
-    p = re.sub(r"plan_id=\d+", "plan_id=x", p)
-    p = re.sub(r"\s+", " ", p)
+    def ids(text) -> str:
+        return re.sub(r"#\d+L?", "#x", str(text))
+
+    # catalog temp views are named per (session, file stat) key
+    # (sources/catalog.py::load_table); a plan that keeps the view
+    # name must fingerprint the same in every process
+    p = re.sub(r"(__catalog_\w+?)_\d+\b", r"\1_x", plan)
+    # Column-API lambda variables are named x_<n>, acc_<n>, ... from a
+    # counter global to the JVM: number them in order of appearance
+    seen: dict[str, int] = {}
+    p = re.sub(r"lambda ([A-Za-z]\w*?)_\d+\b",
+               lambda m: f"lambda {m[1]}_{seen.setdefault(m[0], len(seen))}", p)
+    # RewriteDistinctAggregates orders an Expand's distinct columns
+    # (those before gid) and rows, and numbers its groups (gid), in hash
+    # order of expressions that carry exprIds: sort those columns and
+    # the rows by exprId-free text, renumber the gids in row order, and
+    # carry both to every `gid = n` test and to the grouping Aggregate
+    # that repeats the Expand output up to gid
+    gids: dict[str, dict[str, str]] = {}
+    moved: list[tuple[str, str]] = []
+    lines = p.split("\n")
+    for i, line in enumerate(lines):
+        m = re.match(r"(.*?Expand )(\[.*\])$", line)
+        parts = _split_top(m[2]) if m else ["", "[]"]
+        out = _split_top(parts[-1][1:-1])
+        rows = [_split_top(r[1:-1]) for r in _split_top(parts[0][1:-1])]
+        g = next((j for j, o in enumerate(out) if re.fullmatch(r"gid#\d+", o)), 0)
+        if len(parts) != 2 or not g or any(len(r) != len(out) for r in rows):
+            continue
+        cols = sorted(
+            range(g), key=lambda j: (ids(out[j]), sorted(ids(r[j]) for r in rows))
+        )
+        cols += range(g, len(out))
+        rows = sorted(
+            ([r[j] for j in cols] for r in rows),
+            key=lambda r: (r[g] != "0", ids(r[:g])),
+        )
+        first = int(rows[0][g] != "0")  # gid 0 is the regular group
+        gid = gids[out[g]] = {r[g]: str(n) for n, r in enumerate(rows, first)}
+        for r in rows:
+            r[g] = gid[r[g]]
+        new_out = [out[j] for j in cols]
+        moved.append((", ".join(out[: g + 1]), ", ".join(new_out[: g + 1])))
+        rows_txt = ", ".join(f"[{', '.join(r)}]" for r in rows)
+        lines[i] = f"{m[1]}[{rows_txt}], [{', '.join(new_out)}]"
+    p = "\n".join(lines)
+    for old, new in moved:
+        p = p.replace(old, new)
+    p = re.sub(r"\b(gid#\d+) = (\d+)",
+               lambda m: f"{m[1]} = {gids.get(m[1], {}).get(m[2], m[2])}", p)
+    p = re.sub(r"plan_id=\d+", "plan_id=x", ids(p))
+    return re.sub(r"\s+", " ", p)
+
+
+def plan_fingerprint(df) -> str:
+    """Identity-normalized fingerprint of a DataFrame's OPTIMIZED
+    logical plan: exprIds (``#123``/``#123L``), plan ids, catalog view
+    suffixes and Column-API lambda counters are replaced with
+    placeholders, distinct-aggregate groups put in a canonical order
+    and whitespace collapsed (:func:`normalize_plan`), so two
+    constructions of the SAME query fingerprint identically in any
+    process or session while any semantic difference (tables,
+    predicates, literals, operator order) survives.  The registry
+    duplicate-lint (tests/test_registry_lint.py) md5s this over every
+    gate at sf0.001 and fails when two gates with different names
+    resolve to the same plan — the mechanical guard VERDICT r08 item 5
+    asked for after round 8 shipped (and had to hand-delete) two
+    semantic duplicates of existing operators."""
+    p = normalize_plan(df._jdf.queryExecution().optimizedPlan().toString())
     # the TYPED schema is part of the identity: eager driver-report
     # gates optimize to a bare `LocalRelation [col#x, ...]`, which
     # prints column NAMES but not types — the binary and k-class
@@ -93,3 +160,22 @@ def plan_fingerprint(df) -> str:
     # false-collide without the boolean-vs-string distinction (r11)
     p += " | " + df.schema.simpleString()
     return hashlib.md5(p.encode()).hexdigest()
+
+
+def pipeline_fingerprints(spark, n_docs: int) -> dict[str, str]:
+    """:func:`plan_fingerprint` of every extraction-pipeline table and
+    of ``judgment_dataset``, built over an ``n_docs`` synthetic raw
+    corpus — the pipeline half of tests/fixtures/plan_fingerprints.json
+    (regenerate with ``tools/pipeline_fingerprint.py``)."""
+    from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
+        judgment_dataset,
+        run_extraction_pipeline,
+    )
+    from swisscourtrulingcorpus_spark.sources.domain_fixtures import (
+        raw_corpus_df,
+    )
+
+    tables = run_extraction_pipeline(raw_corpus_df(spark, n_docs))
+    out = {name: plan_fingerprint(tables[name]) for name in sorted(tables)}
+    out["judgment_dataset"] = plan_fingerprint(judgment_dataset(tables))
+    return out

@@ -15,14 +15,11 @@ Scale notes (these run at sf0.1 locally but are written for 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.operators.relational import (
-    asof_join,
     date_stratified_split,
-    map_join,
-    top_k_per_group,
     value_counts_with_pct,
 )
 from swisscourtrulingcorpus_spark.functions.money import dec2 as _dec
@@ -35,10 +32,12 @@ from swisscourtrulingcorpus_spark.sources.catalog import load_table
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship aggregation: grouped sums/avgs with a pushed-down scan
     filter (reference analogue: the coverage/count queries of
-    `scrc/utils/sql_select_utils.py:29-68`).
+    `scrc/utils/sql_select_utils.py:29-68`).  No round() in the
+    averages: Spark round (BigDecimal HALF_UP) and DuckDB round disagree
+    in the last place; both engines compute the SAME double expression.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q1_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
@@ -62,44 +61,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
     return catalog_sql(spark, build)
-
-
-def _q1_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test.  No round() in the
-    averages: Spark round (BigDecimal HALF_UP) and DuckDB round disagree
-    in the last place; both engines compute the SAME double expression
-    instead."""
-    from swisscourtrulingcorpus_spark.functions import money
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.where("l_shipdate <= '2000-12-01'")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.expr("cast(sum(l_quantity) as double) AS sum_qty"),
-            F.expr(
-                f"cast(sum({money.dec2_sql('l_extendedprice')}) as double)"
-                " AS sum_base_price"
-            ),
-            F.expr(
-                f"cast(sum({money.disc_price_sql()}) as double)"
-                " AS sum_disc_price"
-            ),
-            F.expr(
-                f"cast(sum({money.charge_sql()}) as double) AS sum_charge"
-            ),
-            # No round(): Spark round (BigDecimal HALF_UP) and DuckDB round
-            # (multiply-based) can disagree in the last place; instead both
-            # engines compute the SAME double expression (exact decimal sum
-            # -> double -> one division) so the raw bits already match.
-            F.expr("sum(l_quantity) / count(1) AS avg_qty"),
-            F.expr(
-                f"cast(sum({money.dec2_sql('l_extendedprice')}) as double)"
-                " / count(1) AS avg_price"
-            ),
-            F.expr("count(1) AS count_order"),
-        )
-    )
 
 
 Q1_ORACLE = """
@@ -128,7 +89,7 @@ def coverage_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation ⋈ region.  Dims broadcast; orders shuffles once for the agg.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_coverage_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
@@ -156,30 +117,6 @@ GROUP BY r_name
     return catalog_sql(spark, build)
 
 
-def _coverage_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    from swisscourtrulingcorpus_spark.functions import money
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return (
-        orders.join(F.broadcast(cust), F.expr("o_custkey = c_custkey"))
-        .join(F.broadcast(nation), F.expr("c_nationkey = n_nationkey"))
-        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
-        .groupBy("r_name")
-        .agg(
-            F.expr("count(DISTINCT o_custkey) AS n_customers"),
-            F.expr("count(1) AS n_orders"),
-            F.expr(
-                f"cast(sum({money.dec2_sql('o_totalprice')}) as double)"
-                " AS total_value"
-            ),
-        )
-    )
-
-
 COVERAGE_ORACLE = """
 SELECT
   r_name,
@@ -203,8 +140,7 @@ def map_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is one row per orderkey.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_map_join_orders_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -229,28 +165,6 @@ LEFT JOIN (
 """
 
     return catalog_sql(spark, build)
-
-
-def _map_join_orders_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    out = map_join(
-        orders.select("o_orderkey", "o_orderstatus"),
-        li.selectExpr(
-            "l_orderkey AS o_orderkey",
-            "concat_ws(':', cast(l_linenumber as string),"
-            " cast(l_partkey as string)) AS __item",
-        ),
-        key="o_orderkey",
-        agg_col=F.expr("concat_ws(',', sort_array(collect_list(__item)))"),
-        alias="items",
-    )
-    return out.selectExpr(
-        "o_orderkey",
-        "o_orderstatus",
-        "coalesce(items, '') AS items",
-    )
 
 
 MAP_JOIN_ORACLE = """
@@ -310,8 +224,7 @@ def semi_join_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitems of orders of customers in region AMERICA.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_semi_join_membership_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
@@ -351,41 +264,6 @@ GROUP BY l_returnflag
 """
 
     return catalog_sql(spark, build)
-
-
-def _semi_join_membership_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    from swisscourtrulingcorpus_spark.functions import money
-
-    nations_in = nation.join(
-        F.broadcast(region.where("r_name = 'AMERICA'")),
-        F.expr("n_regionkey = r_regionkey"),
-        "left_semi",
-    )
-    custs_in = cust.join(
-        F.broadcast(nations_in), F.expr("c_nationkey = n_nationkey"), "left_semi"
-    )
-    orders_in = orders.join(
-        F.broadcast(custs_in.select("c_custkey")),
-        F.expr("o_custkey = c_custkey"),
-        "left_semi",
-    )
-    li_in = li.join(
-        orders_in.select("o_orderkey"),
-        F.expr("l_orderkey = o_orderkey"),
-        "left_semi",
-    )
-    return li_in.groupBy("l_returnflag").agg(
-        F.expr("count(1) AS n_items"),
-        F.expr(
-            f"cast(sum({money.dec2_sql('l_extendedprice')}) as double) AS value"
-        ),
-    )
 
 
 SEMI_JOIN_ORACLE = """
@@ -437,9 +315,8 @@ def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlines `operators/relational.py::asof_join`'s union + running
     `last(..., true)` window shape verbatim (null-typed columns use the
     events fixture types — bigint ids, timestamp_ntz ts; a generator
-    schema change fails the twin test loudly).  Optimized plan
-    identical to `_asof_purchase_attribution_df`
-    (tests/test_sql_construction.py)."""
+    schema change moves the golden fingerprint loudly).  Optimized plan pinned in
+    tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -490,32 +367,6 @@ FROM (
     return catalog_sql(spark, build)
 
 
-def _asof_purchase_attribution_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.where("event_type = 'purchase'").selectExpr(
-        "user_id", "event_id AS purchase_id", "ts"
-    )
-    clicks = ev.where("event_type = 'click'").selectExpr(
-        "user_id", "event_id AS click_id", "ts"
-    )
-    joined = asof_join(
-        purchases,
-        clicks,
-        partition_keys=["user_id"],
-        left_on="ts",
-        right_on="ts",
-        tolerance="INTERVAL 30 MINUTES",
-        right_payload=["click_id"],
-    )
-    return joined.selectExpr(
-        "purchase_id",
-        "user_id",
-        "asof_click_id AS click_id",
-        "date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS purchase_ts",
-    )
-
-
 ASOF_ORACLE = """
 WITH p AS (SELECT user_id, event_id AS purchase_id, ts FROM events WHERE event_type = 'purchase'),
      c AS (SELECT user_id, event_id AS click_id, ts AS cts FROM events WHERE event_type = 'click')
@@ -535,7 +386,7 @@ def topk_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     citation rankings, `doc2doc_ir_dataset_creator.py:110,327`).
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_topk_orders_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
@@ -569,36 +420,6 @@ FROM (
 """
 
     return catalog_sql(spark, build)
-
-
-def _topk_orders_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    from swisscourtrulingcorpus_spark.functions import money
-    from swisscourtrulingcorpus_spark.operators.relational import (
-        top_k_per_group_sql,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    df = orders.join(F.broadcast(cust), F.expr("o_custkey = c_custkey")).selectExpr(
-        "c_mktsegment",
-        "o_orderkey",
-        f"{money.dec2_sql('o_totalprice')} AS price",
-    )
-    out = top_k_per_group_sql(
-        df, ["c_mktsegment"], "price DESC, o_orderkey ASC", 3
-    )
-    ranked = out.selectExpr(
-        "*",
-        "row_number() OVER (PARTITION BY c_mktsegment "
-        "ORDER BY price DESC, o_orderkey ASC) AS rank",
-    )
-    return ranked.selectExpr(
-        "c_mktsegment",
-        "o_orderkey",
-        "cast(price as double) AS price",
-        "rank",
-    )
 
 
 TOPK_ORACLE = """
@@ -651,7 +472,7 @@ def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partial aggregation map-side, single shuffle).
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_rollup_df` (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
@@ -678,35 +499,6 @@ FROM (
 """
 
     return catalog_sql(spark, build)
-
-
-def _rollup_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    from swisscourtrulingcorpus_spark.functions import money
-
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    df = (
-        cust.join(F.broadcast(nation), F.expr("c_nationkey = n_nationkey"))
-        .join(F.broadcast(region), F.expr("n_regionkey = r_regionkey"))
-    )
-    return (
-        df.rollup("r_name", "n_name")
-        .agg(
-            F.expr("count(1) AS n_customers"),
-            F.expr(
-                f"cast(sum({money.dec2_sql('c_acctbal')}) as double)"
-                " AS total_balance"
-            ),
-        )
-        .selectExpr(
-            "coalesce(r_name, '<ALL>') AS region",
-            "coalesce(n_name, '<ALL>') AS nation",
-            "n_customers",
-            "total_balance",
-        )
-    )
 
 
 ROLLUP_ORACLE = """

@@ -25,19 +25,16 @@ from swisscourtrulingcorpus_spark.functions.text import (
     token_count_bpe,
     token_count_ws,
 )
-from swisscourtrulingcorpus_spark.functions.hashing import h32, word_shingles
+from swisscourtrulingcorpus_spark.functions.hashing import h32
 from swisscourtrulingcorpus_spark.operators.dedup import (
     LSH_BANDS,
     NUM_MINHASH,
     exact_dedup,
     minhash_dedup_groups,
-    minhash_lsh_candidates,
     minhash_signatures,
-    ngram_jaccard_pairs,
     simhash64,
 )
 from swisscourtrulingcorpus_spark.operators.similarity import (
-    cosine_topk_bruteforce,
     lsh_bucketed_topk,
 )
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
@@ -162,9 +159,8 @@ MINHASH_ORACLE = _minhash_sql_cte() + "\nSELECT * FROM sig"
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-query SQL-text construction (r12, session 2); optimized
-    plan identical to `_q_minhash_lsh_pairs_df`
-    (tests/test_sql_construction.py)."""
+    """Whole-query SQL-text construction (r12, session 2); optimized plan
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_lsh_candidates_sql,
     )
@@ -185,12 +181,6 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_minhash_lsh_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_candidates(docs, "text", "doc_id", spread=True)
-
-
 def _lsh_oracle() -> str:
     band_exprs = _band_exprs()
     return (
@@ -204,9 +194,8 @@ FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
 
 
 def q_minhash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-query SQL-text construction (r12, session 2); optimized
-    plan identical to `_q_minhash_dedup_groups_df`
-    (tests/test_sql_construction.py)."""
+    """Whole-query SQL-text construction (r12, session 2); optimized plan
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_dedup_groups_sql,
     )
@@ -225,12 +214,6 @@ def q_minhash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             spread_partitions=spread,
         ),
     )
-
-
-def _q_minhash_dedup_groups_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_dedup_groups(docs, "text", "doc_id", spread=True)
 
 
 def _dedup_groups_oracle() -> str:
@@ -515,8 +498,8 @@ SELECT doc_id, simhash FROM sig
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-query SQL-text construction (r12, session 2): one parsed
-    statement via the operator's SQL twin; optimized plan identical to
-    `_q_ngram_jaccard_df` (tests/test_sql_construction.py)."""
+    statement via the operator's SQL form; optimized plan pinned in
+    tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.dedup import (
         ngram_jaccard_pairs_sql,
     )
@@ -535,12 +518,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             spread_partitions=spread,
         ),
     )
-
-
-def _q_ngram_jaccard_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "text", "doc_id", spread=True)
 
 
 NGRAM_JACCARD_ORACLE = f"""
@@ -562,9 +539,8 @@ WHERE shared / (sa.n + sb.n - shared) >= 0.2
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-query SQL-text construction (r12, session 2); optimized
-    plan identical to `_q_cosine_topk_df`
-    (tests/test_sql_construction.py)."""
+    """Whole-query SQL-text construction (r12, session 2); optimized plan
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.similarity import (
         cosine_topk_bruteforce_sql,
     )
@@ -580,12 +556,6 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return catalog_sql(spark, build)
-
-
-def _q_cosine_topk_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk_bruteforce(emb, emb.where(F.col("vec_id") < 8), k=5)
 
 
 COSINE_TOPK_ORACLE = """
@@ -856,12 +826,19 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Whole-query SQL-text construction (r12, session 2): ONE parsed
     statement (~5 py4j round trips) instead of the chained DataFrame
     form's ~119 — the bench times construction 3× per query (guide §1).
-    The optimized plan is IDENTICAL to the DataFrame twin kept below
-    (`_q_tfidf_top_terms_df`, pinned by
-    tests/test_sql_construction.py::test_sql_twin_plans_identical), so
-    execution — and the oracle-checked result — cannot differ.  See the
-    twin's comments for the plan-shape rationale (map-side df branch,
-    broadcast tf, round-before-rank).
+    Optimized plan pinned in tests/fixtures/plan_fingerprints.json.
+
+    Plan shape:
+    - the doc_id predicate sits IN the tf branch (pushed to the scan),
+      while document frequency stays corpus-wide;
+    - df is a MAP-SIDE per-doc distinct (explode array_distinct) plus a
+      plain count, so the partial aggregate compresses before ONE
+      exchange of (term, count) rows — countDistinct would shuffle
+      every (term, doc_id) pair (r11: 2 Exchanges -> 1);
+    - N = count(1): doc_id is the documents PK;
+    - tf (bounded by the 20 query docs) broadcasts, df streams;
+    - rank on round(score, 9): an ULP of ln drift between Spark and
+      DuckDB becomes a tie the term column breaks deterministically.
     """
     from swisscourtrulingcorpus_spark.functions.hashing import (
         normalize_ws_sql,
@@ -902,82 +879,6 @@ SELECT doc_id, term, tf, df, rank FROM (
 """
 
     return catalog_sql(spark, build)
-
-
-def _q_tfidf_top_terms_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin of :func:`q_tfidf_top_terms` (the r11/early-r12
-    form), kept for the optimized-plan-equality test that proves the
-    SQL text computes the same thing."""
-    from swisscourtrulingcorpus_spark.functions.hashing import (
-        normalize_ws_sql,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    # SQL-text construction (r12): the Column form cost ~250 py4j round
-    # trips per bench-timed construction; identical analyzed plan.
-    def _words(d: DataFrame) -> DataFrame:
-        return d.selectExpr(
-            "doc_id",
-            f"explode(split({normalize_ws_sql('text')}, ' ')) AS term",
-        )
-
-    # TF only matters for the output docs, so the doc_id predicate sits
-    # IN the tf branch (pushed to the scan); document frequency must
-    # stay corpus-wide — that asymmetry is the load-bearing pushdown
-    # a 100 TB corpus needs (tf over 20 docs, not 100 TB of docs).
-    tf = (
-        _words(docs.where("doc_id < 20"))
-        .groupBy("doc_id", "term")
-        .agg(F.expr("count(1) AS tf"))
-    )
-    # r11 optimization: document frequency via a MAP-SIDE per-doc
-    # distinct (explode array_distinct of the token array) + plain
-    # count, instead of groupBy(term).countDistinct(doc_id).  Same
-    # number — df counts docs containing the term — but the partial
-    # aggregation now compresses before the exchange: ONE shuffle of
-    # (term, count) rows instead of countDistinct's two-phase expansion
-    # that shuffled every distinct (term, doc_id) pair (at 100 TB
-    # that pair table is corpus-sized).  Plan: 2 Exchanges -> 1 on the
-    # df branch.
-    df_ = (
-        docs.selectExpr(
-            f"explode(array_distinct(split({normalize_ws_sql('text')}, ' ')))"
-            " AS term"
-        )
-        .groupBy("term")
-        .agg(F.expr("count(1) AS df"))
-    )
-    # doc_id is the documents PK (unique at every SF — the dedup and
-    # split gates all rely on it), so N = count(*), sparing the
-    # countDistinct's shuffle of every distinct id.
-    n_docs = docs.selectExpr("count(1) AS n_docs")
-    # Broadcast TF, stream DF: tf is bounded by the query's doc set (20
-    # docs), while df_ is vocabulary-sized — at 100 TB the corpus-wide
-    # term table can NOT be broadcast, but the per-query tf always can.
-    # The inner BHJ probes df_ term-by-term with no shuffle of either.
-    scored = (
-        df_.join(F.broadcast(tf), on="term")
-        .crossJoin(F.broadcast(n_docs))
-        .selectExpr(
-            "*", "(tf * (ln((1 + n_docs) / (1 + df)) + 1)) AS score"
-        )
-    )
-    # rank on round(score, 9): Spark's and DuckDB's ln may differ by an
-    # ULP at ~16 significant digits, and two DISTINCT near-equal scores
-    # could then order differently at an untested SF even though both
-    # engines are "right" (ADVICE r05 on bm25_top_terms — same fix:
-    # identical rounding on both sides turns ULP noise into a tie the
-    # term column breaks deterministically).
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY doc_id "
-            "ORDER BY round(score, 9) DESC, term ASC) AS rank",
-        )
-        .where("rank <= 5")
-        .select("doc_id", "term", "tf", "df", "rank")
-    )
 
 
 TFIDF_ORACLE = """
@@ -1031,11 +932,10 @@ FROM words
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set contamination: eval docs (doc_id % 10 == 0) checked for
     5-gram overlap against the train rest of the corpus
-    (`operators/dedup.py::contamination_check`).
+    (`operators/dedup.py::contamination_check_sql`).
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q_contamination_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.dedup import (
         contamination_check_sql,
     )
@@ -1058,16 +958,6 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return catalog_sql(spark, build)
-
-
-def _q_contamination_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    from swisscourtrulingcorpus_spark.operators.dedup import contamination_check
-
-    docs = load_table(spark, sf_dir, "documents")
-    ev = docs.where(F.col("doc_id") % 10 == 0)
-    tr = docs.where(F.col("doc_id") % 10 != 0)
-    return contamination_check(ev, tr, "text", "doc_id", k=5, spread=True)
 
 
 CONTAMINATION_ORACLE = f"""
@@ -1099,11 +989,10 @@ FROM totals t LEFT JOIN shared s ON t.doc_id = s.doc_id
 def q_chunked_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-bounded chunking with overlap (64-token chunks, 16-token
     overlap) — the pretraining/embedding preprocessing step, map-side
-    only (`operators/training.py::chunk_documents`).
+    only (`operators/training.py::chunk_documents_sql`).
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q_chunked_documents_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.training import (
         chunk_documents_sql,
     )
@@ -1122,14 +1011,6 @@ def q_chunked_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             overlap=16,
         ),
     )
-
-
-def _q_chunked_documents_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    from swisscourtrulingcorpus_spark.operators.training import chunk_documents
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, "text", "doc_id", chunk_size=64, overlap=16)
 
 
 CHUNKED_ORACLE = """
@@ -1154,8 +1035,7 @@ def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutation via md5(seed|id) ranking.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_q_training_shuffle_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.operators.training import (
         deterministic_shuffle_sql,
     )
@@ -1170,16 +1050,6 @@ def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             table_view(spark, sf_dir, "documents"), "doc_id"
         ),
     )
-
-
-def _q_training_shuffle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    from swisscourtrulingcorpus_spark.operators.training import (
-        deterministic_shuffle,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return deterministic_shuffle(docs, "doc_id").select("doc_id", "shuffle_rank")
 
 
 def q_cms_token_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:

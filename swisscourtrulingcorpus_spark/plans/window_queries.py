@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.money import dec2 as _dec
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
@@ -27,8 +26,7 @@ def tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``window()`` aligns to the epoch, i.e. identical to date_trunc.
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_tumbling_hourly_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -48,24 +46,6 @@ FROM (
 """
 
     return catalog_sql(spark, build)
-
-
-def _tumbling_hourly_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(_dec("value")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "cnt",
-            "total_value",
-        )
-    )
 
 
 TUMBLING_ORACLE = """
@@ -111,8 +91,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands (lag + running sum).
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
-    identical to `_session_windows_df`
-    (tests/test_sql_construction.py)."""
+    pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
@@ -134,26 +113,6 @@ FROM (
 """
 
     return catalog_sql(spark, build)
-
-
-def _session_windows_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-API twin for the plan-equality test."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.col("user_id"), F.session_window("ts", "30 minutes").alias("w")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("ts").alias("__last"),
-        )
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("__last", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-            "n_events",
-        )
-    )
 
 
 SESSION_ORACLE = """

@@ -170,7 +170,7 @@ def test_extraction_udfs_distributed(spark):
         extract_citations_udf,
         extract_judgments_udf,
         split_sections_udf,
-        uuid5_udf,
+        uuid5_col,
     )
 
     df = spark.createDataFrame(
@@ -178,7 +178,7 @@ def test_extraction_udfs_distributed(spark):
         ["file_name", "text", "lang"],
     )
     out = df.select(
-        uuid5_udf("file_name").alias("decision_id"),
+        uuid5_col("file_name").alias("decision_id"),
         split_sections_udf("text", "lang").alias("sections"),
         extract_citations_udf("text").alias("citations"),
     )

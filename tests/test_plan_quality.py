@@ -218,15 +218,27 @@ def test_dedup_self_joins_reuse_exchange(spark, sf_dir):
     """The LSH band self-join and the Jaccard inverted-index join must
     hang both sides off ONE exchange (ReusedExchange) — without it the
     whole shingle+hash map pipeline executes once per join side."""
-    from swisscourtrulingcorpus_spark.sources.catalog import load_table
+    from swisscourtrulingcorpus_spark.sources.catalog import (
+        load_table,
+        table_view,
+    )
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_lsh_candidates,
-        ngram_jaccard_pairs,
+        ngram_jaccard_pairs_sql,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    for fn in (minhash_lsh_candidates, ngram_jaccard_pairs):
-        plan = _final_plan(fn(docs, "text", "doc_id", spread=True))
+    view = table_view(spark, sf_dir, "documents")
+    spread = spark.sparkContext.defaultParallelism
+    for df in (
+        minhash_lsh_candidates(docs, "text", "doc_id", spread=True),
+        spark.sql(
+            ngram_jaccard_pairs_sql(
+                view, "text", "doc_id", spread_partitions=spread
+            )
+        ),
+    ):
+        plan = _final_plan(df)
         assert "ReusedExchange" in plan, plan
 
 

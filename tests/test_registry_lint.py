@@ -6,7 +6,8 @@ caught.  This is the mechanical guard: every registered gate's
 OPTIMIZED logical plan is fingerprinted at sf0.001 with exprIds
 normalized away (`plans/parity.py::plan_fingerprint`); two gates with
 different names but the same fingerprint are the same query, and the
-test goes red naming the pair.
+test goes red naming the pair.  The same scan checks every fingerprint
+against the committed golden file (tests/fixtures/plan_fingerprints.json).
 """
 
 from __future__ import annotations
@@ -52,16 +53,19 @@ def test_plan_fingerprint_catches_planted_duplicate(spark):
 )
 def test_registry_has_no_duplicate_plans(spark):
     """Full-registry scan: no two gates may resolve to the same
-    normalized optimized plan (~100 s for 230 gates — plan analysis
-    only, no job execution beyond the handful of gates that collect
-    bounded driver-side state at construction)."""
+    normalized optimized plan, and each must match its golden
+    fingerprint (skipped after the duplicate check when SF_DIR is not
+    the golden file's scale).  One loop: ~150-220 s for 262 gates of
+    plan analysis, no jobs beyond a few bounded driver-side collects."""
     import __spark_entry__ as entry
+    from conftest import assert_golden_plans
     from swisscourtrulingcorpus_spark.plans.parity import plan_fingerprint
 
     seen: dict[str, str] = {}
+    got: dict[str, str] = {}
     dups: list[tuple[str, str]] = []
     for name, fn in entry.queries().items():
-        fp = plan_fingerprint(fn(spark, SF_DIR))
+        fp = got[name] = plan_fingerprint(fn(spark, SF_DIR))
         if fp in seen:
             dups.append((seen[fp], name))
         else:
@@ -70,3 +74,4 @@ def test_registry_has_no_duplicate_plans(spark):
         "gates with IDENTICAL normalized plans (same query, two "
         f"names — delete one): {dups}"
     )
+    assert_golden_plans("gates", got, complete=True, sf_dir=SF_DIR)

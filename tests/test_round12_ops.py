@@ -6,10 +6,9 @@ Pins the properties the r12 changes rely on:
   nondeterministic mid-projection once (ADVICE r11): assert the
   executed plan contains a ReusedExchange and exactly one range
   Exchange subtree.
-- `ngram_jaccard_pairs`' hot-key guard must keep the single-scan /
-  ReusedExchange property while replacing the window with a broadcast
-  anti-join (no per-bucket buffering), and must still drop stop
-  shingles above max_doc_freq.
+- `ngram_jaccard_pairs_sql` must keep the single-scan /
+  ReusedExchange property of its count-window doc-frequency filter,
+  and must drop stop shingles above max_doc_freq.
 - `bm25_top_terms`' df branch must aggregate map-side (one exchange of
   (term, count) rows — no (term, doc_id) expansion exchange).
 - SQL-text seed interpolation rejects quote-bearing seeds.
@@ -69,36 +68,48 @@ def test_parallel_rank_values(spark):
 
 
 def test_ngram_postings_exchange_reused(spark, sf_dir):
-    from swisscourtrulingcorpus_spark.operators.dedup import ngram_jaccard_pairs
-    from swisscourtrulingcorpus_spark.sources.catalog import load_table
+    from swisscourtrulingcorpus_spark.operators.dedup import (
+        ngram_jaccard_pairs_sql,
+    )
+    from swisscourtrulingcorpus_spark.sources.catalog import table_view
 
-    docs = load_table(spark, sf_dir, "documents")
-    plan = _final_plan(ngram_jaccard_pairs(docs, "text", "doc_id", spread=True))
+    docs = table_view(spark, sf_dir, "documents")
+    spread = spark.sparkContext.defaultParallelism
+    plan = _final_plan(
+        spark.sql(
+            ngram_jaccard_pairs_sql(
+                docs, "text", "doc_id", spread_partitions=spread
+            )
+        )
+    )
     # the postings exchange must be shared by the self-join sides (one
     # scan + tokenize + shingle + md5 chain; see the operator's
-    # hot-bucket comment for the two bounded-buffer guards that were
+    # hot-bucket note for the two bounded-buffer guards that were
     # measured and rejected in r12)
     final = plan.split("== Initial Plan ==")[0]
     assert "ReusedExchange" in final, final
 
 
 def test_ngram_guard_drops_stop_shingles(spark):
-    from swisscourtrulingcorpus_spark.operators.dedup import ngram_jaccard_pairs
+    from swisscourtrulingcorpus_spark.operators.dedup import (
+        ngram_jaccard_pairs_sql,
+    )
 
     # 4 docs sharing one ubiquitous shingle ("aa bb cc"); pairs must be
     # empty once max_doc_freq < 4 because every shared shingle is hot
     rows = [(i, "aa bb cc x%d y%d z%d" % (i, i, i)) for i in range(4)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = ngram_jaccard_pairs(
-        df, "text", "doc_id", k=3, threshold=0.0, max_doc_freq=3
+    spark.createDataFrame(rows, ["doc_id", "text"]).createOrReplaceTempView(
+        "ngram_guard_docs"
     )
-    assert out.count() == 0
-    # with the threshold above the sharing count, the shingle is kept
-    # and every pair shares it
-    out2 = ngram_jaccard_pairs(
-        df, "text", "doc_id", k=3, threshold=0.0, max_doc_freq=4
-    )
-    assert out2.count() == 6
+    # at max_doc_freq=4 the shingle is kept and every pair shares it
+    for max_doc_freq, n_pairs in ((3, 0), (4, 6)):
+        out = spark.sql(
+            ngram_jaccard_pairs_sql(
+                "ngram_guard_docs", "text", "doc_id", k=3, threshold=0.0,
+                max_doc_freq=max_doc_freq,
+            )
+        )
+        assert out.count() == n_pairs, max_doc_freq
 
 
 def test_bm25_df_branch_single_exchange(spark, sf_dir):

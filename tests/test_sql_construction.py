@@ -1,15 +1,10 @@
-"""Whole-query SQL-text construction equivalence (r12, session 2).
+"""Whole-query SQL-text construction, pinned by golden plan fingerprints.
 
-Each converted headline query keeps its former DataFrame-API
-construction as a private ``_q_<name>_df`` twin.  The live gate builds
-the SAME logical query as ONE parsed ``spark.sql`` statement (a py4j
-round trip per DataFrame method is the dominant construction cost the
-bench times — guide §1).  This test pins the equivalence at its
-strongest practical level: the OPTIMIZED logical plans must be
-string-identical modulo expression IDs and parser-assigned lambda
-variable names.  Identical optimized plans mean identical physical
-planning input, hence identical execution and results — stronger than
-oracle-only equivalence.
+Every headline gate and pipeline helper has ONE construction path:
+parsed ``spark.sql`` / ``F.expr`` text.  Their normalized
+optimized plans (``plans/parity.py::plan_fingerprint``) are pinned in
+``tests/fixtures/plan_fingerprints.json``: the 20 headline gates and
+the pipeline outputs here, every gate in the slow registry lint.
 
 Also covers the catalog helpers: ``table_view`` returns a registered
 name with a warm zero-py4j path, and ``catalog_sql`` self-heals when a
@@ -18,98 +13,108 @@ cached temp view is dropped behind the cache.
 
 from __future__ import annotations
 
-import re
+import os
 
-import pytest
-
-
-def _norm(df) -> str:
-    s = df._jdf.queryExecution().optimizedPlan().toString()
-    s = re.sub(r"#\d+L?", "#X", s)
-    # the SQL parser names lambda args x/acc/v where the Column API
-    # generates x_4, x_5, ... — same structure, different tags
-    s = re.sub(r"lambda [a-z]+(_\d+)?", "lambda V", s)
-    return s
+from conftest import assert_golden_plans, load_golden_plans
 
 
-def _twins():
-    from swisscourtrulingcorpus_spark.plans import analytics_queries as aq
-    from swisscourtrulingcorpus_spark.plans import relational_queries as rq
-    from swisscourtrulingcorpus_spark.plans import text_queries as tq
-
-    from swisscourtrulingcorpus_spark.plans import window_queries as wq
-
-    return [
-        ("q1_pricing_summary", rq._q1_df),
-        ("coverage_by_region", rq._coverage_df),
-        ("map_join_orders", rq._map_join_orders_df),
-        ("semi_join_membership", rq._semi_join_membership_df),
-        ("rollup_region_nation", rq._rollup_df),
-        ("topk_orders_per_segment", rq._topk_orders_df),
-        ("tumbling_hourly_events", wq._tumbling_hourly_df),
-        ("session_windows_events", wq._session_windows_df),
-        ("cosine_topk_bruteforce", tq._q_cosine_topk_df),
-        ("chunked_documents", tq._q_chunked_documents_df),
-        ("q3_shipping_priority", aq._q3_df),
-        ("q5_supplier_volume", aq._q5_df),
-        ("q18_large_orders", aq._q18_df),
-        ("asof_purchase_attribution", rq._asof_purchase_attribution_df),
-        ("training_shuffle_rank", tq._q_training_shuffle_df),
-        ("tfidf_top_terms", tq._q_tfidf_top_terms_df),
-        ("ngram_jaccard_pairs", tq._q_ngram_jaccard_df),
-        ("test_set_contamination", tq._q_contamination_df),
-        ("minhash_lsh_pairs", tq._q_minhash_lsh_pairs_df),
-        ("minhash_dedup_groups", tq._q_minhash_dedup_groups_df),
-    ]
-
-
-def test_sql_twin_plans_identical(spark, sf_dir):
+def test_headline_plans_match_golden(spark, sf_dir):
+    from bench import HEADLINE
+    from swisscourtrulingcorpus_spark.plans.parity import plan_fingerprint
     from swisscourtrulingcorpus_spark.plans.registry import queries
 
     q = queries()
-    for name, df_form in _twins():
-        live = _norm(q[name](spark, sf_dir))
-        twin = _norm(df_form(spark, sf_dir))
-        assert live == twin, f"{name}: optimized plans differ\n{live}\n---\n{twin}"
+    got = {name: plan_fingerprint(q[name](spark, sf_dir)) for name in HEADLINE}
+    assert_golden_plans("gates", got, sf_dir=sf_dir)
 
 
-def test_expression_twins_analyzed_identical(spark):
-    """The helper functions that switched to parsed-SQL bodies for
-    string column names (uuid5, language id, token count, binary
-    judgment, date splits) must build the exact analyzed plan of their
-    Column forms — pinned here by forcing the Column path with a
-    Column input."""
+def test_pipeline_plans_match_golden(spark):
+    from swisscourtrulingcorpus_spark.plans.parity import pipeline_fingerprints
+
+    got = pipeline_fingerprints(spark, load_golden_plans()["n_docs"])
+    assert_golden_plans("pipeline", got, complete=True)
+
+
+def test_plan_fingerprint_ignores_catalog_view_suffix(spark, sf_dir):
+    """Catalog temp views are named ``__catalog_<table>_<digits>`` with a
+    per-process hash.  Distinct aggregates keep that qualifier in the
+    optimized plan (Expand), and number their groups in hash order of
+    exprIds and qualifiers, so the fingerprint must normalize both —
+    but an aggregate reading the wrong group must still differ."""
+    import re
+
+    from swisscourtrulingcorpus_spark.plans.parity import (
+        normalize_plan,
+        plan_fingerprint,
+    )
+
+    path = os.path.join(sf_dir, "region.parquet")
+    fps = set()
+    for i, n in enumerate((123, 987654321, 5, 77)):
+        view = f"__catalog_region_{n}"
+        for _ in range(i * 37):  # shift the exprIds between constructions
+            spark.range(1)
+        spark.read.parquet(path).createOrReplaceTempView(view)
+        df = spark.sql(
+            "SELECT count(DISTINCT r_name) AS a, count(DISTINCT r_regionkey) AS b"
+            f" FROM {view}"
+        )
+        fps.add(plan_fingerprint(df))
+        spark.catalog.dropTempView(view)
+    assert len(fps) == 1, fps
+
+    # the groups numbered the other way round (Expand rows and FILTERs
+    # alike) must match; the FILTERs alone swapped must not
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+
+    def swap(pattern):
+        return re.sub(pattern, lambda m: m[1] + {"1": "2", "2": "1"}[m[2]], plan)
+
+    relabeled = swap(r"(gid#\d+ = |, )([12])(?=\)|\])")
+    miswired = swap(r"(gid#\d+ = )([12])")
+    assert plan != relabeled != miswired
+    assert normalize_plan(plan) == normalize_plan(relabeled) != normalize_plan(miswired)
+
+
+def test_plan_fingerprint_ignores_lambda_counter(spark):
+    """Column-API lambda variables are named ``x_<n>`` from a counter
+    global to the JVM: a later build must fingerprint the same."""
     from pyspark.sql import functions as F
 
-    from swisscourtrulingcorpus_spark.extraction.ids import uuid5_col
-    from swisscourtrulingcorpus_spark.functions.domain import (
-        normalize_binary_judgment,
-    )
-    from swisscourtrulingcorpus_spark.functions.text import (
-        language_id_score,
-        token_count_ws,
-    )
+    from swisscourtrulingcorpus_spark.plans.parity import plan_fingerprint
 
-    df = spark.createDataFrame([("a b", ["approval"], 2017)], ["t", "j", "year"])
-    pairs = [
-        (uuid5_col("t"), uuid5_col(F.col("t"))),
-        (language_id_score("t"), language_id_score(F.col("t"))),
-        (token_count_ws("t"), token_count_ws(F.col("t"))),
-        (
-            normalize_binary_judgment("j"),
-            normalize_binary_judgment(F.col("j")),
-        ),
-    ]
-    for sql_form, col_form in pairs:
-        a = _norm(df.select(sql_form.alias("o")))
-        b = _norm(df.select(col_form.alias("o")))
-        assert a == b, f"twin drift:\n{a}\n---\n{b}"
+    def build():
+        return spark.range(3).selectExpr("array(id, id + 1) AS a").select(
+            F.filter("a", lambda v: v > 1).alias("f"),
+            F.aggregate("a", F.lit(0).cast("long"), lambda acc, v: acc + v).alias("s"),
+        )
+
+    first = plan_fingerprint(build())
+    build()
+    assert plan_fingerprint(build()) == first
+
+
+def test_language_id_quote_bearing_stopword(spark, monkeypatch):
+    """Stopwords splice into the SQL text as escaped literals: words
+    with an apostrophe or a backslash parse and are counted."""
+    from swisscourtrulingcorpus_spark.functions import text
+
+    stops = {k: list(v) for k, v in text.STOPWORDS.items()}
+    stops["fr"].append("d'un")
+    stops["en"].append("back\\slash")
+    monkeypatch.setattr(text, "STOPWORDS", stops)
+    df = spark.createDataFrame([("d'un d'un",), ("back\\slash",)], ["t"])
+    lang = text.language_id_score("t").alias("lang")
+    assert [r.lang for r in df.select(lang).collect()] == ["fr", "en"]
 
 
 def test_lazy_tables_defer_and_memoize(spark):
     """run_extraction_pipeline returns a mapping whose derived tables
     construct on first access and memoize (same object on re-read,
-    preserving the one-cache-entry semantics)."""
+    preserving the one-cache-entry semantics); ``dict(tables)`` and
+    ``{**tables}`` build every table, never a placeholder."""
+    from pyspark.sql import DataFrame
+
     from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
         run_extraction_pipeline,
     )
@@ -126,8 +131,10 @@ def test_lazy_tables_defer_and_memoize(spark):
     assert c1 is tables["citation"]
     assert tables.get("missing", "d") == "d"
     assert tables["composition"].columns[0] == "decision_id"
-    # items() materializes every table (the eager-consumer idiom)
-    assert len(dict(tables.items())) == 8
+    for copy in (dict(tables), {**tables}):
+        assert len(copy) == 8
+        assert all(isinstance(v, DataFrame) for v in copy.values()), copy
+        assert copy["citation"] is c1
 
 
 def test_table_view_and_catalog_sql_self_heal(spark, sf_dir):
