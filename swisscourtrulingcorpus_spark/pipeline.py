@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from swisscourtrulingcorpus_spark.plans.datasets_extra import (
@@ -64,11 +65,18 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def _read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _manifest_path(out_dir)
+    """The processed-files manifest, or None before the first build.
+
+    Only a missing manifest means "nothing processed yet".  Any other
+    read failure (a corrupt part file, say) raises: treating it as
+    missing would re-extract the whole landing zone and overwrite
+    every table."""
     try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+        return spark.read.parquet(_manifest_path(out_dir))
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def build_corpus(

@@ -17,6 +17,7 @@ from __future__ import annotations
 import random
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 LANGS = ["de", "fr", "it"]
 
@@ -188,6 +189,30 @@ def _decision_row(i: int, rng: random.Random) -> dict:
     }
 
 
+#: Schema of one raw-corpus row (``_decision_row``) as both generators
+#: emit it, before ``date`` becomes a DATE.  Fields are sorted by name,
+#: the order ``createDataFrame(list-of-dicts)`` used to infer; the ints
+#: stay ``bigint`` (with nulls) where pandas alone would turn a
+#: None-able int column into ``double``.
+RAW_CORPUS_SCHEMA = StructType(
+    sorted(
+        [
+            StructField("file_name", StringType()),
+            StructField("spider", StringType()),
+            StructField("chamber", StringType()),
+            StructField("lang", StringType()),
+            StructField("date", StringType()),
+            StructField("raw_text", StringType()),
+            StructField("true_outcome", StringType()),
+            StructField("true_president", StringType()),
+            StructField("cited_year", LongType()),
+            StructField("cited_page", LongType()),
+        ],
+        key=lambda f: f.name,
+    )
+)
+
+
 def raw_corpus_df(spark: SparkSession, n_decisions: int = 120) -> DataFrame:
     """Raw-corpus fixture as a DataFrame.
 
@@ -195,8 +220,8 @@ def raw_corpus_df(spark: SparkSession, n_decisions: int = 120) -> DataFrame:
     ``createDataFrame(list-of-dicts)`` — the dict path pickles every
     row (measured ~0.7 s of the bench's timed 5k-doc pipeline
     iteration on the profiling box; the Arrow path is ~0.1 s).  Column
-    order and types are pinned to what the dict path produced
-    (alphabetical keys; int64/str; the same to_date conversion), and
+    order and types are pinned by ``RAW_CORPUS_SCHEMA`` (what the dict
+    path inferred, with the same to_date conversion), and
     the resulting LocalRelation is plan-fingerprint-identical
     (tools/pipeline_fingerprint.py before/after), so every consumer —
     including the oracle-gated extraction family — sees bit-identical
@@ -204,12 +229,8 @@ def raw_corpus_df(spark: SparkSession, n_decisions: int = 120) -> DataFrame:
     import pandas as pd
     from pyspark.sql import functions as F
 
-    rows = build_raw_corpus(n_decisions)
-    # createDataFrame(list-of-dicts) sorts columns alphabetically;
-    # reproduce that exactly so the schema cannot drift
-    cols = sorted(rows[0]) if rows else []
-    pdf = pd.DataFrame(rows, columns=cols)
-    df = spark.createDataFrame(pdf)
+    pdf = pd.DataFrame(build_raw_corpus(n_decisions), columns=RAW_CORPUS_SCHEMA.names)
+    df = spark.createDataFrame(pdf, RAW_CORPUS_SCHEMA)
     return df.withColumn("date", F.to_date("date"))
 
 
@@ -228,33 +249,6 @@ def raw_corpus_df_distributed(
     Zipf-ish citation reuse — is identical arithmetic on ``i``."""
     import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    # field order matches `createDataFrame(list-of-dicts)`'s
-    # alphabetical key sort, so both generators produce the SAME
-    # schema and the pipeline cannot tell them apart
-    schema = StructType(
-        sorted(
-            [
-                StructField("file_name", StringType()),
-                StructField("spider", StringType()),
-                StructField("chamber", StringType()),
-                StructField("lang", StringType()),
-                StructField("date", StringType()),
-                StructField("raw_text", StringType()),
-                StructField("true_outcome", StringType()),
-                StructField("true_president", StringType()),
-                StructField("cited_year", LongType()),
-                StructField("cited_page", LongType()),
-            ],
-            key=lambda f: f.name,
-        )
-    )
 
     def gen(batches):
         for pdf in batches:
@@ -265,7 +259,7 @@ def raw_corpus_df_distributed(
             if rows:
                 yield pd.DataFrame(rows)
 
-    df = spark.range(n_decisions, numPartitions=parts).mapInPandas(gen, schema)
+    df = spark.range(n_decisions, numPartitions=parts).mapInPandas(gen, RAW_CORPUS_SCHEMA)
     return df.withColumn("date", F.to_date("date"))
 
 

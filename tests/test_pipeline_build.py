@@ -175,3 +175,29 @@ def test_build_corpus_from_raw_landing_zone(spark, tmp_path):
             ]
             assert (r["fmt"], r["width"], r["height"]) == ("avi", 3, 2)
             assert r["pixel_sum"] == sum(px), (d, f)
+
+
+def test_corrupt_manifest_raises_and_keeps_tables(spark, tmp_path):
+    """Only a missing manifest means "nothing processed yet".  A corrupt
+    one must fail the incremental build before it re-extracts the
+    landing zone and overwrites every table."""
+    out = tmp_path / "corpus"
+    build_corpus(spark, raw_corpus_df(spark, 12), str(out))
+
+    def table_files():
+        return {
+            str(p.relative_to(out)): p.read_bytes()
+            for t in TABLES
+            for p in (out / t).rglob("*")
+            if p.is_file()
+        }
+
+    before = table_files()
+    manifest = out / "_manifest"
+    for part in manifest.glob("*.parquet"):
+        part.unlink()
+    (manifest / "part-0.parquet").write_bytes(b"not a parquet file")
+
+    with pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
+        build_corpus(spark, raw_corpus_df(spark, 16), str(out))
+    assert table_files() == before

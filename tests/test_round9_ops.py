@@ -312,6 +312,25 @@ def test_distributed_corpus_generator_matches_sequential_shape(spark):
     )
 
 
+def test_raw_corpus_none_int_stays_bigint(spark, monkeypatch):
+    """A None-able int field keeps the pinned ``bigint`` type with a
+    null; pandas on its own would turn the column into ``double``."""
+    from pyspark.sql.types import LongType
+
+    from swisscourtrulingcorpus_spark.sources import domain_fixtures
+
+    row = domain_fixtures._decision_row
+
+    def none_on_odd(i, rng):
+        return {**row(i, rng), "cited_year": None} if i % 2 else row(i, rng)
+
+    monkeypatch.setattr(domain_fixtures, "_decision_row", none_on_odd)
+    df = domain_fixtures.raw_corpus_df(spark, 4)
+    assert df.schema["cited_year"].dataType == LongType()
+    years = sorted((r.cited_year for r in df.collect()), key=str)
+    assert years == [120, 122, None, None]
+
+
 def test_cms_join_size_overestimates_and_converges(spark):
     """CMS inner-product join-size estimate (Cormode-Muthukrishnan):
     always >= the exact equi-join cardinality (collision cross-terms

@@ -80,3 +80,46 @@ def test_new_query_is_reported(tmp_path):
         _bench(2.0, {"q1": 1.0, "q2": 1.0}, {}),
     )
     assert "NEW" in out
+
+
+def _load_gate_profile():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "gate_profile", REPO / "tools" / "gate_profile.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_gate_profile_records(spark, sf_dir):
+    """One record per gate with every layer counted; a raising gate
+    yields an ``err`` record; the py4j patch is gone afterwards."""
+    import py4j.clientserver as cs
+
+    from swisscourtrulingcorpus_spark.plans.registry import queries
+
+    send_command = cs.ClientServerConnection.send_command
+    q = queries()
+
+    def broken(spark, sf_dir):
+        raise ValueError("gate construction failed")
+
+    gates = {
+        "q1_pricing_summary": q["q1_pricing_summary"],
+        "minhash_lsh_pairs": q["minhash_lsh_pairs"],
+        "broken": broken,
+    }
+    recs = list(_load_gate_profile().profile_gates(spark, sf_dir, gates, runs=1))
+
+    assert [r["gate"] for r in recs] == list(gates)
+    for rec in recs[:2]:
+        assert "err" not in rec, rec
+        assert rec["round_trips"] > 0
+        assert rec["jobs"] >= 1 and rec["stages"] >= 1 and rec["tasks"] >= 1
+        assert rec["shuffle_write_bytes"] > 0
+        assert sum(rec["phases_ms"].values()) > 0
+        assert rec["construct_best_ms"] == rec["construct_median_ms"] > 0
+    assert "gate construction failed" in recs[2]["err"]
+    assert cs.ClientServerConnection.send_command is send_command

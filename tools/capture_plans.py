@@ -20,28 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from swisscourtrulingcorpus_spark.plans.registry import queries  # noqa: E402
 from swisscourtrulingcorpus_spark.session import get_spark  # noqa: E402
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_supplier_volume",
-    "q18_large_orders",
-    "coverage_by_region",
-    "map_join_orders",
-    "semi_join_membership",
-    "asof_purchase_attribution",
-    "topk_orders_per_segment",
-    "rollup_region_nation",
-    "minhash_lsh_pairs",
-    "minhash_dedup_groups",
-    "ngram_jaccard_pairs",
-    "cosine_topk_bruteforce",
-    "tfidf_top_terms",
-    "chunked_documents",
-    "training_shuffle_rank",
-    "test_set_contamination",
-    "tumbling_hourly_events",
-    "session_windows_events",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:

@@ -4,8 +4,9 @@ Every operator family is two-SF measured in SCALE_MEASURE.json, but the
 flagship COMPOSITION — ``run_extraction_pipeline`` + ``judgment_dataset``,
 the reference's core workload — was only ever benched at one size.  This
 runs it end-to-end at the bench size (5k docs) and at 10x (50k docs) in
-one Spark app with the public event log on, and reports wall seconds,
-docs/sec, and shuffle read/write deltas per run, so SCALE.md can carry a
+one Spark app, and reports wall seconds, docs/sec, and the shuffle-write
+bytes of each run (Spark's status store, read by
+``tools/gate_profile.py::window_totals``), so SCALE.md can carry a
 measured exponent for the pipeline itself rather than a per-stage
 argument.
 
@@ -29,13 +30,11 @@ os.environ["PYTHONPATH"] = (
     _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 ).rstrip(os.pathsep)
 
-from scale_measure import _shuffle_totals  # noqa: E402  (same event-log tally)
+from gate_profile import newest_execution, window_totals  # noqa: E402
 
 
 def main() -> None:
     out_json = sys.argv[1] if len(sys.argv) > 1 else "PIPELINE_SCALE.json"
-    event_dir = "/tmp/pipeline_scale_eventlog"
-    os.makedirs(event_dir, exist_ok=True)
 
     from pyspark.sql import SparkSession
 
@@ -47,14 +46,9 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "24g")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{event_dir}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
 
     from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
         judgment_dataset,
@@ -97,22 +91,19 @@ def main() -> None:
         ("sf1_50k", 50000),
         ("sf10_500k", 500000),
     ):
-        time.sleep(1.0)  # settle async event-log flush
-        r0, w0 = _shuffle_totals(event_dir, app_id)
+        newest = newest_execution(spark)
         t0 = time.time()
         run(n_docs)
         wall = time.time() - t0
-        time.sleep(1.0)
-        r1, w1 = _shuffle_totals(event_dir, app_id)
-        # output-rows metric from a separate count AFTER the deltas
+        shuffle = window_totals(spark, newest)["shuffle_write_bytes"]
+        # output-rows metric from a separate count after the window
         rows = judgment_dataset(run_extraction_pipeline(_src(n_docs))).count()
         results[label] = {
             "n_docs": n_docs,
             "rows_out": rows,
             "wall_s": round(wall, 2),
             "docs_per_sec": round(n_docs / wall, 1),
-            "shuffle_read_mb": round((r1 - r0) / 1e6, 2),
-            "shuffle_write_mb": round((w1 - w0) / 1e6, 2),
+            "shuffle_write_mb": round(shuffle / 1e6, 2),
         }
         print(label, results[label], flush=True)
 

@@ -6,10 +6,9 @@ construction; this tool MEASURES it.  It synthesizes a 10× corpus
 a replica-unique token / offset, so the per-replica duplicate
 structure is identical and the TRUE scaling of every linear claim is
 exactly 10×), runs the representative registry queries at both scales
-in one Spark app with the public event log enabled, and reports per
-query: wall seconds, output rows, and shuffle read/write bytes (the
-deltas of the event-log task metrics between queries — public
-`spark.eventLog.*` config, no JVM internals).
+in one Spark app, and reports per query: wall seconds, output rows,
+and shuffle-write bytes of the measured run, read from Spark's status
+store by ``tools/gate_profile.py::window_totals``.
 
     python tools/scale_measure.py [OUT_JSON]
 
@@ -336,50 +335,6 @@ def synth_10x(spark, src: str, dst: str) -> None:
     )
 
 
-def _shuffle_totals(event_dir: str, app_id: str) -> tuple[int, int]:
-    """(read_bytes, write_bytes) summed over all TaskEnd events so far.
-    Handles both the flat single-file layout and the rolling v2
-    directory layout (compression is disabled in the session conf so
-    the JSON is directly readable)."""
-    paths: list[str] = []
-    for cand in os.listdir(event_dir):
-        if app_id not in cand:
-            continue
-        full = os.path.join(event_dir, cand)
-        if os.path.isdir(full):
-            paths += [
-                os.path.join(full, f)
-                for f in sorted(os.listdir(full))
-                if f.startswith("events")
-            ]
-        else:
-            paths.append(full)
-    read = write = 0
-    for path in paths:
-        with open(path) as fh:
-            _tally(fh, totals := [0, 0])
-            read += totals[0]
-            write += totals[1]
-    return read, write
-
-
-def _tally(fh, totals: list[int]) -> None:
-    for line in fh:
-            if '"SparkListenerTaskEnd"' not in line:
-                continue
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue  # partially-flushed tail line
-            tm = ev.get("Task Metrics") or {}
-            srm = tm.get("Shuffle Read Metrics") or {}
-            swm = tm.get("Shuffle Write Metrics") or {}
-            totals[0] += (srm.get("Remote Bytes Read") or 0) + (
-                srm.get("Local Bytes Read") or 0
-            )
-            totals[1] += swm.get("Shuffle Bytes Written") or 0
-
-
 # --- streaming state-scale measurement (VERDICT r05 item 8) -----------
 #
 # The batch section measures shuffle bytes; the streaming analog of
@@ -551,10 +506,10 @@ def main() -> None:
         only = set(args[i + 1].split(","))
         del args[i : i + 2]
     out_json = args[0] if args else "SCALE_MEASURE.json"
-    event_dir = "/tmp/scale_eventlog"
-    os.makedirs(event_dir, exist_ok=True)
 
     from pyspark.sql import SparkSession
+
+    from gate_profile import newest_execution, window_totals
 
     from swisscourtrulingcorpus_spark.plans import registry
 
@@ -566,16 +521,10 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "24g")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{event_dir}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .getOrCreate()
     )
-    app_id = spark.sparkContext.applicationId
-
     big_dir = "/tmp/scale_sf1"
     print("synthesizing 10x corpus (idempotent per table) ...", flush=True)
     synth_10x(spark, SF_DIR, big_dir)
@@ -602,7 +551,7 @@ def main() -> None:
     for sf_label, sf_dir in (("1x", SF_DIR), ("10x", big_dir)):
         for name, claim in todo:
             # warm run first (codegen compile for this plan), then the
-            # measured run with shuffle-byte deltas around it.
+            # measured run with a status-store window around it.
             # Execution is a NOOP WRITE, not .count(): count() lets
             # Catalyst prune aggregate functions (group keys survive
             # but computed columns don't), and a one-row ungrouped
@@ -619,25 +568,21 @@ def main() -> None:
 
             _exec()
             spark.sparkContext.setJobGroup(name, f"{name}@{sf_label}")
-            time.sleep(1.0)  # settle async event-log flush
-            r0, w0 = _shuffle_totals(event_dir, app_id)
+            newest = newest_execution(spark)
             t0 = time.time()
             _exec()
             wall = time.time() - t0
-            time.sleep(1.0)
-            r1, w1 = _shuffle_totals(event_dir, app_id)
-            # AFTER the delta read, so its shuffles don't pollute it
+            shuffle_mb = window_totals(spark, newest)["shuffle_write_bytes"] / 1e6
             rows = qs[name](spark, sf_dir).count()
             rec = results.setdefault(name, {"claim": claim})
             rec[sf_label] = {
                 "wall_s": round(wall, 2),
                 "rows": rows,
-                "shuffle_read_mb": round((r1 - r0) / 1e6, 2),
-                "shuffle_write_mb": round((w1 - w0) / 1e6, 2),
+                "shuffle_write_mb": round(shuffle_mb, 2),
             }
             print(
                 f"{sf_label:>3} {name:32s} {wall:7.2f}s rows={rows:>9} "
-                f"shW={(w1 - w0) / 1e6:8.2f}MB",
+                f"shW={shuffle_mb:8.2f}MB",
                 flush=True,
             )
         if stream_todo:
