@@ -53,16 +53,9 @@ def extract_bge_reference_udf(header: pd.Series) -> pd.Series:
 # as a list (the reference's find_citations), not the joined header
 # reference ---------------------------------------------------------------
 
-from pyspark.sql.types import ArrayType  # noqa: E402
-
 
 def find_bger_citations_py(text: str | None) -> list[str] | None:
     if text is None:
         return None
     found = _REF_PATTERN.findall(text)
     return [_normalize(r) for r in found]
-
-
-@pandas_udf(ArrayType(StringType()))
-def find_bger_citations_udf(text: pd.Series) -> pd.Series:
-    return pd.Series([find_bger_citations_py(t) for t in text], dtype=object)

@@ -18,12 +18,7 @@ from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType
 
 _BLOCK_TAGS = {
     "p", "div", "br", "li", "tr", "h1", "h2", "h3", "h4", "table", "section",
@@ -208,17 +203,6 @@ def html_citations_py(html: str | None) -> list[dict] | None:
     return out
 
 
-HTML_CITATION_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("type", StringType()),
-            StructField("text", StringType()),
-            StructField("url", StringType()),
-        ]
-    )
-)
-
-
 @pandas_udf(StringType())
 def html_to_text_udf(html: pd.Series) -> pd.Series:
     return html.map(html_to_text_py)
@@ -231,13 +215,3 @@ def html_to_text_spider_udf(html: pd.Series, spider: pd.Series) -> pd.Series:
     return pd.Series(
         [html_to_text_py(h, s) for h, s in zip(html, spider)], dtype=object
     )
-
-
-@pandas_udf(ArrayType(StringType()))
-def html_paragraphs_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([html_paragraphs_py(h) for h in html], dtype=object)
-
-
-@pandas_udf(HTML_CITATION_SCHEMA)
-def html_citations_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([html_citations_py(h) for h in html], dtype=object)

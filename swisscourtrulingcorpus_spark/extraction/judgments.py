@@ -233,17 +233,3 @@ def extract_judgments_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
         [extract_judgments_py(t, lg) for t, lg in zip(text, lang)],
         dtype=object,
     )
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_judgments_with_spider_udf(
-    text: pd.Series, lang: pd.Series, spider: pd.Series
-) -> pd.Series:
-    """Spider-dispatching variant (per-row marker overrides)."""
-    return pd.Series(
-        [
-            extract_judgments_py(t, lg, sp)
-            for t, lg, sp in zip(text, lang, spider)
-        ],
-        dtype=object,
-    )

@@ -140,10 +140,3 @@ def pdf_paragraphs_py(text: str | None) -> list[str] | None:
             out.append(cleaned)
     return out
 
-
-from pyspark.sql.types import ArrayType  # noqa: E402
-
-
-@pandas_udf(ArrayType(StringType()))
-def pdf_paragraphs_udf(text: pd.Series) -> pd.Series:
-    return pd.Series([pdf_paragraphs_py(t) for t in text], dtype=object)

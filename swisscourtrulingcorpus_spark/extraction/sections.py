@@ -1065,17 +1065,3 @@ def split_sections_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
     return pd.Series(
         [split_sections_py(t, lg) for t, lg in zip(text, lang)]
     )
-
-
-@pandas_udf(SECTION_SCHEMA)
-def split_sections_with_spider_udf(
-    text: pd.Series, lang: pd.Series, spider: pd.Series
-) -> pd.Series:
-    """Spider-dispatching variant: per-row overrides from
-    SPIDER_OVERRIDES (broadcast with the closure)."""
-    return pd.Series(
-        [
-            split_sections_py(t, lg, sp)
-            for t, lg, sp in zip(text, lang, spider)
-        ]
-    )

@@ -1,11 +1,7 @@
 """F6 roman numerals (`scrc/utils/main_utils.py:171-210`): int↔roman
-for numbered-ruling iteration.  Pure functions (usable inside any UDF)
-plus a column expression for the common small range."""
+for numbered-ruling iteration.  Pure functions (usable inside any UDF)."""
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _VALUES = [
     (1000, "M"), (900, "CM"), (500, "D"), (400, "CD"), (100, "C"),
@@ -39,12 +35,3 @@ def roman_to_int(s: str) -> int:
         else:
             raise ValueError(f"not a roman numeral: {s}")
     return total
-
-
-def roman_col(n: Column, max_n: int = 30) -> Column:
-    """int → roman as a literal-map column expression (the numbered
-    rulings the judgment extractor walks never exceed ~30)."""
-    mapping = F.create_map(
-        *[x for i in range(1, max_n + 1) for x in (F.lit(i), F.lit(int_to_roman(i)))]
-    )
-    return mapping[n]

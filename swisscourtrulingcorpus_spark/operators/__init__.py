@@ -3,7 +3,7 @@
 from swisscourtrulingcorpus_spark.operators.relational import (  # noqa: F401
     map_join,
     asof_join,
-    top_k_per_group,
+    top_k_per_group_sql,
     date_stratified_split,
     cutoff_filter,
     value_counts_with_pct,

@@ -59,57 +59,64 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _spread(df: DataFrame, id_col: str, spread: bool) -> DataFrame:
-    """Optionally repartition the narrow (id, text) input to the session's
-    default parallelism BEFORE the CPU-heavy shingle/hash map stage.
+def _spread_partitions(df: DataFrame, spread: bool) -> int | None:
+    """``spread=True`` → the session's default parallelism, the
+    ``spread_partitions`` of :func:`_shingle_sets_select`."""
+    return df.sparkSession.sparkContext.defaultParallelism if spread else None
 
+
+def _shingle_sets_select(
+    table: str,
+    text_col: str,
+    id_col: str,
+    k: int,
+    spread_partitions: int | None = None,
+) -> str:
+    """SQL text of the (id, __sh: array<string>) DISTINCT k-shingle set
+    per doc over a FROM-able table expression, computed entirely
+    map-side.  Each projection binds its intermediate to a real column
+    (``__w``, then ``__sh``) so Catalyst evaluates the split / shingle
+    construction once per row, not once per reference (see
+    word_shingles_from_words for why that matters).
+
+    Docs with < k words drop out — equivalent to (and much cheaper
+    than) filtering ``size(__sh) > 0`` afterwards: predicate pushdown
+    would copy the whole shingle-construction expression into the
+    Filter node, doubling both per-row work and the generated-code
+    size; ``size(__w) >= k`` only duplicates the split.
+
+    ``spread_partitions`` adds a REPARTITION hint on the narrow
+    (id, text) input BEFORE the CPU-heavy shingle/hash map stage.
     Shingle hashing costs far more CPU per byte than a scan, so its
     parallelism must not be bound by the source file layout: a corpus
     that arrives as a handful of small parquet files would otherwise run
     the whole hash pipeline on a handful of cores (measured at sf0.1:
     the 594 KB documents table scans as ONE partition — LSH warm time
     3.6s → 1.7s with the spread).  At petabyte scale the scan already
-    yields thousands of partitions; callers there pass spread=False and
-    skip the extra pass over the text."""
-    if not spread:
-        return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
+    yields thousands of partitions; callers there pass None and skip
+    the extra pass over the text."""
+    norm = normalize_ws_sql(f"`{text_col}`")
+    sh = word_shingles_from_words_sql("__w", k)
+    spread_hint = (
+        f"/*+ REPARTITION({int(spread_partitions)}, `{id_col}`) */ "
+        if spread_partitions
+        else ""
+    )
+    return f"""
+      SELECT `{id_col}`, array_distinct({sh}) AS __sh FROM (
+        SELECT `{id_col}`, split({norm}, ' ') AS __w FROM (
+          SELECT {spread_hint}`{id_col}`, `{text_col}` FROM {table}
+        )
+      ) WHERE size(__w) >= {k}"""
 
 
 def _shingle_sets(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    drop_empty: bool = False,
-    spread: bool = False,
+    df: DataFrame, text_col: str, id_col: str, k: int, spread: bool = False
 ) -> DataFrame:
-    """(id, __sh: array<string>) — the DISTINCT k-shingle set per doc,
-    computed entirely map-side.  Each projection binds its intermediate
-    to a real column (``__w``, then ``__sh``) so Catalyst evaluates the
-    split / shingle construction once per row, not once per reference
-    (see word_shingles_from_words for why that matters).
-
-    ``drop_empty`` filters docs with < k words — equivalent to (and much
-    cheaper than) filtering ``size(__sh) > 0`` afterwards: predicate
-    pushdown would copy the whole shingle-construction expression into
-    the Filter node, doubling both per-row work and the generated-code
-    size; ``size(__w) >= k`` only duplicates the split.
-
-    Built via selectExpr (SQL-text twins in functions.hashing): the
-    Column form cost ~200 py4j round trips per construction (guide §1 —
-    the bench times construction too); one parsed string is one call.
-    The analyzed plan is identical."""
-    words = _spread(df.select(F.col(id_col), F.col(text_col)), id_col, spread).selectExpr(
-        f"`{id_col}`",
-        f"split({normalize_ws_sql(f'`{text_col}`')}, ' ') AS __w",
-    )
-    if drop_empty:
-        words = words.where(F.size("__w") >= k)
-    return words.selectExpr(
-        f"`{id_col}`",
-        f"array_distinct({word_shingles_from_words_sql('__w', k)}) AS __sh",
-    )
+    """:func:`_shingle_sets_select` over ``df``."""
+    spread_partitions = _spread_partitions(df, spread)
+    sql = _shingle_sets_select("{df}", text_col, id_col, k, spread_partitions)
+    return df.sparkSession.sql(sql, df=df)
 
 
 def minhash_signatures(
@@ -120,49 +127,11 @@ def minhash_signatures(
     num_hashes: int = NUM_MINHASH,
     spread: bool = False,
 ) -> DataFrame:
-    """Per-document MinHash signature: for permutation j, the min of the
-    seeded 32-bit hash over the doc's distinct shingles.  Columns
-    ``mh0..mh{n-1}`` (BIGINT).  Empty docs (< k words) drop out —
-    they have no shingles, hence no signature (same as the oracle).
-
-    Computed with ``array_min(transform(...))`` over the per-doc shingle
-    array — pure map-side narrow work, ZERO shuffles (the previous
-    explode + groupBy formulation shuffled one row per (doc, shingle);
-    at 100 TB that shuffle is ~50× the size of the corpus row count).
-
-    Hash j = 4*s + w is hex window w (0..3) of md5(s|shingle): one md5
-    digest yields FOUR independent 32-bit hashes, so 8 signatures cost
-    2 md5 computations per shingle instead of 8 — md5 dominates the
-    map CPU, which dominates the whole operator at scale.  Each per-seed
-    digest array binds to its own column so it is evaluated once.
-    """
-    sets_ = _shingle_sets(df, text_col, id_col, k, drop_empty=True, spread=spread)
-    n_seeds = (num_hashes + 3) // 4
-
-    # SQL-text construction (r11): the Column/lambda form of these two
-    # projections cost ~900 py4j round trips ≈ 0.3 s per bench-timed
-    # construction; the parsed strings build the identical plan in two
-    # calls.  Each per-seed digest array still binds to its own column
-    # (__m{s}) so it is evaluated once per row.
-    digests = sets_.selectExpr(
-        f"`{id_col}`",
-        *[
-            f"transform(__sh, x -> md5(concat('{s}|', x))) AS __m{s}"
-            for s in range(n_seeds)
-        ],
+    """:func:`_minhash_signatures_select` over ``df``."""
+    sql = _minhash_signatures_select(
+        "{df}", text_col, id_col, k, num_hashes, _spread_partitions(df, spread)
     )
-
-    def _mh_sql(j: int) -> str:
-        s, w = divmod(j, 4)
-        return (
-            f"array_min(transform(__m{s}, x -> "
-            f"cast(conv(substring(x, {1 + 8 * w}, 8), 16, 10) as bigint)"
-            f")) AS mh{j}"
-        )
-
-    return digests.selectExpr(
-        f"`{id_col}`", *[_mh_sql(j) for j in range(num_hashes)]
-    )
+    return df.sparkSession.sql(sql, df=df)
 
 
 def _banded(
@@ -194,8 +163,7 @@ def _banded(
 
 def _band_key_exprs(num_hashes: int, bands: int) -> list[str]:
     """The packed band-key SQL expressions shared by :func:`_banded`
-    and the whole-query SQL twins below — one definition so the two
-    construction paths cannot drift."""
+    and :func:`_banded_cte` — one definition so the two cannot drift."""
     rows_per_band = num_hashes // bands
     keys = []
     for b in range(bands):
@@ -215,32 +183,11 @@ def minhash_lsh_candidates(
     bands: int = LSH_BANDS,
     spread: bool = False,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs: docs agreeing on ALL hashes of at
-    least one band.  Output (id_a < id_b) distinct.
-
-    The self-join runs on the signature table (one short row per doc),
-    never on the corpus — at 100 TB the bucket join input is ~0.01% of
-    the data.  Skewed buckets (many docs sharing a band) are AQE's
-    skew-join case.
-    """
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, spread=spread)
-    # One explicit shuffle on the join key: both self-join sides (and any
-    # downstream groupBy on band_key) hang off the SAME Exchange, which
-    # Spark de-duplicates via ReusedExchange — without it the whole
-    # map-side signature computation (scan + shingling + 8 md5s/shingle)
-    # runs twice, once per join side.  Measured at sf0.1 (with spread):
-    # one-shot 8.0s → 3.5s.
-    banded = _banded(sig, id_col, num_hashes, bands).repartition(
-        F.col("band"), F.col("band_key")
+    """:func:`minhash_lsh_candidates_sql` over ``df``."""
+    sql = minhash_lsh_candidates_sql(
+        "{df}", text_col, id_col, k, num_hashes, bands, _spread_partitions(df, spread)
     )
-    left = banded.alias("a")
-    right = banded.alias("b")
-    return (
-        left.join(right, on=["band", "band_key"])
-        .where(f"a.`{id_col}` < b.`{id_col}`")
-        .selectExpr(f"a.`{id_col}` AS id_a", f"b.`{id_col}` AS id_b")
-        .distinct()
-    )
+    return df.sparkSession.sql(sql, df=df)
 
 
 def lsh_verified_pairs(
@@ -324,24 +271,11 @@ def minhash_dedup_groups(
     bands: int = LSH_BANDS,
     spread: bool = False,
 ) -> DataFrame:
-    """Scale path for LSH dedup: per-document cluster REPRESENTATIVE
-    instead of candidate pairs.
-
-    Pair enumeration is quadratic in duplicate-group size (a 10k-copy
-    boilerplate document yields 50M pairs — measured: a 20×-duplicated
-    100k-doc corpus produced 1.3M pairs).  Production dedup instead
-    assigns each doc the min id over its LSH buckets: one row per doc,
-    ``keep = (representative == id)``.  This is the single-pass
-    min-over-buckets approximation of connected components — docs
-    sharing any band collapse to one survivor; chains longer than one
-    hop may keep an extra doc (acceptable for near-dup dedup, and the
-    standard trade in large-scale pipelines).
-
-    Cost: two shuffles (bucket min, doc min) over short rows, NO
-    quadratic term.
-    """
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, spread=spread)
-    return dedup_groups_from_signatures(sig, id_col, num_hashes, bands)
+    """:func:`minhash_dedup_groups_sql` over ``df``."""
+    sql = minhash_dedup_groups_sql(
+        "{df}", text_col, id_col, k, num_hashes, bands, _spread_partitions(df, spread)
+    )
+    return df.sparkSession.sql(sql, df=df)
 
 
 def quality_dedup_representatives(
@@ -371,7 +305,7 @@ def quality_dedup_representatives(
     # explicit shuffle on the bucket key so BOTH consumers (the
     # bucket-argmax window and the final join back) hang off one
     # ReusedExchange — without it the signature computation (the whole
-    # MinHash CPU cost) runs twice, same idiom as minhash_lsh_candidates
+    # MinHash CPU cost) runs twice, same idiom as _banded_cte
     banded = _banded(sig, id_col, num_hashes, bands).repartition(
         F.col("band"), F.col("band_key")
     )
@@ -415,29 +349,12 @@ def dedup_groups_from_signatures(
     num_hashes: int = NUM_MINHASH,
     bands: int = LSH_BANDS,
 ) -> DataFrame:
-    """Signature-level core of :func:`minhash_dedup_groups` — shared
-    with :func:`incremental_minhash_dedup_sig` so the representative
-    logic (tie-breaks, skew handling) lives in ONE place."""
-    # Same ReusedExchange trick as minhash_lsh_candidates: the explicit
-    # band_key shuffle is computed once and feeds BOTH the bucket-min
-    # aggregation (no further exchange — already partitioned on the
-    # grouping key) and the probe side of the join.
-    banded = _banded(sig, id_col, num_hashes, bands).repartition(
-        F.col("band"), F.col("band_key")
+    """:func:`dedup_groups_from_signatures_sql` over a signature
+    table (``minhash_signatures`` schema)."""
+    sql = dedup_groups_from_signatures_sql(
+        "SELECT * FROM {sig}", id_col, num_hashes, bands
     )
-    bucket_min = banded.groupBy("band", "band_key").agg(
-        F.expr(f"min(`{id_col}`) AS bucket_rep")
-    )
-    return (
-        banded.join(bucket_min, on=["band", "band_key"])
-        .groupBy(id_col)
-        .agg(F.expr("min(bucket_rep) AS representative"))
-        .selectExpr(
-            f"`{id_col}`",
-            "representative",
-            f"(representative = `{id_col}`) AS keep",
-        )
-    )
+    return sig.sparkSession.sql(sql, sig=sig)
 
 
 def _minhash_signatures_select(
@@ -448,18 +365,27 @@ def _minhash_signatures_select(
     num_hashes: int = NUM_MINHASH,
     spread_partitions: int | None = None,
 ) -> str:
-    """Whole-query SQL text of :func:`minhash_signatures` over a
-    FROM-able table expression (r12, session 2 — see
-    :func:`ngram_jaccard_pairs_sql` for the why; gate plans pinned in
-    tests/fixtures/plan_fingerprints.json)."""
-    norm = normalize_ws_sql(f"`{text_col}`")
-    sh = word_shingles_from_words_sql("__w", k)
+    """Per-document MinHash signature over a FROM-able table expression:
+    for permutation j, the min of the seeded 32-bit hash over the doc's
+    distinct shingles.  Columns ``mh0..mh{n-1}`` (BIGINT).  Empty docs
+    (< k words) drop out — they have no shingles, hence no signature
+    (same as the oracle).  Gate plans are pinned in
+    tests/fixtures/plan_fingerprints.json.
+
+    Computed with ``array_min(transform(...))`` over the per-doc shingle
+    array — pure map-side narrow work, ZERO shuffles (the previous
+    explode + groupBy formulation shuffled one row per (doc, shingle);
+    at 100 TB that shuffle is ~50× the size of the corpus row count).
+
+    Hash j = 4*s + w is hex window w (0..3) of md5(s|shingle): one md5
+    digest yields FOUR independent 32-bit hashes, so 8 signatures cost
+    2 md5 computations per shingle instead of 8 — md5 dominates the
+    map CPU, which dominates the whole operator at scale.  Each per-seed
+    digest array binds to its own column (``__m{s}``) so it is evaluated
+    once per row.  One parsed statement: the Column/lambda form cost
+    ~900 py4j round trips per construction (r11).
+    """
     n_seeds = (num_hashes + 3) // 4
-    spread_hint = (
-        f"/*+ REPARTITION({int(spread_partitions)}, `{id_col}`) */ "
-        if spread_partitions
-        else ""
-    )
     digest_cols = ", ".join(
         f"transform(__sh, x -> md5(concat('{s}|', x))) AS __m{s}"
         for s in range(n_seeds)
@@ -474,14 +400,10 @@ def _minhash_signatures_select(
         )
 
     mh_cols = ", ".join(mh(j) for j in range(num_hashes))
+    sets_ = _shingle_sets_select(table, text_col, id_col, k, spread_partitions)
     return f"""
   SELECT `{id_col}`, {mh_cols} FROM (
-    SELECT `{id_col}`, {digest_cols} FROM (
-      SELECT `{id_col}`, array_distinct({sh}) AS __sh FROM (
-        SELECT `{id_col}`, split({norm}, ' ') AS __w FROM (
-          SELECT {spread_hint}`{id_col}`, `{text_col}` FROM {table}
-        )
-      ) WHERE size(__w) >= {k}
+    SELECT `{id_col}`, {digest_cols} FROM ({sets_}
     )
   )"""
 
@@ -490,9 +412,13 @@ def _banded_cte(
     sig_select: str, id_col: str, num_hashes: int, bands: int
 ) -> str:
     """``banded AS (...)`` CTE text: posexplode of the packed band keys
-    over a signature subquery + the explicit (band, band_key)
-    repartition both consumers hang off (the ReusedExchange idiom of
-    :func:`minhash_lsh_candidates`)."""
+    over a signature subquery + ONE explicit (band, band_key)
+    repartition.  Both consumers (the two self-join sides, or the
+    bucket aggregate and the join back) hang off that SAME Exchange,
+    which Spark de-duplicates via ReusedExchange — without it the whole
+    map-side signature computation (scan + shingling + 8 md5s/shingle)
+    runs twice.  Measured at sf0.1 (with spread): one-shot 8.0s →
+    3.5s."""
     keys = ", ".join(_band_key_exprs(num_hashes, bands))
     return f"""banded AS (
   SELECT /*+ REPARTITION(band, band_key) */ * FROM (
@@ -511,9 +437,16 @@ def minhash_lsh_candidates_sql(
     bands: int = LSH_BANDS,
     spread_partitions: int | None = None,
 ) -> str:
-    """Whole-query SQL text of :func:`minhash_lsh_candidates` (r12,
-    session 2; the gate's plan is pinned in
-    tests/fixtures/plan_fingerprints.json)."""
+    """Candidate near-duplicate pairs: docs agreeing on ALL hashes of at
+    least one band.  Output (id_a < id_b) distinct.  The gate's plan is
+    pinned in tests/fixtures/plan_fingerprints.json.
+
+    The self-join runs on the signature table (one short row per doc),
+    never on the corpus — at 100 TB the bucket join input is ~0.01% of
+    the data.  Skewed buckets (many docs sharing a band) are AQE's
+    skew-join case.  Both join sides hang off ``banded``'s one explicit
+    shuffle (:func:`_banded_cte`).
+    """
     sig = _minhash_signatures_select(
         table, text_col, id_col, k, num_hashes, spread_partitions
     )
@@ -536,14 +469,44 @@ def minhash_dedup_groups_sql(
     bands: int = LSH_BANDS,
     spread_partitions: int | None = None,
 ) -> str:
-    """Whole-query SQL text of :func:`minhash_dedup_groups` (r12,
-    session 2; the gate's plan is pinned in
-    tests/fixtures/plan_fingerprints.json)."""
+    """Scale path for LSH dedup: per-document cluster REPRESENTATIVE
+    instead of candidate pairs (:func:`dedup_groups_from_signatures_sql`
+    over :func:`_minhash_signatures_select`).  The gate's plan is pinned
+    in tests/fixtures/plan_fingerprints.json.
+
+    Pair enumeration is quadratic in duplicate-group size (a 10k-copy
+    boilerplate document yields 50M pairs — measured: a 20×-duplicated
+    100k-doc corpus produced 1.3M pairs).  Production dedup instead
+    assigns each doc the min id over its LSH buckets: one row per doc,
+    ``keep = (representative == id)``.  This is the single-pass
+    min-over-buckets approximation of connected components — docs
+    sharing any band collapse to one survivor; chains longer than one
+    hop may keep an extra doc (acceptable for near-dup dedup, and the
+    standard trade in large-scale pipelines).
+
+    Cost: two shuffles (bucket min, doc min) over short rows, NO
+    quadratic term.
+    """
     sig = _minhash_signatures_select(
         table, text_col, id_col, k, num_hashes, spread_partitions
     )
+    return dedup_groups_from_signatures_sql(sig, id_col, num_hashes, bands)
+
+
+def dedup_groups_from_signatures_sql(
+    sig_select: str,
+    id_col: str,
+    num_hashes: int = NUM_MINHASH,
+    bands: int = LSH_BANDS,
+) -> str:
+    """Signature-level core of :func:`minhash_dedup_groups_sql` over a
+    signature subquery — shared with :func:`incremental_minhash_dedup_sig`
+    so the representative logic (tie-breaks, skew handling) lives in ONE
+    place.  The explicit band_key shuffle of ``banded`` feeds BOTH the
+    bucket-min aggregation (no further exchange — already partitioned on
+    the grouping key) and the probe side of the join."""
     return f"""
-WITH {_banded_cte(sig, id_col, num_hashes, bands)},
+WITH {_banded_cte(sig_select, id_col, num_hashes, bands)},
 bucket_min AS (
   SELECT band, band_key, min(`{id_col}`) AS bucket_rep
   FROM banded GROUP BY band, band_key
@@ -574,7 +537,7 @@ def simhash64(
     shuffles, all inside whole-stage codegen.
     """
     hashed = (
-        _shingle_sets(df, text_col, id_col, k, drop_empty=True, spread=spread)
+        _shingle_sets(df, text_col, id_col, k, spread=spread)
         .select(
             id_col,
             F.transform(F.col("__sh"), lambda s: h32(s, seed="sim")).alias("__hs"),

@@ -9,7 +9,7 @@ them collect to the driver; all are shuffle-minimal by construction:
   heavy fact rows shuffle exactly once.
 - ``asof_join``       : J6 — as-of with tolerance via union+window, no
   range-explosion cross join.
-- ``top_k_per_group`` : W1/W2 — rank window; map-side partial top-k is
+- ``top_k_per_group_sql`` : W1/W2 — rank window; map-side partial top-k is
   AQE's job, the window shuffles once on the partition key.
 - ``date_stratified_split`` : D8 — a derived column, zero shuffles.
 - ``cutoff_filter``   : P7 — broadcast the tiny cutoff map, filter
@@ -50,7 +50,7 @@ def asof_join(
     partition_keys: list[str],
     left_on: str,
     right_on: str,
-    tolerance: Column | str | None = None,
+    tolerance: Column | None = None,
     right_payload: list[str] | None = None,
 ) -> DataFrame:
     """As-of join: for each left row, the right row with the greatest
@@ -76,8 +76,8 @@ def asof_join(
     # SQL-text construction (r12, same technique as functions/hashing.py
     # twins): the Column form cost ~340 py4j round trips per bench-timed
     # construction; the parsed strings build the identical analyzed plan
-    # in ~15 calls.  ``tolerance`` may be a SQL expression STRING (one
-    # projection, preferred on hot paths) or a Column (legacy path).
+    # in ~15 calls.  Only the ``tolerance`` mask (a Column: every caller
+    # passes one, e.g. ``F.lit(20)``) is Column-built, below.
     rschema, lschema = right.schema, left.schema
     tagged_left = left.selectExpr(
         *[f"`{c}`" for c in lcols],
@@ -119,19 +119,7 @@ def asof_join(
         f"last(__r_on, true) {over} AS __m_on",
     )
     out = carried.where("__is_left = 1")
-    if isinstance(tolerance, str):
-        within = f"((__ord - __m_on) < {tolerance})"
-        out = out.selectExpr(
-            *[f"`{c}`" for c in lcols],
-            "__is_left",
-            "__ord",
-            *[
-                f"CASE WHEN {within} THEN `__m_{c}` END AS `__m_{c}`"
-                for c in right_payload
-            ],
-            f"CASE WHEN {within} THEN __m_on END AS __m_on",
-        )
-    elif tolerance is not None:
+    if tolerance is not None:
         within = F.col("__ord") - F.col("__m_on") < tolerance
         for c in right_payload:
             out = out.withColumn(f"__m_{c}", F.when(within, F.col(f"__m_{c}")))
@@ -192,28 +180,15 @@ def bucketed_range_join(
     )
 
 
-def top_k_per_group(
-    df: DataFrame, partition_keys: list[str], order_by: list[Column], k: int
-) -> DataFrame:
-    """Top-k rows per group (W1/W2: top-25 citation tables, top-1000
-    most-common citations).  ``row_number`` (not rank) + deterministic
-    tie-breakers in ``order_by`` keeps results reproducible."""
-    w = Window.partitionBy(*partition_keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 def top_k_per_group_sql(
     df: DataFrame, partition_keys: list[str], order_by_sql: str, k: int
 ) -> DataFrame:
-    """SQL-text twin of :func:`top_k_per_group` (r12, same technique as
-    functions/hashing.py): ``order_by_sql`` is the ORDER BY body as one
-    string (e.g. ``"price DESC, o_orderkey ASC"``).  Builds the identical
-    analyzed plan in 3 py4j calls instead of ~40; used on bench-timed
-    construction paths.  Keep semantics in sync with the Column form."""
+    """Top-k rows per group (W1/W2: top-25 citation tables, top-1000
+    most-common citations).  ``row_number`` (not rank) + deterministic
+    tie-breakers in ``order_by_sql`` — the ORDER BY body as one string
+    (e.g. ``"price DESC, o_orderkey ASC"``) — keep results
+    reproducible.  Parsed SQL text: 3 py4j calls instead of ~40 for the
+    Column form."""
     pk = ", ".join(f"`{c}`" for c in partition_keys)
     return (
         df.selectExpr(

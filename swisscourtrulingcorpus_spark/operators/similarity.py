@@ -24,10 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.operators.relational import (
-    top_k_per_group,
-    top_k_per_group_sql,
-)
+from swisscourtrulingcorpus_spark.operators.relational import top_k_per_group_sql
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -76,53 +73,9 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact cosine top-k: for every query vector, the k nearest corpus
-    vectors (self-matches excluded).  Output: query_id, neighbor_id,
-    cosine (rounded), rank.
-
-    ``broadcast(queries)`` makes the cross join a broadcast nested loop —
-    the corpus never shuffles; only (|queries| × k) rows do, inside the
-    row_number window.
-
-    Norms are projected per ROW before the join (``__qn``/``__cn``), not
-    inside the pair expression: per-pair work drops from three array
-    folds to one (the dot product).  The division uses the same doubles
-    in the same order, so oracle values are bit-identical.
-    """
-    # zero-norm vectors have no defined cosine — filter them out before
-    # the pair projection (ANSI division would raise otherwise).
-    # SQL-text construction (r12): the Column form of this operator cost
-    # ~340 py4j round trips ≈ 95 ms per bench-timed construction; the
-    # parsed strings build the identical analyzed plan in ~20 calls.
-    q = F.broadcast(
-        queries.selectExpr(
-            f"`{id_col}` AS query_id",
-            f"`{vec_col}` AS __qv",
-            f"{_norm_sql(f'`{vec_col}`')} AS __qn",
-        ).where("__qn > 0")
-    )
-    c = corpus.selectExpr(
-        f"`{id_col}` AS neighbor_id",
-        f"`{vec_col}` AS __cv",
-        f"{_norm_sql(f'`{vec_col}`')} AS __cn",
-    ).where("__cn > 0")
-    scored = (
-        c.crossJoin(q)
-        .where("NOT (neighbor_id = query_id)")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"({_dot_sql('__qv', '__cv')} / (__qn * __cn)) AS cosine",
-        )
-    )
-    ranked = top_k_per_group_sql(
-        scored, ["query_id"], "cosine DESC, neighbor_id ASC", k
-    )
-    return ranked.selectExpr(
-        "*",
-        "row_number() OVER (PARTITION BY query_id "
-        "ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-    )
+    """:func:`cosine_topk_bruteforce_sql` over two DataFrames."""
+    sql = cosine_topk_bruteforce_sql("{c}", "{q}", id_col, vec_col, k)
+    return corpus.sparkSession.sql(sql, c=corpus, q=queries)
 
 
 def cosine_topk_bruteforce_sql(
@@ -132,10 +85,24 @@ def cosine_topk_bruteforce_sql(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> str:
-    """Whole-query SQL text of :func:`cosine_topk_bruteforce` over
-    FROM-able table expressions (r12, session 2 — one parsed
-    statement).  The gate's plan is pinned in
-    tests/fixtures/plan_fingerprints.json."""
+    """Exact cosine top-k over FROM-able table expressions: for every
+    query vector, the k nearest corpus vectors (self-matches excluded).
+    Output: query_id, neighbor_id, cosine, rank.  The gate's plan is
+    pinned in tests/fixtures/plan_fingerprints.json.
+
+    The ``BROADCAST(q)`` hint makes the cross join a broadcast nested
+    loop — the corpus never shuffles; only (|queries| × k) rows do,
+    inside the row_number window.
+
+    Norms are projected per ROW before the join (``__qn``/``__cn``), not
+    inside the pair expression: per-pair work drops from three array
+    folds to one (the dot product).  The division uses the same doubles
+    in the same order, so oracle values are bit-identical.  Zero-norm
+    vectors have no defined cosine and are filtered out before the pair
+    projection (ANSI division would raise otherwise).  One parsed
+    statement: the Column form cost ~340 py4j round trips per
+    construction.
+    """
     norm = _norm_sql(f"`{vec_col}`")
     over = (
         "OVER (PARTITION BY query_id"

@@ -6,7 +6,7 @@ BASELINE.md north star: the ops a 100 TB LLM-corpus pipeline needs).
   Pure map-side (sequence + slice + posexplode inside codegen): a doc
   becomes ceil((n - overlap) / step) rows with NO shuffle; the wide
   text column is projected away before any exchange downstream.
-- ``deterministic_shuffle``: a reproducible global permutation by
+- ``deterministic_shuffle_sql``: a reproducible global permutation by
   hashing the id with a seed — training-order shuffling that any engine
   (and any rerun) reproduces bit-for-bit, unlike rand()-based orderings.
   Executed as a parallel range-partitioned sort + partition-offset rank
@@ -94,11 +94,11 @@ def parallel_prefix_sum(
     The result is independent of where the range boundaries land, so
     output is identical at any parallelism (property-tested).
 
-    This is the shared skeleton behind :func:`deterministic_shuffle`
-    (value=1 -> global rank), :func:`pack_sequences` (value=token
-    count -> token offsets) and :func:`length_grouped_shards`
-    (value=1 -> length rank); keeping it in ONE place means a fix to
-    the pattern lands everywhere (r04 review).
+    This is the shared skeleton behind :func:`pack_sequences`
+    (value=token count -> token offsets); :func:`parallel_rank` is its
+    value=1 special case (global rank) with one exchange instead of
+    two.  Keeping it in ONE place means a fix to the pattern lands
+    everywhere (r04 review).
 
     ``value`` must be non-null for every row (a NULL contribution
     would poison every later prefix in its partition) — coalesce at
@@ -262,17 +262,29 @@ def deterministic_shuffle_sql(
     seed: str = "42",
     rank_col: str = "shuffle_rank",
 ) -> str:
-    """Whole-query SQL text of :func:`deterministic_shuffle` →
-    ``SELECT id, rank`` over a FROM-able table expression (r12,
-    session 2 — one parsed statement instead of ~126 py4j round trips;
-    guide §1).  Mirrors :func:`parallel_rank`'s mid-arithmetic shape
-    exactly (the gate's plan is pinned in
-    tests/fixtures/plan_fingerprints.json), so the determinism
-    contract documented on ``parallel_rank`` (deterministic upstream +
-    unique sort key ⇒ identical re-evaluation of the twice-referenced
-    nondeterministic subtree) carries over: the ``rows`` text is
-    spliced twice below, exactly as the DataFrame form references its
-    ``rows`` plan twice."""
+    """Reproducible global shuffle rank → ``SELECT id, rank`` over a
+    FROM-able table expression: each row's 1-based position in the
+    ordering by ``md5(seed|id)`` (ties broken by id).
+    Engine-independent (md5) and rerun-stable, unlike ``rand()``-seeded
+    ordering which is tied to one engine's RNG and partitioning.
+
+    Computed WITHOUT a global window (row_number over an unpartitioned
+    window forces Exchange SinglePartition — one task sorts the world).
+    Instead: range-partition + sort on the hash key (the parallel total
+    sort, ``spark.sql.shuffle.partitions`` wide), rank locally per
+    partition, then add each partition's starting offset — a running
+    sum over the tiny per-partition-count table.  The final rank is
+    independent of where the range boundaries land, so the result is
+    identical at any parallelism (asserted by
+    ``tests/test_properties.py::test_shuffle_rank_partition_invariant``).
+
+    Mirrors :func:`parallel_rank`'s mid-arithmetic shape exactly (the
+    gate's plan is pinned in tests/fixtures/plan_fingerprints.json), so
+    the determinism contract documented on ``parallel_rank``
+    (deterministic upstream + unique sort key ⇒ identical
+    re-evaluation of the twice-referenced nondeterministic subtree)
+    carries over: the ``rows`` text is spliced twice below.  One parsed
+    statement instead of ~126 py4j round trips."""
     from swisscourtrulingcorpus_spark.functions.hashing import _safe_seed
 
     mask = (1 << 33) - 1
@@ -298,44 +310,6 @@ SELECT `{id_col}`, cast((__off + __local) as int) AS `{rank_col}` FROM (
 """
 
 
-def deterministic_shuffle(
-    df: DataFrame,
-    id_col: str,
-    seed: str = "42",
-    rank_col: str = "shuffle_rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Reproducible global shuffle rank: each row's 1-based position in
-    the ordering by ``md5(seed|id)`` (ties broken by id).
-    Engine-independent (md5) and rerun-stable, unlike ``rand()``-seeded
-    ordering which is tied to one engine's RNG and partitioning.
-
-    Computed WITHOUT a global window (row_number over an unpartitioned
-    window forces Exchange SinglePartition — one task sorts the world).
-    Instead: range-partition + sort on the hash key (the parallel total
-    sort), rank locally per partition, then add each partition's
-    starting offset — a running sum over the tiny per-partition-count
-    table.  The final rank is independent of where the range boundaries
-    land, so the result is identical at any parallelism —
-    ``num_partitions`` (default: session shuffle parallelism) only
-    changes the execution width, never the output (asserted by
-    ``tests/test_properties.py::test_shuffle_rank_partition_invariant``).
-    """
-    from swisscourtrulingcorpus_spark.functions.hashing import _safe_seed
-
-    keyed = df.selectExpr(
-        "*",
-        f"md5(concat('{_safe_seed(seed)}|', cast(`{id_col}` as string))) AS __k",
-    )
-    ranked = parallel_rank(
-        keyed,
-        [F.col("__k"), F.col(id_col)],
-        rank_col,
-        num_partitions,
-    )
-    return ranked.withColumn(rank_col, F.col(rank_col).cast("int")).drop("__k")
-
-
 def pack_sequences(
     df: DataFrame,
     len_col: str,
@@ -354,7 +328,7 @@ def pack_sequences(
     head position is what's assigned (standard GPT-style packing).
 
     The global token prefix-sum is the same two-phase parallel shape as
-    :func:`deterministic_shuffle`: range-partition on the hash key,
+    :func:`deterministic_shuffle_sql`: range-partition on the hash key,
     LOCAL cumulative sum per partition, then add the tiny broadcast
     running total of per-partition token counts.  No single-partition
     window anywhere, and the result is invariant to where the range
@@ -548,7 +522,7 @@ def length_grouped_shards(
     Shard of rank r (1-based) in t rows is ``(r-1) * n DIV t + 1`` —
     the balanced contiguous split, integer-exact in any engine.  The
     global rank uses the SAME two-phase parallel pattern as
-    :func:`deterministic_shuffle` (range-partition on the sort key,
+    :func:`deterministic_shuffle_sql` (range-partition on the sort key,
     local row_number, add the tiny broadcast partition offsets) — no
     single-partition window, identical output at any parallelism."""
     slim = df.select(F.col(id_col), F.col(len_col).cast("bigint").alias("__len"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _h32_sql
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 _K = 8  # IVF centroids
@@ -321,12 +322,6 @@ def q_hashed_bow_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dense.select(
         "doc_id", F.posexplode("vec").alias("dim", "value")
     ).select("doc_id", F.col("dim").cast("int"), F.col("value").cast("bigint"))
-
-
-def _h32_sql(expr: str) -> str:
-    """DuckDB twin of functions.hashing.h32 — first 8 hex chars of md5
-    as an unsigned 32-bit int (matches the verified existing oracles)."""
-    return f"CAST(('0x' || substring(md5({expr}), 1, 8)) AS UBIGINT)"
 
 
 HASHED_BOW_ORACLE = rf"""

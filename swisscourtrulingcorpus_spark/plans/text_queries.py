@@ -43,6 +43,9 @@ from swisscourtrulingcorpus_spark.sources.catalog import load_table
 # ---------------------------------------------------------------- SQL bits
 
 def _h32_sql(expr: str) -> str:
+    """DuckDB twin of functions.hashing.h32 — the first 8 hex chars of
+    md5 as an unsigned 32-bit value, carried in a BIGINT (the oracles of
+    this module and plans/ann_queries.py)."""
     return f"CAST(('0x' || substr(md5({expr}),1,8))::UBIGINT AS BIGINT)"
 
 

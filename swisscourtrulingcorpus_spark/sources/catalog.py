@@ -37,16 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-# Tables small enough to always sit on the broadcast side of a join —
-# the analogue of the reference's language(4)/canton(27)/court(~112)/
-# chamber(~287) dims (SURVEY.md §1.2).
-DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 @lru_cache(maxsize=None)
 def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as

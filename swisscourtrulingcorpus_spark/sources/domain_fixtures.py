@@ -19,8 +19,6 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-LANGS = ["de", "fr", "it"]
-
 SPIDERS = ["CH_BGer", "ZH_VG", "VD_TC", "TI_TA"]
 SPIDER_LANG = {"CH_BGer": "de", "ZH_VG": "de", "VD_TC": "fr", "TI_TA": "it"}
 CHAMBERS = {s: [f"{s}_00{i}" for i in (1, 2)] for s in SPIDERS}

@@ -129,15 +129,6 @@ def test_file_number_functions(spark):
     assert parsed.page == 154
 
 
-def test_engine_config_defaults():
-    from swisscourtrulingcorpus_spark.config import EngineConfig
-
-    cfg = EngineConfig.from_env()
-    assert cfg.languages == ("de", "fr", "it")
-    assert cfg.session_conf()["spark.sql.shuffle.partitions"] == "32"
-    assert cfg.train_start < cfg.val_start < cfg.test_start < cfg.secret_start
-
-
 def test_domain_scalar_functions(spark):
     from swisscourtrulingcorpus_spark.functions.domain import (
         canton_to_region,

@@ -8,6 +8,8 @@ behavior on controlled corpora.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -130,29 +132,46 @@ def test_band_key_packing_bijective(pairs):
 # --------------------------------------- shuffle-rank partition invariance
 
 def test_shuffle_rank_partition_invariant():
-    """deterministic_shuffle must produce the SAME rank for every row no
-    matter how many range partitions execute it — the claim that lets
-    the same code run at local[2] and on 1000 executors."""
+    """deterministic_shuffle_sql (the training_shuffle_rank gate's path)
+    must produce the SAME rank for every row no matter how many range
+    partitions execute it — the claim that lets the same code run at
+    local[2] and on 1000 executors.  Its range exchange is
+    ``spark.sql.shuffle.partitions`` wide; AQE coalescing is off so
+    that width is the one that runs."""
+    from conftest import explain_plan_str
+
     from swisscourtrulingcorpus_spark.operators.training import (
-        deterministic_shuffle,
+        deterministic_shuffle_sql,
     )
     from swisscourtrulingcorpus_spark.session import get_spark
 
     spark = get_spark(app_name="prop", master="local[2]")
     df = spark.range(0, 257).select(F.col("id").alias("doc_id"))
+    confs = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = {k: spark.conf.get(k) for k in confs}
     baseline = None
-    for n in (1, 3, 7):
-        got = {
-            r.doc_id: r.shuffle_rank
-            for r in deterministic_shuffle(
-                df, "doc_id", num_partitions=n
-            ).collect()
-        }
-        assert sorted(got.values()) == list(range(1, 258))
-        if baseline is None:
-            baseline = got
-        else:
-            assert got == baseline, f"ranks differ at num_partitions={n}"
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for n in (1, 3, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            ranked = spark.sql(deterministic_shuffle_sql("{df}", "doc_id"), df=df)
+            # a one-partition range exchange plans as SinglePartition
+            width = "SinglePartition" if n == 1 else rf"rangepartitioning\([^)]*, {n}\)"
+            assert re.search(
+                rf"{width}, REPARTITION_BY_COL", explain_plan_str(ranked)
+            ), f"range exchange is not {n} partitions wide"
+            got = {r.doc_id: r.shuffle_rank for r in ranked.collect()}
+            assert sorted(got.values()) == list(range(1, 258))
+            if baseline is None:
+                baseline = got
+            else:
+                assert got == baseline, f"ranks differ at {n} shuffle partitions"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_parallel_rank_matches_window_prefix_sum():

@@ -3,8 +3,9 @@
 Every headline gate and pipeline helper has ONE construction path:
 parsed ``spark.sql`` / ``F.expr`` text.  Their normalized
 optimized plans (``plans/parity.py::plan_fingerprint``) are pinned in
-``tests/fixtures/plan_fingerprints.json``: the 20 headline gates and
-the pipeline outputs here, every gate in the slow registry lint.
+``tests/fixtures/plan_fingerprints.json``: the 20 headline gates, the
+gates built on the SQL-text operator wrappers and the pipeline outputs
+here, every gate in the slow registry lint.
 
 Also covers the catalog helpers: ``table_view`` returns a registered
 name with a warm zero-py4j path, and ``catalog_sql`` self-heals when a
@@ -18,14 +19,41 @@ import os
 from conftest import assert_golden_plans, load_golden_plans
 
 
-def test_headline_plans_match_golden(spark, sf_dir):
-    from bench import HEADLINE
+# Non-headline gates that reach the MinHash / SimHash / cosine top-k
+# operators through their DataFrame wrappers (``spark.sql(<builder>,
+# df=df)``); their operator suites run only in the slow tier.
+OPERATOR_WRAPPER_GATES = (
+    "minhash_signatures_documents",
+    "simhash_documents",
+    "simhash_hamming_pairs",
+    "lsh_verified_pairs",
+    "verified_dedup_clusters",
+    "quality_dedup_representatives",
+    "dedup_savings_report",
+    "incremental_minhash_dedup",
+    "near_contamination_check",
+    "rrf_hybrid_topk",
+    "jl_rerank_topk_embeddings",
+)
+
+
+def _assert_gates_match_golden(spark, sf_dir, names):
     from swisscourtrulingcorpus_spark.plans.parity import plan_fingerprint
     from swisscourtrulingcorpus_spark.plans.registry import queries
 
     q = queries()
-    got = {name: plan_fingerprint(q[name](spark, sf_dir)) for name in HEADLINE}
+    got = {name: plan_fingerprint(q[name](spark, sf_dir)) for name in names}
     assert_golden_plans("gates", got, sf_dir=sf_dir)
+
+
+def test_headline_plans_match_golden(spark, sf_dir):
+    from bench import HEADLINE
+
+    _assert_gates_match_golden(spark, sf_dir, HEADLINE)
+
+
+def test_operator_wrapper_plans_match_golden(spark, sf_dir):
+    _assert_gates_match_golden(spark, sf_dir, OPERATOR_WRAPPER_GATES)
 
 
 def test_pipeline_plans_match_golden(spark):
