@@ -356,6 +356,22 @@ LEMMA_STOPWORDS: dict[str, tuple[str, ...]] = {
 LEMMA_TOKEN_SPLIT = "[^a-zäöüßéèêëàâçîïôùûœ]+"
 
 
+def _dual_dialect_lit(s: str, like: bool = False) -> str:
+    """``s`` unchanged, for splicing inside a single-quoted literal of
+    SQL text that both Spark and DuckDB parse.  No escape is portable
+    (Spark treats a backslash as an escape, DuckDB does not; ``sql_str``
+    is Spark-only), so a literal containing a quote or a backslash —
+    or, inside a LIKE pattern (``like=True``), a ``%`` or ``_``
+    wildcard — raises ``ValueError`` instead of changing the parse."""
+    bad = "'\\%_" if like else "'\\"
+    if any(c in s for c in bad):
+        raise ValueError(
+            f"literal {s!r} contains one of {bad!r} and cannot be spliced"
+            " into dual-dialect SQL"
+        )
+    return s
+
+
 def lemma_case_sql(token_expr: str, lang_expr: str) -> str:
     """One CASE expression applying the per-language suffix rules to an
     (already lowercase, alpha-only) token — the string is valid Spark
@@ -365,16 +381,18 @@ def lemma_case_sql(token_expr: str, lang_expr: str) -> str:
         arms = []
         for suffix, repl, min_stem in rules:
             cond = (
-                f"{token_expr} LIKE '%{suffix}' "
+                f"{token_expr} LIKE '%{_dual_dialect_lit(suffix, like=True)}' "
                 f"AND length({token_expr}) >= {len(suffix) + min_stem}"
             )
             val = (
                 f"substr({token_expr}, 1, length({token_expr}) - {len(suffix)})"
-                + (f" || '{repl}'" if repl else "")
+                + (f" || '{_dual_dialect_lit(repl)}'" if repl else "")
             )
             arms.append(f"WHEN {cond} THEN {val}")
         inner = "CASE " + " ".join(arms) + f" ELSE {token_expr} END"
-        lang_branches.append(f"WHEN {lang_expr} = '{lang}' THEN {inner}")
+        lang_branches.append(
+            f"WHEN {lang_expr} = '{_dual_dialect_lit(lang)}' THEN {inner}"
+        )
     return "CASE " + " ".join(lang_branches) + f" ELSE {token_expr} END"
 
 
@@ -383,8 +401,11 @@ def lemma_stopword_sql(token_expr: str, lang_expr: str) -> str:
     same dual-dialect property as ``lemma_case_sql``."""
     branches = []
     for lang, words in LEMMA_STOPWORDS.items():
-        lst = ", ".join(f"'{w}'" for w in words)
-        branches.append(f"WHEN {lang_expr} = '{lang}' THEN {token_expr} IN ({lst})")
+        lst = ", ".join(f"'{_dual_dialect_lit(w)}'" for w in words)
+        branches.append(
+            f"WHEN {lang_expr} = '{_dual_dialect_lit(lang)}' "
+            f"THEN {token_expr} IN ({lst})"
+        )
     return "CASE " + " ".join(branches) + " ELSE FALSE END"
 
 
@@ -407,6 +428,7 @@ def de_noun_suffix_sql(token_expr: str, lang_expr: str) -> str:
     (LIKE is identical in Spark SQL and DuckDB), used by the POS
     proxy to keep capitalized German common nouns out of PROPN."""
     likes = " OR ".join(
-        f"lower({token_expr}) LIKE '%{s}'" for s in DE_NOUN_SUFFIXES
+        f"lower({token_expr}) LIKE '%{_dual_dialect_lit(s, like=True)}'"
+        for s in DE_NOUN_SUFFIXES
     )
     return f"({lang_expr} = 'de' AND ({likes}))"

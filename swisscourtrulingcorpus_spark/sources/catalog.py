@@ -168,8 +168,12 @@ def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     statement instead of a py4j round trip per DataFrame method; the
     bench times construction, guide §1).  Shares ``load_table``'s
     cache and invalidation key; the warm path costs ZERO py4j calls
-    (``os.stat`` only).  Pair with :func:`catalog_sql`, which retries
-    through a re-register if a cached view was dropped behind us."""
+    (``os.stat`` only).  Call it ONLY inside a :func:`catalog_sql` build
+    callable: the warm path returns the cached name unchecked, and only
+    ``catalog_sql`` self-heals a view dropped behind us (it invalidates
+    the cache and rebuilds the text once).  A direct
+    ``spark.sql(f"... FROM {table_view(...)}")`` fails unrecoverably
+    on a dropped view."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     st = os.stat(path)
     key = (spark, path, st.st_mtime_ns, st.st_size)

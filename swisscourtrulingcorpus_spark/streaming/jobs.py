@@ -243,23 +243,52 @@ def stream_upsert_job(
     base = table_path.rstrip("/")
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        _recover_and_sweep(base)
-        if os.path.isdir(base) and any(
-            f.endswith(".parquet") for f in os.listdir(base)
-        ):
-            existing = spark.read.parquet(base)
-            merged = upsert_by_key(existing, batch, keys)
-        else:
-            merged = batch
-        _staged_swap(merged, base, batch_id)
+        _swap_merge(
+            batch, base, batch_id, lambda old, new: upsert_by_key(old, new, keys)
+        )
 
+    return _available_now(stream, checkpoint, _merge)
+
+
+def _available_now(stream: DataFrame, checkpoint: str, fn):
+    """Start ``fn(batch, batch_id)`` as the ``foreachBatch`` sink of
+    ``stream`` under Trigger.AvailableNow: drain everything currently
+    available, then stop — the daily-cron batch shape, resumable from
+    ``checkpoint``.  Returns the started query; caller awaits
+    termination."""
     return (
-        stream.writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
+
+
+def _binary_file_stream(spark: SparkSession, root: str, glob: str) -> DataFrame:
+    """The files under ``root/*`` matching ``glob`` as a binaryFile FILE
+    SOURCE: the checkpoint tracks which files each micro-batch has
+    seen.  The schema is pinned (a streaming source must never
+    infer)."""
+    return (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp, length bigint,"
+            " content binary"
+        )
+        .option("pathGlobFilter", glob)
+        .load(os.path.join(root, "*"))
+    )
+
+
+def _swap_merge(incoming: DataFrame, base: str, batch_id: int, merge) -> None:
+    """Merge ``incoming`` into the plain-parquet table at ``base`` with
+    ``merge(existing, incoming)`` (``incoming`` alone when no table
+    exists yet), after restoring or sweeping a crashed batch's swap
+    debris; the result replaces the table by :func:`_staged_swap`."""
+    _recover_and_sweep(base)
+    if os.path.isdir(base) and any(f.endswith(".parquet") for f in os.listdir(base)):
+        incoming = merge(incoming.sparkSession.read.parquet(base), incoming)
+    _staged_swap(incoming, base, batch_id)
 
 
 def _recover_and_sweep(base: str) -> None:
@@ -319,8 +348,6 @@ def stream_versioned_upsert_job(
     (crash debris is just an orphaned data dir; ``vacuum`` reclaims
     it).  Delivery is at-least-once with idempotent replay: a replayed
     batch re-merges the same keys into an extra (identical) version."""
-    import os
-
     from swisscourtrulingcorpus_spark.sources.sinks import upsert_by_key
     from swisscourtrulingcorpus_spark.sources.versioned import (
         ConcurrentWriteError,
@@ -351,12 +378,7 @@ def stream_versioned_upsert_job(
             except ConcurrentWriteError:
                 continue
 
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(stream, checkpoint, _merge)
 
 
 def sliding_counts_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -402,58 +424,19 @@ def stream_ingest_landing_zone_job(
     Trigger.AvailableNow: drains everything currently available, then
     stops — the daily-cron batch shape, restartable as a continuous
     stream unchanged."""
-    import os
-
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from swisscourtrulingcorpus_spark.sources.ingest import (
         docs_from_scanned_files,
         parse_file_paths,
     )
 
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.{json,html,htm,pdf,txt}")
-        .load(os.path.join(root, "*"))
-    )
-
+    files = _binary_file_stream(spark, root, "*.{json,html,htm,pdf,txt}")
     base = out_dir.rstrip("/")
 
     def _ingest(batch, batch_id: int) -> None:
-        batch_spark = batch.sparkSession
-        _recover_and_sweep(base)
         docs = docs_from_scanned_files(parse_file_paths(batch))
-        if os.path.isdir(base) and any(
-            f.endswith(".parquet") for f in os.listdir(base)
-        ):
-            existing = batch_spark.read.parquet(base)
-            merged = _coalesce_merge_docs(existing, docs)
-        else:
-            merged = docs
-        _staged_swap(merged, base, batch_id)
+        _swap_merge(docs, base, batch_id, _coalesce_merge_docs)
 
-    return (
-        files.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(files, checkpoint, _ingest)
 
 
 def _coalesce_merge_docs(existing, incoming):
@@ -577,6 +560,102 @@ def checkpoint_run_tag(checkpoint: str) -> str:
             os.remove(tmp)
 
 
+def _fold_into_store(
+    batch: DataFrame,
+    batch_id: int,
+    store_table: str,
+    run_tag: str,
+    delta_of,
+    merge,
+) -> None:
+    """Exactly-once fold of one micro-batch into a versioned store: the
+    one commit body of every store-maintenance job.  ``delta_of(batch)``
+    builds the batch's delta table (computed ONCE, cached because the
+    OCC loop may re-merge, unpersisted on every exit);
+    ``merge(stored, delta)`` returns the next snapshot, where ``stored``
+    is the latest version or ``None`` for an empty store.  A job's
+    per-batch side output (dedup survivors, media matches) is written
+    inside ``merge``, so it lands before the commit.
+
+    CRASH-REPLAY GUARD: foreachBatch is at-least-once.  If the store
+    commit for THIS batch landed but the checkpoint did not, a replay
+    would re-merge a batch the store already holds — double-counting
+    additive stores, and for the dedup store, deduping the batch
+    against its own committed signatures and overwriting its output
+    with nothing.  Each commit records (run, batch_id); a replay of an
+    already-committed batch returns before ``delta_of`` runs (the side
+    output was written before the commit, so it is complete).  The
+    marker ledger {run: max batch_id} is carried cumulatively in every
+    commit's meta AND cached in a sidecar file (`replay_ledger.json`)
+    the vacuum never touches — a concurrent committer landing after
+    our commit cannot mask it, store maintenance cannot erase it, and
+    the common path reads one file plus at most a few manifests.
+    Batch ids are only unique WITHIN a checkpoint instance, so the tag
+    comes from :func:`checkpoint_run_tag` (a fresh/recreated
+    checkpoint is a new run, never a "replay") (r04 review, two
+    passes).
+
+    CONCURRENCY: the base version is captured BEFORE the snapshot is
+    read, and the ledger re-read AFTER it, so the checked commit
+    guarantees a successful commit saw every marker up to its base; a
+    sibling committer landing in between raises ConcurrentWriteError,
+    and the loop re-reads base AND ledger, re-checks the guard and
+    re-merges against the winner."""
+    from swisscourtrulingcorpus_spark.sources.versioned import (
+        ConcurrentWriteError,
+        commit_version,
+        latest_version,
+        read_version,
+    )
+
+    os.makedirs(store_table, exist_ok=True)
+    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
+        return
+    spark = batch.sparkSession
+    delta = delta_of(batch).cache()
+    try:
+        while True:
+            base = latest_version(store_table)
+            ledger = _read_replay_ledger(store_table)
+            if ledger.get(run_tag, -1) >= batch_id:
+                # a concurrent twin of THIS batch (zombie driver +
+                # restarted driver) already committed it — its output
+                # is complete; rewriting would wipe it
+                return
+            stored = read_version(spark, store_table, base) if base else None
+            updated = merge(stored, delta)
+            runs = {**ledger, run_tag: batch_id}
+            try:
+                commit_version(
+                    updated,
+                    store_table,
+                    base_version=base,
+                    meta={"run": run_tag, "batch_id": batch_id, "runs": runs},
+                )
+            except ConcurrentWriteError:
+                continue
+            _write_replay_ledger(store_table, runs)
+            return
+    finally:
+        delta.unpersist()
+
+
+def _replace_ids(
+    stored: DataFrame | None, delta: DataFrame, id_col: str
+) -> DataFrame:
+    """Delete+insert merge: ``delta``'s rows replace every stored row
+    of the same ids (a REPROCESSED document/vector replaces its old
+    rows instead of double-counting them); an empty store is just the
+    delta."""
+    if stored is None:
+        return delta
+    return (
+        stored.join(delta.select(id_col).distinct(), on=id_col, how="left_anti")
+        .select(*delta.columns)
+        .unionByName(delta)
+    )
+
+
 def minhash_dedup_batch(
     batch: DataFrame,
     batch_id: int,
@@ -589,114 +668,58 @@ def minhash_dedup_batch(
     """One micro-batch of the streaming near-dup-free ingest — module
     level so the at-least-once REPLAY semantics are directly testable
     (the engine calls it via foreachBatch in
-    :func:`stream_minhash_dedup_job`).
-
-    CRASH-REPLAY GUARD: foreachBatch is at-least-once.  If the store
-    commit for THIS batch landed but the checkpoint did not, the
-    replay would dedup the batch against its own committed signatures,
-    find zero survivors, and overwrite the batch's output subdir with
-    nothing — permanent data loss.  Each commit records
-    (run, batch_id); a replay of an already-committed batch is a no-op
-    (the output subdir was written before the commit, so it is
-    complete).  The marker ledger {run: max batch_id} is carried
-    cumulatively in every commit's meta AND cached in a sidecar file
-    (`replay_ledger.json`) the vacuum never touches — a concurrent
-    committer landing after our commit cannot mask it, store
-    maintenance cannot erase it, and the common path reads one file
-    plus at most a few manifests.  Batch ids are only unique WITHIN a
-    checkpoint instance, so the tag comes from
-    :func:`checkpoint_run_tag` (a fresh/recreated checkpoint is a new
-    run, never a "replay") (r04 review, two passes)."""
+    :func:`stream_minhash_dedup_job`).  Committed through
+    :func:`_fold_into_store` (crash-replay + OCC contract there): a
+    replay must be a no-op because it would dedup the batch against
+    its own committed signatures, find zero survivors, and overwrite
+    the batch's output subdir with nothing — permanent data loss."""
     from swisscourtrulingcorpus_spark.operators.dedup import (
         incremental_minhash_dedup_sig,
         minhash_signatures,
     )
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    spark = batch.sparkSession
-    # computed ONCE per batch (null text yields no signature and falls
-    # into the pass-through set — never silently dropped), cached
-    # because the OCC loop may re-merge
-    sig = minhash_signatures(batch, text_col, id_col).cache()
-    try:
-        while True:
-            base = latest_version(store_table)
-            # Ledger read AFTER base capture: the OCC base check then
-            # guarantees a successful commit saw every marker up to
-            # its base — a sibling run's commit between read and
-            # commit raises ConcurrentWriteError instead of being
-            # clobbered out of the cumulative map (r04 review).
-            ledger = _read_replay_ledger(store_table)
-            if ledger.get(run_tag, -1) >= batch_id:
-                # a concurrent twin of THIS batch (zombie driver +
-                # restarted driver) already committed it — its output
-                # is complete; rewriting would wipe it
-                return
-            if base:
-                store = read_version(spark, store_table, base)
-            else:
-                # empty store: batch-internal dedup only — the empty-
-                # signature schema stands in as "history"
-                store = sig.limit(0)
-            survivors, updated = incremental_minhash_dedup_sig(
-                sig, store, id_col
-            )
-            # Docs too short to shingle have NO signature, hence no
-            # NEAR-dup identity — they must PASS THROUGH, not silently
-            # vanish (dropping data the fingerprint can't see is worse
-            # than admitting a short dup).  They DO get an exact-id
-            # identity: a null-signature sentinel row in the store, so
-            # a reprocessing run (fresh checkpoint over the same
-            # corpus) does not ingest them twice.  Null band keys
-            # never equi-join, so sentinels are invisible to the LSH
-            # probe.
-            unfingerprintable = batch.join(
-                sig.select(id_col), on=id_col, how="left_anti"
-            ).join(store.select(id_col), on=id_col, how="left_anti")
-            kept = batch.join(survivors, on=id_col, how="left_semi").unionByName(
-                unfingerprintable
-            )
-            sentinels = unfingerprintable.select(
-                id_col,
-                *[
-                    F.lit(None).cast("bigint").alias(c)
-                    for c in updated.columns
-                    if c != id_col
-                ],
-            )
-            updated = updated.unionByName(sentinels)
-            # per-batch overwrite subdir: a replayed batch rewrites the
-            # same files instead of appending duplicates
-            kept.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"ingest_batch={run_tag}_{batch_id}")
-            )
-            try:
-                new_ledger = dict(ledger)
-                new_ledger[run_tag] = batch_id
-                commit_version(
-                    updated,
-                    store_table,
-                    base_version=base,
-                    meta={
-                        "run": run_tag,
-                        "batch_id": batch_id,
-                        "runs": new_ledger,
-                    },
-                )
-                _write_replay_ledger(store_table, new_ledger)
-                return
-            except ConcurrentWriteError:
-                continue  # loop re-reads base AND ledger, re-checks guard
-    finally:
-        sig.unpersist()
+    def merge(stored, sig):
+        # empty store: batch-internal dedup only — the empty-signature
+        # schema stands in as "history"
+        store = sig.limit(0) if stored is None else stored
+        survivors, updated = incremental_minhash_dedup_sig(sig, store, id_col)
+        # Docs too short to shingle have NO signature (null text too),
+        # hence no NEAR-dup identity — they must PASS THROUGH, not
+        # silently vanish (dropping data the fingerprint can't see is
+        # worse than admitting a short dup).  They DO get an exact-id
+        # identity: a null-signature sentinel row in the store, so a
+        # reprocessing run (fresh checkpoint over the same corpus) does
+        # not ingest them twice.  Null band keys never equi-join, so
+        # sentinels are invisible to the LSH probe.
+        unfingerprintable = batch.join(
+            sig.select(id_col), on=id_col, how="left_anti"
+        ).join(store.select(id_col), on=id_col, how="left_anti")
+        kept = batch.join(survivors, on=id_col, how="left_semi").unionByName(
+            unfingerprintable
+        )
+        sentinels = unfingerprintable.select(
+            id_col,
+            *[
+                F.lit(None).cast("bigint").alias(c)
+                for c in updated.columns
+                if c != id_col
+            ],
+        )
+        # per-batch overwrite subdir: a replayed batch rewrites the
+        # same files instead of appending duplicates
+        kept.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"ingest_batch={run_tag}_{batch_id}")
+        )
+        return updated.unionByName(sentinels)
+
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: minhash_signatures(b, text_col, id_col),
+        merge,
+    )
 
 
 def stream_minhash_dedup_job(
@@ -710,23 +733,18 @@ def stream_minhash_dedup_job(
     """Streaming near-duplicate-free ingest: each micro-batch runs
     `operators/dedup.py::incremental_minhash_dedup` against the
     versioned signature STORE (`sources/versioned.py`) via
-    :func:`minhash_dedup_batch` — see there for the crash-replay and
-    concurrency contract.  History is only ever touched through its
-    signature table; the corpus is never re-scanned.
-    Trigger.AvailableNow, restartable as a continuous stream."""
-    os.makedirs(store_table, exist_ok=True)
+    :func:`minhash_dedup_batch` — see :func:`_fold_into_store` for the
+    crash-replay and concurrency contract.  History is only ever
+    touched through its signature table; the corpus is never
+    re-scanned.  Trigger.AvailableNow, restartable as a continuous
+    stream."""
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _dedup(batch: DataFrame, batch_id: int) -> None:
-        minhash_dedup_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: minhash_dedup_batch(
             batch, batch_id, store_table, out_dir, run_tag, text_col, id_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_dedup)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -751,17 +769,6 @@ def stream_media_decode_job(
     and the file-source checkpoint guarantees newly-landed media files
     are decoded exactly once across restarts.  Trigger.AvailableNow:
     the daily-cron batch shape, restartable as a continuous stream."""
-    import os
-
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from swisscourtrulingcorpus_spark.extraction.multimodal import (
         decode_audio_features,
         decode_image_features,
@@ -772,20 +779,7 @@ def stream_media_decode_job(
         parse_media_paths,
     )
 
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", MEDIA_GLOB)
-        .load(os.path.join(root, "*"))
-    )
+    files = _binary_file_stream(spark, root, MEDIA_GLOB)
 
     def _decode(batch, batch_id: int) -> None:
         media = parse_media_paths(batch).cache()
@@ -810,69 +804,7 @@ def stream_media_decode_job(
             # pinned across foreachBatch retries (r05 review)
             media.unpersist()
 
-    return (
-        files.writeStream.foreachBatch(_decode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _delta_upsert_batch(
-    spark,
-    delta: DataFrame,
-    store_table: str,
-    run_tag: str,
-    batch_id: int,
-    id_col: str,
-) -> None:
-    """Shared OCC core of the delete+insert maintenance jobs (postings
-    / CDC chunks / IVF index): fold a per-batch DELTA table into the
-    versioned store, replacing any re-ingested ids (a REPROCESSED
-    document/vector replaces its old rows instead of double-counting
-    them).  Same crash-replay + concurrency contract as
-    :func:`minhash_dedup_batch`: the (run, batch_id) ledger makes
-    at-least-once replays no-ops, and a concurrent sibling committer
-    raises ConcurrentWriteError -> re-read base + ledger and retry.
-    Callers guard the cheap early-return ledger check themselves
-    (before building the delta) and own the delta's cache lifetime."""
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
-
-    while True:
-        base = latest_version(store_table)
-        ledger = _read_replay_ledger(store_table)
-        if ledger.get(run_tag, -1) >= batch_id:
-            return  # concurrent twin of this batch already landed
-        if base:
-            stored = read_version(spark, store_table, base)
-            stored = stored.join(
-                delta.select(id_col).distinct(), on=id_col, how="left_anti"
-            ).select(*delta.columns)
-            updated = stored.unionByName(delta)
-        else:
-            updated = delta
-        try:
-            new_ledger = dict(ledger)
-            new_ledger[run_tag] = batch_id
-            commit_version(
-                updated,
-                store_table,
-                base_version=base,
-                meta={
-                    "run": run_tag,
-                    "batch_id": batch_id,
-                    "runs": new_ledger,
-                },
-            )
-            _write_replay_ledger(store_table, new_ledger)
-            return
-        except ConcurrentWriteError:
-            continue
+    return _available_now(files, checkpoint, _decode)
 
 
 def postings_maintenance_batch(
@@ -891,24 +823,19 @@ def postings_maintenance_batch(
     the stored postings at read time (`index_from_postings`), so the
     store versions exactly ONE table.
 
-    Same crash-replay + OCC contract as :func:`minhash_dedup_batch`:
-    at-least-once foreachBatch replays are no-ops via the
-    (run, batch_id) ledger, and a concurrent sibling committer raises
-    ConcurrentWriteError -> re-read base + ledger and retry."""
+    Committed through :func:`_fold_into_store` (crash-replay + OCC
+    contract there); re-ingested doc ids take delete+insert semantics
+    (:func:`_replace_ids`)."""
     from swisscourtrulingcorpus_spark.operators.retrieval import build_postings
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    delta = build_postings(batch, id_col=id_col, text_col=text_col)[
-        "postings"
-    ].cache()
-    try:
-        _delta_upsert_batch(
-            batch.sparkSession, delta, store_table, run_tag, batch_id, id_col
-        )
-    finally:
-        delta.unpersist()
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: build_postings(b, id_col=id_col, text_col=text_col)["postings"],
+        lambda stored, delta: _replace_ids(stored, delta, id_col),
+    )
 
 
 def stream_postings_maintenance_job(
@@ -924,19 +851,13 @@ def stream_postings_maintenance_job(
     `operators/retrieval.py::index_from_postings` + `bm25_search`.
     Trigger.AvailableNow — the reference's "process everything new,
     then stop" cron semantics, restartable as a continuous stream."""
-    os.makedirs(store_table, exist_ok=True)
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        postings_maintenance_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: postings_maintenance_batch(
             batch, batch_id, store_table, run_tag, text_col, id_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -983,12 +904,7 @@ def stream_curation_job(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    return (
-        stream.writeStream.foreachBatch(_curate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(stream, checkpoint, _curate)
 
 
 def stream_nb_scoring_job(
@@ -1043,12 +959,7 @@ def stream_nb_scoring_job(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    return (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _available_now(stream, checkpoint, _score)
 
 
 def nb_training_batch(
@@ -1067,61 +978,25 @@ def nb_training_batch(
     versioned count store via `nb_merge_counts` — history text is never
     re-tokenized, only the vocab-bounded tables move.
 
-    CRASH-REPLAY GUARD (same contract as :func:`minhash_dedup_batch`,
-    see there): counts are ADDITIVE, so an at-least-once replay of an
-    already-committed batch would double-count every token.  The
-    (run, batch_id) ledger makes replays no-ops, and the OCC
-    commit-loop serializes concurrent sibling committers."""
+    Committed through :func:`_fold_into_store` (crash-replay + OCC
+    contract there): counts are ADDITIVE, so an at-least-once replay
+    of an already-committed batch would double-count every token — the
+    (run, batch_id) ledger is load-bearing here."""
     from swisscourtrulingcorpus_spark.operators.classifier import (
         nb_merge_counts,
         nb_stats_table,
     )
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    spark = batch.sparkSession
-    # computed once; the OCC loop may re-merge — cached with a finally
-    # unpersist so a long stream doesn't accumulate one block set per
-    # micro-batch (the minhash_dedup_batch pattern)
-    delta = nb_stats_table(batch, text_col, id_col, label_col, n_buckets).cache()
-    try:
-        while True:
-            base = latest_version(store_table)
-            ledger = _read_replay_ledger(store_table)
-            if ledger.get(run_tag, -1) >= batch_id:
-                return  # concurrent twin of THIS batch already committed it
-            if base:
-                merged = nb_merge_counts(
-                    read_version(spark, store_table, base), delta
-                )
-            else:
-                merged = delta
-            try:
-                new_ledger = dict(ledger)
-                new_ledger[run_tag] = batch_id
-                commit_version(
-                    merged,
-                    store_table,
-                    base_version=base,
-                    meta={
-                        "run": run_tag,
-                        "batch_id": batch_id,
-                        "runs": new_ledger,
-                    },
-                )
-                _write_replay_ledger(store_table, new_ledger)
-                return
-            except ConcurrentWriteError:
-                continue  # re-read base AND ledger, re-check the guard
-    finally:
-        delta.unpersist()
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: nb_stats_table(b, text_col, id_col, label_col, n_buckets),
+        lambda stored, delta: (
+            delta if stored is None else nb_merge_counts(stored, delta)
+        ),
+    )
 
 
 def stream_nb_training_job(
@@ -1142,9 +1017,10 @@ def stream_nb_training_job(
     train incrementally on the labeled stream, freeze, score the
     ingest stream.  Trigger.AvailableNow, restartable."""
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _train(batch: DataFrame, batch_id: int) -> None:
-        nb_training_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: nb_training_batch(
             batch,
             batch_id,
             store_table,
@@ -1153,13 +1029,7 @@ def stream_nb_training_job(
             text_col,
             id_col,
             n_buckets,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_train)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -1180,62 +1050,31 @@ def hll_maintenance_batch(
     counter upserts (`abstract_preprocessor.py:316-326`) with bounded
     state.
 
-    Same crash-replay + OCC contract as :func:`minhash_dedup_batch`:
-    at-least-once foreachBatch replays are no-ops via the
-    (run, batch_id) ledger — max-merge is idempotent anyway, but the
-    ledger keeps the version chain replay-clean — and a concurrent
-    sibling committer raises ConcurrentWriteError -> re-read + retry."""
+    Committed through :func:`_fold_into_store` (crash-replay + OCC
+    contract there) — max-merge is idempotent anyway, but the ledger
+    keeps the version chain replay-clean."""
     from swisscourtrulingcorpus_spark.operators.sketches import (
         portable_hll_registers,
     )
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    spark = batch.sparkSession
-    delta = portable_hll_registers(batch, key_col, p=p).cache()
-    try:
-        while True:
-            base = latest_version(store_table)
-            ledger = _read_replay_ledger(store_table)
-            if ledger.get(run_tag, -1) >= batch_id:
-                return
-            if base:
-                stored = read_version(spark, store_table, base).select(
-                    "register", "max_rank"
-                )
-                updated = (
-                    stored.unionByName(delta)
-                    .groupBy("register")
-                    .agg(F.max("max_rank").alias("max_rank"))
-                )
-            else:
-                updated = delta
-            try:
-                new_ledger = dict(ledger)
-                new_ledger[run_tag] = batch_id
-                commit_version(
-                    updated,
-                    store_table,
-                    base_version=base,
-                    meta={
-                        "run": run_tag,
-                        "batch_id": batch_id,
-                        "runs": new_ledger,
-                    },
-                )
-                _write_replay_ledger(store_table, new_ledger)
-                return
-            except ConcurrentWriteError:
-                continue
-    finally:
-        delta.unpersist()
+    def merge(stored, delta):
+        if stored is None:
+            return delta
+        return (
+            stored.select("register", "max_rank")
+            .unionByName(delta)
+            .groupBy("register")
+            .agg(F.max("max_rank").alias("max_rank"))
+        )
+
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: portable_hll_registers(b, key_col, p=p),
+        merge,
+    )
 
 
 def stream_hll_maintenance_job(
@@ -1252,17 +1091,13 @@ def stream_hll_maintenance_job(
     `operators/sketches.py::portable_hll_estimate_milli`.
     Trigger.AvailableNow — restartable catch-up semantics like the
     other maintenance jobs."""
-    os.makedirs(store_table, exist_ok=True)
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        hll_maintenance_batch(batch, batch_id, store_table, run_tag, key_col, p)
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: hll_maintenance_batch(
+            batch, batch_id, store_table, run_tag, key_col, p
+        ),
     )
 
 
@@ -1279,60 +1114,32 @@ def cms_maintenance_batch(
     build the batch's count-min table (`operators/sketches.py::
     cms_table`) and SUM-merge it into the versioned store.  Counts are
     ADDITIVE, so — exactly like `nb_training_batch` and unlike the
-    idempotent HLL max-merge — the (run, batch_id) replay ledger is
-    load-bearing: a replayed committed batch would double every bucket.
-    Store size stays depth x width rows however much data streams
-    through; any reader answers heavy-hitter / frequency questions from
-    it via `cms_estimate` without touching raw data."""
+    idempotent HLL max-merge — the (run, batch_id) replay ledger of
+    :func:`_fold_into_store` is load-bearing: a replayed committed
+    batch would double every bucket.  Store size stays depth x width
+    rows however much data streams through; any reader answers
+    heavy-hitter / frequency questions from it via `cms_estimate`
+    without touching raw data."""
     from swisscourtrulingcorpus_spark.operators.sketches import cms_table
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    spark = batch.sparkSession
-    delta = cms_table(batch, value_col, width=width, depth=depth).cache()
-    try:
-        while True:
-            base = latest_version(store_table)
-            ledger = _read_replay_ledger(store_table)
-            if ledger.get(run_tag, -1) >= batch_id:
-                return
-            if base:
-                stored = read_version(spark, store_table, base).select(
-                    "d", "bucket", "cnt"
-                )
-                updated = (
-                    stored.unionByName(delta)
-                    .groupBy("d", "bucket")
-                    .agg(F.sum("cnt").alias("cnt"))
-                )
-            else:
-                updated = delta
-            try:
-                new_ledger = dict(ledger)
-                new_ledger[run_tag] = batch_id
-                commit_version(
-                    updated,
-                    store_table,
-                    base_version=base,
-                    meta={
-                        "run": run_tag,
-                        "batch_id": batch_id,
-                        "runs": new_ledger,
-                    },
-                )
-                _write_replay_ledger(store_table, new_ledger)
-                return
-            except ConcurrentWriteError:
-                continue
-    finally:
-        delta.unpersist()
+    def merge(stored, delta):
+        if stored is None:
+            return delta
+        return (
+            stored.select("d", "bucket", "cnt")
+            .unionByName(delta)
+            .groupBy("d", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: cms_table(b, value_col, width=width, depth=depth),
+        merge,
+    )
 
 
 def stream_cms_maintenance_job(
@@ -1346,19 +1153,13 @@ def stream_cms_maintenance_job(
     """Continuous frequency-sketch maintenance via
     :func:`cms_maintenance_batch`; Trigger.AvailableNow catch-up
     semantics like the other maintenance jobs."""
-    os.makedirs(store_table, exist_ok=True)
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        cms_maintenance_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: cms_maintenance_batch(
             batch, batch_id, store_table, run_tag, value_col, width, depth
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -1389,13 +1190,12 @@ def media_fingerprint_maintenance_batch(
     union of all batches' match outputs equals the one-shot
     `media_neardup_pairs` composition (test-asserted).
 
-    Same crash-replay + OCC contract as :func:`minhash_dedup_batch`:
-    at-least-once foreachBatch replays are no-ops via the
-    (run, batch_id) ledger; a concurrent sibling committer raises
-    ConcurrentWriteError -> re-read base + ledger and retry.
-    Undecodable/unroutable payloads land in the registry as null-
-    fingerprint sentinel rows (re-ingest dedup by id still works; null
-    band keys never equi-join, so they are invisible to the probe)."""
+    Committed through :func:`_fold_into_store` (crash-replay + OCC
+    contract there); the match output is written inside the merge, so
+    it lands before the commit.  Undecodable/unroutable payloads land
+    in the registry as null-fingerprint sentinel rows (re-ingest dedup
+    by id still works; null band keys never equi-join, so they are
+    invisible to the probe)."""
     from swisscourtrulingcorpus_spark.extraction.multimodal import (
         media_fingerprints,
     )
@@ -1403,71 +1203,36 @@ def media_fingerprint_maintenance_batch(
         banded_hamming_pairs,
         banded_hamming_probe,
     )
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    spark = batch.sparkSession
-    fp = media_fingerprints(batch.select(id_col, "payload")).cache()
-    try:
+    def merge(stored, fp):
         new_fp = fp.where(F.col("fp").isNotNull())
-        internal = banded_hamming_pairs(
+        matches = banded_hamming_pairs(
             new_fp, "fp", id_col=id_col, group_cols=("modality",)
         )
-        while True:
-            base = latest_version(store_table)
-            ledger = _read_replay_ledger(store_table)
-            if ledger.get(run_tag, -1) >= batch_id:
-                return  # concurrent twin of this batch already landed
-            if base:
-                stored = read_version(spark, store_table, base)
-                reg_fp = stored.where(F.col("fp").isNotNull()).join(
-                    new_fp.select(id_col), on=id_col, how="left_anti"
-                )
-                vs_registry = banded_hamming_probe(
-                    new_fp,
-                    reg_fp,
-                    "fp",
-                    id_col=id_col,
-                    group_cols=("modality",),
-                )
-                matches = internal.unionByName(vs_registry)
-                # delete+insert for re-ingested ids: a reprocessed doc
-                # replaces its fingerprint instead of duplicating it
-                updated = stored.join(
-                    fp.select(id_col).distinct(), on=id_col, how="left_anti"
-                ).select(*fp.columns).unionByName(fp)
-            else:
-                matches = internal
-                updated = fp
-            matches.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"matches_batch={run_tag}_{batch_id}")
+        if stored is not None:
+            reg_fp = stored.where(F.col("fp").isNotNull()).join(
+                new_fp.select(id_col), on=id_col, how="left_anti"
             )
-            try:
-                new_ledger = dict(ledger)
-                new_ledger[run_tag] = batch_id
-                commit_version(
-                    updated,
-                    store_table,
-                    base_version=base,
-                    meta={
-                        "run": run_tag,
-                        "batch_id": batch_id,
-                        "runs": new_ledger,
-                    },
+            matches = matches.unionByName(
+                banded_hamming_probe(
+                    new_fp, reg_fp, "fp", id_col=id_col, group_cols=("modality",)
                 )
-                _write_replay_ledger(store_table, new_ledger)
-                return
-            except ConcurrentWriteError:
-                continue
-    finally:
-        fp.unpersist()
+            )
+        matches.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"matches_batch={run_tag}_{batch_id}")
+        )
+        # a reprocessed doc replaces its fingerprint instead of
+        # duplicating it
+        return _replace_ids(stored, fp, id_col)
+
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: media_fingerprints(b.select(id_col, "payload")),
+        merge,
+    )
 
 
 def stream_media_fingerprint_job(
@@ -1485,19 +1250,13 @@ def stream_media_fingerprint_job(
     -> banded-hamming match against the registry -> versioned upsert).
     Trigger.AvailableNow catch-up semantics, restartable as a
     continuous stream."""
-    os.makedirs(store_table, exist_ok=True)
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        media_fingerprint_maintenance_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: media_fingerprint_maintenance_batch(
             batch, batch_id, store_table, out_dir, run_tag, id_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -1519,21 +1278,20 @@ def cdc_chunk_maintenance_batch(
     time, so the store versions exactly ONE table — the postings-
     maintenance contract, applied to chunks.
 
-    Same crash-replay + OCC contract as :func:`minhash_dedup_batch`;
-    re-ingested doc ids take delete+insert semantics (a reprocessed
-    document replaces its chunks instead of double-counting them)."""
+    Committed through :func:`_fold_into_store` (crash-replay + OCC
+    contract there); re-ingested doc ids take delete+insert semantics
+    (a reprocessed document replaces its chunks instead of
+    double-counting them)."""
     from swisscourtrulingcorpus_spark.operators.dedup import cdc_chunks
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    delta = cdc_chunks(batch, text_col, id_col).cache()
-    try:
-        _delta_upsert_batch(
-            batch.sparkSession, delta, store_table, run_tag, batch_id, id_col
-        )
-    finally:
-        delta.unpersist()
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        lambda b: cdc_chunks(b, text_col, id_col),
+        lambda stored, delta: _replace_ids(stored, delta, id_col),
+    )
 
 
 def stream_cdc_chunk_job(
@@ -1549,19 +1307,13 @@ def stream_cdc_chunk_job(
     chunk table (`operators/dedup.py::cdc_chunk_dedup` shape).
     Trigger.AvailableNow catch-up semantics like the other maintenance
     jobs."""
-    os.makedirs(store_table, exist_ok=True)
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        cdc_chunk_maintenance_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: cdc_chunk_maintenance_batch(
             batch, batch_id, store_table, run_tag, text_col, id_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -1586,28 +1338,29 @@ def ivf_maintenance_batch(
     Null/invalid vectors land as null-cluster sentinel rows: they have
     no nearest centroid (the `assign_clusters` contract) but keep
     their re-ingest identity, and a null cluster never equi-joins a
-    probe list.  Same crash-replay + OCC contract as
-    :func:`minhash_dedup_batch`; re-ingested ids take delete+insert
-    semantics."""
+    probe list.  Committed through :func:`_fold_into_store`
+    (crash-replay + OCC contract there); re-ingested ids take
+    delete+insert semantics."""
     from swisscourtrulingcorpus_spark.operators.clustering import ivf_index
 
-    os.makedirs(store_table, exist_ok=True)
-    if _read_replay_ledger(store_table).get(run_tag, -1) >= batch_id:
-        return
-    src = batch.select(id_col, vec_col)
-    assigned = ivf_index(src, centroids, vec_col, id_col).withColumn(
-        "cluster", F.col("cluster").cast("int")
-    )
-    sentinels = src.join(
-        assigned.select(id_col), on=id_col, how="left_anti"
-    ).withColumn("cluster", F.lit(None).cast("int"))
-    delta = assigned.unionByName(sentinels).cache()
-    try:
-        _delta_upsert_batch(
-            batch.sparkSession, delta, store_table, run_tag, batch_id, id_col
+    def delta_of(b: DataFrame) -> DataFrame:
+        src = b.select(id_col, vec_col)
+        assigned = ivf_index(src, centroids, vec_col, id_col).withColumn(
+            "cluster", F.col("cluster").cast("int")
         )
-    finally:
-        delta.unpersist()
+        sentinels = src.join(
+            assigned.select(id_col), on=id_col, how="left_anti"
+        ).withColumn("cluster", F.lit(None).cast("int"))
+        return assigned.unionByName(sentinels)
+
+    _fold_into_store(
+        batch,
+        batch_id,
+        store_table,
+        run_tag,
+        delta_of,
+        lambda stored, delta: _replace_ids(stored, delta, id_col),
+    )
 
 
 def stream_ivf_maintenance_job(
@@ -1624,17 +1377,11 @@ def stream_ivf_maintenance_job(
     (the stored ``cluster`` column makes search skip assignment).
     Trigger.AvailableNow catch-up semantics like the other maintenance
     jobs."""
-    os.makedirs(store_table, exist_ok=True)
     run_tag = checkpoint_run_tag(checkpoint)
-
-    def _maintain(batch: DataFrame, batch_id: int) -> None:
-        ivf_maintenance_batch(
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: ivf_maintenance_batch(
             batch, batch_id, store_table, run_tag, centroids, vec_col, id_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )

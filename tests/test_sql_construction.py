@@ -136,6 +136,30 @@ def test_language_id_quote_bearing_stopword(spark, monkeypatch):
     assert [r.lang for r in df.select(lang).collect()] == ["fr", "en"]
 
 
+def test_lemma_builders_reject_unportable_literals(monkeypatch):
+    """The lemma builders emit SQL text that both Spark and DuckDB
+    parse, and the two escape quotes and backslashes differently: a
+    literal that would change the parse (a quote, a backslash, or a
+    LIKE wildcard in a suffix) must raise, never splice."""
+    import pytest
+
+    from swisscourtrulingcorpus_spark.functions import text
+
+    stops = {k: list(v) for k, v in text.LEMMA_STOPWORDS.items()}
+    stops["fr"].append("d'un")
+    rules = {k: list(v) for k, v in text.LEMMA_SUFFIX_RULES.items()}
+    rules["de"].append(("en", "back\\slash", 3))
+    monkeypatch.setattr(text, "LEMMA_STOPWORDS", stops)
+    monkeypatch.setattr(text, "LEMMA_SUFFIX_RULES", rules)
+    monkeypatch.setattr(text, "DE_NOUN_SUFFIXES", text.DE_NOUN_SUFFIXES + ("_ung",))
+    with pytest.raises(ValueError, match="d'un"):
+        text.lemma_stopword_sql("t", "lang")
+    with pytest.raises(ValueError, match="slash"):
+        text.lemma_case_sql("t", "lang")
+    with pytest.raises(ValueError, match="_ung"):
+        text.de_noun_suffix_sql("t", "lang")
+
+
 def test_lazy_tables_defer_and_memoize(spark):
     """run_extraction_pipeline returns a mapping whose derived tables
     construct on first access and memoize (same object on re-read,

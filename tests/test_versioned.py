@@ -331,3 +331,73 @@ def test_retaken_claim_token_mismatch(spark, tmp_path):
     with pytest.raises(V.ConcurrentWriteError):
         V._write_manifest_owned(table, 2, {"files": []}, cid_a)
     assert V._claim_token(table, 2) == "writer-b"
+
+
+def test_fold_replay_returns_before_delta(spark, tmp_path):
+    """The store jobs' exactly-once fold: a replay of a committed
+    (run, batch) returns before building the delta and commits
+    nothing."""
+    from swisscourtrulingcorpus_spark.streaming.jobs import _fold_into_store
+
+    store = str(tmp_path / "store")
+    batch = spark.range(3)
+    _fold_into_store(batch, 0, store, "runA", lambda b: b, lambda s, d: d)
+    assert V.versions(store) == [1]
+
+    def delta_of(b):
+        raise AssertionError("delta_of called on a replay")
+
+    _fold_into_store(batch, 0, store, "runA", delta_of, lambda s, d: d)
+    assert V.versions(store) == [1]
+
+
+def test_fold_remerges_once_after_sibling_commit(spark, tmp_path):
+    """A sibling committing between the fold's base capture and its
+    commit fails the checked commit; the fold re-merges exactly once,
+    against the sibling's snapshot, and records its ledger marker."""
+    from swisscourtrulingcorpus_spark.streaming.jobs import (
+        _fold_into_store,
+        _read_replay_ledger,
+    )
+
+    store = str(tmp_path / "store")
+    seen = []
+
+    def merge(stored, delta):
+        ids = None if stored is None else sorted(r.id for r in stored.collect())
+        seen.append(ids)
+        if len(seen) == 1:
+            V.commit_version(spark.range(100, 102), store)
+        return delta if stored is None else stored.unionByName(delta)
+
+    _fold_into_store(spark.range(2), 0, store, "runA", lambda b: b, merge)
+    assert seen == [None, [100, 101]]
+    assert V.versions(store) == [1, 2]
+    got = sorted(r.id for r in V.read_version(spark, store).collect())
+    assert got == [0, 1, 100, 101]
+    assert V.version_meta(store, 2)["runs"] == {"runA": 0}
+    assert _read_replay_ledger(store) == {"runA": 0}
+
+
+def test_fold_merge_error_propagates_and_unpersists(spark, tmp_path):
+    """A failing merge surfaces its error, commits nothing, and does not
+    leave the cached delta pinned."""
+    import pytest
+
+    from swisscourtrulingcorpus_spark.streaming.jobs import _fold_into_store
+
+    store = str(tmp_path / "store")
+    deltas = []
+
+    def merge(stored, delta):
+        deltas.append((delta, delta.storageLevel.useMemory))
+        raise RuntimeError("merge failed")
+
+    with pytest.raises(RuntimeError, match="merge failed"):
+        _fold_into_store(
+            spark.range(3), 0, store, "runA", lambda b: b.select("id"), merge
+        )
+    [(delta, cached_during_merge)] = deltas
+    assert cached_during_merge
+    assert not delta.storageLevel.useMemory
+    assert V.versions(store) == []
