@@ -18,11 +18,26 @@ MP3/AAC audio, MJPG/H.264 video) raise Unsupported*Error and fall back
 to the byte-stat stub (``decode_image_stub``) with the same scheduling
 shape.  Everything Spark-side — schema, UDF signature, Arrow batch
 shape, partitioning — is real and tested either way.
+
+The pass-through contract, shared by every payload stage: one bad row
+never kills the task.  A NULL payload (the most common bad row of a
+nullable binary column), a format the stage does not handle, and a
+payload its codec rejects (truncated, corrupt, or a variant needing a
+native library) each come out as exactly ONE row with null stats —
+labelled ``missing`` / ``other`` / ``<fmt>_undecodable`` by the decode
+stages (`_decoded_rows`), a null fingerprint in the hash stages — so
+per-doc accounting never drops a doc_id and downstream can route the
+bad rows to the byte-stat stub.
+
+Every payload stage is one `_payload_stage` over a per-row function
+and every fixture one `_payload_fixture` over a per-id payload
+formula; `_sniff` is the module's only magic-byte test.
 """
 
 from __future__ import annotations
 
 import hashlib
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,6 +52,36 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from swisscourtrulingcorpus_spark.extraction.audiocodec import (
+    UnsupportedAudioError,
+    decode_wav,
+    encode_wav,
+    encode_wav_adpcm,
+    encode_wav_g711,
+)
+from swisscourtrulingcorpus_spark.extraction.gifcodec import (
+    UnsupportedGifError,
+    decode_gif,
+    encode_gif,
+    frame_rgb,
+)
+from swisscourtrulingcorpus_spark.extraction.imagecodec import (
+    UnsupportedImageError,
+    decode_image,
+    encode_bmp24,
+    encode_png,
+)
+from swisscourtrulingcorpus_spark.extraction.jpegcodec import (
+    encode_jpeg_gray,
+    encode_jpeg_gray_progressive,
+)
+from swisscourtrulingcorpus_spark.extraction.videocodec import (
+    UnsupportedVideoError,
+    decode_avi,
+    encode_avi,
+    encode_avi_mjpg,
+)
+
 FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -48,26 +93,123 @@ FEATURE_SCHEMA = StructType(
     ]
 )
 
+PAYLOAD_SCHEMA = StructType(
+    [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
+)
 
-def _fixture_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """Slim bigint id projection feeding every ``generate_*_fixture``
-    — SPREAD across the session's parallelism when the source scan has
-    fewer partitions than cores (r11 optimization, guide §2.5
-    stragglers): the bench fixtures are single-row-group parquet, so
-    the scan arrives as ONE partition and the whole encode→decode
-    Python chain would serialize on one core while the rest idle
-    (measured: jpeg/mjpg gates ran (0+1)/1 single-task).  The
-    repartition moves only the 8-byte ids — the expensive payloads are
-    generated AFTER the exchange, on all cores.  Scale-adaptive, not a
-    local constant: a real many-file corpus already scans with ≥ cores
-    partitions and keeps its layout (no added shuffle); only an
-    under-parallel input is spread, and only up to
-    ``defaultParallelism``, which tracks the cluster width."""
+_IMAGE_FMTS = ("png", "bmp", "jpeg", "gif")
+
+
+def _sniff(payload: bytes) -> str:
+    """The module's one magic-byte test: ``png`` / ``bmp`` / ``jpeg`` /
+    ``gif`` / ``wav`` / ``avi``, else ``other``.  The prefixes are
+    disjoint, so each stage keeps only its own format -> action map;
+    the codecs still validate their headers (they parse outside
+    input)."""
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        return "png"
+    if payload[:2] == b"BM":
+        return "bmp"
+    if payload[:2] == b"\xff\xd8":
+        return "jpeg"
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        return "gif"
+    if payload[:4] == b"RIFF":
+        return {b"WAVE": "wav", b"AVI ": "avi"}.get(payload[8:12], "other")
+    return "other"
+
+
+def _payload_stage(media: DataFrame, schema: StructType, rows_of) -> DataFrame:
+    """The one mapInPandas over (doc_id, payload): ``rows_of(doc_id,
+    payload) -> list[dict]`` per row, one frame per non-empty Arrow
+    batch.  The UDF carries ``rows_of``'s name, which is what the
+    optimized plan prints — gates that differ only in their per-row
+    function stay apart in the plan fingerprints and the registry
+    duplicate lint."""
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                r
+                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                for r in rows_of(doc_id, payload)
+            ]
+            if rows:
+                # object columns: a None next to ints would otherwise
+                # make the column float64 and round every 56-64-bit
+                # fingerprint above 2^53 in the batch
+                yield pd.DataFrame(rows, dtype=object)
+
+    stage.__name__ = rows_of.__name__
+    return media.mapInPandas(stage, schema)
+
+
+def _payload_fixture(df: DataFrame, id_col: str, payload_of) -> DataFrame:
+    """(doc_id, payload) fixture: ``payload_of(d: int) -> bytes`` per
+    id, the one fixture mapInPandas (UDF named after ``payload_of``).
+
+    The slim bigint id projection is SPREAD across the session's
+    parallelism when the source scan has fewer partitions than cores
+    (r11 optimization, guide §2.5 stragglers): the bench fixtures are
+    single-row-group parquet, so the scan arrives as ONE partition and
+    the whole encode→decode Python chain would serialize on one core
+    while the rest idle (measured: jpeg/mjpg gates ran (0+1)/1
+    single-task).  The repartition moves only the 8-byte ids — the
+    expensive payloads are generated AFTER the exchange, on all cores.
+    Scale-adaptive, not a local constant: a real many-file corpus
+    already scans with ≥ cores partitions and keeps its layout (no
+    added shuffle); only an under-parallel input is spread, and only up
+    to ``defaultParallelism``, which tracks the cluster width."""
     ids = df.select(F.col(id_col).cast("long").alias("doc_id"))
     target = ids.sparkSession.sparkContext.defaultParallelism
     if ids.rdd.getNumPartitions() < target:
         ids = ids.repartition(target)
-    return ids
+
+    def fixture(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                payloads = [payload_of(int(d)) for d in pdf["doc_id"]]
+                yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    fixture.__name__ = payload_of.__name__
+    return ids.mapInPandas(fixture, PAYLOAD_SCHEMA)
+
+
+def _decoded_rows(doc_id, payload, schema: StructType, fmts, decode, body) -> list[dict]:
+    """The decode stages' pass-through contract (module docstring) in
+    ONE place: NULL payload → one 'missing' row; a sniffed format
+    outside ``fmts`` → one 'other' row; a codec ``Unsupported*Error`` →
+    one '<fmt>_undecodable' row; otherwise ``body(fmt,
+    decode(payload))``'s rows.  Every row starts as ``schema``'s nulls,
+    so a body row sets only its stats — ``{}`` is a stage's own
+    accounting row, and a 'fmt' key relabels it (resize's
+    '<fmt>_tiny').  The body's rows are built in full before any is
+    returned: a failure on frame k never leaves frames 0..k-1 next to
+    the null-stat row (one bad payload = exactly one row; r06
+    review)."""
+
+    def row(fmt: str, stats: dict | None = None) -> dict:
+        return {**dict.fromkeys(schema.fieldNames()), "doc_id": doc_id, "fmt": fmt, **(stats or {})}
+
+    if payload is None:
+        return [row("missing")]
+    payload = bytes(payload)
+    fmt = _sniff(payload)
+    if fmt not in fmts:
+        return [row("other")]
+    try:
+        return [row(fmt, r) for r in body(fmt, decode(payload))]
+    except (
+        UnsupportedAudioError,
+        UnsupportedGifError,
+        UnsupportedImageError,
+        UnsupportedVideoError,
+    ):
+        # a real 100 TB corpus always contains undecodable payloads
+        # (progressive JPEGs, truncated files, videos mis-sniffed as
+        # images); each codec translates its malformed-payload errors to
+        # its Unsupported*Error, so this one clause covers them all
+        return [row(f"{fmt}_undecodable")]
 
 
 def attach_binary_payload(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -92,8 +234,6 @@ def decode_image_real(payload: bytes) -> dict:
     libraries (progressive/arithmetic JPEG, video, audio) and for
     malformed payloads — callers fall back to
     ``decode_image_stub``'s byte features."""
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import decode_image
-
     width, height, channels, px = decode_image(payload)
     return {
         "width": width,
@@ -119,140 +259,49 @@ PIXEL_FEATURE_SCHEMA = StructType(
 )
 
 
-def _pixel_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        UnsupportedImageError,
+def _pixel_rows(doc_id, payload) -> list[dict]:
+    return _decoded_rows(
+        doc_id, payload, PIXEL_FEATURE_SCHEMA, _IMAGE_FMTS, decode_image_real,
+        lambda fmt, feats: [feats],
     )
 
-    null_stats = {
-        "width": None,
-        "height": None,
-        "channels": None,
-        "pixel_sum": None,
-        "px_min": None,
-        "px_max": None,
-    }
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            if payload is None:
-                # nullable binary column: a NULL payload is the most
-                # common bad row of all — it must emit the null-stats
-                # row, not TypeError at the sniff (r05 review)
-                rows.append({"doc_id": doc_id, "fmt": "missing", **null_stats})
-                continue
-            fmt = (
-                "png"
-                if payload[:8] == b"\x89PNG\r\n\x1a\n"
-                else "bmp"
-                if payload[:2] == b"BM"
-                else "jpeg"
-                if payload[:2] == b"\xff\xd8"
-                else "gif"
-                if payload[:6] in (b"GIF87a", b"GIF89a")
-                else "other"
-            )
-            try:
-                feats = decode_image_real(bytes(payload))
-            except UnsupportedImageError:
-                # A real 100 TB corpus always contains undecodable
-                # payloads (progressive JPEGs, truncated files, videos
-                # mis-sniffed as images) — one of them must NOT kill
-                # the Spark task.  Such rows pass through with null
-                # pixel stats and a *_undecodable fmt so downstream
-                # can route them to the byte-stat stub (r05 review;
-                # the decode_image dispatch translates every codec's
-                # malformed-payload errors to UnsupportedImageError,
-                # so this one except clause really covers all three).
-                feats = dict(null_stats)
-                fmt = f"{fmt}_undecodable" if fmt != "other" else "other"
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "fmt": fmt,
-                    "width": feats["width"],
-                    "height": feats["height"],
-                    "channels": feats["channels"],
-                    "pixel_sum": feats["pixel_sum"],
-                    "px_min": feats["px_min"],
-                    "px_max": feats["px_max"],
-                }
-            )
-        if rows:
-            yield pd.DataFrame(rows)
 
-
-PAYLOAD_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
-)
-
-
-def _image_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        encode_bmp24,
-        encode_png,
+def _rgb_pixels(d: int, w: int, h: int, nch: int = 3) -> bytes:
+    """Pixel (x, y, c) = (d + 7x + 13y + 29c) % 256, row-major — the
+    arithmetic the image, mixed, router and AVI fixture oracles
+    recompute."""
+    return bytes(
+        (d + 7 * x + 13 * y + 29 * c) % 256
+        for y in range(h)
+        for x in range(w)
+        for c in range(nch)
     )
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = d % 4 + 2, d % 3 + 2
-            nch = 4 if (d % 2 == 0 and d % 4 == 0) else 3
-            px = bytes(
-                (d + 7 * x + 13 * y + 29 * c) % 256
-                for y in range(h)
-                for x in range(w)
-                for c in range(nch)
-            )
-            if d % 2 == 0:
-                payloads.append(
-                    encode_png(w, h, nch, px, filter_for_row=lambda y, d=d: (d + y) % 5)
-                )
-            else:
-                payloads.append(encode_bmp24(w, h, px))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+def _image_payload(d: int) -> bytes:
+    w, h = d % 4 + 2, d % 3 + 2
+    nch = 4 if (d % 2 == 0 and d % 4 == 0) else 3
+    px = _rgb_pixels(d, w, h, nch)
+    if d % 2 == 0:
+        return encode_png(w, h, nch, px, filter_for_row=lambda y: (d + y) % 5)
+    return encode_bmp24(w, h, px)
 
 
-def _jpeg_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import encode_jpeg_gray
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = d % 21 + 4, d % 13 + 4
-            px = [
-                (3 * d + 11 * (x // 8) + 17 * (y // 8)) % 256
-                for y in range(h)
-                for x in range(w)
-            ]
-            payloads.append(encode_jpeg_gray(w, h, px, restart_interval=d % 3))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _jpeg_grid(d: int) -> tuple[int, int, list[int]]:
+    """(w, h, gray pixels) of the JPEG fixtures: sizes 4..24 × 4..16,
+    pixel (x, y) = (3·d + 11·(x//8) + 17·(y//8)) % 256."""
+    w, h = d % 21 + 4, d % 13 + 4
+    px = [(3 * d + 11 * (x // 8) + 17 * (y // 8)) % 256 for y in range(h) for x in range(w)]
+    return w, h, px
 
 
-def _progressive_jpeg_fixture_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import (
-        encode_jpeg_gray_progressive,
-    )
+def _jpeg_payload(d: int) -> bytes:
+    w, h, px = _jpeg_grid(d)
+    return encode_jpeg_gray(w, h, px, restart_interval=d % 3)
 
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = d % 21 + 4, d % 13 + 4
-            px = [
-                (3 * d + 11 * (x // 8) + 17 * (y // 8)) % 256
-                for y in range(h)
-                for x in range(w)
-            ]
-            payloads.append(encode_jpeg_gray_progressive(w, h, px))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+def _progressive_jpeg_payload(d: int) -> bytes:
+    return encode_jpeg_gray_progressive(*_jpeg_grid(d))
 
 
 def generate_progressive_jpeg_fixture(
@@ -263,44 +312,21 @@ def generate_progressive_jpeg_fixture(
     exercises the multi-scan coefficient store and
     `_assemble_progressive` instead of the baseline path, against the
     identical arithmetic oracle."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _progressive_jpeg_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _progressive_jpeg_payload)
 
 
-def _mixed_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        encode_bmp24,
-        encode_png,
-    )
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import encode_jpeg_gray
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            kind = d % 4
-            if kind == 3:  # undecodable row: mis-sniffed "video" bytes
-                payloads.append(b"\x00RIFFfake-video" + bytes([d % 256]) * 8)
-                continue
-            w, h = d % 5 + 2, d % 3 + 2
-            if kind == 2:  # grayscale JPEG, constant blocks (bit-exact)
-                px = [(d + 5 * (x // 8) + 9 * (y // 8)) % 256 for y in range(h) for x in range(w)]
-                payloads.append(encode_jpeg_gray(w, h, px))
-                continue
-            px3 = bytes(
-                (d + 7 * x + 13 * y + 29 * c) % 256
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            payloads.append(
-                encode_png(w, h, 3, px3, filter_for_row=lambda y, d=d: (d + y) % 5)
-                if kind == 0
-                else encode_bmp24(w, h, px3)
-            )
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _mixed_payload(d: int) -> bytes:
+    kind = d % 4
+    if kind == 3:  # undecodable row: mis-sniffed "video" bytes
+        return b"\x00RIFFfake-video" + bytes([d % 256]) * 8
+    w, h = d % 5 + 2, d % 3 + 2
+    if kind == 2:  # grayscale JPEG, constant blocks (bit-exact)
+        px = [(d + 5 * (x // 8) + 9 * (y // 8)) % 256 for y in range(h) for x in range(w)]
+        return encode_jpeg_gray(w, h, px)
+    px3 = _rgb_pixels(d, w, h)
+    if kind == 0:
+        return encode_png(w, h, 3, px3, filter_for_row=lambda y: (d + y) % 5)
+    return encode_bmp24(w, h, px3)
 
 
 def generate_mixed_media_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -308,9 +334,7 @@ def generate_mixed_media_fixture(df: DataFrame, id_col: str = "doc_id") -> DataF
     deliberately-undecodable payload cycling by doc_id % 4 — the shape
     `decode_image_features` must survive at 100 TB: every codec
     dispatched in one scan, bad rows passing through as 'other'."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _mixed_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _mixed_payload)
 
 
 def generate_jpeg_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -323,9 +347,7 @@ def generate_jpeg_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     independent oracle recomputes every pixel statistic from arithmetic
     alone — the full marker-parse → Huffman → dequant → IDCT path
     through real bytes is what the gate verifies."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _jpeg_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _jpeg_payload)
 
 
 def generate_image_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -335,20 +357,17 @@ def generate_image_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (id + 7x + 13y + 29c) % 256 so an independent oracle can recompute
     every statistic from arithmetic alone — the encode→decode round
     trip through real bytes is what the gate verifies."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _image_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _image_payload)
 
 
 def decode_image_features(media: DataFrame) -> DataFrame:
     """REAL pixel-statistics extraction over binary image payloads via
     mapInPandas — the decode stage of a multimodal training pipeline.
     Input needs (doc_id, payload); PNG/BMP/baseline-JPEG payloads are
-    decoded by the stdlib codecs; undecodable rows survive with null
-    pixel stats and fmt '<fmt>_undecodable'/'other' (a mixed corpus
-    never kills the task — route those rows to ``decode_image_stub``
-    for byte features)."""
-    return media.mapInPandas(_pixel_feature_batches, PIXEL_FEATURE_SCHEMA)
+    decoded by the stdlib codecs; bad rows follow the pass-through
+    contract (module docstring) — route them to ``decode_image_stub``
+    for byte features."""
+    return _payload_stage(media, PIXEL_FEATURE_SCHEMA, _pixel_rows)
 
 
 AUDIO_FEATURE_SCHEMA = StructType(
@@ -365,43 +384,10 @@ AUDIO_FEATURE_SCHEMA = StructType(
     ]
 )
 
-_AUDIO_NULL_STATS = {
-    "sample_rate": None,
-    "channels": None,
-    "n_frames": None,
-    "duration_ms": None,
-    "amp_sum": None,
-    "amp_min": None,
-    "amp_max": None,
-}
 
-
-def _wav_stage_rows(doc_id, payload, nulls: dict, body) -> list[dict]:
-    """The audio pass-through contract in ONE place (r05 review; same
-    contract as decode_image_features): NULL payload → one 'missing'
-    row; non-WAV / undecodable payload → one null-stat row; decodable
-    WAV → ``body(sr, ch, nf, samples)``'s stage-specific rows.  One
-    bad payload never kills the task."""
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-        UnsupportedAudioError,
-        decode_wav,
-    )
-
-    if payload is None:
-        return [{"doc_id": doc_id, "fmt": "missing", **nulls}]
-    is_wav = payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-    try:
-        if not is_wav:
-            raise UnsupportedAudioError("not WAV")
-        sr, ch, nf, samples = decode_wav(bytes(payload))
-    except UnsupportedAudioError:
-        fmt = "wav_undecodable" if is_wav else "other"
-        return [{"doc_id": doc_id, "fmt": fmt, **nulls}]
-    return [{"doc_id": doc_id, "fmt": "wav", **r} for r in body(sr, ch, nf, samples)]
-
-
-def _audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def body(sr, ch, nf, samples):
+def _audio_rows(doc_id, payload) -> list[dict]:
+    def body(fmt, wav):
+        sr, ch, nf, samples = wav
         return [
             {
                 "sample_rate": sr,
@@ -414,43 +400,25 @@ def _audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
             }
         ]
 
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rows.extend(_wav_stage_rows(doc_id, payload, _AUDIO_NULL_STATS, body))
-        if rows:
-            yield pd.DataFrame(rows)
+    return _decoded_rows(doc_id, payload, AUDIO_FEATURE_SCHEMA, ("wav",), decode_wav, body)
 
 
 def decode_audio_features(media: DataFrame) -> DataFrame:
     """REAL sample-statistics extraction over binary WAV payloads via
     mapInPandas (`extraction/audiocodec.py`, pure stdlib).  Integer
     stats only (amp_sum/min/max, floor-division duration) so the DuckDB
-    oracle recomputes them bit-exactly; undecodable/compressed/missing
-    payloads pass through with null stats like the image stage."""
-    return media.mapInPandas(_audio_feature_batches, AUDIO_FEATURE_SCHEMA)
+    oracle recomputes them bit-exactly; bad rows follow the
+    pass-through contract (module docstring)."""
+    return _payload_stage(media, AUDIO_FEATURE_SCHEMA, _audio_rows)
 
 
-def _wav_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import encode_wav
-
-    rates = (8000, 16000, 44100)
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            if d % 7 == 3:  # undecodable row: RIFF/WAVE with float PCM tag
-                import struct as _s
-
-                body = b"WAVE" + b"fmt " + _s.pack("<I", 16) + _s.pack(
-                    "<HHIIHH", 3, 1, 8000, 32000, 4, 32
-                )
-                payloads.append(b"RIFF" + _s.pack("<I", len(body)) + body)
-                continue
-            ch = d % 2 + 1
-            payloads.append(encode_wav(rates[d % 3], ch, _wav_samples(d)))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _wav_payload(d: int) -> bytes:
+    if d % 7 == 3:  # undecodable row: RIFF/WAVE with float PCM tag
+        body = b"WAVE" + b"fmt " + struct.pack("<I", 16) + struct.pack(
+            "<HHIIHH", 3, 1, 8000, 32000, 4, 32
+        )
+        return b"RIFF" + struct.pack("<I", len(body)) + body
+    return encode_wav((8000, 16000, 44100)[d % 3], d % 2 + 1, _wav_samples(d))
 
 
 def generate_wav_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -461,9 +429,7 @@ def generate_wav_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pass-through contract.  An independent oracle recomputes every
     statistic from arithmetic alone — the RIFF parse → PCM unpack path
     through real bytes is what the gate verifies."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _wav_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _wav_payload)
 
 
 AUDIO_WINDOW_SCHEMA = StructType(
@@ -478,64 +444,6 @@ AUDIO_WINDOW_SCHEMA = StructType(
     ]
 )
 
-_AUDIO_WINDOW_NULLS = {
-    "window_idx": None,
-    "start_ms": None,
-    "n_values": None,
-    "energy_sum": None,
-    "amp_peak": None,
-}
-
-
-def _audio_window_batches(frame_ms: int):
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-        UnsupportedAudioError,
-        decode_wav,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        {"doc_id": doc_id, "fmt": "missing", **_AUDIO_WINDOW_NULLS}
-                    )
-                    continue
-                is_wav = payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-                try:
-                    if not is_wav:
-                        raise UnsupportedAudioError("not WAV")
-                    sr, ch, nf, samples = decode_wav(bytes(payload))
-                    spf = sr * frame_ms // 1000  # sample frames per window
-                    if spf == 0 or nf == 0:
-                        # sub-ms rates or empty audio: one accounting row
-                        rows.append(
-                            {"doc_id": doc_id, "fmt": "wav", **_AUDIO_WINDOW_NULLS}
-                        )
-                        continue
-                    for w in range((nf + spf - 1) // spf):
-                        lo, hi = w * spf * ch, min((w + 1) * spf, nf) * ch
-                        win = samples[lo:hi]
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "fmt": "wav",
-                                "window_idx": w,
-                                "start_ms": w * frame_ms,
-                                "n_values": hi - lo,
-                                "energy_sum": sum(abs(v) for v in win),
-                                "amp_peak": max(abs(v) for v in win),
-                            }
-                        )
-                except UnsupportedAudioError:
-                    fmt = "wav_undecodable" if is_wav else "other"
-                    rows.append({"doc_id": doc_id, "fmt": fmt, **_AUDIO_WINDOW_NULLS})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return gen
-
 
 def audio_frame_energy(media: DataFrame, frame_ms: int = 1) -> DataFrame:
     """Windowed audio energy (1→N fan-out): each decodable WAV payload
@@ -544,10 +452,34 @@ def audio_frame_energy(media: DataFrame, frame_ms: int = 1) -> DataFrame:
     primitive (VAD thresholding, silence trimming, loudness bucketing)
     of a speech-data pipeline.  Window boundaries are integer sample
     frames (``sr * frame_ms // 1000``), so a DuckDB oracle recomputes
-    every row arithmetically.  Undecodable/missing payloads pass
-    through as ONE null row (same contract as the other media
-    stages)."""
-    return media.mapInPandas(_audio_window_batches(frame_ms), AUDIO_WINDOW_SCHEMA)
+    every row arithmetically.  Bad rows follow the pass-through
+    contract (module docstring)."""
+
+    def body(fmt, wav):
+        sr, ch, nf, samples = wav
+        spf = sr * frame_ms // 1000  # sample frames per window
+        if spf == 0 or nf == 0:
+            # sub-ms rates or empty audio: one accounting row
+            return [{}]
+        rows = []
+        for w in range((nf + spf - 1) // spf):
+            lo, hi = w * spf * ch, min((w + 1) * spf, nf) * ch
+            win = samples[lo:hi]
+            rows.append(
+                {
+                    "window_idx": w,
+                    "start_ms": w * frame_ms,
+                    "n_values": hi - lo,
+                    "energy_sum": sum(abs(v) for v in win),
+                    "amp_peak": max(abs(v) for v in win),
+                }
+            )
+        return rows
+
+    def _audio_window_rows(doc_id, payload) -> list[dict]:
+        return _decoded_rows(doc_id, payload, AUDIO_WINDOW_SCHEMA, ("wav",), decode_wav, body)
+
+    return _payload_stage(media, AUDIO_WINDOW_SCHEMA, _audio_window_rows)
 
 
 RESIZE_SCHEMA = StructType(
@@ -587,85 +519,40 @@ def _resize_box2(w: int, h: int, nch: int, px) -> tuple:
     return ow, oh, bytes(out)
 
 
-def _resize_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        UnsupportedImageError,
-        decode_image,
-        encode_bmp24,
-    )
+def _resize_rows(doc_id, payload) -> list[dict]:
+    def body(fmt, img):
+        w, h, nch, px = img
+        if w < 2 or h < 2:
+            return [{"fmt": f"{fmt}_tiny"}]
+        ow, oh, out = _resize_box2(w, h, nch, px)
+        # re-encode as BMP24 to prove the round trip: drop alpha /
+        # replicate gray so the writer always sees RGB
+        if nch >= 3:
+            rgb = bytes(
+                out[(i // 3) * nch + (i % 3)] for i in range(ow * oh * 3)
+            )
+        else:
+            # 1-ch gray AND 2-ch gray+alpha both replicate channel 0
+            # of each pixel — indexing by i//3 alone walked the
+            # buffer at the wrong stride for nch=2 and emitted
+            # ALPHA bytes as pixel values (r06 review)
+            rgb = bytes(
+                out[(i // 3) * nch] for i in range(ow * oh * 3)
+            )
+        bmp = encode_bmp24(ow, oh, rgb)
+        return [
+            {
+                "width": w,
+                "height": h,
+                "channels": nch,
+                "out_w": ow,
+                "out_h": oh,
+                "out_pixel_sum": sum(out),
+                "out_bmp_bytes": len(bmp),
+            }
+        ]
 
-    nulls = {
-        "width": None,
-        "height": None,
-        "channels": None,
-        "out_w": None,
-        "out_h": None,
-        "out_pixel_sum": None,
-        "out_bmp_bytes": None,
-    }
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            if payload is None:
-                rows.append({"doc_id": doc_id, "fmt": "missing", **nulls})
-                continue
-            payload = bytes(payload)
-            fmt = (
-                "png"
-                if payload[:8] == b"\x89PNG\r\n\x1a\n"
-                else "bmp"
-                if payload[:2] == b"BM"
-                else "jpeg"
-                if payload[:2] == b"\xff\xd8"
-                else "gif"
-                if payload[:6] in (b"GIF87a", b"GIF89a")
-                else "other"
-            )
-            try:
-                w, h, nch, px = decode_image(payload)
-            except UnsupportedImageError:
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "fmt": f"{fmt}_undecodable" if fmt != "other" else "other",
-                        **nulls,
-                    }
-                )
-                continue
-            if w < 2 or h < 2:
-                rows.append({"doc_id": doc_id, "fmt": f"{fmt}_tiny", **nulls})
-                continue
-            ow, oh, out = _resize_box2(w, h, nch, px)
-            # re-encode as BMP24 to prove the round trip: drop alpha /
-            # replicate gray so the writer always sees RGB
-            if nch >= 3:
-                rgb = bytes(
-                    out[(i // 3) * nch + (i % 3)] for i in range(ow * oh * 3)
-                )
-            else:
-                # 1-ch gray AND 2-ch gray+alpha both replicate channel 0
-                # of each pixel — indexing by i//3 alone walked the
-                # buffer at the wrong stride for nch=2 and emitted
-                # ALPHA bytes as pixel values (r06 review)
-                rgb = bytes(
-                    out[(i // 3) * nch] for i in range(ow * oh * 3)
-                )
-            bmp = encode_bmp24(ow, oh, rgb)
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "fmt": fmt,
-                    "width": w,
-                    "height": h,
-                    "channels": nch,
-                    "out_w": ow,
-                    "out_h": oh,
-                    "out_pixel_sum": sum(out),
-                    "out_bmp_bytes": len(bmp),
-                }
-            )
-        if rows:
-            yield pd.DataFrame(rows)
+    return _decoded_rows(doc_id, payload, RESIZE_SCHEMA, _IMAGE_FMTS, decode_image, body)
 
 
 def resize_image_features(media: DataFrame) -> DataFrame:
@@ -673,9 +560,9 @@ def resize_image_features(media: DataFrame) -> DataFrame:
     box-filter downsample, BMP24 re-encode — the full decode ->
     transform -> re-encode round trip of a multimodal preprocessing
     stage, Arrow-batched via mapInPandas like the decode ops.  Bad
-    rows (null / undecodable / sub-2x2) pass through as null-stat rows
-    under the same contract as `decode_image_features`."""
-    return media.mapInPandas(_resize_feature_batches, RESIZE_SCHEMA)
+    rows follow the pass-through contract (module docstring); a
+    sub-2x2 image is one null-stat '<fmt>_tiny' row."""
+    return _payload_stage(media, RESIZE_SCHEMA, _resize_rows)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -692,102 +579,49 @@ VIDEO_FRAME_SCHEMA = StructType(
     ]
 )
 
-_VIDEO_NULL_STATS = {
-    "frame_idx": None,
-    "ts_ms": None,
-    "width": None,
-    "height": None,
-    "pixel_sum": None,
-    "px_min": None,
-    "px_max": None,
-}
-
-
-def _video_frame_batches(stride: int):
-    from swisscourtrulingcorpus_spark.extraction.videocodec import (
-        UnsupportedVideoError,
-        decode_avi,
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        {"doc_id": doc_id, "fmt": "missing", **_VIDEO_NULL_STATS}
-                    )
-                    continue
-                is_avi = payload[:4] == b"RIFF" and payload[8:12] == b"AVI "
-                try:
-                    if not is_avi:
-                        raise UnsupportedVideoError("not AVI")
-                    w, h, us, frames = decode_avi(bytes(payload))
-                    if not frames:
-                        # a well-formed container with an empty movi
-                        # list still yields ONE row — per-doc
-                        # accounting never silently drops a doc_id
-                        # (r05 review)
-                        rows.append(
-                            {"doc_id": doc_id, "fmt": "avi", **_VIDEO_NULL_STATS}
-                        )
-                        continue
-                    for idx in range(0, len(frames), stride):
-                        px = frames[idx]
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "fmt": "avi",
-                                "frame_idx": idx,
-                                "ts_ms": idx * us // 1000,
-                                "width": w,
-                                "height": h,
-                                "pixel_sum": sum(px),
-                                "px_min": min(px) if px else None,
-                                "px_max": max(px) if px else None,
-                            }
-                        )
-                except UnsupportedVideoError:
-                    fmt = "avi_undecodable" if is_avi else "other"
-                    rows.append({"doc_id": doc_id, "fmt": fmt, **_VIDEO_NULL_STATS})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return gen
-
 
 def sample_video_frames(media: DataFrame, stride: int = 1) -> DataFrame:
     """REAL frame sampling over binary AVI payloads via mapInPandas
     (`extraction/videocodec.py`, pure stdlib): the 1→N UDTF-shaped
     multimodal stage — every ``stride``-th uncompressed-DIB frame comes
-    out with integer pixel stats and its container timestamp.
-    Compressed/undecodable/missing payloads pass through as ONE null
-    row so a mixed corpus never kills the task (same contract as
-    `decode_image_features`); `sample_frames_stub` remains the
-    byte-stat fallback shape for codecs needing native libraries."""
-    return media.mapInPandas(_video_frame_batches(stride), VIDEO_FRAME_SCHEMA)
+    out with integer pixel stats and its container timestamp.  Bad
+    rows follow the pass-through contract (module docstring);
+    `sample_frames_stub` remains the byte-stat fallback shape for
+    codecs needing native libraries."""
+
+    def body(fmt, avi):
+        w, h, us, frames = avi
+        if not frames:
+            # a well-formed container with an empty movi list still
+            # yields ONE row — per-doc accounting never silently drops
+            # a doc_id (r05 review)
+            return [{}]
+        rows = []
+        for idx in range(0, len(frames), stride):
+            px = frames[idx]
+            rows.append(
+                {
+                    "frame_idx": idx,
+                    "ts_ms": idx * us // 1000,
+                    "width": w,
+                    "height": h,
+                    "pixel_sum": sum(px),
+                    "px_min": min(px) if px else None,
+                    "px_max": max(px) if px else None,
+                }
+            )
+        return rows
+
+    def _video_frame_rows(doc_id, payload) -> list[dict]:
+        return _decoded_rows(doc_id, payload, VIDEO_FRAME_SCHEMA, ("avi",), decode_avi, body)
+
+    return _payload_stage(media, VIDEO_FRAME_SCHEMA, _video_frame_rows)
 
 
-def _avi_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.videocodec import encode_avi
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            n, w, h = d % 4 + 1, d % 3 + 2, d % 2 + 2
-            frames = [
-                bytes(
-                    (d + 3 * f + 7 * x + 13 * y + 29 * c) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(3)
-                )
-                for f in range(n)
-            ]
-            payloads.append(encode_avi(w, h, frames, us_per_frame=40000))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _avi_payload(d: int) -> bytes:
+    n, w, h = d % 4 + 1, d % 3 + 2, d % 2 + 2
+    frames = [_rgb_pixels(d + 3 * f, w, h) for f in range(n)]
+    return encode_avi(w, h, frames, us_per_frame=40000)
 
 
 def generate_avi_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -797,21 +631,7 @@ def generate_avi_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     every per-frame statistic from arithmetic alone; the RIFF walk →
     DIB plane → BGR→RGB path through real bytes is what the gate
     verifies."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _avi_fixture_batches, PAYLOAD_SCHEMA
-    )
-
-
-def _mjpg_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import encode_jpeg_gray
-    from swisscourtrulingcorpus_spark.extraction.videocodec import encode_avi_mjpg
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            payloads.append(_mjpg_payload(int(doc_id)))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    return _payload_fixture(df, id_col, _avi_payload)
 
 
 def generate_mjpg_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -823,9 +643,7 @@ def generate_mjpg_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     `jpeg_decode_stats` gate).  What the gate then verifies end-to-end:
     RIFF walk -> `00dc` chunk -> baseline JPEG decode -> gray->RGB
     replicate, all through real bytes."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _mjpg_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _mjpg_payload)
 
 
 GIF_FRAME_SCHEMA = StructType(
@@ -841,23 +659,11 @@ GIF_FRAME_SCHEMA = StructType(
     ]
 )
 
-_GIF_NULL_STATS = {
-    "frame_idx": None,
-    "width": None,
-    "height": None,
-    "n_palette": None,
-    "idx_sum": None,
-    "rgb_sum": None,
-}
-
-
 
 def _gif_payload(d: int) -> bytes:
     """Shared GIF fixture construction (used by generate_gif_fixture
     AND the media-router fixture — one definition, so the oracles that
     hard-code this arithmetic cannot drift apart; r06 review)."""
-    from swisscourtrulingcorpus_spark.extraction.gifcodec import encode_gif
-
     w, h, npal, nfr = d % 7 + 3, d % 4 + 2, d % 5 + 2, d % 3 + 1
     pal = [
         ((d + 11 * i) % 256, (d + 23 * i) % 256, (d + 37 * i) % 256)
@@ -873,9 +679,6 @@ def _gif_payload(d: int) -> bytes:
 def _mjpg_payload(d: int) -> bytes:
     """Shared Motion-JPEG fixture construction (generate_mjpg_fixture +
     router fixture)."""
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import encode_jpeg_gray
-    from swisscourtrulingcorpus_spark.extraction.videocodec import encode_avi_mjpg
-
     n, w, h = d % 3 + 1, d % 13 + 4, d % 9 + 4
     jpegs = [
         encode_jpeg_gray(
@@ -900,70 +703,31 @@ def _wav_samples(d: int) -> list[int]:
     return [((d * 31 + 7 * i) % 65536) - 32768 for i in range(n * ch)]
 
 
-def _gif_frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.gifcodec import (
-        UnsupportedGifError,
-        decode_gif,
-        frame_rgb,
-    )
+def _gif_frame_rows(doc_id, payload) -> list[dict]:
+    def body(fmt, gif):
+        w, h, pal, frames = gif
+        return [
+            {
+                "frame_idx": idx,
+                "width": w,
+                "height": h,
+                "n_palette": len(pal),
+                "idx_sum": sum(plane),
+                "rgb_sum": sum(frame_rgb(pal, plane)),
+            }
+            for idx, plane in enumerate(frames)
+        ]
 
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            if payload is None:
-                rows.append({"doc_id": doc_id, "fmt": "missing", **_GIF_NULL_STATS})
-                continue
-            payload = bytes(payload)
-            is_gif = payload[:6] in (b"GIF87a", b"GIF89a")
-            try:
-                if not is_gif:
-                    raise UnsupportedGifError("not GIF")
-                w, h, pal, frames = decode_gif(payload)
-                # buffer the doc's rows and extend only on FULL success:
-                # a failure on frame k must not leave frames 0..k-1 rows
-                # next to the null-stat row (one bad payload = exactly
-                # one row, the media-stage contract; r06 review)
-                doc_rows = []
-                for idx, plane in enumerate(frames):
-                    rgb = frame_rgb(pal, plane)
-                    doc_rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "fmt": "gif",
-                            "frame_idx": idx,
-                            "width": w,
-                            "height": h,
-                            "n_palette": len(pal),
-                            "idx_sum": sum(plane),
-                            "rgb_sum": sum(rgb),
-                        }
-                    )
-                rows.extend(doc_rows)
-            except UnsupportedGifError:
-                fmt = "gif_undecodable" if is_gif else "other"
-                rows.append({"doc_id": doc_id, "fmt": fmt, **_GIF_NULL_STATS})
-        if rows:
-            yield pd.DataFrame(rows)
+    return _decoded_rows(doc_id, payload, GIF_FRAME_SCHEMA, ("gif",), decode_gif, body)
 
 
 def sample_gif_frames(media: DataFrame) -> DataFrame:
     """REAL animated-GIF frame sampling via mapInPandas
     (`extraction/gifcodec.py`, pure stdlib LZW): every frame comes out
     composited to the full canvas with palette-index and RGB pixel
-    sums.  Bad rows (null / non-GIF / malformed) pass through as ONE
-    null-stat row — the standard media-stage contract."""
-    return media.mapInPandas(_gif_frame_batches, GIF_FRAME_SCHEMA)
-
-
-def _gif_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.gifcodec import encode_gif
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            payloads.append(_gif_payload(int(doc_id)))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    sums.  Bad rows follow the pass-through contract (module
+    docstring)."""
+    return _payload_stage(media, GIF_FRAME_SCHEMA, _gif_frame_rows)
 
 
 def generate_gif_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -974,9 +738,7 @@ def generate_gif_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     per-frame index and RGB sum; the LZW bitstream -> sub-block ->
     palette -> canvas path through real bytes is what the gate
     verifies."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _gif_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _gif_payload)
 
 
 ROUTER_SCHEMA = StructType(
@@ -990,6 +752,34 @@ ROUTER_SCHEMA = StructType(
 )
 
 
+def _route_rows(doc_id, payload) -> list[dict]:
+    def row(media_class, fmt, n_units=None, stat_sum=None):
+        return [{"doc_id": doc_id, "media_class": media_class, "fmt": fmt,
+                 "n_units": n_units, "stat_sum": stat_sum}]
+
+    if payload is None:
+        return row("missing", "missing")
+    p = bytes(payload)
+    fmt = _sniff(p)
+    try:
+        if fmt == "gif":
+            _, _, pal, frames = decode_gif(p)
+            return row("image_anim", fmt, len(frames),
+                       sum(sum(frame_rgb(pal, fr)) for fr in frames))
+        if fmt == "avi":
+            frames = decode_avi(p)[3]
+            return row("video", fmt, len(frames), sum(sum(fr) for fr in frames))
+        if fmt == "wav":
+            _, _, nframes, samples = decode_wav(p)
+            return row("audio", fmt, nframes, int(sum(samples)))
+        if fmt in _IMAGE_FMTS:
+            px = decode_image(p)[3]
+            return row("image", fmt, 1, sum(px))
+    except ValueError:  # every codec's Unsupported*Error is a ValueError
+        return row("undecodable", "undecodable")
+    return row("other", "other")
+
+
 def route_media_features(media: DataFrame) -> DataFrame:
     """The heterogeneous-corpus stage: ONE binary column holding many
     formats, sniffed per row and dispatched to the right REAL decoder —
@@ -999,192 +789,42 @@ def route_media_features(media: DataFrame) -> DataFrame:
     media class, sniffed format, unit count (frames for video/GIF,
     per-channel sample frames for audio, 1 for stills) and the summed
     integer unit statistic — comparable across a mixed corpus without
-    per-format tables.  Unroutable/undecodable/missing payloads pass
-    through as null-stat rows (the standard contract: one bad row
-    never kills a 100 TB scan)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-            decode_wav,
-        )
-        from swisscourtrulingcorpus_spark.extraction.gifcodec import (
-            decode_gif,
-            frame_rgb,
-        )
-        from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-            UnsupportedImageError,
-            decode_image,
-        )
-        from swisscourtrulingcorpus_spark.extraction.videocodec import (
-            UnsupportedVideoError,
-            decode_avi,
-        )
-
-        nulls = {"n_units": None, "stat_sum": None}
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    rows.append(
-                        {"doc_id": doc_id, "media_class": "missing",
-                         "fmt": "missing", **nulls}
-                    )
-                    continue
-                p = bytes(payload)
-                try:
-                    if p[:6] in (b"GIF87a", b"GIF89a"):
-                        w, h, pal, frames = decode_gif(p)
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "media_class": "image_anim",
-                                "fmt": "gif",
-                                "n_units": len(frames),
-                                "stat_sum": sum(
-                                    sum(frame_rgb(pal, fr)) for fr in frames
-                                ),
-                            }
-                        )
-                    elif p[:4] == b"RIFF" and p[8:12] == b"AVI ":
-                        w, h, us, frames = decode_avi(p)
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "media_class": "video",
-                                "fmt": "avi",
-                                "n_units": len(frames),
-                                "stat_sum": sum(sum(fr) for fr in frames),
-                            }
-                        )
-                    elif p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-                        sr, ch, nframes, samples = decode_wav(p)
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "media_class": "audio",
-                                "fmt": "wav",
-                                "n_units": nframes,
-                                "stat_sum": int(sum(samples)),
-                            }
-                        )
-                    elif (
-                        p[:8] == b"\x89PNG\r\n\x1a\n"
-                        or p[:2] == b"BM"
-                        or p[:2] == b"\xff\xd8"
-                    ):
-                        fmt = (
-                            "png"
-                            if p[:2] == b"\x89P"
-                            else "bmp" if p[:2] == b"BM" else "jpeg"
-                        )
-                        w, h, nch, px = decode_image(p)
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "media_class": "image",
-                                "fmt": fmt,
-                                "n_units": 1,
-                                "stat_sum": sum(px),
-                            }
-                        )
-                    else:
-                        rows.append(
-                            {"doc_id": doc_id, "media_class": "other",
-                             "fmt": "other", **nulls}
-                        )
-                except (UnsupportedImageError, UnsupportedVideoError, ValueError):
-                    rows.append(
-                        {"doc_id": doc_id, "media_class": "undecodable",
-                         "fmt": "undecodable", **nulls}
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.mapInPandas(gen, ROUTER_SCHEMA)
+    per-format tables.  Bad rows follow the pass-through contract
+    (module docstring), labelled missing / other / undecodable in both
+    label columns."""
+    return _payload_stage(media, ROUTER_SCHEMA, _route_rows)
 
 
-def _router_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import encode_wav
-    from swisscourtrulingcorpus_spark.extraction.gifcodec import encode_gif
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        encode_bmp24,
-        encode_png,
-    )
-    from swisscourtrulingcorpus_spark.extraction.jpegcodec import (
-        encode_jpeg_gray,
-    )
-    from swisscourtrulingcorpus_spark.extraction.videocodec import (
-        encode_avi_mjpg,
-    )
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            if d % 97 == 13:  # junk row: router must not die
-                payloads.append(b"\x00junk" + bytes([d % 256]) * 5)
-                continue
-            kind = d % 6
-            if kind in (0, 1):  # png / bmp, 3 channels
-                w, h = d % 4 + 2, d % 3 + 2
-                px = bytes(
-                    (d + 7 * x + 13 * y + 29 * c) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(3)
-                )
-                payloads.append(
-                    encode_png(w, h, 3, px) if kind == 0 else encode_bmp24(w, h, px)
-                )
-            elif kind == 2:  # gray baseline jpeg, constant blocks
-                w, h = d % 21 + 4, d % 13 + 4
-                payloads.append(
-                    encode_jpeg_gray(
-                        w,
-                        h,
-                        [
-                            (3 * d + 11 * (x // 8) + 17 * (y // 8)) % 256
-                            for y in range(h)
-                            for x in range(w)
-                        ],
-                    )
-                )
-            elif kind == 3:  # animated gif (shared builder)
-                payloads.append(_gif_payload(d))
-            elif kind == 4:  # motion-jpeg avi (shared builder)
-                payloads.append(_mjpg_payload(d))
-            else:  # 16-bit PCM wav (shared sample builder)
-                payloads.append(encode_wav(8000, d % 2 + 1, _wav_samples(d)))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _router_payload(d: int) -> bytes:
+    if d % 97 == 13:  # junk row: router must not die
+        return b"\x00junk" + bytes([d % 256]) * 5
+    kind = d % 6
+    if kind in (0, 1):  # png / bmp, 3 channels
+        w, h = d % 4 + 2, d % 3 + 2
+        px = _rgb_pixels(d, w, h)
+        return encode_png(w, h, 3, px) if kind == 0 else encode_bmp24(w, h, px)
+    if kind == 2:  # gray baseline jpeg, constant blocks
+        return encode_jpeg_gray(*_jpeg_grid(d))
+    if kind == 3:  # animated gif (shared builder)
+        return _gif_payload(d)
+    if kind == 4:  # motion-jpeg avi (shared builder)
+        return _mjpg_payload(d)
+    # 16-bit PCM wav (shared sample builder)
+    return encode_wav(8000, d % 2 + 1, _wav_samples(d))
 
 
 def generate_media_router_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Six real formats + junk rows in ONE binary column, all encoded
     from doc_id arithmetic so a single oracle predicts every routed
     statistic (`plans/extra_queries.py::media_router_stats`)."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _router_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _router_payload)
 
 
-def _g711_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-        encode_wav_g711,
-    )
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            ch = d % 2 + 1
-            n = (d % 40 + 20) * ch
-            enc = bytes((d + 13 * i) % 256 for i in range(n))
-            payloads.append(
-                encode_wav_g711(8000, ch, enc, "mulaw" if d % 2 == 0 else "alaw")
-            )
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _g711_payload(d: int) -> bytes:
+    ch = d % 2 + 1
+    n = (d % 40 + 20) * ch
+    enc = bytes((d + 13 * i) % 256 for i in range(n))
+    return encode_wav_g711(8000, ch, enc, "mulaw" if d % 2 == 0 else "alaw")
 
 
 # small BOUNDED cache: 63 md5 digests per CLUSTER, not per doc
@@ -1226,8 +866,6 @@ def _image_neardup_payload(d: int) -> bytes:
     used 16 FIXED patterns: dup-cluster size then grows with the
     corpus and pair output goes QUADRATIC — 121M pairs at the 10x
     scale run.  Fixture bug, not operator bug.)"""
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_bmp24
-
     vals = [row[:] for row in _image_base_grid(d // 32)]
     # k=0 docs are EXACT pixel dups of their cluster base, k=1..3
     # drift <= 2 hash bits per flipped pixel
@@ -1243,15 +881,6 @@ def _image_neardup_payload(d: int) -> bytes:
     return encode_bmp24(9, 7, bytes(px))
 
 
-def _image_neardup_fixture_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = [_image_neardup_payload(int(d)) for d in pdf["doc_id"]]
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-
 def generate_image_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic 9x7 grayscale BMP corpus with BUILT-IN near-dup
     structure: md5-pixel base patterns shared by 32-doc clusters, each
@@ -1260,9 +889,7 @@ def generate_image_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> Dat
     corpus size (cluster size is bounded, cluster count grows), and the
     oracle recomputes every pixel, hash bit, and pair from the same
     md5 formula."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _image_neardup_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _image_neardup_payload)
 
 
 DHASH_SCHEMA = StructType(
@@ -1283,11 +910,6 @@ def _dhash_value(payload: bytes) -> int | None:
     so fold to SIGNED two's complement before emitting — an unfolded
     2^63 doesn't fit the declared LongType and crashes the Arrow batch
     (review r07).  XOR/bit_count downstream are sign-agnostic."""
-    from swisscourtrulingcorpus_spark.extraction.imagecodec import (
-        UnsupportedImageError,
-        decode_image,
-    )
-
     try:
         w, h, ch, pix = decode_image(payload)
     except UnsupportedImageError:
@@ -1304,17 +926,8 @@ def _dhash_value(payload: bytes) -> int | None:
     return hv
 
 
-def _dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            {
-                "doc_id": doc_id,
-                "dhash": None if payload is None else _dhash_value(bytes(payload)),
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-        ]
-        if rows:
-            yield pd.DataFrame(rows)
+def _dhash_rows(doc_id, payload) -> list[dict]:
+    return [{"doc_id": doc_id, "dhash": None if payload is None else _dhash_value(bytes(payload))}]
 
 
 def image_dhash_fingerprints(media: DataFrame) -> DataFrame:
@@ -1323,7 +936,7 @@ def image_dhash_fingerprints(media: DataFrame) -> DataFrame:
     per image, computed map-side in Arrow batches — the image payloads
     never shuffle; near-dup pairing downstream is pure JVM bit math
     over the fingerprint table."""
-    return media.mapInPandas(_dhash_batches, DHASH_SCHEMA)
+    return _payload_stage(media, DHASH_SCHEMA, _dhash_rows)
 
 
 #: audio near-dup fixture geometry: 57 windows x 16 samples -> 56
@@ -1371,18 +984,7 @@ def _audio_cluster_levels(g: int) -> tuple[int, ...]:
 
 def _audio_neardup_payload(d: int) -> bytes:
     """One mono 16-bit PCM WAV of the audio near-dup corpus."""
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import encode_wav
-
     return encode_wav(8000, 1, _audio_neardup_samples(d))
-
-
-def _audio_neardup_fixture_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = [_audio_neardup_payload(int(d)) for d in pdf["doc_id"]]
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
 
 def generate_audio_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1392,9 +994,7 @@ def generate_audio_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> Dat
     linear in corpus size.  The oracle recomputes every sample, window
     energy, hash bit, and pair from the arithmetic alone; the real
     RIFF encode -> decode path is what the Spark side exercises."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _audio_neardup_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _audio_neardup_payload)
 
 
 AUDIO_FP_SCHEMA = StructType(
@@ -1410,11 +1010,6 @@ def _ahash_value(payload: bytes) -> int | None:
     undecodable (channel-interleave-agnostic for mono; bounded to the
     leading 57 windows): bit(j) = energy(window j+1) > energy(window
     j)."""
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-        UnsupportedAudioError,
-        decode_wav,
-    )
-
     try:
         _, ch, _, samples = decode_wav(payload)
     except UnsupportedAudioError:
@@ -1435,17 +1030,8 @@ def _ahash_value(payload: bytes) -> int | None:
     return hv
 
 
-def _audio_fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            {
-                "doc_id": doc_id,
-                "ahash": None if payload is None else _ahash_value(bytes(payload)),
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-        ]
-        if rows:
-            yield pd.DataFrame(rows)
+def _ahash_rows(doc_id, payload) -> list[dict]:
+    return [{"doc_id": doc_id, "ahash": None if payload is None else _ahash_value(bytes(payload))}]
 
 
 def audio_energy_fingerprints(media: DataFrame) -> DataFrame:
@@ -1454,7 +1040,7 @@ def audio_energy_fingerprints(media: DataFrame) -> DataFrame:
     one slim (doc_id, ahash bigint) row per clip, computed map-side in
     Arrow batches; payloads never shuffle.  Same near-dup pairing
     contract as `image_dhash_fingerprints`."""
-    return media.mapInPandas(_audio_fp_batches, AUDIO_FP_SCHEMA)
+    return _payload_stage(media, AUDIO_FP_SCHEMA, _ahash_rows)
 
 
 #: video near-dup fixture geometry: 57 frames of 4x3 RGB -> 56
@@ -1478,8 +1064,6 @@ def _video_cluster_levels(g: int) -> tuple[int, ...]:
 
 def _video_neardup_payload(d: int) -> bytes:
     """One 57-frame flat-brightness AVI of the video near-dup corpus."""
-    from swisscourtrulingcorpus_spark.extraction.videocodec import encode_avi
-
     levels = list(_video_cluster_levels(d // 32))
     # k = d % 4 doc-unique FRAMES brightened by +96 (wrapping)
     for m in range(d % 4):
@@ -1489,15 +1073,6 @@ def _video_neardup_payload(d: int) -> bytes:
     return encode_avi(_VI_W, _VI_H, frames, us_per_frame=40000)
 
 
-def _video_neardup_fixture_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = [_video_neardup_payload(int(d)) for d in pdf["doc_id"]]
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-
 def generate_video_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic 57-frame AVI corpus with BUILT-IN near-dup
     structure (the video member of the image/audio fixture family):
@@ -1505,9 +1080,7 @@ def generate_video_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> Dat
     doc-unique brightened frames — temporal-envelope entropy comes from
     the seed, pair volume stays linear, and the oracle recomputes every
     level, bit, and pair from arithmetic alone."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _video_neardup_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _video_neardup_payload)
 
 
 VIDEO_FP_SCHEMA = StructType(
@@ -1522,11 +1095,6 @@ def _vhash_value(payload: bytes) -> int | None:
     """Temporal brightness-envelope hash of one AVI payload, or None if
     undecodable: bit(f) = brightness of frame f+1 > frame f, over the
     leading 57 frames."""
-    from swisscourtrulingcorpus_spark.extraction.videocodec import (
-        UnsupportedVideoError,
-        decode_avi,
-    )
-
     try:
         _, _, _, frames = decode_avi(payload)
     except UnsupportedVideoError:
@@ -1539,17 +1107,8 @@ def _vhash_value(payload: bytes) -> int | None:
     return hv
 
 
-def _video_fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            {
-                "doc_id": doc_id,
-                "vhash": None if payload is None else _vhash_value(bytes(payload)),
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-        ]
-        if rows:
-            yield pd.DataFrame(rows)
+def _vhash_rows(doc_id, payload) -> list[dict]:
+    return [{"doc_id": doc_id, "vhash": None if payload is None else _vhash_value(bytes(payload))}]
 
 
 def video_brightness_fingerprints(media: DataFrame) -> DataFrame:
@@ -1559,7 +1118,7 @@ def video_brightness_fingerprints(media: DataFrame) -> DataFrame:
     map-side; payloads never shuffle.  Same pairing contract as the
     image/audio fingerprints (`operators/dedup.py::
     banded_hamming_pairs`)."""
-    return media.mapInPandas(_video_fp_batches, VIDEO_FP_SCHEMA)
+    return _payload_stage(media, VIDEO_FP_SCHEMA, _vhash_rows)
 
 
 #: text near-dup fixture geometry: 40 md5 words -> 38 3-word shingles
@@ -1613,15 +1172,6 @@ def _media_neardup_payload(d: int) -> bytes:
     return _text_neardup_payload(d)
 
 
-def _media_neardup_fixture_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        payloads = [_media_neardup_payload(int(d)) for d in pdf["doc_id"]]
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-
 def generate_media_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Heterogeneous media corpus (ONE binary column, FOUR modalities
     — image/audio/video/text — interleaved by (doc_id // 8) % 4, so
@@ -1629,9 +1179,7 @@ def generate_media_neardup_fixture(df: DataFrame, id_col: str = "doc_id") -> Dat
     built-in near-dup structure — the input shape a real 100 TB media
     lake presents: you don't get a per-format table, you get a payload
     column and a sniffer."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _media_neardup_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _media_neardup_payload)
 
 
 MEDIA_FP_SCHEMA = StructType(
@@ -1677,56 +1225,47 @@ def _thash_value(payload: bytes) -> int | None:
     return hv
 
 
+#: sniffed format -> (modality, perceptual hash); no GIF entry — a GIF
+#: (like any payload without an entry) takes the text branch
+_FP_OF = {
+    "png": ("image", _dhash_value),
+    "bmp": ("image", _dhash_value),
+    "jpeg": ("image", _dhash_value),
+    "wav": ("audio", _ahash_value),
+    "avi": ("video", _vhash_value),
+}
+
+
+def _media_fp_rows(doc_id, payload) -> list[dict]:
+    modality, fp = "unknown", None
+    if payload is not None:
+        p = bytes(payload)
+        modality, hash_of = _FP_OF.get(_sniff(p), ("text", _thash_value))
+        fp = hash_of(p)
+        if fp is None and modality != "text":
+            # magic-prefix collision: a legitimate UTF-8 text doc
+            # can start with b'BM' (e.g. "BM25 scoring ...") or
+            # even a RIFF-looking prefix; when the binary decode
+            # fails, fall through to the text branch before
+            # settling on 'unknown' so such docs keep their
+            # text-near-dup coverage.
+            modality, fp = "text", _thash_value(p)
+        if fp is None:
+            modality = "unknown"
+    return [{"doc_id": doc_id, "modality": modality, "fp": fp}]
+
+
 def media_fingerprint_rows(pairs) -> list[dict]:
     """Sniff-and-fingerprint for an iterable of (doc_id, payload):
-    per-row format dispatch (the `route_media_features` sniff order)
-    to the matching perceptual hash — BMP/PNG/JPEG -> dHash, RIFF/WAVE
-    -> energy envelope, RIFF/AVI -> brightness envelope, and anything
-    without binary magic that decodes as UTF-8 text (>= 3 words) ->
-    the 56-bit SimHash (`_thash_value`).  Shared by
-    the batch fingerprint router and the streaming registry job so
-    both paths compute identical (modality, fp) rows.  Unroutable or
-    undecodable payloads emit a null fingerprint under modality
-    'unknown' (one bad row never kills the scan)."""
-    rows = []
-    for doc_id, payload in pairs:
-        modality, fp = "unknown", None
-        if payload is not None:
-            p = bytes(payload)
-            if (
-                p[:2] == b"BM"
-                or p[:8] == b"\x89PNG\r\n\x1a\n"
-                or p[:2] == b"\xff\xd8"
-            ):
-                modality, fp = "image", _dhash_value(p)
-            elif p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-                modality, fp = "audio", _ahash_value(p)
-            elif p[:4] == b"RIFF" and p[8:12] == b"AVI ":
-                modality, fp = "video", _vhash_value(p)
-            else:
-                # no binary magic: try UTF-8 text (>= 3 words) — the
-                # fourth modality of the unified near-dup story
-                modality, fp = "text", _thash_value(p)
-            if fp is None and modality != "text":
-                # magic-prefix collision: a legitimate UTF-8 text doc
-                # can start with b'BM' (e.g. "BM25 scoring ...") or
-                # even a RIFF-looking prefix; when the binary decode
-                # fails, fall through to the text branch before
-                # settling on 'unknown' so such docs keep their
-                # text-near-dup coverage.
-                fp = _thash_value(p)
-                modality = "text" if fp is not None else "unknown"
-            elif fp is None:
-                modality = "unknown"
-        rows.append({"doc_id": doc_id, "modality": modality, "fp": fp})
-    return rows
-
-
-def _media_fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = media_fingerprint_rows(zip(pdf["doc_id"], pdf["payload"]))
-        if rows:
-            yield pd.DataFrame(rows)
+    per-row format dispatch (`_sniff`) to the matching perceptual hash
+    — BMP/PNG/JPEG -> dHash, RIFF/WAVE -> energy envelope, RIFF/AVI ->
+    brightness envelope, and anything else that decodes as UTF-8 text
+    (>= 3 words) -> the 56-bit SimHash (`_thash_value`).  The row
+    function of `media_fingerprints`, which the streaming registry job
+    runs too, so both paths compute identical (modality, fp) rows.
+    Unroutable or undecodable payloads emit a null fingerprint under
+    modality 'unknown' (pass-through contract, module docstring)."""
+    return [r for doc_id, payload in pairs for r in _media_fp_rows(doc_id, payload)]
 
 
 def media_fingerprints(media: DataFrame) -> DataFrame:
@@ -1737,23 +1276,13 @@ def media_fingerprints(media: DataFrame) -> DataFrame:
     output is one slim
     (doc_id, modality, fp bigint) row per payload, ready for the
     shared `banded_hamming_pairs` join grouped by modality."""
-    return media.mapInPandas(_media_fp_batches, MEDIA_FP_SCHEMA)
+    return _payload_stage(media, MEDIA_FP_SCHEMA, _media_fp_rows)
 
 
-def _adpcm_fixture_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from swisscourtrulingcorpus_spark.extraction.audiocodec import (
-        encode_wav_adpcm,
-    )
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            n = d % 60 + 20
-            samples = [((d * 31 + 7 * i) % 65536) - 32768 for i in range(n)]
-            payloads.append(encode_wav_adpcm(8000, samples, block_samples=21))
-        if len(pdf):
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+def _adpcm_payload(d: int) -> bytes:
+    n = d % 60 + 20
+    samples = [((d * 31 + 7 * i) % 65536) - 32768 for i in range(n)]
+    return encode_wav_adpcm(8000, samples, block_samples=21)
 
 
 def generate_adpcm_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1767,9 +1296,7 @@ def generate_adpcm_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     per-sample recurrence over the public IMA step tables, so a nibble
     packing/order, block segmentation, or clamp bug in EITHER codec
     direction fails the hash."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _adpcm_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _adpcm_payload)
 
 
 def generate_g711_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1779,9 +1306,7 @@ def generate_g711_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     recomputes every decoded 16-bit sample from the byte alone; the
     RIFF parse -> expansion-table path through real bytes is what the
     gate verifies."""
-    return _fixture_ids(df, id_col).mapInPandas(
-        _g711_fixture_batches, PAYLOAD_SCHEMA
-    )
+    return _payload_fixture(df, id_col, _g711_payload)
 
 
 def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1805,26 +1330,6 @@ def decode_image_stub(media: DataFrame) -> DataFrame:
     real plumbing (Arrow batches of binary cells, bounded by
     maxRecordsPerBatch), with stub features standing in for pixels."""
     return media.mapInPandas(_feature_batches, FEATURE_SCHEMA)
-
-
-def resize_image_stub(media: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Resize step (1→1): rescale the metadata dims to fit max_dim
-    preserving aspect ratio — pure column arithmetic on the metadata
-    (a real resize would be a mapInPandas over the payload exactly like
-    decode_image_stub; the *scheduling* shape is identical, so the stub
-    keeps this one JVM-side where a metadata-only transform belongs)."""
-    scale = F.when(
-        F.greatest("width", "height") > max_dim,
-        F.lit(max_dim) / F.greatest("width", "height").cast("double"),
-    ).otherwise(F.lit(1.0))
-    # both dims in ONE projection — sequential withColumn would
-    # recompute `scale` against the already-resized width
-    return media.withColumns(
-        {
-            "width": F.floor(F.col("width") * scale).cast("int"),
-            "height": F.floor(F.col("height") * scale).cast("int"),
-        }
-    )
 
 
 FRAME_SCHEMA = StructType(

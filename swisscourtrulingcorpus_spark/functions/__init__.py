@@ -3,7 +3,6 @@
 from swisscourtrulingcorpus_spark.functions.hashing import (  # noqa: F401
     h32,
     normalize_ws,
-    word_shingles,
 )
 from swisscourtrulingcorpus_spark.functions.text import (  # noqa: F401
     clean_text_col,

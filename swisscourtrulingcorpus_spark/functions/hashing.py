@@ -82,16 +82,6 @@ def word_shingles_from_words(words: Column, k: int = 3) -> Column:
     return out
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """k-word shingles of a normalized text, as ``array<string>``.
-
-    Convenience form; in hot paths prefer projecting
-    ``split(normalize_ws(c), ' ')`` to a real column first and calling
-    ``word_shingles_from_words`` on it (see its docstring for why).
-    """
-    return word_shingles_from_words(F.split(normalize_ws(col), " "), k)
-
-
 # --- SQL-text forms (r11 optimization round) ---------------------------
 #
 # Each Column operation is one py4j round trip (~0.5 ms; minhash

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.money import dec2, disc_price, one
+from swisscourtrulingcorpus_spark.functions.money import dec2, disc_price
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 

@@ -386,3 +386,113 @@ def test_adpcm_wav_roundtrip_bounded_error():
 
     with pytest.raises(UnsupportedAudioError):
         adpcm_decode_block(b"\x00\x00\x89\x00\x11")  # step index 137 > 88
+
+
+def _truncated(kind: str) -> bytes:
+    """A real payload of ``kind`` cut to 20 bytes: the magic survives,
+    every decoder rejects the rest."""
+    from swisscourtrulingcorpus_spark.extraction.gifcodec import encode_gif
+    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_png
+
+    full = {
+        "png": lambda: encode_png(3, 3, 3, bytes(27)),
+        "gif": lambda: encode_gif(3, 2, [(0, 0, 0), (9, 9, 9)], [bytes(6)]),
+        "wav": lambda: encode_wav(8000, 1, [1, 2, 3, 4]),
+        "avi": lambda: encode_avi(2, 2, [bytes(12)]),
+    }[kind]()
+    return full[:20]
+
+
+# stage -> (call, label columns, magic of its truncated row, labels of the
+# NULL / junk / truncated rows); every other column must be NULL
+_STAGE_CONTRACT = {
+    "decode_image_features": (
+        lambda mm, df: mm.decode_image_features(df), ("fmt",), "png",
+        [("missing",), ("other",), ("png_undecodable",)],
+    ),
+    "resize_image_features": (
+        lambda mm, df: mm.resize_image_features(df), ("fmt",), "png",
+        [("missing",), ("other",), ("png_undecodable",)],
+    ),
+    "decode_audio_features": (
+        lambda mm, df: mm.decode_audio_features(df), ("fmt",), "wav",
+        [("missing",), ("other",), ("wav_undecodable",)],
+    ),
+    "audio_frame_energy": (
+        lambda mm, df: mm.audio_frame_energy(df), ("fmt",), "wav",
+        [("missing",), ("other",), ("wav_undecodable",)],
+    ),
+    "sample_video_frames": (
+        lambda mm, df: mm.sample_video_frames(df), ("fmt",), "avi",
+        [("missing",), ("other",), ("avi_undecodable",)],
+    ),
+    "sample_gif_frames": (
+        lambda mm, df: mm.sample_gif_frames(df), ("fmt",), "gif",
+        [("missing",), ("other",), ("gif_undecodable",)],
+    ),
+    "route_media_features": (
+        lambda mm, df: mm.route_media_features(df), ("media_class", "fmt"), "gif",
+        [("missing", "missing"), ("other", "other"), ("undecodable", "undecodable")],
+    ),
+    "image_dhash_fingerprints": (
+        lambda mm, df: mm.image_dhash_fingerprints(df), (), "png", [(), (), ()],
+    ),
+    "audio_energy_fingerprints": (
+        lambda mm, df: mm.audio_energy_fingerprints(df), (), "wav", [(), (), ()],
+    ),
+    "video_brightness_fingerprints": (
+        lambda mm, df: mm.video_brightness_fingerprints(df), (), "avi", [(), (), ()],
+    ),
+    "media_fingerprints": (
+        lambda mm, df: mm.media_fingerprints(df), ("modality",), "wav",
+        [("unknown",), ("unknown",), ("unknown",)],
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_STAGE_CONTRACT))
+def test_payload_stage_bad_row_contract(spark, stage):
+    """The media-stage pass-through contract, once for every payload
+    stage: a NULL payload, junk bytes and the stage's own magic over
+    truncated bytes each come out as exactly ONE row with the stage's
+    label and null stats — one bad row never kills the task."""
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    from swisscourtrulingcorpus_spark.extraction import multimodal as mm
+
+    call, label_cols, magic, labels = _STAGE_CONTRACT[stage]
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
+    )
+    rows = [(1, None), (2, b"\x00junk-bytes"), (3, _truncated(magic))]
+    out = call(mm, spark.createDataFrame(rows, schema)).collect()
+    assert sorted(r["doc_id"] for r in out) == [1, 2, 3]
+    for r in out:
+        got = r.asDict()
+        assert tuple(got[c] for c in label_cols) == labels[r["doc_id"] - 1]
+        stats = {c: v for c, v in got.items() if c not in ("doc_id", *label_cols)}
+        assert stats and all(v is None for v in stats.values()), (r["doc_id"], stats)
+
+
+def test_null_payload_keeps_neighbour_fingerprint_exact(spark):
+    """A NULL payload in the same Arrow batch must not round a
+    neighbour's 56-bit fingerprint: a None next to ints made the pandas
+    column float64, which silently drops the low bits above 2^53."""
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    from swisscourtrulingcorpus_spark.extraction.imagecodec import encode_bmp24
+    from swisscourtrulingcorpus_spark.extraction.multimodal import (
+        _dhash_value,
+        image_dhash_fingerprints,
+    )
+
+    # every row rises left to right: all 56 dHash bits set
+    px = bytes(v for y in range(7) for x in range(9) for v in [(20 * x + y) % 256] * 3)
+    bmp = encode_bmp24(9, 7, px)
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
+    )
+    df = spark.createDataFrame([(1, bmp), (2, None)], schema).coalesce(1)
+    got = {r["doc_id"]: r["dhash"] for r in image_dhash_fingerprints(df).collect()}
+    assert got == {1: _dhash_value(bmp), 2: None}
+    assert got[1] == 2**56 - 1

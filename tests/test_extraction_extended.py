@@ -100,22 +100,6 @@ def test_lower_court_udf_distributed(spark):
     assert rows[1].lc.court is None
 
 
-def test_resize_image_stub_aspect_ratio(spark):
-    """Resize metadata math: dims scale to fit max_dim preserving
-    aspect ratio; small images pass through untouched."""
-    from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        resize_image_stub,
-    )
-
-    media = spark.createDataFrame(
-        [(1, b"x", "image/stub", 1024, 768), (2, b"y", "image/stub", 100, 50)],
-        "doc_id long, payload binary, media_type string, width int, height int",
-    )
-    rows = {r.doc_id: r for r in resize_image_stub(media, max_dim=256).collect()}
-    assert (rows[1].width, rows[1].height) == (256, 192)
-    assert (rows[2].width, rows[2].height) == (100, 50)
-
-
 def test_frame_sample_fanout_count(spark, sf_dir):
     """1→N frame fan-out: total frames == sum over docs of len%5+1."""
     import pyspark.sql.functions as F

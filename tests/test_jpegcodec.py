@@ -401,22 +401,23 @@ def test_progressive_encoder_roundtrip():
 
 
 def test_fixture_ids_spreads_single_partition_input(spark):
-    """The shared fixture-id projection must spread an under-parallel
-    input across the session's cores (the single-row-group bench
-    layout serialized every decode on one task, r11), must NOT add an
-    exchange when the input is already at least that wide, and must
-    never change the id multiset."""
+    """The shared fixture stage must spread an under-parallel input's
+    ids across the session's cores (the single-row-group bench layout
+    serialized every decode on one task, r11), must NOT add an exchange
+    when the input is already at least that wide, and must never change
+    the id multiset."""
     from swisscourtrulingcorpus_spark.extraction.multimodal import (
-        _fixture_ids,
+        _payload_fixture,
+        _text_neardup_payload,
     )
 
     target = spark.sparkContext.defaultParallelism
     narrow = spark.range(0, 500).coalesce(1).withColumnRenamed("id", "doc_id")
-    spread = _fixture_ids(narrow, "doc_id")
+    spread = _payload_fixture(narrow, "doc_id", _text_neardup_payload)
     assert spread.rdd.getNumPartitions() == target
     assert sorted(r.doc_id for r in spread.collect()) == list(range(500))
 
     wide = spark.range(0, 500, 1, target).withColumnRenamed("id", "doc_id")
-    kept = _fixture_ids(wide, "doc_id")
+    kept = _payload_fixture(wide, "doc_id", _text_neardup_payload)
     assert kept.rdd.getNumPartitions() == target
     assert "Exchange" not in kept._jdf.queryExecution().executedPlan().toString()
