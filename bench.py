@@ -114,7 +114,7 @@ def main() -> None:
 
     # Extraction-pipeline throughput (the reference's core workload):
     # raw corpus -> clean -> sections -> citations/judgments -> dataset.
-    # 5k synthetic docs through the full pandas_udf chain, measured warm
+    # 5k synthetic docs through the cached document pass, measured warm
     # (the headline queries above already paid JVM/codegen startup).
     from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
         judgment_dataset,
@@ -132,7 +132,7 @@ def main() -> None:
     # samples the steep part of that curve; full-size warmups + 3 runs
     # sample the plateau the pipeline would live on over a real corpus.
     # Every iteration must COMPUTE, not replay: the pipeline caches its
-    # base/sections/headers frames, the raw fixture is a LocalRelation
+    # base and document-pass frames, the raw fixture is a LocalRelation
     # whose canonicalized plan is identical across iterations, and
     # Spark's CacheManager substitutes any materialized cache entry
     # whose canonical plan matches — so without clearing, iterations

@@ -2,10 +2,14 @@
 
 The reference implements these as per-row Python functions dispatched by
 spider (`scrc/preprocessors/extractors/abstract_extractor.py:147-183`);
-here each extractor is an Arrow-vectorized pandas_udf over column
-batches, with marker dictionaries and regex tables carried as plain
-data (broadcastable), and one-row→many-rows extractors returning
-``ArrayType(StructType)`` for a built-in ``explode``.
+here each extractor is a per-row function (``*_py``) whose Spark surface
+is one Arrow-batched pandas UDF built by ``_row_udf.row_udf``, with
+marker dictionaries and regex tables carried as plain data
+(broadcastable), and one-row→many-rows extractors returning
+``ArrayType(StructType)`` for a built-in ``explode``.  The corpus build
+runs the section extractors inside ONE document pass
+(``plans/domain_pipeline.py::run_extraction_pipeline``), not through
+these UDFs.
 
 Nothing here is copied from the reference: the semantics (state-machine
 section splitting, first-match-wins judgment outcomes, citation

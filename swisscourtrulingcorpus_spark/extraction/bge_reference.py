@@ -14,9 +14,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 NO_REFERENCE = "no reference found"
 
@@ -43,9 +43,9 @@ def extract_bge_reference_py(header: str | None) -> str | None:
     return "-".join(_normalize(r) for r in found)
 
 
-@pandas_udf(StringType())
-def extract_bge_reference_udf(header: pd.Series) -> pd.Series:
-    return pd.Series([extract_bge_reference_py(h) for h in header], dtype=object)
+extract_bge_reference_udf = row_udf(
+    "extract_bge_reference_udf", extract_bge_reference_py, StringType()
+)
 
 
 # --- corpus-wide docket citation mining (`bger_citations_extracting_

@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -26,6 +24,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 # BGE/ATF/DTF = the same reporter in de/fr/it (`ruling_citation.py:12-20`).
 # The optional tail covers the reference's fuller span families
@@ -155,9 +155,9 @@ def extract_citations_py(text: str | None) -> list[dict] | None:
     return out
 
 
-@pandas_udf(CITATION_SCHEMA)
-def extract_citations_udf(text: pd.Series) -> pd.Series:
-    return pd.Series([extract_citations_py(t) for t in text], dtype=object)
+extract_citations_udf = row_udf(
+    "extract_citations_udf", extract_citations_py, CITATION_SCHEMA
+)
 
 
 # --- D4 NER-span variant (`citation_extraction_dataset_creator.py`):
@@ -192,6 +192,4 @@ def citation_spans_py(text: str | None) -> list[dict] | None:
     return sorted(spans, key=lambda s: (s["start"], s["end"]))
 
 
-@pandas_udf(NER_SPAN_SCHEMA)
-def citation_spans_udf(text: pd.Series) -> pd.Series:
-    return pd.Series([citation_spans_py(t) for t in text], dtype=object)
+citation_spans_udf = row_udf("citation_spans_udf", citation_spans_py, NER_SPAN_SCHEMA)

@@ -18,9 +18,9 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 _DEHYPHEN = re.compile(r"(\w)[-­]\n(\w)")
 _UNDERSCORES = re.compile(r"_+")
@@ -118,21 +118,7 @@ def clean_text_py(
     return t.strip()
 
 
-@pandas_udf(StringType())
-def clean_text_udf(s: pd.Series) -> pd.Series:
-    return s.map(clean_text_py)
-
-
-@pandas_udf(StringType())
-def clean_text_spider_udf(
-    s: pd.Series, spider: pd.Series, file_number: pd.Series
-) -> pd.Series:
-    """Spider-dispatching variant: per-row boilerplate rules plus the
-    decision's own docket number scrubbed from the text."""
-    return pd.Series(
-        [
-            clean_text_py(t, sp, fn)
-            for t, sp, fn in zip(s, spider, file_number)
-        ],
-        dtype=object,
-    )
+clean_text_udf = row_udf("clean_text_udf", clean_text_py, StringType())
+# (text, spider, file_number): per-row boilerplate rules plus the
+# decision's own docket number scrubbed from the text
+clean_text_spider_udf = row_udf("clean_text_spider_udf", clean_text_py, StringType())

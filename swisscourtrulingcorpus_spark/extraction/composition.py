@@ -16,14 +16,14 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     StringType,
     StructField,
     StructType,
 )
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 # role markers: (regex, role, gender) — feminine suffix "-in(nen)" / "-a"
 # => f; the masculine forms carry a (?!in)/(?!a) lookahead so a feminine
@@ -162,14 +162,6 @@ def extract_composition_py(header: str | None) -> dict | None:
     return {"president": president, "judges": judges, "clerks": clerks}
 
 
-@pandas_udf(COMPOSITION_SCHEMA)
-def extract_composition_udf(header: pd.Series) -> pd.DataFrame:
-    # StructType return => a DataFrame with one column per field
-    rows = [extract_composition_py(h) for h in header]
-    return pd.DataFrame(
-        {
-            "president": [r["president"] if r else None for r in rows],
-            "judges": [r["judges"] if r else None for r in rows],
-            "clerks": [r["clerks"] if r else None for r in rows],
-        }
-    )
+extract_composition_udf = row_udf(
+    "extract_composition_udf", extract_composition_py, COMPOSITION_SCHEMA
+)

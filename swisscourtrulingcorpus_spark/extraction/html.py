@@ -16,9 +16,9 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 _BLOCK_TAGS = {
     "p", "div", "br", "li", "tr", "h1", "h2", "h3", "h4", "table", "section",
@@ -203,15 +203,9 @@ def html_citations_py(html: str | None) -> list[dict] | None:
     return out
 
 
-@pandas_udf(StringType())
-def html_to_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(html_to_text_py)
-
-
-@pandas_udf(StringType())
-def html_to_text_spider_udf(html: pd.Series, spider: pd.Series) -> pd.Series:
-    """Spider-dispatching variant applying SPIDER_HTML_RULES (content
-    selection / node drops) before text assembly."""
-    return pd.Series(
-        [html_to_text_py(h, s) for h, s in zip(html, spider)], dtype=object
-    )
+html_to_text_udf = row_udf("html_to_text_udf", html_to_text_py, StringType())
+# (html, spider): applies SPIDER_HTML_RULES (content selection / node
+# drops) before text assembly
+html_to_text_spider_udf = row_udf(
+    "html_to_text_spider_udf", html_to_text_py, StringType()
+)

@@ -23,9 +23,9 @@ from __future__ import annotations
 import functools
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 MAX_CHAR_COUNT = 3000
 
@@ -227,9 +227,6 @@ def extract_judgments_py(
     return sorted(_first_outcome(text, markers))
 
 
-@pandas_udf(ArrayType(StringType()))
-def extract_judgments_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_judgments_py(t, lg) for t, lg in zip(text, lang)],
-        dtype=object,
-    )
+extract_judgments_udf = row_udf(
+    "extract_judgments_udf", extract_judgments_py, ArrayType(StringType())
+)

@@ -17,9 +17,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DateType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 LOWER_COURT_SCHEMA = StructType(
     [
@@ -130,12 +130,6 @@ def extract_lower_court_py(header: str | None) -> dict | None:
     }
 
 
-@pandas_udf(LOWER_COURT_SCHEMA)
-def extract_lower_court_udf(header: pd.Series) -> pd.DataFrame:
-    rows = [extract_lower_court_py(h) for h in header]
-    return pd.DataFrame(
-        {
-            f: [r[f] if r else None for r in rows]
-            for f in ("court", "canton", "date", "file_number")
-        }
-    )
+extract_lower_court_udf = row_udf(
+    "extract_lower_court_udf", extract_lower_court_py, LOWER_COURT_SCHEMA
+)

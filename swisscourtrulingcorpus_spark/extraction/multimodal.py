@@ -1311,13 +1311,19 @@ def generate_g711_fixture(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
+        payloads = pdf["payload"]
+        # a NULL payload keeps its row with null stats; object columns,
+        # so the None never turns n_bytes float64
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
                 "media_type": pdf["media_type"],
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "checksum": pdf["payload"].map(
-                    lambda b: hashlib.md5(b).hexdigest()
+                "n_bytes": pd.Series(
+                    [None if b is None else len(b) for b in payloads], dtype=object
+                ),
+                "checksum": pd.Series(
+                    [None if b is None else hashlib.md5(b).hexdigest() for b in payloads],
+                    dtype=object,
                 ),
                 "width": pdf["width"],
                 "height": pdf["height"],
@@ -1344,28 +1350,23 @@ FRAME_SCHEMA = StructType(
 _FRAME_INTERVAL_MS = 40  # 25 fps
 
 
-def _frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        checksums = pdf["payload"].map(lambda b: hashlib.md5(b).hexdigest())
-        n_frames = (pdf["payload"].map(len) % 5 + 1).to_numpy()
-        doc_ids = np.repeat(pdf["doc_id"].to_numpy(), n_frames)
-        base = np.repeat(checksums.to_numpy(), n_frames)
-        idx = np.concatenate([np.arange(k) for k in n_frames])
-        yield pd.DataFrame(
-            {
-                "doc_id": doc_ids,
-                "frame_idx": idx.astype("int32"),
-                "ts_offset_ms": (idx * _FRAME_INTERVAL_MS).astype("int64"),
-                "frame_checksum": [
-                    hashlib.md5(f"{c}#{i}".encode()).hexdigest()
-                    for c, i in zip(base, idx)
-                ],
-            }
-        )
+def _sampled_frames(doc_id, payload) -> list[dict]:
+    """``len % 5 + 1`` frames per payload, each with its offset and a
+    checksum chained from the payload's; a NULL payload → one row with
+    null stats."""
+    if payload is None:
+        return [{**dict.fromkeys(FRAME_SCHEMA.fieldNames()), "doc_id": doc_id}]
+    payload = bytes(payload)
+    checksum = hashlib.md5(payload).hexdigest()
+    return [
+        {
+            "doc_id": doc_id,
+            "frame_idx": i,
+            "ts_offset_ms": i * _FRAME_INTERVAL_MS,
+            "frame_checksum": hashlib.md5(f"{checksum}#{i}".encode()).hexdigest(),
+        }
+        for i in range(len(payload) % 5 + 1)
+    ]
 
 
 def sample_frames_stub(media: DataFrame) -> DataFrame:
@@ -1374,4 +1375,4 @@ def sample_frames_stub(media: DataFrame) -> DataFrame:
     checksums — the UDTF-shaped multimodal stage (a real implementation
     would pull frames out of a video container here; batch shape,
     fan-out semantics and Arrow plumbing are identical)."""
-    return media.mapInPandas(_frame_batches, FRAME_SCHEMA)
+    return _payload_stage(media, FRAME_SCHEMA, _sampled_frames)

@@ -17,9 +17,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 _PARTY = StructType(
     [
@@ -107,12 +107,6 @@ def extract_participation_py(header: str | None) -> dict | None:
     return {"plaintiffs": plaintiffs, "defendants": defendants}
 
 
-@pandas_udf(PARTICIPATION_SCHEMA)
-def extract_participation_udf(header: pd.Series) -> pd.DataFrame:
-    rows = [extract_participation_py(h) for h in header]
-    return pd.DataFrame(
-        {
-            "plaintiffs": [r["plaintiffs"] if r else None for r in rows],
-            "defendants": [r["defendants"] if r else None for r in rows],
-        }
-    )
+extract_participation_udf = row_udf(
+    "extract_participation_udf", extract_participation_py, PARTICIPATION_SCHEMA
+)

@@ -21,9 +21,9 @@ from __future__ import annotations
 import re
 import zlib
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 _STREAM_RX = re.compile(rb"<<(.*?)>>\s*stream\r?\n(.*?)endstream", re.DOTALL)
 # direct-integer /Length only — `/Length 5 0 R` (indirect object
@@ -118,9 +118,9 @@ def extract_pdf_text_py(data: bytes | None) -> str | None:
     return "\n".join(texts)
 
 
-@pandas_udf(StringType())
-def extract_pdf_text_udf(payload: pd.Series) -> pd.Series:
-    return pd.Series([extract_pdf_text_py(b) for b in payload], dtype=object)
+extract_pdf_text_udf = row_udf(
+    "extract_pdf_text_udf", extract_pdf_text_py, StringType()
+)
 
 
 # --- paragraph tokenization for PDF-extracted text (`paragraph_

@@ -22,9 +22,9 @@ from __future__ import annotations
 import functools
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
 
 SECTION_SCHEMA = ArrayType(
     StructType(
@@ -1060,8 +1060,4 @@ def split_sections_py(
     return out
 
 
-@pandas_udf(SECTION_SCHEMA)
-def split_sections_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
-    return pd.Series(
-        [split_sections_py(t, lg) for t, lg in zip(text, lang)]
-    )
+split_sections_udf = row_udf("split_sections_udf", split_sections_py, SECTION_SCHEMA)

@@ -97,38 +97,35 @@ def token_count_ws_sql(col_expr: str) -> str:
     return f"size(split(trim({col_expr}), '\\\\s+'))"
 
 
-def stopword_hits_sql(col_expr: str, lang: str) -> str:
-    """SQL text counting the words of ``col_expr`` in ``lang``'s
-    stopword list."""
-    stops = ", ".join(sql_str(s) for s in STOPWORDS[lang])
-    return (
-        f"size(filter(split(trim(lower({col_expr})), '\\\\s+'), "
-        f"w -> w IN ({stops})))"
-    )
-
-
 def language_id_score_sql(col_expr: str) -> str:
-    """SQL text of :func:`language_id_score` over an expression string.
-    Each per-language hit expression is re-expanded at every reference;
-    codegen-level common-subexpression elimination dedups the work at
-    runtime.  The pipeline plans that use it are pinned in
-    tests/fixtures/plan_fingerprints.json."""
+    """SQL text of :func:`language_id_score` over an expression string:
+    ONE ``aggregate`` over ONE ``split`` of the text.  The accumulator
+    is a struct of per-language stopword hit counts, and the finish
+    lambda takes the argmax (zero hits or a tie -> 'und').  A fold,
+    not one hit expression per language: higher-order functions get no
+    common-subexpression elimination, so each re-spliced ``split``
+    re-tokenized the row.  A NULL text folds to NULL -> 'und'."""
     langs = sorted(STOPWORDS)
-    hits = {lang: stopword_hits_sql(col_expr, lang) for lang in langs}
-    max_hits = "greatest(" + ", ".join(hits[lang] for lang in langs) + ")"
-    n_at_max = "0"
-    for lang in langs:
-        n_at_max = (
-            f"({n_at_max} + CASE WHEN ({hits[lang]} = {max_hits})"
-            " THEN 1 ELSE 0 END)"
-        )
-    branches = [
-        f"WHEN (({max_hits} = 0) OR ({n_at_max} > 1)) THEN 'und'"
-    ] + [
-        f"WHEN ({hits[lang]} = {max_hits}) THEN {sql_str(lang)}"
+    hit = {
+        lang: f"CASE WHEN w IN ({', '.join(sql_str(s) for s in STOPWORDS[lang])})"
+        " THEN 1 ELSE 0 END"
         for lang in langs
-    ]
-    return "CASE " + " ".join(branches) + " ELSE 'und' END"
+    }
+    zero = ", ".join(f"'{lang}', 0" for lang in langs)
+    merge = ", ".join(f"'{lang}', acc.{lang} + {hit[lang]}" for lang in langs)
+    max_hits = "greatest(" + ", ".join(f"acc.{lang}" for lang in langs) + ")"
+    n_at_max = " + ".join(
+        f"CASE WHEN acc.{lang} = {max_hits} THEN 1 ELSE 0 END" for lang in langs
+    )
+    pick = " ".join(
+        f"WHEN acc.{lang} = {max_hits} THEN {sql_str(lang)}" for lang in langs
+    )
+    return (
+        f"coalesce(aggregate(split(trim(lower({col_expr})), '\\\\s+'), "
+        f"named_struct({zero}), (acc, w) -> named_struct({merge}), "
+        f"acc -> CASE WHEN {max_hits} = 0 OR ({n_at_max}) > 1 THEN 'und' "
+        f"{pick} ELSE 'und' END), 'und')"
+    )
 
 
 def language_id_score(col: str) -> Column:

@@ -5,11 +5,10 @@ retention numbers ARE the deliverable a data-curation team reviews
 before a training run.
 
 Scale note: each stage's count is a 1-row aggregate; the report is the
-lazy union of those aggregates, so collecting it executes each stage
-prefix once per count.  At benchmark scale that's fine; at 100 TB pass
-``cache_intermediate=True`` (persist each stage before counting) or
-materialize stages to the versioned store between counts — the runner
-deliberately does not hide that choice.
+lazy union of those aggregates, so collecting it re-executes each stage
+prefix once per count: a funnel of k stages runs its first stage k
+times.  Per-stage counts taken as observations of ONE pass over the
+final frame (``DataFrame.observe``) would remove the re-execution.
 """
 
 from __future__ import annotations
@@ -23,39 +22,23 @@ from pyspark.sql import functions as F
 Step = tuple[str, Callable[[DataFrame], DataFrame]]
 
 
-def funnel(
-    df: DataFrame,
-    steps: list[Step],
-    cache_intermediate: bool = False,
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Apply ``steps`` in order; return (final_df, report_df, cached)
-    where the report has one (step, rows_out) row per stage plus the
-    leading ('input', n) row.  Report rows are lazy 1-row aggregates
-    unioned — one job materializes the whole funnel table.
-
-    ``cached`` holds the persisted intermediates when
-    ``cache_intermediate`` is on (empty otherwise) so the CALLER can
-    unpersist them once the report/final frame has materialized —
-    previously the persisted frames were unreachable and their blocks
-    lived for the rest of the SparkSession (r06 review; the repo's
-    cache discipline is always cache/finally-unpersist, see
-    `streaming/jobs.py::minhash_dedup_batch`)."""
+def funnel(df: DataFrame, steps: list[Step]) -> tuple[DataFrame, DataFrame]:
+    """Apply ``steps`` in order; return (final_df, report_df) where the
+    report has one (step, rows_out) row per stage plus the leading
+    ('input', n) row.  Report rows are lazy 1-row aggregates unioned —
+    one job materializes the whole funnel table."""
     reports = [
         df.agg(F.count(F.lit(1)).alias("rows_out")).select(
             F.lit("input").alias("step"), F.col("rows_out").cast("long")
         )
     ]
-    cached: list[DataFrame] = []
     cur = df
     for name, fn in steps:
         cur = fn(cur)
-        if cache_intermediate:
-            cur = cur.persist()
-            cached.append(cur)
         reports.append(
             cur.agg(F.count(F.lit(1)).alias("rows_out")).select(
                 F.lit(name).alias("step"), F.col("rows_out").cast("long")
             )
         )
     report = reduce(lambda a, b: a.unionByName(b), reports)
-    return cur, report, cached
+    return cur, report

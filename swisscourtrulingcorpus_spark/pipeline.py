@@ -14,8 +14,10 @@ driver program:
 - dataset creators read the materialized tables and write
   split-partitioned exports (S10/S11).
 
-Scale shape: each stage is a map-side pandas_udf chain over the raw
-batch (no shuffle until the groupBys inside the creators), and the
+Scale shape: extraction is two map-side Python passes over the raw
+batch — clean_text on the decision table and one cached document pass
+(splitter plus section extractors) that every other table selects
+from — with no shuffle until the groupBys inside the creators; the
 landing-zone scan is whatever `spark.read` source feeds ``raw`` —
 parquet here, `binaryFile`/json in a real ingest.
 

@@ -760,7 +760,7 @@ def curation_funnel_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     def mix(df: DataFrame) -> DataFrame:
         return domain_mix_sample(df, "lang", "doc_id", _MIX_RATES, seed="mix")
 
-    _, report, _cached = funnel(
+    _, report = funnel(
         docs,
         [
             ("gopher", gopher),

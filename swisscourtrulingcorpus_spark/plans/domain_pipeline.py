@@ -8,10 +8,12 @@ DAG — each stage a transformation, tables materialized (or cached)
 between stages — and each dataset creator is a ~30-line DataFrame
 program ending in a date-stratified split column.
 
-Scale shape: the per-document extraction work is Arrow-batched
-pandas_udfs (map-side only, no shuffle); the relational assembly is
-the J2 map_join pattern (aggregate-before-join); the only shuffles are
-the groupBys on decision_id and the final split write.
+Scale shape: the per-document extraction work is two Arrow-batched
+pandas UDFs (map-side only, no shuffle): clean_text on the decision
+table, and one document pass — splitter plus the section extractors —
+whose cached output every derived table selects from; the relational
+assembly is the J2 map_join pattern (aggregate-before-join); the only
+shuffles are the groupBys on decision_id and the final split write.
 """
 
 from __future__ import annotations
@@ -20,14 +22,32 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from swisscourtrulingcorpus_spark.extraction import (
-    clean_text_udf,
-    extract_citations_udf,
-    extract_composition_udf,
-    extract_judgments_udf,
-    split_sections_udf,
-    uuid5_col,
+from swisscourtrulingcorpus_spark.extraction import clean_text_udf, uuid5_col
+from swisscourtrulingcorpus_spark.extraction._row_udf import row_udf
+from swisscourtrulingcorpus_spark.extraction.citations import (
+    CITATION_SCHEMA,
+    extract_citations_py,
+)
+from swisscourtrulingcorpus_spark.extraction.composition import (
+    COMPOSITION_SCHEMA,
+    extract_composition_py,
+)
+from swisscourtrulingcorpus_spark.extraction.judgments import (
+    extract_judgments_py,
+)
+from swisscourtrulingcorpus_spark.extraction.lower_court import (
+    LOWER_COURT_SCHEMA,
+    extract_lower_court_py,
+)
+from swisscourtrulingcorpus_spark.extraction.participation import (
+    PARTICIPATION_SCHEMA,
+    extract_participation_py,
+)
+from swisscourtrulingcorpus_spark.extraction.sections import (
+    SECTION_SCHEMA,
+    split_sections_py,
 )
 from swisscourtrulingcorpus_spark.functions.domain import (
     normalize_binary_judgment,
@@ -60,15 +80,10 @@ class LazyTables(Mapping):
         self._thunks = thunks
         self._memo: dict = {}
 
-    def memoized(self, key: str, build):
-        """``build()`` once per ``key``; also holds shared intermediates
-        that are not tables themselves."""
-        if key not in self._memo:
-            self._memo[key] = build()
-        return self._memo[key]
-
     def __getitem__(self, key):
-        return self.memoized(key, self._thunks[key])
+        if key not in self._memo:
+            self._memo[key] = self._thunks[key]()
+        return self._memo[key]
 
     def __contains__(self, key):
         return key in self._thunks
@@ -80,18 +95,36 @@ class LazyTables(Mapping):
         return len(self._thunks)
 
 
+DOCUMENT_SCHEMA = StructType(
+    [
+        StructField("sections", SECTION_SCHEMA),
+        StructField("citations", CITATION_SCHEMA),
+        StructField("judgments", ArrayType(StringType())),
+        StructField("composition", COMPOSITION_SCHEMA),
+        StructField("lower_court", LOWER_COURT_SCHEMA),
+        StructField("participation", PARTICIPATION_SCHEMA),
+    ]
+)
+
+
+def _has_section(section: str) -> F.Column:
+    """The cached document has a ``section`` entry."""
+    return F.expr(f"exists(__doc.sections, x -> x.section = {sql_str(section)})")
+
+
 def run_extraction_pipeline(raw: DataFrame) -> LazyTables:
     """raw(file_name, raw_text, spider, chamber, date, ...) → the core
-    domain tables: decision, section, citation, judgment, composition.
+    domain tables: decision, section, citation, judgment, composition,
+    lower_court, participation.
 
     Mirrors §3.1's stage order; decision_id is the reference's UUIDv5
     of file_name (`sql_select_utils.py:168`) so ids are stable.
 
-    r12 (session 2): returns a :class:`LazyTables` mapping — the shared
-    ``base`` / ``section_arrays`` frames build eagerly (every consumer
-    needs them), each derived table on first access.  Construction code
-    and plans are byte-identical to the eager form
-    (tools/pipeline_fingerprint.py before/after).
+    Returns a :class:`LazyTables` mapping: the shared ``base`` /
+    ``section_arrays`` frames build eagerly (every consumer needs
+    them), each derived table on first access.  The build crosses into
+    Python twice: clean_text on the decision write, and one document
+    pass cached as ``section_arrays``.
     """
     base = raw.select(
         uuid5_col("file_name").alias("decision_id"),
@@ -114,10 +147,10 @@ def run_extraction_pipeline(raw: DataFrame) -> LazyTables:
             .otherwise("de")
         ),
     ).cache()
-    # clean_text stays OUT of the cached base (r11 optimization, guide
-    # §4/§5): the cache materializes EVERY column on population, so
-    # keeping clean_text inside it ran the regex-heavy cleaning
-    # pandas_udf for every pipeline consumer — including the
+    # clean_text stays OUT of the cached base and out of the document
+    # pass (r11 optimization, guide §4/§5): a cache materializes EVERY
+    # column on population, so keeping clean_text inside one ran the
+    # regex-heavy cleaning for every pipeline consumer — including the
     # judgment/criticality/coverage paths that never read it.  Derived
     # lazily here, the column is computed only by consumers that
     # actually select it (the decision-table write), exactly once,
@@ -134,31 +167,51 @@ def run_extraction_pipeline(raw: DataFrame) -> LazyTables:
             "language",
         )
 
-    # E3 section splitting: ONE UDF pass caching the per-doc section
-    # ARRAY (r11 optimization, guide §2.3/§8): the former cache held
-    # the EXPLODED rows, so regrouping them per decision (the dataset
-    # creators' pivot) cost a full shuffle of section text plus a
-    # decisions⋈pivot join — moving payload bytes to reassemble a
-    # grouping the splitter emitted in the first place.  Cached as one
-    # array row per doc WITH the slim meta columns, the section table
-    # is a lazy map-side explode and the judgment creator's pivot is a
-    # map-side array lookup: zero shuffles, zero joins, same values
-    # (the splitter emits at most one entry per section type, so
-    # first() per (doc, section) ≡ the array lookup).
+    # E3–E8 in ONE Python pass per document (the reference's extractor
+    # chain over one decision, `abstract_extractor.py:147-165`): the
+    # splitter runs once, and each extractor reads its section of that
+    # split — citations the considerations, judgments the rulings,
+    # composition / lower court / participation the header.  The pass
+    # returns the section array plus the five outputs, cached as one
+    # struct per doc WITH the slim meta columns, so every derived table
+    # is a JVM select/explode of the cache and the judgment creator's
+    # pivot is a map-side array lookup: zero shuffles, zero joins, no
+    # further Python stage.  (A filter on a Python UDF's output would
+    # evaluate the UDF twice: once under the filter, once above it.)
+    # Defined here, not at module level, so it pickles by value and the
+    # Python workers import only the extraction modules.
+    def document_pass(text, language):
+        sections = split_sections_py(text, language)
+        first: dict = {}
+        for s in sections:
+            first.setdefault(s["section"], s["text"])
+        header = first.get("header")
+        return {
+            "sections": sections,
+            "citations": extract_citations_py(first.get("considerations")),
+            "judgments": extract_judgments_py(first.get("rulings"), language),
+            "composition": extract_composition_py(header),
+            "lower_court": extract_lower_court_py(header),
+            "participation": extract_participation_py(header),
+        }
+
     section_arrays = base.select(
         "decision_id",
         "spider",
         "chamber",
         "date",
         "language",
-        split_sections_udf("raw_text", "language").alias("__secs"),
+        row_udf("document_pass", document_pass, DOCUMENT_SCHEMA)(
+            "raw_text", "language"
+        ).alias("__doc"),
     ).cache()
+
     def _sections() -> DataFrame:
         return (
             section_arrays.select(
                 "decision_id",
                 "language",
-                F.explode("__secs").alias("s"),
+                F.explode("__doc.sections").alias("s"),
             )
             .select(
                 "decision_id",
@@ -169,73 +222,32 @@ def run_extraction_pipeline(raw: DataFrame) -> LazyTables:
             .withColumn("num_tokens", token_count_ws("section_text"))
         )
 
-    # E4 citations from considerations + full text
     def _citations() -> DataFrame:
-        return (
-            tables["section"].where(F.col("section") == "considerations")
-            .select(
-                "decision_id",
-                F.explode(extract_citations_udf("section_text")).alias("c"),
-            )
-            .select("decision_id", "c.*")
-        )
+        return section_arrays.select(
+            "decision_id", F.explode("__doc.citations").alias("c")
+        ).select("decision_id", "c.*")
 
-    # E5 judgments from the rulings section
     def _judgments() -> DataFrame:
-        return (
-            tables["section"].where(F.col("section") == "rulings")
-            .select(
-                "decision_id",
-                extract_judgments_udf("section_text", "language").alias(
-                    "judgments"
-                ),
-            )
-        )
-
-    # E7 court composition from the header; E6 lower court + E8
-    # procedural participation share the cached header frame, built on
-    # first access (one cache entry, like the former eager form)
-    def _headers() -> DataFrame:
-        return tables.memoized(
-            "__headers",
-            lambda: tables["section"].where(F.col("section") == "header").cache(),
+        return section_arrays.where(_has_section("rulings")).select(
+            "decision_id", F.col("__doc.judgments").alias("judgments")
         )
 
     def _composition() -> DataFrame:
-        return _headers().select(
-            "decision_id",
-            extract_composition_udf("section_text").alias("comp"),
-        ).select("decision_id", "comp.*")
+        return section_arrays.where(_has_section("header")).select(
+            "decision_id", "__doc.composition.*"
+        )
 
     def _lower_court() -> DataFrame:
-        from swisscourtrulingcorpus_spark.extraction import (
-            extract_lower_court_udf,
-        )
-
-        return (
-            _headers().select(
-                "decision_id",
-                extract_lower_court_udf("section_text").alias("lc"),
-            )
-            .select("decision_id", "lc.*")
-            .where(F.col("court").isNotNull())
-        )
+        return section_arrays.select(
+            "decision_id", "__doc.lower_court.*"
+        ).where(F.col("court").isNotNull())
 
     def _participation() -> DataFrame:
-        from swisscourtrulingcorpus_spark.extraction import (
-            extract_participation_udf,
-        )
+        return section_arrays.select(
+            "decision_id", "__doc.participation.*"
+        ).where(F.col("plaintiffs").isNotNull())
 
-        return (
-            _headers().select(
-                "decision_id",
-                extract_participation_udf("section_text").alias("pp"),
-            )
-            .select("decision_id", "pp.*")
-            .where(F.col("plaintiffs").isNotNull())
-        )
-
-    tables = LazyTables({
+    return LazyTables({
         "decision": _decisions,
         "section": _sections,
         "section_arrays": lambda: section_arrays,
@@ -245,7 +257,6 @@ def run_extraction_pipeline(raw: DataFrame) -> LazyTables:
         "lower_court": _lower_court,
         "participation": _participation,
     })
-    return tables
 
 
 def resolve_lower_court_ids(
@@ -282,28 +293,27 @@ def judgment_dataset(tables: dict[str, DataFrame]) -> DataFrame:
     """D1 JudgmentDatasetCreator (`judgment_dataset_creator.py:13-56`):
     facts+considerations features, binary label via F9, date splits.
 
-    Judgments are extracted from the PIVOTED rulings column rather than
-    joined from the judgment table: the pivot already carries the
-    rulings text one-row-per-decision, so running the UDF post-pivot
-    removes a whole shuffled join on decision_id (and a second UDF pass
-    over the section rows).  Same values — null rulings → null label →
-    filtered, exactly like a join miss.
+    When the pipeline provides the cached per-doc document pass
+    (``section_arrays``), the creator is a pure map chain over that
+    cache: the pivot is a map-side array lookup on the section array,
+    which already carries the decision meta columns, and the judgments
+    are the pass's own.  ``get(filter(...), 0)`` ≡ the pivot's
+    ``first()`` because the splitter emits at most one entry per
+    section type, and a doc with no sections gets NULLs exactly like
+    the former left-join miss.
 
-    r11 optimization: when the pipeline provides the cached per-doc
-    section arrays (``section_arrays``), the pivot is a map-side array
-    lookup on that frame — which already carries the decision meta
-    columns — so the groupBy-pivot shuffle AND the decisions⋈pivot
-    join disappear; the creator is a pure map chain over the cache.
-    ``get(filter(...), 0)`` ≡ the pivot's ``first()`` because the
-    splitter emits at most one entry per section type, and a doc with
-    no sections gets NULLs exactly like the former left-join miss."""
-    from swisscourtrulingcorpus_spark.extraction import extract_judgments_udf
-
+    Tables read back from disk have no ``section_arrays``: then the
+    pivot is a groupBy on the section table joined to the decisions,
+    and judgments are extracted from the PIVOTED rulings column rather
+    than joined from the judgment table (one row per decision already,
+    so no second join).  Same values either way — null rulings → null
+    label → filtered, exactly like a join miss."""
     sa = tables.get("section_arrays")
     if sa is not None:
         def pick(sec: str) -> F.Column:
             return F.get(
-                F.expr(f"filter(__secs, x -> x.section = {sql_str(sec)})"), 0
+                F.expr(f"filter(__doc.sections, x -> x.section = {sql_str(sec)})"),
+                0,
             )["text"]
 
         df = sa.select(
@@ -316,18 +326,22 @@ def judgment_dataset(tables: dict[str, DataFrame]) -> DataFrame:
             pick("considerations").alias("considerations"),
             pick("rulings").alias("rulings"),
             pick("header").alias("header"),
+            F.col("__doc.judgments").alias("judgments"),
         )
     else:
+        from swisscourtrulingcorpus_spark.extraction import (
+            extract_judgments_udf,
+        )
+
         decisions = tables["decision"]
         pivot = _sections_pivot(tables["section"])
         df = decisions.select(
             "decision_id", "spider", "chamber", "date", "language"
-        ).join(pivot, on="decision_id", how="left")
-    df = (
-        df.withColumn(
+        ).join(pivot, on="decision_id", how="left").withColumn(
             "judgments", extract_judgments_udf("rulings", "language")
         )
-        .withColumn("label", normalize_binary_judgment("judgments"))
+    df = (
+        df.withColumn("label", normalize_binary_judgment("judgments"))
         .where(F.col("label").isNotNull())          # P8 dropna(judgments)
         .where(F.col("facts").isNotNull())          # D1 filter FACTS
         .withColumn("year", F.year("date"))

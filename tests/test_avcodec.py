@@ -474,6 +474,32 @@ def test_payload_stage_bad_row_contract(spark, stage):
         assert stats and all(v is None for v in stats.values()), (r["doc_id"], stats)
 
 
+# byte-feature stub -> its stats columns
+_STUB_STATS = {
+    "decode_image_stub": ("n_bytes", "checksum", "width", "height"),
+    "sample_frames_stub": ("frame_idx", "ts_offset_ms", "frame_checksum"),
+}
+
+
+@pytest.mark.parametrize("stub", sorted(_STUB_STATS))
+def test_stub_stage_null_payload_row(spark, stub):
+    """The byte-feature stubs keep the NULL-payload half of the contract
+    above (they sniff nothing, so junk bytes get real stats): a NULL
+    payload comes out as exactly ONE row with null stats, and never
+    kills the task its neighbour shares."""
+    from swisscourtrulingcorpus_spark.extraction import multimodal as mm
+
+    docs = spark.createDataFrame(
+        [(1, "some text"), (2, None)], "doc_id long, text string"
+    ).coalesce(1)
+    out = getattr(mm, stub)(mm.attach_binary_payload(docs, "text", "doc_id")).collect()
+    stats = _STUB_STATS[stub]
+    null_rows = [r for r in out if r["doc_id"] == 2]
+    assert len(null_rows) == 1
+    assert all(null_rows[0][c] is None for c in stats), null_rows
+    assert all(r[stats[0]] is not None for r in out if r["doc_id"] == 1)
+
+
 def test_null_payload_keeps_neighbour_fingerprint_exact(spark):
     """A NULL payload in the same Arrow batch must not round a
     neighbour's 56-bit fingerprint: a None next to ints made the pandas

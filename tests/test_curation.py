@@ -203,7 +203,7 @@ def test_funnel_report_counts_and_order(spark):
     df = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "id bigint, m bigint"
     )
-    final, report, _cached = funnel(
+    final, report = funnel(
         df,
         [
             ("keep_even", lambda d: d.where(F.col("id") % 2 == 0)),

@@ -4,6 +4,8 @@ generator's ground truth."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -165,6 +167,23 @@ def test_lower_court_dim_resolution(tables, spark):
     assert {r.court_string for r in hit.collect()} == {"ZH_VG"}
 
 
+def _with_junk(spark, good):
+    """``good`` plus four junk documents: None, empty, whitespace-only
+    and marker-free raw text."""
+    texts = [None, "", "   \n\t  \n", "no markers at all just plain text"]
+    junk_rows = [
+        {
+            **{f.name: None for f in good.schema.fields},
+            "file_name": f"junk_{i}.html",
+            "spider": "CH_BGer",
+            "chamber": "CH_BGer_001",
+            "raw_text": t,
+        }
+        for i, t in enumerate(texts)
+    ]
+    return good.unionByName(spark.createDataFrame(junk_rows, good.schema))
+
+
 def test_pipeline_tolerates_malformed_documents(spark):
     """Robustness: null/empty/whitespace/marker-less raw texts must flow
     through the full extraction DAG without errors — they produce no
@@ -179,21 +198,7 @@ def test_pipeline_tolerates_malformed_documents(spark):
     )
     from swisscourtrulingcorpus_spark.sources.domain_fixtures import raw_corpus_df
 
-    good = raw_corpus_df(spark, 30)
-    texts = [None, "", "   \n\t  \n", "no markers at all just plain text"]
-    junk_rows = [
-        {
-            **{f.name: None for f in good.schema.fields},
-            "file_name": f"junk_{i}.html",
-            "spider": "CH_BGer",
-            "chamber": "CH_BGer_001",
-            "raw_text": t,
-        }
-        for i, t in enumerate(texts)
-    ]
-    junk = spark.createDataFrame(junk_rows, good.schema)
-
-    tables = run_extraction_pipeline(good.unionByName(junk))
+    tables = run_extraction_pipeline(_with_junk(spark, raw_corpus_df(spark, 30)))
     # every decision row survives (junk included), with a decision_id
     assert tables["decision"].count() == 34
     assert tables["decision"].where(F.col("decision_id").isNull()).count() == 0
@@ -230,3 +235,101 @@ def test_judgment_dataset_mapside_pivot_matches_join_path(spark):
     assert sorted(map(tuple, new_df.collect())) == sorted(
         map(tuple, old_df.collect())
     )
+
+
+def test_derived_tables_equal_per_extractor_path(spark):
+    """Each derived table equals the per-extractor construction: the
+    ``section`` table filtered to one section, run through that
+    extractor's public ``*_udf`` (junk documents included)."""
+    from swisscourtrulingcorpus_spark.extraction import (
+        extract_citations_udf,
+        extract_composition_udf,
+        extract_judgments_udf,
+        extract_lower_court_udf,
+        extract_participation_udf,
+    )
+    from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
+        run_extraction_pipeline,
+    )
+    from swisscourtrulingcorpus_spark.sources.domain_fixtures import raw_corpus_df
+
+    tables = run_extraction_pipeline(_with_junk(spark, raw_corpus_df(spark, 200)))
+
+    def of(section):
+        return tables["section"].where(F.col("section") == section)
+
+    def struct_rows(section, udf, keep=None):
+        df = of(section).select("decision_id", udf("section_text").alias("x"))
+        df = df.select("decision_id", "x.*")
+        return df if keep is None else df.where(F.col(keep).isNotNull())
+
+    expected = {
+        "citation": of("considerations")
+        .select(
+            "decision_id",
+            F.explode(extract_citations_udf("section_text")).alias("c"),
+        )
+        .select("decision_id", "c.*"),
+        "judgment": of("rulings").select(
+            "decision_id",
+            extract_judgments_udf("section_text", "language").alias("judgments"),
+        ),
+        "composition": struct_rows("header", extract_composition_udf),
+        "lower_court": struct_rows("header", extract_lower_court_udf, "court"),
+        "participation": struct_rows(
+            "header", extract_participation_udf, "plaintiffs"
+        ),
+    }
+    for name, want in expected.items():
+        got = tables[name]
+        assert got.schema == want.schema, name
+        rows = sorted(got.collect(), key=repr)
+        assert rows, name
+        assert rows == sorted(want.collect(), key=repr), name
+
+
+def _python_evals(plan: str) -> tuple[int, set[str]]:
+    """(Python evaluation nodes outside any cached relation, every
+    Python evaluation node's text) of a ``simple``-mode physical plan.
+    A node sits inside a cache when it is indented below an
+    ``InMemoryTableScan``."""
+    above, every, cache_indent = 0, set(), None
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-")
+        indent = len(line) - len(node)
+        if cache_indent is not None and indent <= cache_indent:
+            cache_indent = None
+        node = re.sub(r"^\*\(\d+\) ", "", node)
+        if node.startswith(("ArrowEvalPython", "BatchEvalPython")):
+            every.add(node)
+            above += cache_indent is None
+        elif node.startswith("InMemoryTableScan") and cache_indent is None:
+            cache_indent = indent
+    return above, every
+
+
+def test_build_python_boundary_is_pinned(spark):
+    """The seven table writes of the build cross into Python twice:
+    clean_text on the decision write, and one document pass (splitter
+    plus every section extractor) inside the cached ``section_arrays``.
+    The derived tables are JVM selects over that cache, and the build
+    persists two caches (``base`` and ``section_arrays``)."""
+    from conftest import explain_plan_str
+
+    from swisscourtrulingcorpus_spark.pipeline import TABLES
+    from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
+        run_extraction_pipeline,
+    )
+    from swisscourtrulingcorpus_spark.sources.domain_fixtures import raw_corpus_df
+
+    jsc = spark.sparkContext._jsc
+    persisted = len(jsc.getPersistentRDDs())
+    tables = run_extraction_pipeline(raw_corpus_df(spark, 50))
+    above, every = {}, set()
+    for name in TABLES:
+        tables[name].write.format("noop").mode("overwrite").save()
+        above[name], evals = _python_evals(explain_plan_str(tables[name], "simple"))
+        every |= evals
+    assert above == {name: int(name == "decision") for name in TABLES}
+    assert len(every) == 2, sorted(every)
+    assert len(jsc.getPersistentRDDs()) - persisted == 2

@@ -136,6 +136,19 @@ def test_language_id_quote_bearing_stopword(spark, monkeypatch):
     assert [r.lang for r in df.select(lang).collect()] == ["fr", "en"]
 
 
+def test_language_id_tokenizes_once(spark):
+    """Language ID folds every language's hit count over ONE split of
+    the text (higher-order functions get no common-subexpression
+    elimination, so a second ``split`` would tokenize the row again);
+    a NULL text, whose fold is NULL, is still 'und'."""
+    from swisscourtrulingcorpus_spark.functions import text
+
+    assert text.language_id_score_sql("`t`").count("split(") == 1
+    df = spark.createDataFrame([(None,), ("der die le la et",)], "t string")
+    lang = text.language_id_score("t").alias("lang")
+    assert [r.lang for r in df.select(lang).collect()] == ["und", "fr"]
+
+
 def test_lemma_builders_reject_unportable_literals(monkeypatch):
     """The lemma builders emit SQL text that both Spark and DuckDB
     parse, and the two escape quotes and backslashes differently: a
