@@ -94,29 +94,32 @@ def build_corpus(
     APPEND to the existing tables; a rerun over an unchanged landing
     zone is a no-op.  Returns cumulative per-table row counts (all
     zeros when nothing was new).
+
+    The landing zone is read once: the empty check fills the pipeline's
+    cached ``base``, and the table writes and the manifest keys are
+    served from it.  The manifest is append-only, one part per run
+    holding that run's file_names.
     """
     manifest = _read_manifest(spark, out_dir) if incremental else None
-    batch = new_rows_only(raw, manifest, _MANIFEST_KEYS)
-    counts: dict[str, int] = {}
-    if batch.isEmpty():
-        return {t: 0 for t in TABLES}
-    tables = run_extraction_pipeline(batch)
-    mode = "append" if (incremental and manifest is not None) else "overwrite"
-    for name in TABLES:
-        df = tables[name]
-        df.write.mode(mode).parquet(os.path.join(out_dir, name))
-        counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
-    new_manifest = processed_union(
-        manifest, batch.select(*_MANIFEST_KEYS), _MANIFEST_KEYS
+    tables = run_extraction_pipeline(
+        new_rows_only(raw, manifest, _MANIFEST_KEYS)
     )
-    # write via a temp path: the new manifest reads the old one
-    tmp = _manifest_path(out_dir) + "_tmp"
-    new_manifest.write.mode("overwrite").parquet(tmp)
-    final = _manifest_path(out_dir)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(final)
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
+    # clean_text is pruned from this select: it reads the cached base.
+    # count, not isEmpty: it fills every partition of the cache in one
+    # parallel job, where isEmpty fills partition 0 alone first
+    keys = tables["decision"].select(*_MANIFEST_KEYS)
+    if keys.count() == 0:
+        return {t: 0 for t in TABLES}
+    mode = "append" if (incremental and manifest is not None) else "overwrite"
+    counts: dict[str, int] = {}
+    for name in TABLES:
+        tables[name].write.mode(mode).parquet(os.path.join(out_dir, name))
+        counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
+    # the run's keys are new by construction (anti-joined above), so
+    # publishing them is one appended part
+    processed_union(None, keys, _MANIFEST_KEYS).coalesce(1).write.mode(
+        mode
+    ).parquet(_manifest_path(out_dir))
     return counts
 
 

@@ -163,10 +163,16 @@ def plan_fingerprint(df) -> str:
 
 
 def pipeline_fingerprints(spark, n_docs: int) -> dict[str, str]:
-    """:func:`plan_fingerprint` of every extraction-pipeline table and
-    of ``judgment_dataset``, built over an ``n_docs`` synthetic raw
-    corpus — the pipeline half of tests/fixtures/plan_fingerprints.json
-    (regenerate with ``tools/pipeline_fingerprint.py``)."""
+    """Fingerprint of every extraction-pipeline table and of
+    ``judgment_dataset``, built over an ``n_docs`` synthetic raw corpus
+    — the pipeline half of tests/fixtures/plan_fingerprints.json
+    (regenerate with ``tools/pipeline_fingerprint.py``).
+
+    Each is :func:`plan_fingerprint` plus the normalized ANALYZED plan:
+    the pipeline's outputs select from caches, whose optimized form is
+    a bare ``InMemoryRelation`` (over a local relation that has folded
+    the projections into its rows), so a change to a cached frame's
+    construction would leave the optimized plan unchanged."""
     from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
         judgment_dataset,
         run_extraction_pipeline,
@@ -175,7 +181,11 @@ def pipeline_fingerprints(spark, n_docs: int) -> dict[str, str]:
         raw_corpus_df,
     )
 
+    def fingerprint(df) -> str:
+        analyzed = normalize_plan(df._jdf.queryExecution().analyzed().toString())
+        return hashlib.md5(f"{plan_fingerprint(df)} | {analyzed}".encode()).hexdigest()
+
     tables = run_extraction_pipeline(raw_corpus_df(spark, n_docs))
-    out = {name: plan_fingerprint(tables[name]) for name in sorted(tables)}
-    out["judgment_dataset"] = plan_fingerprint(judgment_dataset(tables))
+    out = {name: fingerprint(tables[name]) for name in sorted(tables)}
+    out["judgment_dataset"] = fingerprint(judgment_dataset(tables))
     return out

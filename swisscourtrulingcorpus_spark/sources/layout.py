@@ -16,8 +16,8 @@ files from incremental appends.  Three primitives cover this:
   applies; exposed as a table so tests and capacity planning can
   measure skipping instead of guessing.
 - ``compact_small_files``: rewrite a directory to size-targeted files
-  with the staged-rename pattern (`streaming/jobs.py::stream_upsert_job`)
-  so a crash never leaves a partial table.
+  through `sources/sinks.py::replace_table` (staged write, rename
+  swap) so a crash never leaves a partial table.
 
 Reference parity: the reference caches per-court parquet without layout
 control (`dataset_creator.py:543` df.to_parquet) — fine at GB scale,
@@ -28,10 +28,11 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from swisscourtrulingcorpus_spark.sources.sinks import replace_table
 
 
 def write_sorted_by(
@@ -304,45 +305,25 @@ def compact_small_files(
     path: str,
     target_bytes: int = 128 * 1024 * 1024,
 ) -> int:
-    """Rewrite ``path`` into ceil(total/target)-sized files.  The
-    rewrite lands fully in a staging dir, then replaces the table with
-    two renames.  The swap is NOT one atomic op, so a hard crash
-    between the two renames can leave no table at ``path`` with the
-    only copy parked at ``.compact_old`` — the entry sweep below
-    restores it (mirroring ``stream_upsert_job._recover``), so the
-    contract "readers see either the old or the new layout" holds
-    across process deaths, not just in-process exceptions.  Returns
-    the new file count."""
-    old = path.rstrip("/") + ".compact_old"
-    if os.path.isdir(old):
-        if not os.path.isdir(path):
-            # crashed mid-swap: the backup is the only copy — restore
-            os.rename(old, path)
-        else:
-            # crashed after a completed swap, before backup cleanup
-            shutil.rmtree(old, ignore_errors=True)
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / target_bytes))
-    staging = path.rstrip("/") + ".compact_staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    try:
-        spark.read.parquet(path).coalesce(n).write.mode("overwrite").parquet(staging)
-        os.rename(path, old)
-        try:
-            os.rename(staging, path)
-        except BaseException:
-            # failed swap: restore the original before surfacing — the
-            # backup is the ONLY copy and must never be deleted unless
-            # the new layout is in place
-            os.rename(old, path)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    """Rewrite ``path`` into ceil(total/target)-sized files, published by
+    :func:`~swisscourtrulingcorpus_spark.sources.sinks.replace_table`
+    (staged write, then a rename swap that a later call repairs after a
+    crash), so readers see either the old or the new layout across
+    process deaths.  Returns the new file count."""
+    n = 1
+
+    def compact(existing: DataFrame) -> DataFrame:
+        # sized after replace_table's crash recovery: the live table
+        nonlocal n
+        total = sum(
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+        n = max(1, math.ceil(total / target_bytes))
+        return existing.coalesce(n)
+
+    replace_table(path, compact)
     return n
 
 
@@ -360,12 +341,9 @@ def recluster_table(
     appends land in arrival order and every appended file spans the
     full key domain (footer stats stop pruning).
 
-    Crash-safety is the exact ``compact_small_files`` contract (same
-    ``.compact_old`` / ``.compact_staging`` names, so ITS recovery
-    sweep also repairs a recluster that died mid-swap and vice versa):
-    the clustered rewrite lands fully in staging, then two renames —
-    readers see either the old or the new layout across process
-    deaths.
+    Crash-safety is :func:`compact_small_files`'s: the clustered
+    rewrite is published by ``replace_table``, whose recovery also
+    repairs a compaction that died mid-swap and vice versa.
 
     ``curve``: "zorder" (default, up to 4 columns) or "hilbert"
     (2 columns, tighter non-aligned ranges — see hilbert_value)."""
@@ -379,25 +357,4 @@ def recluster_table(
         )
     else:
         raise ValueError(f"unknown curve {curve!r}")
-
-    old = path.rstrip("/") + ".compact_old"
-    if os.path.isdir(old):
-        if not os.path.isdir(path):
-            os.rename(old, path)  # crashed mid-swap: restore
-        else:
-            shutil.rmtree(old, ignore_errors=True)
-    staging = path.rstrip("/") + ".compact_staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    try:
-        cluster(spark.read.parquet(path)).write.mode("overwrite").parquet(
-            staging
-        )
-        os.rename(path, old)
-        try:
-            os.rename(staging, path)
-        except BaseException:
-            os.rename(old, path)  # backup is the only copy
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    replace_table(path, cluster)

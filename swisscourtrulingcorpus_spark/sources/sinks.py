@@ -8,12 +8,60 @@ set operations over immutable files: anti-join out the superseded rows,
 union in the new ones, rewrite.  With Delta available this is
 ``MERGE INTO``; the plain-parquet forms below have identical semantics
 and stay fully distributed (no driver loop, no per-row statements).
+
+A whole-table rewrite of a plain-parquet directory (a streaming merge,
+a compaction, a recluster) publishes through :func:`replace_table`,
+the one place that swaps a table directory.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import shutil
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def replace_table(
+    path: str, build: Callable[[DataFrame | None], DataFrame]
+) -> None:
+    """Replace the parquet table at ``path`` with ``build(existing)``
+    (``existing`` is the current table, ``None`` when there is none).
+
+    The new table lands fully in ``<path>.staging`` first (``build``
+    may read the live table, so an in-place overwrite would clobber its
+    own input mid-job), then two renames swap it in: ``path`` →
+    ``<path>.old``, staging → ``path``.  The swap is not one atomic op,
+    so a hard crash between the renames leaves the only copy at
+    ``.old``; the next call restores it before building, and drops a
+    completed swap's ``.old`` and any crashed ``.staging``.  Readers
+    see either the old or the new table across process deaths."""
+    path = path.rstrip("/")
+    staging, old = path + ".staging", path + ".old"
+    if os.path.isdir(old):
+        if os.path.isdir(path):
+            shutil.rmtree(old)  # crashed after a completed swap
+        else:
+            os.rename(old, path)  # crashed mid-swap: the only copy
+    shutil.rmtree(staging, ignore_errors=True)
+    existing = None
+    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
+        existing = SparkSession.active().read.parquet(path)
+    try:
+        build(existing).write.mode("overwrite").parquet(staging)
+        if os.path.isdir(path):
+            os.rename(path, old)
+        try:
+            os.rename(staging, path)
+        except BaseException:
+            if os.path.isdir(old):
+                os.rename(old, path)  # never lose the only copy
+            raise
+        shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def upsert_by_key(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:

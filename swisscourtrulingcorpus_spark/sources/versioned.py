@@ -7,22 +7,23 @@ Directory layout::
     table/
       data/<commit-uuid>/part-*.parquet   immutable data files
       v3.json                             manifest: file list of v3
-      v3.json.tmp                         crash debris (ignored)
+      v3.json.tmp.<uuid>                  crash debris (ignored)
 
-The COMMIT POINT is the atomic ``os.rename`` of the manifest from
-``.tmp`` to ``v{n}.json``: readers resolve the latest version by
-listing manifests, so a crashed writer leaves only an orphaned data
-dir + tmp file — never a partially-visible table.  Version numbers are
+The COMMIT POINT is the atomic rename of the manifest from its tmp
+file to ``v{n}.json`` (:func:`write_json_atomic`): readers resolve the
+latest version by listing manifests, so a crashed writer leaves only
+an orphaned data dir + tmp file — never a partially-visible table.  Version numbers are
 claimed with exclusive-create (``open(..., 'x')``), so two concurrent
 writers cannot both commit the same version (the loser retries with
 the next number).
 
-This generalizes the staged-rename upsert in `streaming/jobs.py`
-(`stream_upsert_job`) from "replace the one table" to "every commit is
-a readable snapshot": incremental pipelines (SURVEY §2.10 —
-process_new_files_only, id-list reprocessing) get reproducible
-point-in-time reads of any earlier corpus state, and ``vacuum``
-reclaims data dirs no kept manifest references.
+This is a different protocol from `sources/sinks.py::replace_table`
+(a staged write swapped in by two directory renames, which keeps only
+the one current table): here every commit is a readable snapshot, so
+incremental pipelines (SURVEY §2.10 — process_new_files_only, id-list
+reprocessing) get reproducible point-in-time reads of any earlier
+corpus state, and ``vacuum`` reclaims data dirs no kept manifest
+references.
 
 On a real deployment this role is played by Delta/Iceberg; the module
 exists so the engine is complete WITHOUT them while keeping the same
@@ -95,13 +96,15 @@ def _stage_data(df: DataFrame, table_dir: str) -> tuple[str, str]:
 CLAIM_TTL_SECONDS = 60.0
 
 
-def _write_manifest(
-    table_dir: str, version: int, manifest: dict, commit_id: str
-) -> None:
-    tmp = os.path.join(table_dir, f"v{version}.json.tmp.{commit_id}")
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` all at once: a tmp file named
+    ``<path>.tmp.<uuid>``, then one atomic rename.  For a ``*.json``
+    path the tmp name holds the ``.json.tmp.`` infix that :func:`vacuum`
+    sweeps as crash debris."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.rename(tmp, os.path.join(table_dir, f"v{version}.json"))
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
 def _claim(table_dir: str, version: int, token: str = "") -> bool:
@@ -142,7 +145,7 @@ def _write_manifest_owned(
             f"claim on v{version} was broken (writer paused past "
             f"CLAIM_TTL) and retaken in {table_dir}"
         )
-    _write_manifest(table_dir, version, manifest, commit_id)
+    write_json_atomic(os.path.join(table_dir, f"v{version}.json"), manifest)
 
 
 def _claim_token(table_dir: str, version: int) -> str | None:

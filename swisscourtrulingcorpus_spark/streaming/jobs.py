@@ -233,18 +233,20 @@ def stream_upsert_job(
     analogue).  Delivery is at-least-once with idempotent replay: the
     checkpoint fences completed batches, a replayed batch rewrites the
     same keys to the same rows, and the table itself is only ever
-    replaced by directory rename after the merged result has fully
-    landed in a staging dir — a crash can never leave a partial table,
-    only a replayable batch.  Returns the started query; caller awaits
-    termination.
+    replaced through ``sources/sinks.py::replace_table`` (staged write,
+    rename swap, crash debris repaired by the next batch) — a crash can
+    never leave a partial table, only a replayable batch.  Returns the
+    started query; caller awaits termination.
     """
-    from swisscourtrulingcorpus_spark.sources.sinks import upsert_by_key
-
-    base = table_path.rstrip("/")
+    from swisscourtrulingcorpus_spark.sources.sinks import (
+        replace_table,
+        upsert_by_key,
+    )
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        _swap_merge(
-            batch, base, batch_id, lambda old, new: upsert_by_key(old, new, keys)
+        replace_table(
+            table_path,
+            lambda old: batch if old is None else upsert_by_key(old, batch, keys),
         )
 
     return _available_now(stream, checkpoint, _merge)
@@ -280,60 +282,6 @@ def _binary_file_stream(spark: SparkSession, root: str, glob: str) -> DataFrame:
     )
 
 
-def _swap_merge(incoming: DataFrame, base: str, batch_id: int, merge) -> None:
-    """Merge ``incoming`` into the plain-parquet table at ``base`` with
-    ``merge(existing, incoming)`` (``incoming`` alone when no table
-    exists yet), after restoring or sweeping a crashed batch's swap
-    debris; the result replaces the table by :func:`_staged_swap`."""
-    _recover_and_sweep(base)
-    if os.path.isdir(base) and any(f.endswith(".parquet") for f in os.listdir(base)):
-        incoming = merge(incoming.sparkSession.read.parquet(base), incoming)
-    _staged_swap(incoming, base, batch_id)
-
-
-def _recover_and_sweep(base: str) -> None:
-    """Crash between the two swap renames leaves the table at
-    ``.old_*``; restore it before merging so no batch is lost.  Any
-    ``.staging_*`` present here is debris from a crashed batch (that
-    batch will replay) — sweep it so a long-running stream can't grow
-    disk unboundedly."""
-    import shutil
-
-    parent, name = os.path.dirname(base) or ".", os.path.basename(base)
-    if not os.path.isdir(parent):
-        return
-    # numeric batch order: lexicographic would rank '.old_9' above
-    # '.old_12' and restore a STALE snapshot while sweeping the new
-    olds = sorted(
-        (f for f in os.listdir(parent) if f.startswith(name + ".old_")),
-        key=lambda f: int(f.rsplit("_", 1)[1]),
-    )
-    if not os.path.isdir(base) and olds:
-        os.rename(os.path.join(parent, olds.pop()), base)
-    for leftover in olds + [
-        f for f in os.listdir(parent) if f.startswith(name + ".staging_")
-    ]:
-        shutil.rmtree(os.path.join(parent, leftover), ignore_errors=True)
-
-
-def _staged_swap(merged: DataFrame, base: str, batch_id: int) -> None:
-    """Land the merged result fully in staging (the plan reads the
-    live table, so an in-place overwrite would clobber its own input
-    mid-job), then swap by rename — never a partial table."""
-    import shutil
-
-    staging = base + f".staging_{batch_id}"
-    old = base + f".old_{batch_id}"
-    try:
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(base):
-            os.rename(base, old)
-        os.rename(staging, base)
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-
 def stream_versioned_upsert_job(
     stream: DataFrame,
     table_dir: str,
@@ -343,11 +291,12 @@ def stream_versioned_upsert_job(
     """Streaming merge into the VERSIONED table (`sources/versioned.py`):
     each micro-batch upserts against the latest snapshot and commits
     the merged result as a NEW version — readers get snapshot isolation
-    and time travel over the ingest history, and the atomic manifest
-    rename replaces the directory-swap dance of ``stream_upsert_job``
-    (crash debris is just an orphaned data dir; ``vacuum`` reclaims
-    it).  Delivery is at-least-once with idempotent replay: a replayed
-    batch re-merges the same keys into an extra (identical) version."""
+    and time travel over the ingest history, and the commit point is
+    one atomic manifest rename instead of ``replace_table``'s two
+    directory renames (crash debris is just an orphaned data dir;
+    ``vacuum`` reclaims it).  Delivery is at-least-once with idempotent
+    replay: a replayed batch re-merges the same keys into an extra
+    (identical) version."""
     from swisscourtrulingcorpus_spark.sources.sinks import upsert_by_key
     from swisscourtrulingcorpus_spark.sources.versioned import (
         ConcurrentWriteError,
@@ -419,8 +368,8 @@ def stream_ingest_landing_zone_job(
     (each batch contributes its non-null fields), and a replayed batch
     re-merges to the identical table — idempotent under foreachBatch's
     at-least-once delivery, where a blind append would duplicate rows
-    (r04 review findings).  The table is only ever replaced by the
-    crash-safe staged swap shared with ``stream_upsert_job``.
+    (r04 review findings).  The table is only ever replaced through
+    ``sources/sinks.py::replace_table``, as in ``stream_upsert_job``.
     Trigger.AvailableNow: drains everything currently available, then
     stops — the daily-cron batch shape, restartable as a continuous
     stream unchanged."""
@@ -428,13 +377,16 @@ def stream_ingest_landing_zone_job(
         docs_from_scanned_files,
         parse_file_paths,
     )
+    from swisscourtrulingcorpus_spark.sources.sinks import replace_table
 
     files = _binary_file_stream(spark, root, "*.{json,html,htm,pdf,txt}")
-    base = out_dir.rstrip("/")
 
     def _ingest(batch, batch_id: int) -> None:
         docs = docs_from_scanned_files(parse_file_paths(batch))
-        _swap_merge(docs, base, batch_id, _coalesce_merge_docs)
+        replace_table(
+            out_dir,
+            lambda old: docs if old is None else _coalesce_merge_docs(old, docs),
+        )
 
     return _available_now(files, checkpoint, _ingest)
 
@@ -511,19 +463,6 @@ def _read_replay_ledger(store_table: str) -> dict[str, int]:
                     ledger[k] = int(n)
             break  # cumulative map: the newest one is complete
     return ledger
-
-
-def _write_replay_ledger(store_table: str, ledger: dict[str, int]) -> None:
-    import json
-    import uuid as _uuid
-
-    sidecar = os.path.join(store_table, _LEDGER_FILE)
-    # ".json.tmp." infix: a crash-orphaned tmp matches the vacuum
-    # debris sweep in sources/versioned.py and gets reclaimed
-    tmp = sidecar + ".tmp." + _uuid.uuid4().hex
-    with open(tmp, "w") as fh:
-        json.dump(ledger, fh)
-    os.replace(tmp, sidecar)
 
 
 def checkpoint_run_tag(checkpoint: str) -> str:
@@ -606,6 +545,7 @@ def _fold_into_store(
         commit_version,
         latest_version,
         read_version,
+        write_json_atomic,
     )
 
     os.makedirs(store_table, exist_ok=True)
@@ -634,7 +574,7 @@ def _fold_into_store(
                 )
             except ConcurrentWriteError:
                 continue
-            _write_replay_ledger(store_table, runs)
+            write_json_atomic(os.path.join(store_table, _LEDGER_FILE), runs)
             return
     finally:
         delta.unpersist()

@@ -81,32 +81,32 @@ def test_compaction_preserves_rows_and_reduces_files(spark, sf_dir, tmp_path):
     after = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert after == n == 1
     assert spark.read.parquet(out).count() == 200
-    assert not os.path.exists(out + ".compact_staging")
-    assert not os.path.exists(out + ".compact_old")
+    assert not os.path.exists(out + ".staging")
+    assert not os.path.exists(out + ".old")
 
 
 def test_compaction_recovers_from_crashed_swap(spark, tmp_path):
     """Hard-crash between the two swap renames leaves no table at
-    `path` and the only copy at `.compact_old` — the entry sweep must
+    `path` and the only copy at `.old` — the entry sweep must
     restore it (ADVICE r03)."""
     import os
     import shutil
 
     out = str(tmp_path / "t")
     spark.range(100).write.parquet(out)
-    # simulate the post-crash state: table parked at .compact_old
-    os.rename(out, out + ".compact_old")
+    # simulate the post-crash state: table parked at .old
+    os.rename(out, out + ".old")
     n = layout.compact_small_files(spark, out, target_bytes=1 << 30)
     assert n == 1
     assert spark.read.parquet(out).count() == 100
-    assert not os.path.exists(out + ".compact_old")
+    assert not os.path.exists(out + ".old")
 
     # crash AFTER a completed swap (debris backup + live table):
     # backup is removed, table untouched
-    shutil.copytree(out, out + ".compact_old")
+    shutil.copytree(out, out + ".old")
     layout.compact_small_files(spark, out, target_bytes=1 << 30)
     assert spark.read.parquet(out).count() == 100
-    assert not os.path.exists(out + ".compact_old")
+    assert not os.path.exists(out + ".old")
 
 
 def test_zorder_value_wide_span_no_overflow(spark):
@@ -240,7 +240,7 @@ def test_recluster_restores_pruning_after_appends(spark, sf_dir, tmp_path):
     """Append-in-arrival-order files span the full key domain (footer
     stats prune nothing); recluster_table must restore two-dimensional
     pruning in place, preserve every row, and leave no debris dirs.
-    Also: a crash parked at .compact_old before recluster runs is
+    Also: a crash parked at .old before recluster runs is
     swept (shared recovery contract with compact_small_files)."""
     import os
 
@@ -267,11 +267,11 @@ def test_recluster_restores_pruning_after_appends(spark, sf_dir, tmp_path):
     assert avg_span("o_orderkey") < 0.5 * glob_span["o_orderkey"]
     assert avg_span("o_custkey") < 0.5 * glob_span["o_custkey"]
     assert spark.read.parquet(out).count() == n_rows
-    assert not os.path.exists(out + ".compact_staging")
-    assert not os.path.exists(out + ".compact_old")
+    assert not os.path.exists(out + ".staging")
+    assert not os.path.exists(out + ".old")
 
-    # crash-recovery sweep: only copy parked at .compact_old
-    os.rename(out, out + ".compact_old")
+    # crash-recovery sweep: only copy parked at .old
+    os.rename(out, out + ".old")
     layout.recluster_table(
         spark, out, ["o_orderkey", "o_custkey"], 8, curve="hilbert"
     )

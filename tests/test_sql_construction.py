@@ -63,6 +63,25 @@ def test_pipeline_plans_match_golden(spark):
     assert_golden_plans("pipeline", got, complete=True)
 
 
+def test_pipeline_pins_see_inside_the_cache(spark, monkeypatch):
+    """The language-ID column is computed inside the cached ``base``,
+    whose optimized form folds it into the local rows: a different
+    expression there must still move the pins of the outputs built on
+    it."""
+    from pyspark.sql import functions as F
+
+    from swisscourtrulingcorpus_spark.plans import domain_pipeline
+    from swisscourtrulingcorpus_spark.plans.parity import pipeline_fingerprints
+
+    before = pipeline_fingerprints(spark, 5)
+    monkeypatch.setattr(
+        domain_pipeline, "language_id_score", lambda col: F.lit("und")
+    )
+    after = pipeline_fingerprints(spark, 5)
+    for name in ("decision", "section_arrays"):
+        assert after[name] != before[name], name
+
+
 def test_plan_fingerprint_ignores_catalog_view_suffix(spark, sf_dir):
     """Catalog temp views are named ``__catalog_<table>_<digits>`` with a
     per-process hash.  Distinct aggregates keep that qualifier in the

@@ -308,7 +308,7 @@ def test_streaming_sliding_equals_batch(spark, sf_dir):
 
 
 def test_stream_upsert_crash_recovery(spark, sf_dir, tmp_path):
-    """A crash between the swap renames leaves the table at .old_N and
+    """A crash between the swap renames leaves the table at .old and
     no live dir; the next delivery must restore it before merging so
     no previously-committed batch is lost."""
     import os
@@ -336,16 +336,16 @@ def test_stream_upsert_crash_recovery(spark, sf_dir, tmp_path):
     n_first = first.count()
 
     # simulate the crash window: table renamed away, stale staging left
-    os.rename(table, table + ".old_7")
-    os.makedirs(table + ".staging_7")
+    os.rename(table, table + ".old")
+    os.makedirs(table + ".staging")
     assert not os.path.isdir(table)
 
     second = ev.where(F.col("event_id") >= 100)
     deliver(second, "b")
     assert spark.read.parquet(table).count() == n_first + second.count()
     # crash debris swept
-    assert not os.path.isdir(table + ".old_7")
-    leftovers = [f for f in os.listdir(tmp_path) if ".staging_" in f or ".old_" in f]
+    assert not os.path.isdir(table + ".old")
+    leftovers = [f for f in os.listdir(tmp_path) if f.endswith((".staging", ".old"))]
     assert leftovers == []
 
 
