@@ -67,15 +67,6 @@ def token_bucket_histogram(df: DataFrame, tokens_col: str) -> DataFrame:
     )
 
 
-def label_distribution_by_split(df: DataFrame, label_col: str = "label") -> DataFrame:
-    """A10 plot_label_ordered per split (`report_creator.py:164-185`)."""
-    return (
-        df.groupBy("split", label_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("split", F.desc("cnt"))
-    )
-
-
 def export_report_excel(report: DataFrame, path: str, sheet: str = "report") -> bool:
     """S12 Excel sink (`pattern_extractor.py:220-229`): driver-side
     render of an already-aggregated (tiny) report.  Writes a real .xlsx

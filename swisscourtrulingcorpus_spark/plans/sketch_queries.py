@@ -543,7 +543,7 @@ def join_size_estimate_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("__na") * F.col("__nb")).alias("exact_join_size"))
     )
     # 1×1 scalar crossJoin — the documented broadcast-scalar report
-    # pattern (PLAN_AUDIT.md), not a data-sized NLJ
+    # pattern (README, the profiler's reading notes), not a data-sized NLJ
     return est.crossJoin(F.broadcast(exact)).select(
         "est_join_size",
         "exact_join_size",

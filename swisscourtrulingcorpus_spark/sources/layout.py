@@ -30,7 +30,7 @@ import math
 import os
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from swisscourtrulingcorpus_spark.sources.sinks import replace_table
 
@@ -301,7 +301,6 @@ def files_for_range(stats: list[dict], lo, hi) -> list[str]:
 
 
 def compact_small_files(
-    spark: SparkSession,
     path: str,
     target_bytes: int = 128 * 1024 * 1024,
 ) -> int:
@@ -328,7 +327,6 @@ def compact_small_files(
 
 
 def recluster_table(
-    spark: SparkSession,
     path: str,
     cols: list[str],
     num_files: int,

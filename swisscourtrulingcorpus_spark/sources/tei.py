@@ -127,16 +127,6 @@ def tei_corpus_df(df: DataFrame, xml_col: str, file_col: str) -> DataFrame:
 # WikiExtractor multi-doc files (`wikipedia_processor.py:14-46`)
 # ---------------------------------------------------------------------------
 
-WIKI_SCHEMA = StructType(
-    [
-        StructField("source_file", StringType()),
-        StructField("wiki_id", StringType()),
-        StructField("title", StringType()),
-        StructField("url", StringType()),
-        StructField("text", StringType()),
-    ]
-)
-
 _WIKI_DOC = None  # compiled lazily (regex import kept local to executors)
 
 
@@ -170,38 +160,9 @@ def parse_wiki_file(content: str, source_file: str = "") -> list[dict]:
     return rows
 
 
-def wiki_corpus_df(df: DataFrame, content_col: str, file_col: str) -> DataFrame:
-    """Distributed WikiExtractor ingest: one raw dump-part row fans out
-    to N article rows inside the Arrow batch (cheap local explode —
-    no shuffle; downstream sees articles, never dump parts)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: list[dict] = []
-            for content, f in zip(pdf[content_col], pdf[file_col]):
-                rows.extend(parse_wiki_file(content, source_file=f))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WIKI_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, WIKI_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # SLC POS-tagged token XML (`slc_processor.py:30-55`)
 # ---------------------------------------------------------------------------
-
-from pyspark.sql.types import ArrayType  # noqa: E402
-
-SLC_SCHEMA = StructType(
-    [
-        StructField("source_file", StringType()),
-        StructField("sr", StringType()),
-        StructField("title", StringType()),
-        StructField("lang", StringType()),
-        StructField("tokens", ArrayType(StringType())),
-    ]
-)
 
 
 def parse_slc_string(xml: str, source_file: str = "") -> dict | None:
@@ -245,20 +206,3 @@ def parse_slc_string(xml: str, source_file: str = "") -> dict | None:
         "lang": _meta("lang"),
         "tokens": tokens,
     }
-
-
-def slc_corpus_df(df: DataFrame, xml_col: str, file_col: str) -> DataFrame:
-    """Distributed SLC ingest (mapInPandas; skip-on-malformed)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                r
-                for x, f in zip(pdf[xml_col], pdf[file_col])
-                if (r := parse_slc_string(x, source_file=f)) is not None
-            ]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SLC_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, SLC_SCHEMA)

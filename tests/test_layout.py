@@ -77,7 +77,7 @@ def test_compaction_preserves_rows_and_reduces_files(spark, sf_dir, tmp_path):
 
     before = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert before >= 8
-    n = layout.compact_small_files(spark, out, target_bytes=1 << 30)
+    n = layout.compact_small_files(out, target_bytes=1 << 30)
     after = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert after == n == 1
     assert spark.read.parquet(out).count() == 200
@@ -96,7 +96,7 @@ def test_compaction_recovers_from_crashed_swap(spark, tmp_path):
     spark.range(100).write.parquet(out)
     # simulate the post-crash state: table parked at .old
     os.rename(out, out + ".old")
-    n = layout.compact_small_files(spark, out, target_bytes=1 << 30)
+    n = layout.compact_small_files(out, target_bytes=1 << 30)
     assert n == 1
     assert spark.read.parquet(out).count() == 100
     assert not os.path.exists(out + ".old")
@@ -104,7 +104,7 @@ def test_compaction_recovers_from_crashed_swap(spark, tmp_path):
     # crash AFTER a completed swap (debris backup + live table):
     # backup is removed, table untouched
     shutil.copytree(out, out + ".old")
-    layout.compact_small_files(spark, out, target_bytes=1 << 30)
+    layout.compact_small_files(out, target_bytes=1 << 30)
     assert spark.read.parquet(out).count() == 100
     assert not os.path.exists(out + ".old")
 
@@ -263,7 +263,7 @@ def test_recluster_restores_pruning_after_appends(spark, sf_dir, tmp_path):
     }
     assert avg_span("o_orderkey") > 0.8 * glob_span["o_orderkey"]
 
-    layout.recluster_table(spark, out, ["o_orderkey", "o_custkey"], 16)
+    layout.recluster_table(out, ["o_orderkey", "o_custkey"], 16)
     assert avg_span("o_orderkey") < 0.5 * glob_span["o_orderkey"]
     assert avg_span("o_custkey") < 0.5 * glob_span["o_custkey"]
     assert spark.read.parquet(out).count() == n_rows
@@ -272,8 +272,6 @@ def test_recluster_restores_pruning_after_appends(spark, sf_dir, tmp_path):
 
     # crash-recovery sweep: only copy parked at .old
     os.rename(out, out + ".old")
-    layout.recluster_table(
-        spark, out, ["o_orderkey", "o_custkey"], 8, curve="hilbert"
-    )
+    layout.recluster_table(out, ["o_orderkey", "o_custkey"], 8, curve="hilbert")
     assert spark.read.parquet(out).count() == n_rows
     assert avg_span("o_custkey") < 0.5 * glob_span["o_custkey"]

@@ -6,12 +6,19 @@ both runs' spreads always contains the new value and every regression
 reads as within-noise (round-6 review finding).
 """
 
+import ast
+import importlib
+import importlib.util
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parents[1]
+TOOLS = REPO / "tools"
 
 
 def _run_diff(tmp_path, old, new):
@@ -82,20 +89,19 @@ def test_new_query_is_reported(tmp_path):
     assert "NEW" in out
 
 
-def _load_gate_profile():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "gate_profile", REPO / "tools" / "gate_profile.py"
-    )
+def _load_tool(name):
+    """A ``tools/`` script as a module, loaded by path the way it runs."""
+    spec = importlib.util.spec_from_file_location(name, TOOLS / f"{name}.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
 def test_gate_profile_records(spark, sf_dir):
-    """One record per gate with every layer counted; a raising gate
-    yields an ``err`` record; the py4j patch is gone afterwards."""
+    """One record per gate with every layer counted, its output rows and
+    its static and executed plan facts; a raising gate yields an ``err``
+    record; the py4j patch is gone afterwards.  Two sizes give each gate
+    a sub-record per size and their scaling exponents."""
     import py4j.clientserver as cs
 
     from swisscourtrulingcorpus_spark.plans.registry import queries
@@ -111,7 +117,8 @@ def test_gate_profile_records(spark, sf_dir):
         "minhash_lsh_pairs": q["minhash_lsh_pairs"],
         "broken": broken,
     }
-    recs = list(_load_gate_profile().profile_gates(spark, sf_dir, gates, runs=1))
+    gp = _load_tool("gate_profile")
+    recs = list(gp.profile_gates(spark, sf_dir, gates, runs=1))
 
     assert [r["gate"] for r in recs] == list(gates)
     for rec in recs[:2]:
@@ -121,5 +128,75 @@ def test_gate_profile_records(spark, sf_dir):
         assert rec["shuffle_write_bytes"] > 0
         assert sum(rec["phases_ms"].values()) > 0
         assert rec["construct_best_ms"] == rec["construct_median_ms"] > 0
+        assert rec["rows"] > 0
+        assert set(rec["plan"]) == {"static", "executed"}
+        assert rec["plan"]["executed"]["reused_exchanges"] >= 0
+        assert rec["plan"]["static"]["exchanges"] >= 1
+    for plan in recs[0]["plan"].values():
+        assert plan["python"] == ""
+    # the executed plan is the final AQE plan, counted without the
+    # initial plan printed beside it: q1's one shuffle stays one, and
+    # the LSH self-join reads one of its shuffles twice
+    assert recs[0]["plan"]["executed"]["exchanges"] == recs[0]["plan"]["static"]["exchanges"]
+    executed = recs[1]["plan"]["executed"]
+    assert executed["reused_exchanges"] > 0 and executed["aqe_shuffle_reads"] > 0
     assert "gate construction failed" in recs[2]["err"]
     assert cs.ClientServerConnection.send_command is send_command
+
+    # q1 returns one row per (returnflag, linestatus) pair: 6 at every size
+    small, big = (os.path.join(os.path.dirname(sf_dir), s) for s in ("sf0.001", "sf0.01"))
+    (rec,) = gp.profile_gates(spark, [small, big], {"q1_pricing_summary": q["q1_pricing_summary"]}, runs=1)
+    assert rec[gp.size_label(small)]["rows"] == rec[gp.size_label(big)]["rows"] == 6
+    assert rec["alpha"]["rows"] == 0.0
+    assert rec["alpha"]["execute_best_s"] is not None
+
+
+def test_alpha_floors_and_small_byte_sides():
+    """Scaling exponents floor times at 0.01 s and counts at 1, and a
+    byte metric (gate or streaming state) whose small side holds 0.05 MB
+    or less has none."""
+    small = {"execute_best_s": 0.001, "rows": 0, "shuffle_write_bytes": 1e6, "state_bytes_max": 9e3}
+    big = {"execute_best_s": 0.1, "rows": 100, "shuffle_write_bytes": 1e7, "state_bytes_max": 9e4}
+    assert _load_tool("gate_profile").alpha(small, big) == {
+        "execute_best_s": 1.0, "rows": 2.0, "shuffle_write_bytes": 1.0, "state_bytes_max": None,
+    }
+
+
+@pytest.mark.parametrize("path", sorted(TOOLS.glob("*.py")), ids=lambda p: p.stem)
+def test_tool_imports_resolve(path, monkeypatch):
+    """Every tool loads with ``tools/`` on ``sys.path``, as when it runs,
+    and every name it imports, in ``main`` too, exists: deleting a
+    helper another tool still uses fails here, not on the next run."""
+    monkeypatch.syspath_prepend(str(TOOLS))
+    _load_tool(path.stem)
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                assert hasattr(mod, alias.name), f"{path.name}: {node.module}.{alias.name}"
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                importlib.import_module(alias.name)
+
+
+def test_scale_gates_are_registry_gates():
+    from swisscourtrulingcorpus_spark.plans.registry import queries
+
+    names = [n for n, _ in _load_tool("scale_measure").QUERIES]
+    assert len(names) == len(set(names))
+    assert set(names) <= set(queries())
+
+
+def test_synth_10x_replicates_and_refuses_an_existing_dst(spark, sf_dir, tmp_path):
+    """Each replicated table holds 10x its source rows, and a second
+    synthesis into the same dir raises instead of keeping the first
+    one's tables (which could come from another source)."""
+    from swisscourtrulingcorpus_spark.sources.catalog import load_table
+
+    synth_10x = _load_tool("scale_measure").synth_10x
+    dst = str(tmp_path / "x10")
+    synth_10x(spark, sf_dir, dst)
+    for t in ("documents", "lineitem", "events"):
+        assert load_table(spark, dst, t).count() == 10 * load_table(spark, sf_dir, t).count(), t
+    with pytest.raises(FileExistsError):
+        synth_10x(spark, sf_dir, dst)

@@ -1,19 +1,19 @@
-"""Two-SF empirical scale measurement (VERDICT r04 item 1/#3).
+"""Two-size scale measurement: the 10x synthesizer, the scale gate list
+and the streaming state measurement.
 
-SCALE.md argues the dedup/ANN/packing family is ~linear by
-construction; this tool MEASURES it.  It synthesizes a 10× corpus
-(each replica of the sf0.1 documents/embeddings tables perturbed with
-a replica-unique token / offset, so the per-replica duplicate
-structure is identical and the TRUE scaling of every linear claim is
-exactly 10×), runs the representative registry queries at both scales
-in one Spark app, and reports per query: wall seconds, output rows,
-and shuffle-write bytes of the measured run, read from Spark's status
-store by ``tools/gate_profile.py::window_totals``.
+``synth_10x`` writes a 10x copy of a scale-factor dir (each replica of
+the documents/embeddings tables perturbed with a replica-unique token /
+offset, so the per-replica duplicate structure is identical and the
+TRUE scaling of every linear claim is exactly 10x).  ``QUERIES`` names
+the registry gates measured at both sizes and what each one's linear
+claim is; ``tools/gate_profile.py scale --sf SRC DST`` measures them.
+This script synthesizes DST from SRC (DST must not exist), then
+measures the streaming jobs' state-store growth at both sizes:
 
-    python tools/scale_measure.py [OUT_JSON]
+    python tools/scale_measure.py SRC DST [OUT_JSON]    # OUT_JSON: SCALE_STREAM.json
 
-Scaling exponents: alpha = log10(metric_10x / metric_1x); ~1.0 is
-linear, ~2.0 quadratic.  Results are committed into SCALE.md.
+Scaling exponents (``gate_profile.alpha``): alpha = log10(metric_10x /
+metric_1x); ~1.0 is linear, ~2.0 quadratic.
 """
 
 from __future__ import annotations
@@ -21,11 +21,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPLICAS = 10
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -170,9 +170,11 @@ QUERIES = [
 
 
 def synth_10x(spark, src: str, dst: str) -> None:
-    """10 replicas; texts get a replica token appended (replica dup
-    structure == source's, no cross-replica near-dups), embeddings a
-    tiny deterministic per-replica offset.  Other tables symlink."""
+    """10 replicas of ``src`` written to ``dst``, which must not exist
+    (a copy left from another source would pass for this one's 10x).
+    Texts get a replica token appended (replica dup structure ==
+    source's, no cross-replica near-dups), embeddings a tiny
+    deterministic per-replica offset.  Other tables symlink."""
     from pyspark.sql import functions as F
 
     replicated = (
@@ -180,14 +182,11 @@ def synth_10x(spark, src: str, dst: str) -> None:
         # round-10: TPC-H facts replicate with per-replica key shifts
         "orders", "lineitem", "customer", "supplier",
     )
-    os.makedirs(dst, exist_ok=True)
+    os.makedirs(dst)
+    reps = spark.range(REPLICAS).withColumnRenamed("id", "rep")
     for t in TABLES:
-        link = os.path.join(dst, f"{t}.parquet")
-        if os.path.islink(link) and t in replicated:
-            os.unlink(link)  # stale symlink from an earlier-round run
-        if t in replicated or os.path.exists(link):
-            continue
-        os.symlink(os.path.join(src, f"{t}.parquet"), link)
+        if t not in replicated:
+            os.symlink(os.path.abspath(os.path.join(src, f"{t}.parquet")), os.path.join(dst, f"{t}.parquet"))
 
     # TPC-H facts: shift the REPLICATED tables' keys per replica so
     # every FK that points at a replicated parent shifts consistently
@@ -214,30 +213,23 @@ def synth_10x(spark, src: str, dst: str) -> None:
         "customer": {"c_custkey": ("customer", "c_custkey")},
         "supplier": {"s_suppkey": ("supplier", "s_suppkey")},
     }
-    if not all(
-        os.path.exists(os.path.join(dst, f"{t}.parquet")) for t in rel_shifts
-    ):
-        bases = {
-            (pt, pc): _maxkey(pt, pc)
-            for shifts in rel_shifts.values()
-            for pt, pc in shifts.values()
-        }
-        reps_r = spark.range(REPLICAS).withColumnRenamed("id", "rep")
-        for t, shifts in rel_shifts.items():
-            out_path = os.path.join(dst, f"{t}.parquet")
-            if os.path.exists(out_path):
-                continue
-            tdf = spark.read.parquet(os.path.join(src, f"{t}.parquet"))
-            big_t = tdf.crossJoin(reps_r)
-            for col, parent in shifts.items():
-                dtype = dict(tdf.dtypes)[col]
-                big_t = big_t.withColumn(
-                    col,
-                    (F.col(col) + F.col("rep") * bases[parent]).cast(dtype),
-                )
-            big_t.drop("rep").repartition(32).write.mode("overwrite").parquet(
-                out_path
+    bases = {
+        (pt, pc): _maxkey(pt, pc)
+        for shifts in rel_shifts.values()
+        for pt, pc in shifts.values()
+    }
+    for t, shifts in rel_shifts.items():
+        tdf = spark.read.parquet(os.path.join(src, f"{t}.parquet"))
+        big_t = tdf.crossJoin(reps)
+        for col, parent in shifts.items():
+            dtype = dict(tdf.dtypes)[col]
+            big_t = big_t.withColumn(
+                col,
+                (F.col(col) + F.col("rep") * bases[parent]).cast(dtype),
             )
+        big_t.drop("rep").repartition(32).write.mode("overwrite").parquet(
+            os.path.join(dst, f"{t}.parquet")
+        )
 
     # events: shift user/event ids per replica, keep timestamps — the
     # per-replica window/session structure is IDENTICAL to the source,
@@ -247,26 +239,21 @@ def synth_10x(spark, src: str, dst: str) -> None:
     # table carries plain TIMESTAMP and loads through the same path.
     from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
-    if not os.path.exists(os.path.join(dst, "events.parquet")):
-        ev = load_table(spark, src, "events")
-        nu = ev.agg(F.max("user_id")).collect()[0][0] + 1
-        nev = ev.agg(F.max("event_id")).collect()[0][0] + 1
-        reps0 = spark.range(REPLICAS).withColumnRenamed("id", "rep")
-        (
-            ev.crossJoin(reps0)
-            .withColumn("user_id", F.col("user_id") + F.col("rep") * nu)
-            .withColumn("event_id", F.col("event_id") + F.col("rep") * nev)
-            .drop("rep")
-            .repartition(32)
-            .write.mode("overwrite")
-            .parquet(os.path.join(dst, "events.parquet"))
-        )
+    ev = load_table(spark, src, "events")
+    nu = ev.agg(F.max("user_id")).collect()[0][0] + 1
+    nev = ev.agg(F.max("event_id")).collect()[0][0] + 1
+    (
+        ev.crossJoin(reps)
+        .withColumn("user_id", F.col("user_id") + F.col("rep") * nu)
+        .withColumn("event_id", F.col("event_id") + F.col("rep") * nev)
+        .drop("rep")
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(os.path.join(dst, "events.parquet"))
+    )
 
-    if os.path.exists(os.path.join(dst, "documents.parquet")):
-        return  # pre-r05b corpus already synthesized (idempotent rerun)
     docs = spark.read.parquet(os.path.join(src, "documents.parquet"))
     n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    reps = spark.range(REPLICAS).withColumnRenamed("id", "rep")
     # Replica transform must be a BIJECTION on texts (within-replica
     # dup/near-dup structure identical to the source) with ZERO
     # cross-replica shingle overlap (no cross-replica near-dups) —
@@ -337,13 +324,12 @@ def synth_10x(spark, src: str, dst: str) -> None:
 
 # --- streaming state-scale measurement (VERDICT r05 item 8) -----------
 #
-# The batch section measures shuffle bytes; the streaming analog of
-# "does this scale" is STATE-STORE growth under watermark: session
-# windows hold one row per open (user, session), the stream-stream
-# interval join buffers both sides until watermark + join-window pass.
-# Measured from StreamingQueryProgress.stateOperators (public API) at
-# both SFs, over multi-batch AvailableNow runs so watermark eviction
-# actually executes between micro-batches.
+# The streaming analog of "does this scale" is STATE-STORE growth under
+# watermark: session windows hold one row per open (user, session), the
+# stream-stream interval join buffers both sides until watermark +
+# join-window pass.  Measured from StreamingQueryProgress.stateOperators
+# (public API) at both sizes, over multi-batch AvailableNow runs so
+# watermark eviction actually executes between micro-batches.
 
 STREAM_QUERIES = [
     (
@@ -392,17 +378,15 @@ _UPDATE_MODE = {
 }
 
 
-def measure_streaming(spark, sf_label: str, sf_dir: str, results: dict, names=None) -> None:
-    import tempfile
-    import time as _t
-
+def measure_streaming(spark, sf_dir: str) -> dict[str, dict]:
+    """One record per ``STREAM_QUERIES`` job at ``sf_dir``: wall
+    seconds, input rows, batches, and the peak state rows and bytes."""
     from swisscourtrulingcorpus_spark.streaming.jobs import (
         purchase_attribution_stream,
+        read_events_stream,
         session_counts_stream,
         tumbling_counts_stream,
     )
-
-    from swisscourtrulingcorpus_spark.streaming.jobs import read_events_stream
     from swisscourtrulingcorpus_spark.streaming.stateful import (
         cusum_drift_stream,
         cusum_history_refs,
@@ -412,9 +396,7 @@ def measure_streaming(spark, sf_label: str, sf_dir: str, results: dict, names=No
 
     def _cusum_stream(s):
         # history-derived constants from the batch table at this SF —
-        # the ONE shared definition (streaming/stateful.py); computed
-        # lazily so a `names` filter that excludes the CUSUM stream
-        # never pays the two aggregation jobs
+        # the ONE shared definition (streaming/stateful.py)
         from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
         refs, hs = cusum_history_refs(load_table(spark, sf_dir, "events"))
@@ -444,176 +426,64 @@ def measure_streaming(spark, sf_label: str, sf_dir: str, results: dict, names=No
         "stream_user_profile_state": user_profile_stream,
         "stream_ewma_gap_state": ewma_gap_stream,
     }
-    claims = dict(STREAM_QUERIES)
+    results = {}
     # the 10x events table is written as a 32-part directory, the 1x
     # fixture is one file; cap files/trigger so both run >= 1 batch and
     # the 10x run sees ~8 watermark advances
     for name, maker in makers.items():
-        if names is not None and name not in names:
-            continue
-        stream = read_events_stream(spark, sf_dir, max_files=4)
-        out = maker(stream)
-        ckpt = tempfile.mkdtemp(prefix=f"ckpt_sm_{name}_{sf_label}_")
-        t0 = _t.time()
-        q = (
-            out.writeStream.format("noop")
-            .outputMode("update" if name in _UPDATE_MODE else "append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = _t.time() - t0
-        progresses = q.recentProgress
-        state_rows_max = 0
-        state_mb_max = 0.0
-        input_rows = 0
-        batches = 0
-        for p in progresses:
+        out = maker(read_events_stream(spark, sf_dir, max_files=4))
+        with tempfile.TemporaryDirectory(prefix=f"ckpt_sm_{name}_") as ckpt:
+            t0 = time.time()
+            q = (
+                out.writeStream.format("noop")
+                .outputMode("update" if name in _UPDATE_MODE else "append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            wall_s = round(time.time() - t0, 2)
+        rec = {"wall_s": wall_s, "rows": 0, "batches": 0,
+               "state_rows_max": 0, "state_bytes_max": 0}
+        for p in q.recentProgress:
             if isinstance(p, str):
                 p = json.loads(p)
-            batches += 1
-            input_rows += int(p.get("numInputRows") or 0)
             ops = p.get("stateOperators") or []
-            rows = sum(int(op.get("numRowsTotal") or 0) for op in ops)
-            mem = sum(int(op.get("memoryUsedBytes") or 0) for op in ops)
-            state_rows_max = max(state_rows_max, rows)
-            state_mb_max = max(state_mb_max, mem / 1e6)
-        rec = results.setdefault(name, {"claim": claims[name]})
-        rec[sf_label] = {
-            "wall_s": round(wall, 2),
-            "rows": input_rows,
-            "batches": batches,
-            "state_rows_max": state_rows_max,
-            "state_mb_max": round(state_mb_max, 2),
-            # generic alpha pass reads shuffle_write_mb; state bytes
-            # are the streaming analog of bytes moved
-            "shuffle_write_mb": round(state_mb_max, 2),
-        }
-        print(
-            f"{sf_label:>3} {name:32s} {wall:7.2f}s in={input_rows:>9} "
-            f"batches={batches} stateRows={state_rows_max:>8} "
-            f"stateMB={state_mb_max:8.2f}",
-            flush=True,
-        )
+            rec["batches"] += 1
+            rec["rows"] += int(p.get("numInputRows") or 0)
+            rec["state_rows_max"] = max(rec["state_rows_max"], sum(int(op.get("numRowsTotal") or 0) for op in ops))
+            rec["state_bytes_max"] = max(rec["state_bytes_max"], sum(int(op.get("memoryUsedBytes") or 0) for op in ops))
+        print(sf_dir, name, json.dumps(rec), flush=True)
+        results[name] = rec
+    return results
 
 
 def main() -> None:
-    args = list(sys.argv[1:])
-    only: set[str] | None = None
-    if "--only" in args:
-        i = args.index("--only")
-        only = set(args[i + 1].split(","))
-        del args[i : i + 2]
-    out_json = args[0] if args else "SCALE_MEASURE.json"
+    if len(sys.argv) not in (3, 4):
+        raise SystemExit("usage: python tools/scale_measure.py SRC DST [OUT_JSON]")
+    src, dst = sys.argv[1:3]
+    out_json = sys.argv[3] if len(sys.argv) == 4 else "SCALE_STREAM.json"
 
-    from pyspark.sql import SparkSession
+    from gate_profile import alpha, size_label
+    from swisscourtrulingcorpus_spark.session import get_spark
 
-    from gate_profile import newest_execution, window_totals
-
-    from swisscourtrulingcorpus_spark.plans import registry
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("scale-measure")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    big_dir = "/tmp/scale_sf1"
-    print("synthesizing 10x corpus (idempotent per table) ...", flush=True)
-    synth_10x(spark, SF_DIR, big_dir)
-
-    qs = registry.queries()
-    results: dict[str, dict] = {}
-    if only is not None and os.path.exists(out_json):
-        # --only: measure a subset, merge over the existing file
-        with open(out_json) as fh:
-            results = json.load(fh)
-    if only is not None:
-        unknown = only - {n for n, _ in QUERIES} - {n for n, _ in STREAM_QUERIES}
-        if unknown:
-            # fail fast — a typo must not silently rewrite the JSON
-            # with zero new measurements (r05 review)
-            raise SystemExit(
-                f"--only names not in QUERIES/STREAM_QUERIES: {sorted(unknown)}"
-            )
-    todo = [(n, c) for n, c in QUERIES if only is None or n in only]
-    stream_todo = [n for n, _ in STREAM_QUERIES if only is None or n in only]
-    # warm the JVM/codegen once so the first measured query isn't
-    # billed for startup
-    qs["exact_dedup_documents"](spark, SF_DIR).count()
-    for sf_label, sf_dir in (("1x", SF_DIR), ("10x", big_dir)):
-        for name, claim in todo:
-            # warm run first (codegen compile for this plan), then the
-            # measured run with a status-store window around it.
-            # Execution is a NOOP WRITE, not .count(): count() lets
-            # Catalyst prune aggregate functions (group keys survive
-            # but computed columns don't), and a one-row ungrouped
-            # aggregate — or a union of them, like fd_check_lineitem —
-            # prunes to NOTHING (measured: 64 shuffle records instead
-            # of 21M).  The noop sink consumes every column, so the
-            # measured run executes the full plan.  rows is taken from
-            # a separate count() — it's the OUTPUT row count metric,
-            # unaffected by how the measured run executes.
-            def _exec():
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-
-            _exec()
-            spark.sparkContext.setJobGroup(name, f"{name}@{sf_label}")
-            newest = newest_execution(spark)
-            t0 = time.time()
-            _exec()
-            wall = time.time() - t0
-            shuffle_mb = window_totals(spark, newest)["shuffle_write_bytes"] / 1e6
-            rows = qs[name](spark, sf_dir).count()
-            rec = results.setdefault(name, {"claim": claim})
-            rec[sf_label] = {
-                "wall_s": round(wall, 2),
-                "rows": rows,
-                "shuffle_write_mb": round(shuffle_mb, 2),
-            }
-            print(
-                f"{sf_label:>3} {name:32s} {wall:7.2f}s rows={rows:>9} "
-                f"shW={shuffle_mb:8.2f}MB",
-                flush=True,
-            )
-        if stream_todo:
-            measure_streaming(spark, sf_label, sf_dir, results, stream_todo)
-
-    import math
-
-    for name, rec in results.items():
-        # a partial run (crash between SF loops, or an --only merge
-        # over a half-measured file) leaves one SF missing; skip the
-        # entry instead of KeyError-ing away every fresh measurement
-        if "1x" not in rec or "10x" not in rec:
-            continue
-        a, b = rec["1x"], rec["10x"]
-        rec["alpha_wall"] = round(math.log10(max(b["wall_s"], 0.01) / max(a["wall_s"], 0.01)), 2)
-        rec["alpha_rows"] = round(
-            math.log10(max(b["rows"], 1) / max(a["rows"], 1)), 2
-        )
-        if "state_rows_max" in a and "state_rows_max" in b:
-            rec["alpha_state_rows"] = round(
-                math.log10(max(b["state_rows_max"], 1) / max(a["state_rows_max"], 1)), 2
-            )
-        sw_a, sw_b = a["shuffle_write_mb"], b["shuffle_write_mb"]
-        rec["alpha_shuffle"] = (
-            round(math.log10(max(sw_b, 0.01) / max(sw_a, 0.01)), 2)
-            if sw_a > 0.05
-            else None
-        )
+    spark = get_spark(app_name="scale_measure")
+    spark.sparkContext.setLogLevel("ERROR")
+    print(f"synthesizing the 10x copy of {src} into {dst} ...", flush=True)
+    synth_10x(spark, src, dst)
+    small, big = measure_streaming(spark, src), measure_streaming(spark, dst)
+    results = {
+        name: {
+            "claim": claim,
+            size_label(src): small[name],
+            size_label(dst): big[name],
+            "alpha": alpha(small[name], big[name]),
+        }
+        for name, claim in STREAM_QUERIES
+    }
     with open(out_json, "w") as fh:
         json.dump(results, fh, indent=1)
-    print(f"\nwrote {out_json}")
+    print(f"wrote {out_json}")
     spark.stop()
 
 
