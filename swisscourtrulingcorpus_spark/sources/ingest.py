@@ -25,9 +25,13 @@ against a local fixture tree:
   scraper's incremental check at `scraper.py:80-93`).
 
 At scale: binaryFile splits by file; a landing zone of millions of
-small files is parallel by count, the (spider, name) pivot shuffles
-(key, payload) once, and the manifest anti-join broadcasts while the
-manifest is young (see `sources/manifest.py`).
+small files is parallel by count.  The manifest anti-join runs on the
+file rows, broadcast while the manifest is young (see
+`sources/manifest.py`), so the (spider, name) pivot shuffles and the
+HTML/PDF extractors see only the new documents' files.  The batch
+takes its partition count from the listing, not from
+``spark.sql.shuffle.partitions`` (:func:`batch_partitions`), and every
+cache and table write of the corpus build downstream inherits it.
 
 Demo: ``python -m swisscourtrulingcorpus_spark.sources.ingest /tmp/lz``
 writes a deterministic fixture tree (if absent), ingests it, prints
@@ -306,12 +310,58 @@ def parse_file_paths(files: DataFrame) -> DataFrame:
     )
 
 
+# Listed landing-zone files per batch partition: about 1000 documents
+# at a json metadata file plus one payload per document.
+FILES_PER_PARTITION = 2048
+
+
+def batch_partitions(files: DataFrame) -> int:
+    """Partitions of a landing-zone batch: one per ~1000 listed
+    documents, ``clamp(ceil(listed_files / FILES_PER_PARTITION), 1,
+    defaultParallelism)``.
+
+    Why rows and not ``spark.sql.shuffle.partitions``: each partition
+    of the batch is one task in each of the build's three Python stages
+    (the ingest's HTML/PDF UDFs, clean_text, the document pass), and a
+    Python task pays a fixed cost before it sees a row.  Measured on a
+    4-core ``local[4]`` box, it is about 0.23 s of worker CPU per task,
+    most of it in ``pyspark.worker_util.setup_spark_files``, whose
+    ``importlib.invalidate_caches()`` re-reads the directory of
+    ``pyspark.zip`` once for each of 16 zip importers.  That is about
+    0.7 s per partition over the three stages, plus one cold worker
+    start, against about 0.9 ms of kernel work per document
+    (perfbench's ``extraction.*_us_per_doc``): a partition must hold
+    about a thousand documents before its rows cost what its fixed
+    overhead does.  At 8 shuffle partitions a 50-document append ran
+    24 such tasks.  The lower bound is 1, not the core count: when the
+    batch still followed ``spark.sql.shuffle.partitions``, changing
+    only that conf, a 500-document build took 15.6 / 12.8 / 12.3 /
+    11.7 s at 8 / 4 / 2 / 1 partitions, and a 50-document append
+    15.0 / 12.8 / 11.8 s at 8 / 4 / 1 (4 cores, 3 seeds each, cold
+    operation).
+
+    ``listed_files`` is the length of the scan's file index, read in
+    one call: ``DataFrame.inputFiles()`` would fetch every path."""
+    listed = len(files._jdf.inputFiles())
+    parallelism = files.sparkSession.sparkContext.defaultParallelism
+    return min(max(1, -(-listed // FILES_PER_PARTITION)), parallelism)
+
+
 def docs_from_scanned_files(
     files: DataFrame, manifest: DataFrame | None = None
 ) -> DataFrame:
     """(spider, name, ext, content) file rows -> one typed row per
     DOCUMENT — the shared transformation behind the batch ingest and
-    the per-micro-batch body of the streaming ingest job."""
+    the per-micro-batch body of the streaming ingest job.
+
+    ``manifest`` rows name already-processed documents by any of the
+    file rows' key columns (its own columns: ``(spider, name)`` or
+    ``name`` alone).  They are anti-joined away from the FILE rows,
+    before the pivot, so the shuffle and the HTML/PDF extractors see
+    only new documents.  The remaining file rows are hash-partitioned
+    by (spider, name) into :func:`batch_partitions` of the listing
+    before the pivot, which keeps that partitioning: the documents
+    come out in that many partitions."""
     from swisscourtrulingcorpus_spark.extraction.html import (
         html_to_text_spider_udf,
     )
@@ -320,8 +370,12 @@ def docs_from_scanned_files(
     )
     from swisscourtrulingcorpus_spark.sources.manifest import new_rows_only
 
+    partitions = batch_partitions(files)
+    if manifest is not None:
+        files = new_rows_only(files, manifest, manifest.columns)
     by_doc = (
-        files.groupBy("spider", "name")
+        files.repartition(partitions, "spider", "name")
+        .groupBy("spider", "name")
         .agg(
             F.max(F.when(F.col("ext") == "json", F.col("content"))).alias("__json"),
             F.max(
@@ -330,7 +384,6 @@ def docs_from_scanned_files(
             F.max(F.when(F.col("ext") == "pdf", F.col("content"))).alias("__pdf"),
         )
     )
-    by_doc = new_rows_only(by_doc, manifest, ["spider", "name"])
     meta = F.from_json(F.decode("__json", "UTF-8"), METADATA_SCHEMA)
     html_text = html_to_text_spider_udf(
         F.decode("__html", "UTF-8"), F.col("spider")
@@ -361,8 +414,10 @@ def ingest_landing_zone(
 ) -> DataFrame:
     """Landing zone -> one typed row per DOCUMENT:
     (spider, name, signatur, num, datum, html_url, pdf_url, text,
-    source_format).  ``manifest`` (spider, name) keys are skipped —
-    re-running over an unchanged tree ingests nothing.
+    source_format), in :func:`batch_partitions` partitions.
+    ``manifest`` keys (``(spider, name)``, or ``name`` alone) are
+    skipped before any text is extracted — re-running over an
+    unchanged tree ingests nothing.
     """
     return docs_from_scanned_files(scan_landing_zone(spark, root), manifest)
 

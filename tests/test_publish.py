@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pytest
 
@@ -109,35 +110,227 @@ def test_manifest_is_append_only(spark, tmp_path):
     assert _leftovers(out) == []
 
 
-def test_landing_zone_read_once_per_build(spark, tmp_path):
-    """Only one SQL execution of a build scans the landing zone (the
-    empty check fills the cached batch; the table writes and the
-    manifest keys read the cache), and one writes the manifest."""
+def _newest_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store, -1 before
+    the first."""
+    from perfbench.bench_trace import drain_listener_bus, execution_count
+
+    drain_listener_bus(spark)
+    n = execution_count(spark)
+    store = spark._jsparkSession.sharedState().statusStore()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def _plan_nodes(spark, execution_id: int, prefixes) -> list[dict]:
+    """(name, desc, sum metrics) of the plan-graph nodes of one
+    execution whose name starts with one of ``prefixes``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    values = {}
+    it = store.executionMetrics(execution_id).iterator()
+    while it.hasNext():
+        kv = it.next()
+        values[kv._1()] = str(kv._2())
+    nodes = store.planGraph(execution_id).allNodes()
+    out = []
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if not node.name().startswith(prefixes):
+            continue
+        ms, metrics = node.metrics(), {}
+        for j in range(ms.size()):
+            m = ms.apply(j)
+            if m.metricType() == "sum" and m.accumulatorId() in values:
+                metrics[m.name()] = int(values[m.accumulatorId()].replace(",", ""))
+        out.append({"name": node.name(), "desc": node.desc(), "metrics": metrics})
+    return out
+
+
+def _build_window(spark, out: str, build) -> tuple[dict, list[dict]]:
+    """Run ``build()``; return its result and the SQL executions it ran,
+    each with its physical plan and its Python, exchange and scan
+    nodes.
+
+    The executions are selected by id, not by list index: the status
+    store evicts its oldest executions once it holds
+    ``spark.sql.ui.retainedExecutions``, which shifts every index.  The
+    window's list index is derived from the ids (consecutive, one per
+    execution) when it closes, and a window the store no longer holds
+    whole fails here."""
     from perfbench.bench_trace import execution_count, harvest
 
+    before = _newest_execution_id(spark)
+    result = build()
+    last = _newest_execution_id(spark)
+    first = execution_count(spark) - (last - before)
+    execs = harvest(spark, first, out, TABLES)["executions"]
+    ids = [e["id"] for e in execs]
+    assert ids == list(range(before + 1, last + 1)), (
+        f"status store window after execution {before} holds {ids}"
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    for e in execs:
+        e["plan"] = store.execution(e["id"]).get().physicalPlanDescription()
+        e["nodes"] = _plan_nodes(
+            spark, e["id"], ("ArrowEvalPython", "Exchange", "Scan")
+        )
+    return result, execs
+
+
+def _landing_zone_files(root: str, names=None) -> int:
+    """Files under ``root`` the ingest's binaryFile scan lists, of the
+    documents ``names`` (default: all)."""
+    stems = names or ["*"]
+    return sum(
+        len(glob.glob(os.path.join(root, "*", f"{stem}.{ext}")))
+        for stem in stems
+        for ext in ("json", "html", "htm", "pdf", "txt")
+    )
+
+
+_LOCATION = re.compile(r"Location: \w+(?:\(\d+ paths?\))? ?\[([^\]]+)\]")
+_ELIDED = re.compile(r"\.\.\. (\d+) entries")
+
+
+def _table_paths_read(plan: str, out: str) -> int:
+    """How many table directories under ``out`` the scans of a physical
+    plan read.  A long path list prints its first paths, then
+    ``... N entries``."""
+    n = 0
+    for loc in _LOCATION.findall(plan):
+        shown = [p.strip() for p in loc.split(",")]
+        elided = _ELIDED.fullmatch(shown[-1])
+        if elided:
+            shown.pop()
+        rel = [os.path.relpath(p.removeprefix("file:"), out) for p in shown]
+        if set(rel) <= set(TABLES):
+            n += len(shown) + (int(elided.group(1)) if elided else 0)
+    return n
+
+
+@pytest.fixture(scope="module")
+def daily_runs(spark, tmp_path_factory):
+    """Three landing-zone builds into one corpus: 24 documents, an
+    append of 6 more, and a no-op rerun.  Per run: the documents, the
+    files the ingest's scan lists, the returned counts, the SQL
+    executions it ran, each table's part files and each table's rows
+    read back with ``count()``."""
     from swisscourtrulingcorpus_spark.sources.ingest import (
         write_rich_fixture_tree,
     )
 
-    root = str(tmp_path / "lz")
-    out = str(tmp_path / "corpus")
-    for n_docs in (24, 30):
-        write_rich_fixture_tree(root, n_docs)
-        # the files the ingest's binaryFile scan reads
-        scanned = sum(
-            len(glob.glob(os.path.join(root, "*", f"*.{ext}")))
-            for ext in ("json", "html", "htm", "pdf", "txt")
+    tmp = tmp_path_factory.mktemp("daily")
+    root, out = str(tmp / "lz"), str(tmp / "c")
+    runs = []
+    for n_docs in (24, 30, 30):
+        names = write_rich_fixture_tree(root, n_docs)
+        counts, execs = _build_window(
+            spark, out, lambda: build_corpus_from_landing_zone(spark, root, out)
         )
-        first = execution_count(spark)
-        counts = build_corpus_from_landing_zone(spark, root, out)
-        assert counts["decision"] == n_docs
-        execs = harvest(spark, first, out, TABLES)["executions"]
-        lz_scans = [
-            e for e in execs
-            if e["metrics"].get("number of files read", 0) >= scanned
-        ]
+        runs.append({
+            "root": root,
+            "out": out,
+            "names": names,
+            "scanned": _landing_zone_files(root),
+            "counts": counts,
+            "executions": execs,
+            "parts": {
+                t: sorted(glob.glob(os.path.join(out, t, "part-*")))
+                for t in (*TABLES, "_manifest")
+            },
+            "rows": {
+                t: spark.read.parquet(os.path.join(out, t)).count()
+                for t in TABLES
+            },
+        })
+    return runs
+
+
+def _landing_zone_scans(run) -> list[dict]:
+    return [
+        e for e in run["executions"]
+        if e["metrics"].get("number of files read", 0) >= run["scanned"]
+    ]
+
+
+def test_landing_zone_read_once_per_build(daily_runs):
+    """Only one SQL execution of a build scans the landing zone (the
+    empty check fills the cached batch; the table writes and the
+    manifest keys read the cache), and one writes the manifest."""
+    for run, n_docs in zip(daily_runs, (24, 30)):
+        assert run["counts"]["decision"] == n_docs
+        execs = run["executions"]
+        lz_scans = _landing_zone_scans(run)
         assert len(lz_scans) == 1, [(e["step"], e["metrics"]) for e in execs]
         assert [e["step"] for e in execs].count("manifest") == 1
+
+
+def test_one_part_file_per_table_per_run(daily_runs):
+    """The batch's partition count follows its documents, not
+    ``spark.sql.shuffle.partitions`` (32 in the tests' session): a
+    24-document build writes one part file per table, a 6-document
+    append adds one more, and a no-op rerun adds none."""
+    first, append, noop = (run["parts"] for run in daily_runs)
+    for t in (*TABLES, "_manifest"):
+        assert len(first[t]) == 1, (t, first[t])
+        assert set(first[t]) < set(append[t]), t
+        assert len(append[t]) == 2, (t, append[t])
+        assert noop[t] == append[t], t
+
+
+def test_only_new_documents_reach_the_ingest_python(daily_runs):
+    """The manifest anti-join runs on the file rows: the append's pivot
+    shuffles only the 6 new documents' files, its HTML/PDF extraction
+    sees only those 6 documents, and it scans the manifest once."""
+    run = daily_runs[1]
+    new_names = run["names"][24:]
+    [scan] = _landing_zone_scans(run)
+    python = [n for n in scan["nodes"] if n["name"] == "ArrowEvalPython"]
+    assert [n["metrics"]["number of output rows"] for n in python] == [6]
+    pivot = [
+        n for n in scan["nodes"]
+        if n["name"] == "Exchange"
+        and ("REPARTITION_BY_NUM" in n["desc"]
+             or "hashpartitioning(spider" in n["desc"])
+    ]
+    assert len(pivot) == 1, [n["desc"] for n in scan["nodes"]]
+    new_files = _landing_zone_files(run["root"], new_names)
+    assert new_files == 12
+    assert pivot[0]["metrics"]["shuffle records written"] == new_files
+    assert pivot[0]["metrics"]["records read"] == new_files
+    # a cached plan's scan shows in every execution that reads the
+    # cache; only the execution that runs it counts files read
+    manifest = os.path.join(run["out"], "_manifest") + "]"
+    manifest_scans = [
+        e for e in run["executions"]
+        for n in e["nodes"]
+        if n["name"].startswith("Scan") and manifest in n["desc"]
+        and n["metrics"].get("number of files read", 0) > 0
+    ]
+    assert len(manifest_scans) == 1, [e["step"] for e in manifest_scans]
+
+
+def test_one_recount_per_build(daily_runs):
+    """Each build returns the rows each table holds, counted in one
+    execution that reads all seven tables; the no-op rerun returns
+    zeros and reads no table."""
+    first, append, noop = daily_runs
+    for run in (first, append):
+        assert run["counts"] == run["rows"]
+        readers = [
+            e for e in run["executions"]
+            if _table_paths_read(e["plan"], run["out"])
+        ]
+        assert len(readers) == 1, [(e["step"], e["description"]) for e in readers]
+        assert _table_paths_read(readers[0]["plan"], run["out"]) == len(TABLES)
+        assert readers[0]["metrics"]["number of files read"] == sum(
+            len(run["parts"][t]) for t in TABLES
+        )
+    assert append["counts"]["decision"] == 30
+    assert noop["counts"] == {t: 0 for t in TABLES}
+    assert noop["rows"] == append["rows"]
+    assert not any(
+        _table_paths_read(e["plan"], noop["out"]) for e in noop["executions"]
+    )
 
 
 def test_corrupt_manifest_raises_and_keeps_tables(spark, tmp_path):
