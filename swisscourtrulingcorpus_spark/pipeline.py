@@ -77,15 +77,21 @@ def _read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
     failure (a corrupt part file, say) raises, at the latest in the
     build's first execution, before any table is written: treating it
     as missing would re-extract the whole landing zone and overwrite
-    every table."""
+    every table.  A manifest directory that lists no data file (only
+    the ``_temporary`` of a crashed first write, say) raises too: a
+    build writes its manifest part only when it wrote rows, and read
+    as empty it would re-extract the whole landing zone and append
+    duplicates to every table."""
+    path = _manifest_path(out_dir)
     try:
-        return spark.read.schema(_MANIFEST_SCHEMA).parquet(
-            _manifest_path(out_dir)
-        )
+        manifest = spark.read.schema(_MANIFEST_SCHEMA).parquet(path)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
+    if not len(manifest._jdf.inputFiles()):
+        raise RuntimeError(f"manifest {path} exists but lists no data file")
+    return manifest
 
 
 def _recount(spark: SparkSession, out_dir: str) -> dict[str, int]:

@@ -340,6 +340,18 @@ def batch_partitions(files: DataFrame) -> int:
     15.0 / 12.8 / 11.8 s at 8 / 4 / 1 (4 cores, 3 seeds each, cold
     operation).
 
+    The divisor is unverified above one partition: it decides only
+    batches of more than 2048 listed files, and there untimed
+    perfbench (4 cores, one cold operation, 6 seeds per setting in
+    rotated order) cannot tell its choice from its neighbours.
+    corpus_build took 12.8 / 12.1 / 12.1 s (median) at 1 / 2 / 4
+    partitions for 2000 documents, where the rule picks 2, and
+    19.3 / 16.6 / 18.3 s for 8000 documents, where it picks 4; the
+    runs of one setting spread over 3 to 9 s.  A 50-document append
+    onto an 8000-document landing zone (16100 listed files, so 4
+    partitions) took 16.4 s against 18.9 s at 1 partition (4 seeds,
+    3 of 4 pairs won).
+
     ``listed_files`` is the length of the scan's file index, read in
     one call: ``DataFrame.inputFiles()`` would fetch every path."""
     listed = len(files._jdf.inputFiles())
@@ -348,7 +360,9 @@ def batch_partitions(files: DataFrame) -> int:
 
 
 def docs_from_scanned_files(
-    files: DataFrame, manifest: DataFrame | None = None
+    files: DataFrame,
+    manifest: DataFrame | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """(spider, name, ext, content) file rows -> one typed row per
     DOCUMENT — the shared transformation behind the batch ingest and
@@ -358,10 +372,12 @@ def docs_from_scanned_files(
     file rows' key columns (its own columns: ``(spider, name)`` or
     ``name`` alone).  They are anti-joined away from the FILE rows,
     before the pivot, so the shuffle and the HTML/PDF extractors see
-    only new documents.  The remaining file rows are hash-partitioned
-    by (spider, name) into :func:`batch_partitions` of the listing
-    before the pivot, which keeps that partitioning: the documents
-    come out in that many partitions."""
+    only new documents.  With ``partitions`` (the batch ingest passes
+    :func:`batch_partitions` of its listing) the remaining file rows
+    are hash-partitioned by (spider, name) into that many partitions
+    before the pivot, which keeps that partitioning; without it (a
+    streaming micro-batch, whose frame has no file listing) the pivot
+    shuffles into ``spark.sql.shuffle.partitions``."""
     from swisscourtrulingcorpus_spark.extraction.html import (
         html_to_text_spider_udf,
     )
@@ -370,12 +386,12 @@ def docs_from_scanned_files(
     )
     from swisscourtrulingcorpus_spark.sources.manifest import new_rows_only
 
-    partitions = batch_partitions(files)
     if manifest is not None:
         files = new_rows_only(files, manifest, manifest.columns)
+    if partitions is not None:
+        files = files.repartition(partitions, "spider", "name")
     by_doc = (
-        files.repartition(partitions, "spider", "name")
-        .groupBy("spider", "name")
+        files.groupBy("spider", "name")
         .agg(
             F.max(F.when(F.col("ext") == "json", F.col("content"))).alias("__json"),
             F.max(
@@ -419,7 +435,8 @@ def ingest_landing_zone(
     skipped before any text is extracted — re-running over an
     unchanged tree ingests nothing.
     """
-    return docs_from_scanned_files(scan_landing_zone(spark, root), manifest)
+    files = scan_landing_zone(spark, root)
+    return docs_from_scanned_files(files, manifest, batch_partitions(files))
 
 
 def main() -> None:  # pragma: no cover - demo CLI

@@ -5,6 +5,7 @@ extractors, with incremental manifest skip."""
 from __future__ import annotations
 
 import os
+import re
 
 from swisscourtrulingcorpus_spark.sources.ingest import (
     ingest_landing_zone,
@@ -151,6 +152,50 @@ def test_streaming_ingest_exactly_once(spark, tmp_path):
     assert row["signatur"] == "CH_BGer.7777"  # metadata kept
     assert "Nachgereichtes Urteil." in row["text"]  # payload merged in
     assert row["source_format"] == "html"
+
+
+def _pivot_exchange(docs) -> str:
+    """The shuffle feeding ``docs``' (spider, name) pivot, as the
+    physical plan names it before adaptive execution coalesces it."""
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    (exchange,) = re.findall(
+        r"Exchange (SinglePartition|hashpartitioning\(spider#\d+, name#\d+, \d+\))",
+        plan,
+    )
+    return re.sub(r"#\d+", "", exchange)
+
+
+def test_only_the_batch_ingest_sizes_its_pivot_by_its_listing(
+    spark, tmp_path, monkeypatch
+):
+    """The batch ingest shuffles its 8 documents into one partition,
+    sized from the listing.  A streaming micro-batch's frame lists no
+    file, so its pivot must keep ``spark.sql.shuffle.partitions``
+    rather than collapse a whole landing zone's extraction into one
+    task."""
+    import swisscourtrulingcorpus_spark.sources.ingest as ingest
+    from swisscourtrulingcorpus_spark.streaming.jobs import (
+        stream_ingest_landing_zone_job,
+    )
+
+    root = str(tmp_path / "lz")
+    write_fixture_tree(root, n_docs=4)
+    assert _pivot_exchange(ingest_landing_zone(spark, root)) == "SinglePartition"
+
+    pivots = []
+    real = ingest.docs_from_scanned_files
+
+    def recording(*args, **kwargs):
+        docs = real(*args, **kwargs)
+        pivots.append(_pivot_exchange(docs))
+        return docs
+
+    monkeypatch.setattr(ingest, "docs_from_scanned_files", recording)
+    stream_ingest_landing_zone_job(
+        spark, root, str(tmp_path / "docs"), str(tmp_path / "ckpt")
+    ).awaitTermination()
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    assert pivots == [f"hashpartitioning(spider, name, {conf})"]
 
 
 def test_pdf_length_preferred_when_consistent_ignored_when_lying():

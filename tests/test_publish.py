@@ -339,16 +339,7 @@ def test_corrupt_manifest_raises_and_keeps_tables(spark, tmp_path):
     landing zone and overwrites every table."""
     out = tmp_path / "corpus"
     build_corpus(spark, raw_corpus_df(spark, 12), str(out))
-
-    def table_files():
-        return {
-            str(p.relative_to(out)): p.read_bytes()
-            for t in TABLES
-            for p in (out / t).rglob("*")
-            if p.is_file()
-        }
-
-    before = table_files()
+    before = _table_files(out)
     manifest = out / "_manifest"
     for part in manifest.glob("*.parquet"):
         part.unlink()
@@ -356,4 +347,33 @@ def test_corrupt_manifest_raises_and_keeps_tables(spark, tmp_path):
 
     with pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
         build_corpus(spark, raw_corpus_df(spark, 16), str(out))
-    assert table_files() == before
+    assert _table_files(out) == before
+
+
+def test_manifest_without_data_files_raises_and_keeps_tables(spark, tmp_path):
+    """A manifest directory holding only a crashed write's
+    ``_temporary`` reads as an empty manifest under its known schema;
+    the incremental build must raise rather than re-extract every
+    document and append duplicates to the tables."""
+    out = tmp_path / "corpus"
+    build_corpus(spark, raw_corpus_df(spark, 12), str(out))
+    before = _table_files(out)
+    manifest = out / "_manifest"
+    for p in manifest.iterdir():
+        p.unlink()
+    attempt = manifest / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000.snappy.parquet").write_bytes(b"")
+
+    with pytest.raises(RuntimeError, match="lists no data file"):
+        build_corpus(spark, raw_corpus_df(spark, 16), str(out))
+    assert _table_files(out) == before
+
+
+def _table_files(out) -> dict[str, bytes]:
+    return {
+        str(p.relative_to(out)): p.read_bytes()
+        for t in TABLES
+        for p in (out / t).rglob("*")
+        if p.is_file()
+    }
