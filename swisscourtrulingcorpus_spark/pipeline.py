@@ -9,8 +9,10 @@ driver program:
 - the inter-stage IR is a parquet (lakehouse) directory — one table per
   domain entity, same names as the reference's schema;
 - incremental processing (`process_new_files_only`,
-  `abstract_preprocessor.py:48`) is the manifest anti-join: a second
-  run over the same landing zone extracts only unseen file_names;
+  `abstract_preprocessor.py:48`) anti-joins the batch against the
+  decision table's file_names, the reference's "already in DB" check
+  (`text_to_database.py:135-145`): a second run over the same landing
+  zone extracts only unseen file_names, and no second list is kept;
 - dataset creators read the materialized tables and write
   split-partitioned exports (S10/S11).
 
@@ -45,7 +47,9 @@ from swisscourtrulingcorpus_spark.plans.domain_pipeline import (
     pretraining_dataset,
     run_extraction_pipeline,
 )
-from swisscourtrulingcorpus_spark.sources.manifest import (
+# processed_union is unused here; perfbench's traced run wraps it as
+# ``pipeline.processed_union``, so the name stays importable
+from swisscourtrulingcorpus_spark.sources.manifest import (  # noqa: F401
     new_rows_only,
     processed_union,
 )
@@ -61,37 +65,36 @@ TABLES = (
     "participation",
 )
 
-_MANIFEST_KEYS = ["file_name"]
-_MANIFEST_SCHEMA = "file_name string"
+_KEYS = ["file_name"]
 
 
-def _manifest_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_manifest")
+def _processed_keys(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The file_names the corpus holds, or None before the first build.
 
-
-def _read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The processed-files manifest, or None before the first build.
-
-    Read with its known schema, so no schema-inference job runs.  Only
-    a missing manifest means "nothing processed yet".  Any other read
-    failure (a corrupt part file, say) raises, at the latest in the
-    build's first execution, before any table is written: treating it
-    as missing would re-extract the whole landing zone and overwrite
-    every table.  A manifest directory that lists no data file (only
-    the ``_temporary`` of a crashed first write, say) raises too: a
-    build writes its manifest part only when it wrote rows, and read
-    as empty it would re-extract the whole landing zone and append
-    duplicates to every table."""
-    path = _manifest_path(out_dir)
+    The decision table is the build's manifest: its ``file_name``
+    column is the processed set, read with its known schema (no
+    schema-inference job; parquet reads that one column chunk).  The
+    build writes ``decision`` last of the seven tables, so it names the
+    documents of finished runs only.  Only a missing table means
+    "nothing processed yet".  Any other read failure (a corrupt part
+    file, say) raises, at the latest in the build's first execution,
+    before any table is written: treating it as missing would
+    re-extract the whole landing zone and overwrite every table.  A
+    decision directory that lists no data file (only the
+    ``_temporary`` of a crashed first write, say) raises too: a build
+    writes ``decision`` only when it wrote rows, and read as empty it
+    would re-extract the whole landing zone and append duplicates to
+    every table."""
+    path = os.path.join(out_dir, "decision")
     try:
-        manifest = spark.read.schema(_MANIFEST_SCHEMA).parquet(path)
+        keys = spark.read.schema("file_name string").parquet(path)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
-    if not len(manifest._jdf.inputFiles()):
-        raise RuntimeError(f"manifest {path} exists but lists no data file")
-    return manifest
+    if not len(keys._jdf.inputFiles()):
+        raise RuntimeError(f"decision table {path} exists but lists no data file")
+    return keys
 
 
 def _recount(spark: SparkSession, out_dir: str) -> dict[str, int]:
@@ -114,25 +117,21 @@ def _write_tables(
     spark: SparkSession, raw: DataFrame, out_dir: str, append: bool
 ) -> dict[str, int]:
     """Extract ``raw`` (new documents only) and write the seven tables
-    and the manifest part of this run; returns cumulative row counts,
-    all zeros when ``raw`` is empty."""
+    of this run; returns cumulative row counts, all zeros when ``raw``
+    is empty."""
     tables = run_extraction_pipeline(raw)
     # clean_text is pruned from this select: it reads the cached base.
     # count, not isEmpty: it fills every partition of the cache in one
     # parallel job, where isEmpty fills partition 0 alone first
-    keys = tables["decision"].select(*_MANIFEST_KEYS)
-    if keys.count() == 0:
+    if tables["decision"].select(*_KEYS).count() == 0:
         return {t: 0 for t in TABLES}
     mode = "append" if append else "overwrite"
-    for name in TABLES:
+    # decision last: its keys are the processed set, so its write is
+    # the run's commit marker; a crash before it leaves the run's
+    # documents unprocessed
+    for name in (*TABLES[1:], TABLES[0]):
         tables[name].write.mode(mode).parquet(os.path.join(out_dir, name))
-    counts = _recount(spark, out_dir)
-    # the run's keys are new by construction (anti-joined upstream), so
-    # publishing them is one appended part
-    processed_union(None, keys, _MANIFEST_KEYS).coalesce(1).write.mode(
-        mode
-    ).parquet(_manifest_path(out_dir))
-    return counts
+    return _recount(spark, out_dir)
 
 
 def build_corpus(
@@ -144,24 +143,23 @@ def build_corpus(
     """Materialize the domain tables from a raw landing-zone batch.
 
     With ``incremental=True`` (the reference's process_new_files_only),
-    already-manifested file_names are anti-joined away and the new rows
-    APPEND to the existing tables; a rerun over an unchanged landing
-    zone is a no-op.  Returns cumulative per-table row counts (all
-    zeros when nothing was new), counted in one execution after the
-    writes.
+    file_names the decision table holds are anti-joined away and the
+    new rows APPEND to the existing tables; a rerun over an unchanged
+    landing zone is a no-op.  Returns cumulative per-table row counts
+    (all zeros when nothing was new), counted in one execution after
+    the writes.
 
     The batch is read once: the empty check fills the pipeline's
-    cached ``base``, and the table writes and the manifest keys are
-    served from it, so every table write has the batch's partition
-    count.  The manifest is append-only, one part per run holding that
-    run's file_names.
+    cached ``base``, and the table writes are served from it, so every
+    table write has the batch's partition count.  ``decision`` is
+    written last; its appended part is the run's commit marker.
     """
-    manifest = _read_manifest(spark, out_dir) if incremental else None
+    done = _processed_keys(spark, out_dir) if incremental else None
     return _write_tables(
         spark,
-        new_rows_only(raw, manifest, _MANIFEST_KEYS),
+        new_rows_only(raw, done, _KEYS),
         out_dir,
-        append=manifest is not None,
+        append=done is not None,
     )
 
 
@@ -178,10 +176,11 @@ def build_corpus_from_landing_zone(
     tables (VERDICT r04 item 8).
 
     Incremental semantics compose below the text extraction: the
-    file_name manifest is read once and passed to the ingest as its
-    ``name`` keys, which anti-joins the already-processed documents'
-    FILES away before the pivot.  An append shuffles and extracts only
-    its new documents, and a rerun over an unchanged tree is a no-op.
+    decision table's file_names are read once and passed to the ingest
+    as its ``name`` keys, which anti-joins the already-processed
+    documents' FILES away before the pivot.  An append shuffles and
+    extracts only its new documents, and a rerun over an unchanged tree
+    is a no-op.
     The batch takes one partition per ~1000 listed documents
     (`sources/ingest.py::batch_partitions`), and each table write of
     the run inherits that count: a daily run writes one file per table
@@ -189,11 +188,9 @@ def build_corpus_from_landing_zone(
     """
     from swisscourtrulingcorpus_spark.sources.ingest import ingest_landing_zone
 
-    manifest = _read_manifest(spark, out_dir) if incremental else None
-    done = (
-        None if manifest is None
-        else manifest.withColumnRenamed("file_name", "name")
-    )
+    done = _processed_keys(spark, out_dir) if incremental else None
+    if done is not None:
+        done = done.withColumnRenamed("file_name", "name")
     # one selectExpr call: the same projection from Column calls cost
     # 46 more py4j round trips per build
     raw = ingest_landing_zone(spark, root, done).selectExpr(
@@ -203,7 +200,7 @@ def build_corpus_from_landing_zone(
         "to_date(datum) AS date",
         "text AS raw_text",
     )
-    return _write_tables(spark, raw, out_dir, append=manifest is not None)
+    return _write_tables(spark, raw, out_dir, append=done is not None)
 
 
 def load_tables(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

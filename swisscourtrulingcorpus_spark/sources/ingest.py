@@ -20,13 +20,14 @@ against a local fixture tree:
 - text comes from the real extractors: per-spider HTML rules
   (`extraction/html.py`) or the pure-python PDF text recovery
   (`extraction/pdf.py`), html preferred like the reference;
-- incremental re-ingest skips already-processed documents via the
-  manifest anti-join (`sources/manifest.py::new_rows_only` — the
-  scraper's incremental check at `scraper.py:80-93`).
+- incremental re-ingest skips already-processed documents via an
+  anti-join against their keys (`sources/manifest.py::new_rows_only` —
+  the scraper's incremental check at `scraper.py:80-93`); the corpus
+  build passes the decision table's file_names.
 
 At scale: binaryFile splits by file; a landing zone of millions of
-small files is parallel by count.  The manifest anti-join runs on the
-file rows, broadcast while the manifest is young (see
+small files is parallel by count.  The anti-join runs on the file
+rows, broadcast while the processed keys are few (see
 `sources/manifest.py`), so the (spider, name) pivot shuffles and the
 HTML/PDF extractors see only the new documents' files.  The batch
 takes its partition count from the listing, not from

@@ -294,40 +294,42 @@ def stream_versioned_upsert_job(
     and time travel over the ingest history, and the commit point is
     one atomic manifest rename instead of ``replace_table``'s two
     directory renames (crash debris is just an orphaned data dir;
-    ``vacuum`` reclaims it).  Delivery is at-least-once with idempotent
-    replay: a replayed batch re-merges the same keys into an extra
-    (identical) version."""
-    from swisscourtrulingcorpus_spark.sources.sinks import upsert_by_key
-    from swisscourtrulingcorpus_spark.sources.versioned import (
-        ConcurrentWriteError,
-        commit_version,
-        latest_version,
-        read_version,
+    ``vacuum`` reclaims it).  Each micro-batch commits through
+    :func:`versioned_upsert_batch`, exactly once per batch."""
+    run_tag = checkpoint_run_tag(checkpoint)
+    return _available_now(
+        stream,
+        checkpoint,
+        lambda batch, batch_id: versioned_upsert_batch(
+            batch, batch_id, table_dir, run_tag, keys
+        ),
     )
 
-    os.makedirs(table_dir, exist_ok=True)
 
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # Optimistic concurrency: capture the base BEFORE reading the
-        # snapshot we merge against; a concurrent writer landing a
-        # version in between fails the checked commit and we re-merge
-        # against the new latest instead of silently dropping its rows.
-        while True:
-            base = latest_version(table_dir)
-            if base:
-                merged = upsert_by_key(
-                    read_version(spark, table_dir, base), batch, keys
-                )
-            else:
-                merged = batch
-            try:
-                commit_version(merged, table_dir, base_version=base)
-                return
-            except ConcurrentWriteError:
-                continue
+def versioned_upsert_batch(
+    batch: DataFrame,
+    batch_id: int,
+    table_dir: str,
+    run_tag: str,
+    keys: list[str],
+) -> None:
+    """One micro-batch of the streaming merge into the versioned table:
+    upsert ``batch`` against the latest snapshot by ``keys`` and commit
+    the result as a new version.  Committed through
+    :func:`_fold_into_store` (crash-replay + OCC contract there): a
+    replay of a committed (run, batch) commits nothing."""
+    from swisscourtrulingcorpus_spark.sources.sinks import upsert_by_key
 
-    return _available_now(stream, checkpoint, _merge)
+    _fold_into_store(
+        batch,
+        batch_id,
+        table_dir,
+        run_tag,
+        lambda b: b,
+        lambda stored, delta: (
+            delta if stored is None else upsert_by_key(stored, delta, keys)
+        ),
+    )
 
 
 def sliding_counts_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:

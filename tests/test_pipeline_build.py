@@ -46,8 +46,9 @@ def test_build_corpus_incremental_and_datasets(spark, tmp_path):
 
     assert glob.glob(str(tmp_path / "corpus/datasets/judgment_prediction/split=*"))
 
-    # no staging or crash debris of any publish protocol is left
-    assert not (tmp_path / "corpus/_manifest_tmp").exists()
+    # no manifest beside the tables (the decision table is the
+    # manifest), and no staging or crash debris of any publish protocol
+    assert not (tmp_path / "corpus/_manifest").exists()
     assert not [
         p.name
         for p in (tmp_path / "corpus").iterdir()

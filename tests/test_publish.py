@@ -1,6 +1,8 @@
 """Publishing tables: the one whole-table replace
-(`sources/sinks.py::replace_table`) and the corpus build's append-only
-manifest over a landing zone read once per build."""
+(`sources/sinks.py::replace_table`) and the corpus build's appends over
+a landing zone read once per build, with the decision table as the
+build's manifest (its file_names are the processed set; it is written
+last, so its part is a run's commit marker)."""
 
 from __future__ import annotations
 
@@ -83,31 +85,85 @@ def _part_files(directory) -> dict[str, bytes]:
 
 
 def test_manifest_is_append_only(spark, tmp_path):
-    """An incremental build adds one manifest part holding its new
-    file_names and leaves the earlier parts byte-identical."""
+    """The decision table is the build's manifest: an incremental build
+    appends its new documents' decision parts, leaves the earlier parts
+    byte-identical, and the table's file_names stay distinct.  No build
+    writes a ``_manifest`` directory."""
     out = str(tmp_path / "corpus")
-    manifest = os.path.join(out, "_manifest")
+    decision = os.path.join(out, "decision")
     build_corpus(spark, raw_corpus_df(spark, 12), out)
-    first = _part_files(manifest)
+    first = _part_files(decision)
     assert first
 
     counts = build_corpus(spark, raw_corpus_df(spark, 18), out)
     assert counts["decision"] == 18
-    after = _part_files(manifest)
+    after = _part_files(decision)
     assert {k: after.get(k) for k in first} == first
-    assert len(set(after) - set(first)) == 1
+    assert set(after) > set(first)
 
-    keys = [r.file_name for r in spark.read.parquet(manifest).collect()]
-    decided = {
+    keys = [
         r.file_name
-        for r in spark.read.parquet(os.path.join(out, "decision"))
-        .select("file_name")
-        .distinct()
-        .collect()
-    }
-    assert len(keys) == len(set(keys))
-    assert set(keys) == decided
+        for r in spark.read.parquet(decision).select("file_name").collect()
+    ]
+    assert len(keys) == len(set(keys)) == 18
+    assert not os.path.exists(os.path.join(out, "_manifest"))
     assert _leftovers(out) == []
+
+
+def test_stale_manifest_directory_is_ignored(spark, tmp_path):
+    """An ``out_dir`` that still holds an older build's ``_manifest``
+    appends the same rows as one without it: the build neither reads
+    nor writes that directory.  The stale one names every document of
+    the next batch, so reading it would turn the append into a no-op."""
+    out = tmp_path / "corpus"
+    build_corpus(spark, raw_corpus_df(spark, 12), str(out))
+    raw = raw_corpus_df(spark, 18)
+    stale_writer = raw.select("file_name").write.mode("overwrite")
+    stale_writer.parquet(str(out / "_manifest"))
+    stale = _part_files(out / "_manifest")
+
+    counts = build_corpus(spark, raw, str(out))
+    assert counts["decision"] == 18
+    assert _part_files(out / "_manifest") == stale
+
+
+@pytest.mark.parametrize("crash_at", ["section", "participation"])
+def test_crash_before_decision_leaves_run_unprocessed(
+    spark, tmp_path, monkeypatch, crash_at
+):
+    """``decision`` is written after the six derived tables, so a build
+    that dies at any of their writes (here the first and the last) has
+    not marked its documents processed: ``decision`` holds only the
+    earlier build's keys, and the rerun extracts the crashed run's
+    documents again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out = str(tmp_path / "corpus")
+    build_corpus(spark, raw_corpus_df(spark, 12), out)
+    decision = os.path.join(out, "decision")
+
+    def names() -> list[str]:
+        return sorted(
+            r.file_name
+            for r in spark.read.parquet(decision).select("file_name").collect()
+        )
+
+    committed = names()
+    parquet = DataFrameWriter.parquet
+
+    def crash(self, path, *args, **kwargs):
+        if os.path.basename(path) == crash_at:
+            raise RuntimeError(f"crash writing {crash_at}")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(RuntimeError, match="crash writing"):
+        build_corpus(spark, raw_corpus_df(spark, 18), out)
+    assert names() == committed
+
+    monkeypatch.undo()
+    assert build_corpus(spark, raw_corpus_df(spark, 18), out)["decision"] == 18
+    assert len(set(names())) == 18
 
 
 def _newest_execution_id(spark) -> int:
@@ -235,7 +291,7 @@ def daily_runs(spark, tmp_path_factory):
             "executions": execs,
             "parts": {
                 t: sorted(glob.glob(os.path.join(out, t, "part-*")))
-                for t in (*TABLES, "_manifest")
+                for t in TABLES
             },
             "rows": {
                 t: spark.read.parquet(os.path.join(out, t)).count()
@@ -254,14 +310,19 @@ def _landing_zone_scans(run) -> list[dict]:
 
 def test_landing_zone_read_once_per_build(daily_runs):
     """Only one SQL execution of a build scans the landing zone (the
-    empty check fills the cached batch; the table writes and the
-    manifest keys read the cache), and one writes the manifest."""
+    empty check fills the cached batch; the table writes read the
+    cache).  One execution writes each table, ``decision`` last, and no
+    build writes a ``_manifest`` directory."""
     for run, n_docs in zip(daily_runs, (24, 30)):
         assert run["counts"]["decision"] == n_docs
         execs = run["executions"]
         lz_scans = _landing_zone_scans(run)
         assert len(lz_scans) == 1, [(e["step"], e["metrics"]) for e in execs]
-        assert [e["step"] for e in execs].count("manifest") == 1
+        writes = [e["step"] for e in execs if e["step"].startswith("table_write.")]
+        assert sorted(writes) == sorted(f"table_write.{t}" for t in TABLES)
+        assert writes[-1] == "table_write.decision"
+        assert "manifest" not in [e["step"] for e in execs]
+    assert not os.path.exists(os.path.join(daily_runs[-1]["out"], "_manifest"))
 
 
 def test_one_part_file_per_table_per_run(daily_runs):
@@ -270,7 +331,7 @@ def test_one_part_file_per_table_per_run(daily_runs):
     24-document build writes one part file per table, a 6-document
     append adds one more, and a no-op rerun adds none."""
     first, append, noop = (run["parts"] for run in daily_runs)
-    for t in (*TABLES, "_manifest"):
+    for t in TABLES:
         assert len(first[t]) == 1, (t, first[t])
         assert set(first[t]) < set(append[t]), t
         assert len(append[t]) == 2, (t, append[t])
@@ -278,9 +339,12 @@ def test_one_part_file_per_table_per_run(daily_runs):
 
 
 def test_only_new_documents_reach_the_ingest_python(daily_runs):
-    """The manifest anti-join runs on the file rows: the append's pivot
-    shuffles only the 6 new documents' files, its HTML/PDF extraction
-    sees only those 6 documents, and it scans the manifest once."""
+    """The anti-join against the decision table runs on the file rows:
+    the append's pivot shuffles only the 6 new documents' files, its
+    HTML/PDF extraction sees only those 6 documents, it scans the
+    decision table's ``file_name`` once, and no exchange dedupes the
+    keys (an anti join does not need distinct keys on its right
+    side)."""
     run = daily_runs[1]
     new_names = run["names"][24:]
     [scan] = _landing_zone_scans(run)
@@ -297,53 +361,67 @@ def test_only_new_documents_reach_the_ingest_python(daily_runs):
     assert new_files == 12
     assert pivot[0]["metrics"]["shuffle records written"] == new_files
     assert pivot[0]["metrics"]["records read"] == new_files
+    assert not [
+        n["desc"] for n in scan["nodes"]
+        if n["name"] == "Exchange"
+        and ("hashpartitioning(name" in n["desc"]
+             or "hashpartitioning(file_name" in n["desc"])
+    ]
     # a cached plan's scan shows in every execution that reads the
     # cache; only the execution that runs it counts files read
-    manifest = os.path.join(run["out"], "_manifest") + "]"
-    manifest_scans = [
-        e for e in run["executions"]
+    decision = os.path.join(run["out"], "decision") + "]"
+    decision_scans = [
+        (e, n) for e in run["executions"]
         for n in e["nodes"]
-        if n["name"].startswith("Scan") and manifest in n["desc"]
+        if n["name"].startswith("Scan") and decision in n["desc"]
         and n["metrics"].get("number of files read", 0) > 0
     ]
-    assert len(manifest_scans) == 1, [e["step"] for e in manifest_scans]
+    assert [e["id"] for e, _ in decision_scans] == [scan["id"]]
+    assert "ReadSchema: struct<file_name:string>" in decision_scans[0][1]["desc"]
 
 
 def test_one_recount_per_build(daily_runs):
     """Each build returns the rows each table holds, counted in one
     execution that reads all seven tables; the no-op rerun returns
-    zeros and reads no table."""
+    zeros, reads only the decision table's ``file_name`` (the processed
+    set), once, and writes nothing."""
     first, append, noop = daily_runs
     for run in (first, append):
         assert run["counts"] == run["rows"]
         readers = [
             e for e in run["executions"]
-            if _table_paths_read(e["plan"], run["out"])
+            if _table_paths_read(e["plan"], run["out"]) == len(TABLES)
         ]
         assert len(readers) == 1, [(e["step"], e["description"]) for e in readers]
-        assert _table_paths_read(readers[0]["plan"], run["out"]) == len(TABLES)
         assert readers[0]["metrics"]["number of files read"] == sum(
             len(run["parts"][t]) for t in TABLES
         )
     assert append["counts"]["decision"] == 30
     assert noop["counts"] == {t: 0 for t in TABLES}
     assert noop["rows"] == append["rows"]
-    assert not any(
-        _table_paths_read(e["plan"], noop["out"]) for e in noop["executions"]
-    )
+    readers = [
+        e for e in noop["executions"]
+        if _table_paths_read(e["plan"], noop["out"])
+    ]
+    assert len(readers) == 1, [(e["step"], e["description"]) for e in readers]
+    assert _table_paths_read(readers[0]["plan"], noop["out"]) == 1
+    assert os.path.join(noop["out"], "decision") + "]" in readers[0]["plan"]
+    assert "ReadSchema: struct<file_name:string>" in readers[0]["plan"]
+    assert not [e["step"] for e in noop["executions"] if "write" in e["step"]]
 
 
 def test_corrupt_manifest_raises_and_keeps_tables(spark, tmp_path):
-    """Only a missing manifest means "nothing processed yet".  A corrupt
-    one must fail the incremental build before it re-extracts the
-    landing zone and overwrites every table."""
+    """The decision table is the build's manifest, and only a missing
+    one means "nothing processed yet".  A corrupt decision part must
+    fail the incremental build before it re-extracts the landing zone
+    and writes any table."""
     out = tmp_path / "corpus"
     build_corpus(spark, raw_corpus_df(spark, 12), str(out))
-    before = _table_files(out)
-    manifest = out / "_manifest"
-    for part in manifest.glob("*.parquet"):
+    decision = out / "decision"
+    for part in decision.glob("*.parquet"):
         part.unlink()
-    (manifest / "part-0.parquet").write_bytes(b"not a parquet file")
+    (decision / "part-0.parquet").write_bytes(b"not a parquet file")
+    before = _table_files(out)
 
     with pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
         build_corpus(spark, raw_corpus_df(spark, 16), str(out))
@@ -351,19 +429,19 @@ def test_corrupt_manifest_raises_and_keeps_tables(spark, tmp_path):
 
 
 def test_manifest_without_data_files_raises_and_keeps_tables(spark, tmp_path):
-    """A manifest directory holding only a crashed write's
-    ``_temporary`` reads as an empty manifest under its known schema;
-    the incremental build must raise rather than re-extract every
-    document and append duplicates to the tables."""
+    """A decision directory holding only a crashed write's
+    ``_temporary`` reads as an empty table under its known schema; the
+    incremental build must raise rather than re-extract every document
+    and append duplicates to the other six tables."""
     out = tmp_path / "corpus"
     build_corpus(spark, raw_corpus_df(spark, 12), str(out))
-    before = _table_files(out)
-    manifest = out / "_manifest"
-    for p in manifest.iterdir():
+    decision = out / "decision"
+    for p in decision.iterdir():
         p.unlink()
-    attempt = manifest / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt = decision / "_temporary" / "0" / "_temporary" / "attempt_0"
     attempt.mkdir(parents=True)
     (attempt / "part-00000.snappy.parquet").write_bytes(b"")
+    before = _table_files(out)
 
     with pytest.raises(RuntimeError, match="lists no data file"):
         build_corpus(spark, raw_corpus_df(spark, 16), str(out))

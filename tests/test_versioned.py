@@ -110,6 +110,23 @@ def test_stream_versioned_upsert(spark, sf_dir, tmp_path):
     )
 
 
+def test_versioned_upsert_replay_commits_nothing(spark, tmp_path):
+    """The streaming versioned merge commits through the store jobs'
+    fold: a replay of a committed (run, batch) adds no version."""
+    from swisscourtrulingcorpus_spark.streaming.jobs import (
+        versioned_upsert_batch,
+    )
+
+    table = str(tmp_path / "versioned")
+    batch = spark.range(5).withColumn("value", F.col("id") * 10)
+    for _ in range(2):
+        versioned_upsert_batch(batch, 0, table, "runA", ["id"])
+    assert V.versions(table) == [1]
+    assert sorted(r.id for r in V.read_version(spark, table).collect()) == [
+        0, 1, 2, 3, 4,
+    ]
+
+
 def test_optimize_table_zorder_commit(spark, sf_dir, tmp_path):
     """OPTIMIZE commits a clustered rewrite as a new snapshot; the
     pre-optimize version stays readable, and the new layout's footer
