@@ -20,7 +20,7 @@ supplies the remaining production ANN layer a 100 TB corpus needs:
   the cluster id (never a cross join against the corpus).
 - ``pq_codebooks_from_rows`` / ``pq_encode`` / ``pq_topk_adc``:
   product quantization — vectors become m small codes; search scans
-  codes with a broadcast per-query flat partial-distance lookup array
+  codes with a broadcast per-query partial-distance lookup table
   (asymmetric distance computation, m ``element_at`` lookups per
   candidate).  At 100 TB the code table is ~64x smaller than the raw
   embeddings and the scan never touches the float vectors.
@@ -28,30 +28,34 @@ supplies the remaining production ANN layer a 100 TB corpus needs:
   FAISS-style index — PQ over residuals to the coarse centroid, probed
   search over the inverted lists.
 
-Distance arithmetic reuses the sequential-fold dot product from
+Distance arithmetic is the SQL-text dot product of
 `operators/similarity.py` (verified bit-identical to DuckDB's
-``list_dot_product``), so the assignment/encoding gates hash-match the
-oracle exactly.  Squared L2 is computed as ``c.c - 2 a.c`` — the
-``a.a`` term is constant per row and cannot change the argmin, and
-dropping it keeps every compared double a two-flop combination of
-oracle-identical folds.
+``list_dot_product``) over literal centroid arrays, so the
+assignment/encoding gates hash-match the oracle exactly.  Squared L2 is
+computed as ``c.c - 2 a.c`` — the ``a.a`` term is constant per row and
+cannot change the argmin, and dropping it keeps every compared double a
+two-flop combination of oracle-identical folds.  The searches (``ivf_topk``,
+``pq_topk_adc``, ``ivfpq_topk``) supply only their candidate key and
+score to similarity.py's one pair-scoring and top-k body.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.operators.similarity import _dot, _norm
+from swisscourtrulingcorpus_spark.operators.similarity import (
+    _COSINE,
+    _array,
+    _dot,
+    _fold,
+    _search,
+    _side_sql,
+)
 
-
-def _ranked_topk(df: DataFrame, order: list, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def _lit_vec(c: list[float]) -> F.Column:
-    return F.array(*[F.lit(float(x)) for x in c])
+#: the asymmetric distance of a (lookup table, codes) pair: the sum of
+#: each subspace's table entry at the code
+_ADC = _fold("__qv", "__cv", "element_at(x, y + 1)")
 
 
 def _self_dot(c: list[float]) -> float:
@@ -68,17 +72,17 @@ def _self_dot(c: list[float]) -> float:
     return s
 
 
-def centroid_scores(vec: F.Column, centroids: list[list[float]]) -> F.Column:
-    """Array of rank-equivalent squared L2 scores (c.c - 2 a.c) to each
-    centroid, as ONE map-side expression over literal centroid arrays —
-    no join, no shuffle, no row multiplication; one distance fold per
-    centroid per row.  Every score is bit-identical to the oracle's
-    ``list_dot_product`` arithmetic."""
-    return F.array(
-        *[
-            F.lit(_self_dot(c)) - F.lit(2.0) * _dot(vec, _lit_vec(c))
-            for c in centroids
-        ]
+def centroid_scores(vec: str, centroids: list[list[float]]) -> str:
+    """Array of rank-equivalent squared L2 scores (c.c - 2 a.c) of the
+    SQL array ``vec`` to each centroid, as ONE map-side expression over
+    literal centroid arrays — no join, no shuffle, no row
+    multiplication; one distance fold per centroid per row.  Every
+    score is bit-identical to the oracle's ``list_dot_product``
+    arithmetic."""
+    return "array({})".format(
+        ", ".join(
+            f"{_self_dot(c)!r}D - 2.0D * {_dot(vec, _array(c))}" for c in centroids
+        )
     )
 
 
@@ -101,7 +105,12 @@ def _valid_vec(vec_col: str) -> F.Column:
     )
 
 
-def _min_struct(scores: F.Column) -> F.Column:
+def _indexed(scores: str) -> str:
+    """The (s, i) structs of a scores array: each score with its index."""
+    return f"transform({scores}, (s, i) -> named_struct('s', s, 'i', i))"
+
+
+def _min_struct(scores: str) -> str:
     """Single-scan (score, index) minimum over a scores array; strict
     ``<`` keeps the FIRST minimum, so ties break to the smallest
     cluster id — matching the oracle's ORDER BY score, cid.
@@ -111,52 +120,48 @@ def _min_struct(scores: F.Column) -> F.Column:
     re-inlines projections so the k distance folds evaluate twice per
     row (measured — the plan showed every fold duplicated).  The
     ``aggregate`` form scans once and references ``scores`` once."""
-    return F.aggregate(
-        F.transform(
-            scores, lambda s, i: F.struct(s.alias("s"), i.alias("i"))
-        ),
-        F.struct(
-            F.lit(float("inf")).alias("s"), F.lit(-1).alias("i")
-        ),
-        lambda acc, x: F.when(x["s"] < acc["s"], x).otherwise(acc),
+    return (
+        f"aggregate({_indexed(scores)}, "
+        "named_struct('s', cast('Infinity' as double), 'i', -1), "
+        "(acc, x) -> CASE WHEN x.s < acc.s THEN x ELSE acc END)"
     )
 
 
-def _argmin_of(scores: F.Column) -> F.Column:
+def _argmin_of(scores: str) -> str:
     """First index of the array minimum (ties -> smallest cluster id);
     single scan, ``scores`` referenced once."""
-    return _min_struct(scores)["i"].cast("int")
+    return _min_struct(scores) + ".i"
 
 
-def _probe_clusters(
-    vec: F.Column, centroids: list[list[float]], nprobe: int
-) -> F.Column:
+def _probe_clusters(vec: str, centroids: list[list[float]], nprobe: int) -> str:
     """The ``nprobe`` nearest centroid ids for a query vector, as one
     map-side expression (sort the (score, index) pairs, slice)."""
-    scores = centroid_scores(vec, centroids)
-    ranked = F.transform(
-        F.array_sort(
-            F.transform(scores, lambda s, i: F.struct(s.alias("s"), i.alias("i")))
-        ),
-        lambda x: x["i"],
-    )
-    return F.slice(ranked, 1, nprobe)
+    pairs = _indexed(centroid_scores(vec, centroids))
+    return f"slice(transform(array_sort({pairs}), x -> x.i), 1, {int(nprobe)})"
 
 
-def _adc_lut(vec: F.Column, codebooks: list[list[list[float]]]) -> F.Column:
-    """Flat ADC lookup array: lut[s * ksub + code] = partial squared
-    distance of ``vec``'s s-th slice to that codeword (rank-equivalent
-    c.c - 2 a.c form) — one projection over the literal codebooks."""
-    m = len(codebooks)
+def _subspace_scores(vec: str, codebooks: list[list[list[float]]]) -> list[str]:
+    """Per subspace s, the scores of ``vec``'s s-th slice to that
+    subspace's codewords."""
     sub = len(codebooks[0][0])
-    return F.array(
-        *[
-            F.lit(_self_dot(c))
-            - F.lit(2.0) * _dot(F.slice(vec, s * sub + 1, sub), _lit_vec(c))
-            for s in range(m)
-            for c in codebooks[s]
-        ]
-    )
+    return [
+        centroid_scores(f"slice({vec}, {s * sub + 1}, {sub})", cb)
+        for s, cb in enumerate(codebooks)
+    ]
+
+
+def _adc_lut(vec: str, codebooks: list[list[list[float]]]) -> str:
+    """ADC lookup table: lut[s][code] = partial squared distance of
+    ``vec``'s s-th slice to that codeword (rank-equivalent c.c - 2 a.c
+    form) — one projection over the literal codebooks, one entry per
+    subspace, so it zips with a code array."""
+    return f"array({', '.join(_subspace_scores(vec, codebooks))})"
+
+
+def _pq_codes(vec: str, codebooks: list[list[list[float]]]) -> str:
+    """The m codebook indices of ``vec``: per-subspace argmin."""
+    codes = (_argmin_of(s) for s in _subspace_scores(vec, codebooks))
+    return f"array({', '.join(codes)})"
 
 
 def assign_clusters(
@@ -180,9 +185,9 @@ def assign_clusters(
     centroid; the fold would otherwise emit the -1 seed, a cluster no
     probe ever reaches — surface nulls with the data-quality
     ``not_null`` check instead)."""
-    return df.where(_valid_vec(vec_col)).select(
-        id_col,
-        _argmin_of(centroid_scores(F.col(vec_col), centroids)).alias("cluster"),
+    return df.where(_valid_vec(vec_col)).selectExpr(
+        f"`{id_col}`",
+        f"{_argmin_of(centroid_scores(f'`{vec_col}`', centroids))} AS cluster",
     )
 
 
@@ -232,16 +237,13 @@ def kmeans_fit(
     prev_inertia = None
     inertia = float("inf")
     for _ in range(max_iter):
-        # one map-side pass: cluster id + full squared distance per row.
-        # The (score, index) pair comes from ONE fold; referencing the
-        # struct twice re-evaluates the fold (projection collapse), so
-        # accept 2x here — training-time only; the corpus-scale paths
-        # (assign/encode) are single-eval.
-        best = _min_struct(centroid_scores(F.col("__v"), centroids))
-        assigned = vecs.select(
-            "__v",
-            best["i"].cast("int").alias("cluster"),
-            (best["s"] + _dot(F.col("__v"), F.col("__v"))).alias("d2"),
+        # one map-side pass: cluster id + full squared distance per row,
+        # both read from ONE (score, index) fold: the fold is projected
+        # first, and the optimizer does not inline an expensive
+        # expression that is referenced twice
+        best = _min_struct(centroid_scores("__v", centroids))
+        assigned = vecs.selectExpr("__v", f"{best} AS __best").selectExpr(
+            "__v", "__best.i AS cluster", f"__best.s + {_dot('__v', '__v')} AS d2"
         )
         # recompute + inertia in ONE aggregation over (cluster, pos)
         # partials — map-side combine applies, the shuffle carries
@@ -289,10 +291,7 @@ def ivf_index(
     beat brute force (see SCALE.md).  Null vectors are excluded (see
     ``assign_clusters``)."""
     return corpus.where(_valid_vec(vec_col)).withColumn(
-        "cluster",
-        _argmin_of(
-            centroid_scores(F.col(vec_col).cast("array<double>"), centroids)
-        ),
+        "cluster", F.expr(_argmin_of(centroid_scores(f"`{vec_col}`", centroids)))
     )
 
 
@@ -319,43 +318,23 @@ def ivf_topk(
     neighbor_id, cosine, rank)."""
     if "cluster" not in corpus.columns:
         corpus = ivf_index(corpus, centroids, vec_col, id_col)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-        "cluster",
-    ).where(F.col("__cn") > 0)
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-    ).where(F.col("__qn") > 0)
+    v = f"`{vec_col}`"
     # probe list = nprobe nearest centroids, map-side over the same
     # literal-centroid score expression (no join, no aggregation)
-    probes = q.select(
-        "query_id",
-        "__qv",
-        "__qn",
-        F.explode(
-            _probe_clusters(F.col("__qv").cast("array<double>"), centroids, nprobe)
-        ).alias("cluster"),
+    probe = f"explode({_probe_clusters(v, centroids, nprobe)}) AS cluster"
+    return _search(
+        corpus,
+        queries,
+        _side_sql("{q}", "q", id_col, v, probe),
+        _side_sql("{c}", "c", id_col, v, "cluster"),
+        _COSINE,
+        "cosine",
+        k,
+        join=_CLUSTER_JOIN,
     )
 
-    scored = (
-        c.join(F.broadcast(probes), on="cluster")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    return _ranked_topk(
-        scored, [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
+
+_CLUSTER_JOIN = "JOIN q ON c.cluster = q.cluster"
 
 
 # --- product quantization ------------------------------------------------
@@ -435,29 +414,35 @@ def pq_encode(
     the whole cost).  Output: (id, codes array<int>) — the compressed
     representation an ANN index actually stores.  Null vectors are
     excluded (see ``assign_clusters``)."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-    codes = F.array(
-        *[
-            _argmin_of(
-                centroid_scores(F.slice(v, s * sub + 1, sub), codebooks[s])
-            )
-            for s in range(m)
-        ]
+    return df.where(_valid_vec(vec_col)).selectExpr(
+        f"`{id_col}`", f"{_pq_codes(f'`{vec_col}`', codebooks)} AS codes"
     )
-    return df.where(_valid_vec(vec_col)).select(id_col, codes.alias("codes"))
 
 
-def _lit_matrix(vectors: list[list[float]]) -> F.Column:
-    return F.array(*[_lit_vec(v) for v in vectors])
-
-
-def _residual(vec: F.Column, cluster: F.Column, centroids: list[list[float]]) -> F.Column:
+def _residual(vec: str, cluster: str, centroids: list[list[float]]) -> str:
     """vec - centroids[cluster], with the centroid matrix inlined as a
     literal array-of-arrays indexed by the cluster column."""
-    cent = F.element_at(_lit_matrix(centroids), (cluster + 1).cast("int"))
-    return F.zip_with(vec, cent, lambda a, c: a - c)
+    cents = "array({})".format(", ".join(_array(c) for c in centroids))
+    return f"zip_with({vec}, element_at({cents}, {cluster} + 1), (a, c) -> a - c)"
+
+
+def _residuals(
+    df: DataFrame, centroids: list[list[float]], vec_col: str, id_col: str
+) -> DataFrame:
+    """(id, cluster, __r): each valid vector's nearest coarse centroid
+    and its residual to it.  The assignment fold is projected first, so
+    the residual reads it instead of folding again."""
+    return (
+        df.where(_valid_vec(vec_col))
+        .selectExpr(
+            f"`{id_col}`",
+            f"{_argmin_of(centroid_scores(f'`{vec_col}`', centroids))} AS cluster",
+            f"cast(`{vec_col}` as array<double>) AS __v",
+        )
+        .selectExpr(
+            f"`{id_col}`", "cluster", f"{_residual('__v', 'cluster', centroids)} AS __r"
+        )
+    )
 
 
 def ivfpq_train(
@@ -474,17 +459,15 @@ def ivfpq_train(
     codebooks on the RESIDUALS (vec - assigned centroid) — the FAISS
     IVFPQ recipe; residuals are much smaller than raw vectors, so the
     same code budget quantizes far more precisely."""
-    vecs = df.where(_valid_vec(vec_col)).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("__v")
-    )
-    centroids, _ = kmeans_fit(vecs, "__v", id_col, k, max_iter=max_iter)
-    best = _min_struct(centroid_scores(F.col("__v"), centroids))
-    residuals = vecs.select(
-        id_col,
-        _residual(F.col("__v"), best["i"], centroids).alias("__r"),
-    )
+    centroids, _ = kmeans_fit(df, vec_col, id_col, k, max_iter=max_iter)
     codebooks = pq_codebooks_trained(
-        residuals, "__r", id_col, dim, m, ksub, max_iter=max_iter
+        _residuals(df, centroids, vec_col, id_col),
+        "__r",
+        id_col,
+        dim,
+        m,
+        ksub,
+        max_iter=max_iter,
     )
     return centroids, codebooks
 
@@ -502,14 +485,9 @@ def ivfpq_seed(
     residuals of the ``ksub`` smallest-id vectors, sliced per subspace
     — ``ivfpq_train`` minus the Lloyd iterations.  This is the
     deterministic construction the driver gate verifies bit-for-bit."""
-    vecs = df.where(_valid_vec(vec_col)).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("__v")
+    return pq_codebooks_from_rows(
+        _residuals(df, centroids, vec_col, id_col), "__r", id_col, dim, m, ksub
     )
-    best = _min_struct(centroid_scores(F.col("__v"), centroids))
-    residuals = vecs.select(
-        id_col, _residual(F.col("__v"), best["i"], centroids).alias("__r")
-    )
-    return pq_codebooks_from_rows(residuals, "__r", id_col, dim, m, ksub)
 
 
 def ivfpq_encode(
@@ -520,26 +498,11 @@ def ivfpq_encode(
     id_col: str,
 ) -> DataFrame:
     """Encode as (id, cluster, codes): coarse argmin + per-subspace
-    argmin over the RESIDUAL — one projection over the corpus (the
-    cluster fold evaluates twice because the residual references it;
-    still no join/shuffle/row multiplication)."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    vecs = df.where(_valid_vec(vec_col)).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("__v")
+    argmin over the RESIDUAL — map-side projections over the corpus, no
+    join/shuffle/row multiplication."""
+    return _residuals(df, centroids, vec_col, id_col).selectExpr(
+        f"`{id_col}`", "cluster", f"{_pq_codes('__r', codebooks)} AS codes"
     )
-    best = _min_struct(centroid_scores(F.col("__v"), centroids))
-    cluster = best["i"].cast("int")
-    res = _residual(F.col("__v"), best["i"], centroids)
-    codes = F.array(
-        *[
-            _argmin_of(
-                centroid_scores(F.slice(res, s * sub + 1, sub), codebooks[s])
-            )
-            for s in range(m)
-        ]
-    )
-    return vecs.select(id_col, cluster.alias("cluster"), codes.alias("codes"))
 
 
 def ivfpq_topk(
@@ -558,47 +521,34 @@ def ivfpq_topk(
     and must not be dropped) broadcasts; candidates come from the
     equi-join on the cluster id and are scored by m table lookups.
     The scan touches (cluster, codes) only — never the float vectors."""
-    ksub = len(codebooks[0])
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
+    v = f"`{vec_col}`"
+    probed = (
+        f"(SELECT `{id_col}`, explode({_probe_clusters(v, centroids, nprobe)}) "
+        f"AS cluster, cast({v} as array<double>) AS __v FROM {{q}})"
     )
-    probes = q.select(
-        "query_id",
-        "__qv",
-        F.explode(_probe_clusters(F.col("__qv"), centroids, nprobe)).alias(
-            "cluster"
+    residuals = (
+        f"(SELECT `{id_col}`, cluster, "
+        f"{_residual('__v', 'cluster', centroids)} AS __r FROM {probed})"
+    )
+    return _search(
+        corpus_codes,
+        queries,
+        _side_sql(
+            residuals,
+            "q",
+            id_col,
+            _adc_lut("__r", codebooks),
+            "cluster",
+            f"{_dot('__r', '__r')} AS __qr2",
+            norm=False,
         ),
-    ).withColumn("__qr", _residual(F.col("__qv"), F.col("cluster"), centroids))
-    luts = probes.select(
-        "query_id",
-        "cluster",
-        _adc_lut(F.col("__qr"), codebooks).alias("__lut"),
-        _dot(F.col("__qr"), F.col("__qr")).alias("__qr2"),
+        _side_sql("{c}", "c", id_col, "codes", "cluster", norm=False),
+        f"__qr2 + {_ADC}",
+        "adc",
+        k,
+        order="ASC",
+        join=_CLUSTER_JOIN,
     )
-    scored = (
-        corpus_codes.join(F.broadcast(luts), on="cluster")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            (
-                F.col("__qr2")
-                + F.aggregate(
-                    F.transform(
-                        F.col("codes"),
-                        lambda code, s: F.element_at(
-                            F.col("__lut"), (s * ksub + code + 1).cast("int")
-                        ),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            ).alias("adc"),
-        )
-    )
-    return _ranked_topk(scored, [F.col("adc").asc(), F.col("neighbor_id").asc()], k)
 
 
 def pq_topk_adc(
@@ -612,42 +562,21 @@ def pq_topk_adc(
     """Asymmetric-distance top-k over PQ codes.
 
     Per query, the (subspace, code) -> partial squared distance lookup
-    table is m x ksub doubles, flattened to ONE array per query and
+    table is m x ksub doubles, ONE array of m arrays per query, and
     broadcast.  The corpus-side work per (query, code-row) is then m
-    ``element_at`` lookups folded with ``aggregate`` — ~dim/m times
+    ``element_at`` lookups zipped with the codes and folded — ~dim/m times
     less arithmetic than the brute-force dot product, with no
     posexplode fan-out and no join on (s, code) (an earlier join-shaped
     version shuffled corpus x m rows and lost to brute force; see
     SCALE.md).  No float vectors move after encoding — the scan reads
     m bytes of codes per row, the PQ promise at scale."""
-    ksub = len(codebooks[0])
-    qv = F.col(vec_col).cast("array<double>")
-    # per-query flat LUT: lut[s * ksub + code] = partial distance —
-    # one projection over the literal codebooks, no join/agg
-    lut = queries.select(
-        F.col(id_col).alias("query_id"), _adc_lut(qv, codebooks).alias("__lut")
-    )
-    c = corpus_codes.select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    )
-    scored = (
-        c.join(F.broadcast(lut))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.aggregate(
-                F.transform(
-                    F.col("codes"),
-                    lambda code, s: F.element_at(
-                        F.col("__lut"), (s * ksub + code + 1).cast("int")
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("adc"),
-        )
-    )
-    return _ranked_topk(
-        scored, [F.col("adc").asc(), F.col("neighbor_id").asc()], k
+    return _search(
+        corpus_codes,
+        queries,
+        _side_sql("{q}", "q", id_col, _adc_lut(f"`{vec_col}`", codebooks), norm=False),
+        _side_sql("{c}", "c", id_col, "codes", norm=False),
+        _ADC,
+        "adc",
+        k,
+        order="ASC",
     )

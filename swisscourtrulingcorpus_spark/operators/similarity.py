@@ -1,68 +1,165 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, as a 100 TB design requires:
+Every search is one program: each side projected once as (id, vector,
+norm) with rows of no direction (null, empty, zero norm) dropped, the
+operator's own candidate join, one score per pair, then the top k per
+query by ``row_number``.  :func:`_pairs_sql` writes the first three
+steps and :func:`_topk_sql` the ranking, as SQL text; an operator
+supplies only its candidate key and its score:
 
-- ``cosine_topk_bruteforce``: exact top-k for a bounded query set.
-  The query side broadcasts; the corpus streams once; the dot product
-  is a JVM-side ``aggregate(zip_with(...))`` fold — no Python, no
-  per-row UDF.  Cost: O(|queries| × |corpus|) multiply-adds, purely
+- ``cosine_topk_bruteforce``: exact top-k for a bounded query set.  The
+  query side broadcasts; the corpus streams once; candidates are the
+  CROSS join.  Cost: O(|queries| × |corpus|) multiply-adds, purely
   map-side + one top-k shuffle of (query, k) rows.
 - ``lsh_bucketed_topk``: the scale path — restrict candidate pairs to a
   coarse bucket (here: a precomputed partition id such as an IVF/KMeans
   assignment; the fixture's ``label`` column stands in for the centroid
   assignment).  Same plan shape as a production IVF index: bucket join
   instead of cross join, so cost drops by the bucket fan-out factor.
+- ``hyperplane_lsh_topk`` joins on (table, bucket), the IVF and IVF-PQ
+  searches of `operators/clustering.py` on the probed cluster, and
+  ``int8_dot_topk`` / the PQ searches swap the cosine for an exact int8
+  dot or an ADC lookup sum, and project no norm: they drop only NULL
+  arrays.
 
-Floats are cast to double BEFORE any arithmetic (exact widening); the
-sequential fold matches DuckDB's list_dot_product evaluation order, so
-raw cosine doubles are bit-identical to the oracle (verified
-empirically) — no rounding, which would itself diverge between engines.
+Only pairs of equal length are scored: ``zip_with`` null-pads the
+shorter array, so a mismatched pair would get a NULL score and be
+ranked.  Floats are cast to double BEFORE any arithmetic (exact
+widening); the sequential fold matches DuckDB's list_dot_product
+evaluation order, so raw cosine doubles are bit-identical to the oracle
+(verified empirically) — no rounding, which would itself diverge
+between engines.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.operators.relational import top_k_per_group_sql
+# The vector arithmetic is SQL text (r12, as functions/hashing.py): one
+# parsed string instead of several py4j round trips per expression.
+# `0.0D` is the SQL DOUBLE literal.
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product over zipped arrays (matches the
-    oracle's list_dot_product evaluation order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _array(values) -> str:
+    """A literal double array.  `repr(x)D` is the SQL DOUBLE literal —
+    Java's parseDouble of Python's shortest round-trip repr reproduces
+    the exact double."""
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-# SQL-text forms of _dot/_norm (r12, as functions/hashing.py): one parsed
-# string instead of several py4j round trips.  `0.0D` is the SQL DOUBLE
-# literal, matching F.lit(0.0), so the expression trees are identical.
-
-
-def _dot_sql(a: str, b: str) -> str:
+def _fold(a: str, b: str, term: str, zero: str = "0.0D") -> str:
+    """Sequential left-fold sum of ``term`` over the zipped arrays
+    (``x`` from ``a``, ``y`` from ``b``)."""
     return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * "
-        f"cast(y as double)), 0.0D, (acc, v) -> acc + v)"
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), {zero}, "
+        "(acc, v) -> acc + v)"
     )
 
 
-def _norm_sql(a: str) -> str:
+def _dot(a: str, b: str) -> str:
+    """Dot product in the oracle's list_dot_product evaluation order."""
+    return _fold(a, b, "cast(x as double) * cast(y as double)")
+
+
+def _norm(a: str) -> str:
     return (
         f"sqrt(aggregate(transform({a}, x -> cast(x as double) * "
         f"cast(x as double)), 0.0D, (acc, v) -> acc + v))"
+    )
+
+
+#: the cosine of a pair of :func:`_side_sql` rows
+_COSINE = f"{_dot('__qv', '__cv')} / (__qn * __cn)"
+_BUCKET_JOIN = "JOIN q ON c.__bucket = q.__bucket"
+
+
+def _side_sql(
+    table: str, role: str, id_col: str, vec: str, *keys: str, norm: bool = True
+) -> str:
+    """One side of a search, projected once: the id as ``query_id``
+    (role ``q``) or ``neighbor_id`` (role ``c``), the scored array
+    ``vec`` as ``__qv``/``__cv``, its norm ``__qn``/``__cn`` and the
+    operator's candidate-key columns ``keys``.  Rows whose norm is not
+    positive have no direction and are dropped; ANSI division would
+    raise on a zero norm.  Norms are per ROW, not per pair: per-pair
+    work is one fold (the score).  Without a norm (a lookup table or
+    codes) only NULL arrays are dropped."""
+    rid = {"q": "query_id", "c": "neighbor_id"}[role]
+    cols = [f"`{id_col}` AS {rid}", f"{vec} AS __{role}v"]
+    if norm:
+        cols.append(f"{_norm(vec)} AS __{role}n")
+    keep = f"__{role}n > 0" if norm else f"__{role}v IS NOT NULL"
+    return (
+        f"SELECT * FROM (SELECT {', '.join([*cols, *keys])} FROM {table}) "
+        f"WHERE {keep}"
+    )
+
+
+def _pairs_sql(
+    q: str,
+    c: str,
+    score: str,
+    name: str,
+    join: str = "CROSS JOIN q",
+    pair: str = "NOT (neighbor_id = query_id)",
+    broadcast: str = "q",
+) -> str:
+    """The candidate pairs of two :func:`_side_sql` sides ``q`` and
+    ``c``, scored: a ``WITH`` clause ending in ``scored`` (query_id,
+    neighbor_id, ``name``).  ``join`` is the operator's candidate join
+    (``FROM c <join>``), ``pair`` its pair predicate.  Pairs of unequal
+    length are never scored.  ``broadcast`` names the relations hinted
+    to broadcast, by default the query side: a bounded query set joins
+    the corpus without shuffling it."""
+    hint = f"/*+ BROADCAST({broadcast}) */ " if broadcast else ""
+    return f"""
+WITH q AS ({q}),
+c AS ({c}),
+scored AS (
+  SELECT {hint}query_id, neighbor_id, {score} AS {name}
+  FROM c {join}
+  WHERE {pair} AND size(__qv) = size(__cv)
+)"""
+
+
+def _topk_sql(
+    q: str, c: str, score: str, name: str, k: int, order: str = "DESC", **pairs
+) -> str:
+    """The k best-scored pairs per query of :func:`_pairs_sql`, ties to
+    the smaller ``neighbor_id``: (query_id, neighbor_id, ``name``,
+    rank).  The filtered ``row_number`` lets the optimizer cut each
+    query's rows to k before the exchange; ``rank`` is numbered again
+    over the kept rows."""
+    over = (
+        f"OVER (PARTITION BY query_id ORDER BY {name} {order}, neighbor_id ASC)"
+    )
+    return _pairs_sql(q, c, score, name, **pairs) + f"""
+SELECT *, row_number() {over} AS rank
+FROM (
+  SELECT query_id, neighbor_id, {name}
+  FROM (SELECT *, row_number() {over} AS __rn FROM scored)
+  WHERE __rn <= {int(k)}
+)
+"""
+
+
+def _search(
+    corpus: DataFrame,
+    queries: DataFrame,
+    q: str,
+    c: str,
+    score: str,
+    name: str,
+    k: int,
+    **ranking,
+) -> DataFrame:
+    """:func:`_topk_sql` over two DataFrames, named ``{q}`` and ``{c}``
+    in the side texts.  With keyword arguments ``spark.sql`` formats
+    the whole text, so a literal brace in the SQL must be doubled.  The
+    session is the corpus's, never a captured one."""
+    return corpus.sparkSession.sql(
+        _topk_sql(q, c, score, name, k, **ranking), c=corpus, q=queries
     )
 
 
@@ -92,48 +189,15 @@ def cosine_topk_bruteforce_sql(
 
     The ``BROADCAST(q)`` hint makes the cross join a broadcast nested
     loop — the corpus never shuffles; only (|queries| × k) rows do,
-    inside the row_number window.
-
-    Norms are projected per ROW before the join (``__qn``/``__cn``), not
-    inside the pair expression: per-pair work drops from three array
-    folds to one (the dot product).  The division uses the same doubles
-    in the same order, so oracle values are bit-identical.  Zero-norm
-    vectors have no defined cosine and are filtered out before the pair
-    projection (ANSI division would raise otherwise).  One parsed
-    statement: the Column form cost ~340 py4j round trips per
-    construction.
-    """
-    norm = _norm_sql(f"`{vec_col}`")
-    over = (
-        "OVER (PARTITION BY query_id"
-        " ORDER BY cosine DESC, neighbor_id ASC)"
+    inside the row_number window."""
+    v = f"`{vec_col}`"
+    return _topk_sql(
+        _side_sql(queries_table, "q", id_col, v),
+        _side_sql(corpus_table, "c", id_col, v),
+        _COSINE,
+        "cosine",
+        k,
     )
-    return f"""
-WITH q AS (
-  SELECT * FROM (
-    SELECT `{id_col}` AS query_id, `{vec_col}` AS __qv, {norm} AS __qn
-    FROM {queries_table}
-  ) WHERE __qn > 0
-),
-c AS (
-  SELECT * FROM (
-    SELECT `{id_col}` AS neighbor_id, `{vec_col}` AS __cv, {norm} AS __cn
-    FROM {corpus_table}
-  ) WHERE __cn > 0
-),
-scored AS (
-  SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,
-         ({_dot_sql('__qv', '__cv')} / (__qn * __cn)) AS cosine
-  FROM c CROSS JOIN q
-  WHERE NOT (neighbor_id = query_id)
-)
-SELECT *, row_number() {over} AS rank
-FROM (
-  SELECT query_id, neighbor_id, cosine
-  FROM (SELECT *, row_number() {over} AS __rn FROM scored)
-  WHERE __rn <= {int(k)}
-)
-"""
 
 
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42):
@@ -170,7 +234,10 @@ def hyperplane_lsh_topk(
     folds over literal hyperplane arrays; the per-table bucket ids
     posexplode to (table, bucket) rows and the candidate join is an
     equi-join on that compound key — same shuffle shape as the minhash
-    LSH band join, cost ∝ bucket occupancy, never |corpus|².
+    LSH band join, cost ∝ bucket occupancy, never |corpus|².  A pair
+    that collides in several tables is kept only in the first of them
+    (its bucket arrays are compared per pair), so no aggregation
+    dedupes the candidates.
 
     ``n_planes`` is THE recall/cost knob: each plane halves expected
     bucket occupancy but loses neighbors whose angle crosses it.
@@ -180,50 +247,40 @@ def hyperplane_lsh_topk(
     candidate sets proportionally.
     """
     planes = _hyperplanes(dim, n_planes, n_tables)
-
-    def _bucket(vec: Column, table: int) -> Column:
-        bits = None
-        for j in range(n_planes):
-            h = F.array(*[F.lit(float(x)) for x in planes[table, j]])
-            bit = F.when(_dot(vec, h) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            bits = bit if bits is None else bits + bit
-        return bits
-
-    def _tabled(df: DataFrame, role: str) -> DataFrame:
-        buckets = F.array(
-            *[_bucket(F.col(vec_col), t) for t in range(n_tables)]
+    v = f"`{vec_col}`"
+    buckets = "array({})".format(
+        ", ".join(
+            " + ".join(
+                f"CASE WHEN {_dot(v, _array(planes[t, j]))} > 0 "
+                f"THEN {1 << j} ELSE 0 END"
+                for j in range(n_planes)
+            )
+            for t in range(n_tables)
         )
-        return df.select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col(vec_col).alias(f"__{role}v"),
-            _norm(F.col(vec_col)).alias(f"__{role}n"),
-            F.posexplode(buckets).alias("__table", "__bucket"),
-        ).where(F.col(f"__{role}n") > 0)
+    )
 
-    c = _tabled(corpus, "neighbor")
-    q = F.broadcast(_tabled(queries, "query"))
-    candidates = (
-        c.join(q, on=["__table", "__bucket"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "__queryv", "__queryn", "neighbor_id", "__neighborv", "__neighborn")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("__queryv"), F.col("__neighborv"))
-            / (F.col("__queryn") * F.col("__neighborn"))
-        ).alias("cosine"),
-    )
-    from pyspark.sql import Window
+    def side(role: str) -> str:
+        b = f"__{role}b"
+        return _side_sql(
+            f"(SELECT *, {buckets} AS {b} FROM {{{role}}})",
+            role,
+            id_col,
+            v,
+            b,
+            f"posexplode({b}) AS (__table, __bucket)",
+        )
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    first_shared = "array_position(zip_with(__qb, __cb, (x, y) -> x = y), true) - 1"
+    return _search(
+        corpus,
+        queries,
+        side("q"),
+        side("c"),
+        _COSINE,
+        "cosine",
+        k,
+        join="JOIN q ON c.__table = q.__table AND c.__bucket = q.__bucket",
+        pair=f"NOT (neighbor_id = query_id) AND c.__table = {first_shared}",
     )
 
 
@@ -240,38 +297,57 @@ def lsh_bucketed_topk(
     bucket replaces the cross join — this is the 100 TB plan: shuffle
     on bucket id, compare within buckets only.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-        F.col(bucket_col).alias("__bucket"),
-    ).where(F.col("__qn") > 0)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-        F.col(bucket_col).alias("__bucket"),
-    ).where(F.col("__cn") > 0)
-    scored = (
-        c.join(F.broadcast(q), on="__bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("__qv"), F.col("__cv"))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cosine"),
-        )
+    v, key = f"`{vec_col}`", f"`{bucket_col}` AS __bucket"
+    return _search(
+        corpus,
+        queries,
+        _side_sql("{q}", "q", id_col, v, key),
+        _side_sql("{c}", "c", id_col, v, key),
+        _COSINE,
+        "cosine",
+        k,
+        join=_BUCKET_JOIN,
     )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+
+def _bucket_pairs_sql(
+    table: str, id_col: str, vec_col: str, bucket_col: str, **pairs
+) -> str:
+    """The cosine-scored pairs of one table with itself within a coarse
+    bucket (:func:`_pairs_sql`; no broadcast: both sides are the whole
+    table)."""
+    v, key = f"`{vec_col}`", f"`{bucket_col}` AS __bucket"
+    return _pairs_sql(
+        _side_sql(table, "q", id_col, v, key),
+        _side_sql(table, "c", id_col, v, key),
+        _COSINE,
+        "cosine",
+        join=_BUCKET_JOIN,
+        broadcast="",
+        **pairs,
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+
+
+def cosine_neardup_pairs(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    bucket_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs: same coarse bucket, cosine
+    >= ``threshold``, each pair once as (id_a, id_b, cosine) with
+    id_a < id_b.  The bucket equi-join keeps the pair space linear-ish
+    at scale — the plan of ``lsh_bucketed_topk`` minus the top-k."""
+    pairs = _bucket_pairs_sql(
+        "{e}", id_col, vec_col, bucket_col, pair="query_id < neighbor_id"
+    )
+    return emb.sparkSession.sql(
+        pairs + f"""
+SELECT query_id AS id_a, neighbor_id AS id_b, cosine
+FROM scored WHERE cosine >= {float(threshold)!r}D
+""",
+        e=emb,
     )
 
 
@@ -299,45 +375,25 @@ def semantic_dedup_groups(
     embedding similarity are overwhelmingly cliques, not long chains.
 
     Returns (id, representative, keep): ``keep`` marks the one row per
-    group that survives dedup.
+    group that survives dedup.  Vectors without a cosine (zero norm,
+    e.g. empty/failed embeddings) join no pair and survive as their own
+    representatives.
     """
-    # Zero-norm vectors (empty/failed embeddings) have no defined
-    # cosine: exclude them from the neighbor join BEFORE the division
-    # (ANSI mode raises DIVIDE_BY_ZERO otherwise) — they fall through
-    # the left join below and survive as their own representatives.
-    a = emb.select(
-        F.col(id_col).alias("__ida"),
-        F.col(vec_col).alias("__va"),
-        _norm(F.col(vec_col)).alias("__na"),
-        F.col(bucket_col).alias("__bucket"),
-    ).where(F.col("__na") > 0)
-    b = emb.select(
-        F.col(id_col).alias("__idb"),
-        F.col(vec_col).alias("__vb"),
-        _norm(F.col(vec_col)).alias("__nb"),
-        F.col(bucket_col).alias("__bucket"),
-    ).where(F.col("__nb") > 0)
-    neighbors = (
-        a.join(b, on="__bucket")
-        .where(F.col("__ida") != F.col("__idb"))
-        .where(
-            _dot(F.col("__va"), F.col("__vb"))
-            / (F.col("__na") * F.col("__nb"))
-            >= threshold
-        )
-        .select("__ida", "__idb")
-    )
-    min_nb = neighbors.groupBy("__ida").agg(F.min("__idb").alias("__min_nb"))
-    return (
-        emb.select(F.col(id_col).alias("__ida"))
-        .join(min_nb, on="__ida", how="left")
-        .select(
-            F.col("__ida").alias(id_col),
-            F.least(
-                F.col("__ida"), F.coalesce(F.col("__min_nb"), F.col("__ida"))
-            ).alias("representative"),
-        )
-        .withColumn("keep", F.col("representative") == F.col(id_col))
+    i = f"e.`{id_col}`"
+    pairs = _bucket_pairs_sql("{e}", id_col, vec_col, bucket_col)
+    return emb.sparkSession.sql(
+        pairs + f""",
+nb AS (
+  SELECT query_id, min(neighbor_id) AS __min_nb FROM scored
+  WHERE cosine >= {float(threshold)!r}D GROUP BY query_id
+),
+rep AS (
+  SELECT {i}, least({i}, coalesce(nb.__min_nb, {i})) AS representative
+  FROM {{e}} e LEFT JOIN nb ON {i} = nb.query_id
+)
+SELECT *, representative = `{id_col}` AS keep FROM rep
+""",
+        e=emb,
     )
 
 
@@ -454,57 +510,36 @@ def int8_dot_topk(
     """Quantized similarity search with NO floating point past the
     one-time quantization: both sides encode symmetrically with the
     same global bound, the score is the exact bigint dot product of
-    the int8 code arrays (monotone proxy for the float inner product;
-    recall@5 pinned in tests), and ranking is (score desc, neighbor
-    asc) — every output column and every comparison is an integer, so
-    this gate class has zero cross-engine ULP surface (unlike the
-    float-cosine rankers).
+    the int8 code arrays (:func:`int8_pair_dot`; monotone proxy for
+    the float inner product; recall@5 pinned in tests), and ranking is
+    (score desc, neighbor asc) — every output column and every
+    comparison is an integer, so this gate class has zero cross-engine
+    ULP surface (unlike the float-cosine rankers).  An integer dot
+    needs no norm, so only NULL codes are dropped: all-zero codes score
+    0, as in the oracle.
 
     Scale shape mirrors `cosine_topk_bruteforce`: the (tiny) quantized
     query set broadcasts across the corpus scan; at 100 TB the scan
     reads 4x fewer bytes than the float baseline — that is the point
     of quantized search."""
-    from pyspark.sql import Window
-
-    qc = int8_quantize_symmetric(queries, max_abs, vec_col, "qq").where(
-        F.col("qq").isNotNull()
-    ).select(F.col(id_col).alias("query_id"), "qq")
-    cc = int8_quantize_symmetric(corpus, max_abs, vec_col, "cq").where(
-        F.col("cq").isNotNull()
-    ).select(F.col(id_col).alias("neighbor_id"), "cq")
-    scored = (
-        cc.crossJoin(F.broadcast(qc))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.aggregate(
-                F.zip_with("qq", "cq", lambda a, b: (a * b).cast("bigint")),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("dot_q"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
+    return _search(
+        int8_quantize_symmetric(corpus, max_abs, vec_col, "__codes"),
+        int8_quantize_symmetric(queries, max_abs, vec_col, "__codes"),
+        _side_sql("{q}", "q", id_col, "__codes", norm=False),
+        _side_sql("{c}", "c", id_col, "__codes", norm=False),
+        int8_pair_dot("__qv", "__cv"),
+        "dot_q",
+        k,
     )
 
 
-def int8_pair_dot(code_a: str, code_b: str):
-    """Exact BIGINT dot product of two int8 code array columns — ONE
-    definition of the bitext pair score shared by the brute-force and
-    IVF-bucketed alignment gates (a quantization or fold tweak applied
-    to one would silently break their dots-identical invariant)."""
-    return F.aggregate(
-        F.zip_with(code_a, code_b, lambda a, b: (a * b).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+def int8_pair_dot(code_a: str, code_b: str) -> str:
+    """Exact BIGINT dot product of two int8 code arrays, as SQL text —
+    ONE definition of the quantized pair score shared by
+    ``int8_dot_topk`` and the brute-force and IVF-bucketed bitext
+    alignment gates (a quantization or fold tweak applied to one would
+    silently break their dots-identical invariant)."""
+    return _fold(code_a, code_b, "cast(x * y as bigint)", "0L")
 
 
 def mutual_rank_columns(
@@ -517,12 +552,10 @@ def mutual_rank_columns(
     A-id and ``__rb`` per B-id, ordered (dot desc, other id asc) — the
     shared tie-broken mutual-NN ranking of the bitext gates; mutual
     pairs are ``__ra == 1 AND __rb == 1``."""
-    from pyspark.sql import Window
-
-    wa = Window.partitionBy(id_a).orderBy(F.col(dot).desc(), F.col(id_b).asc())
-    wb = Window.partitionBy(id_b).orderBy(F.col(dot).desc(), F.col(id_a).asc())
-    return scored.withColumn("__ra", F.row_number().over(wa)).withColumn(
-        "__rb", F.row_number().over(wb)
+    return scored.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY {id_a} ORDER BY {dot} DESC, {id_b} ASC) AS __ra",
+        f"row_number() OVER (PARTITION BY {id_b} ORDER BY {dot} DESC, {id_a} ASC) AS __rb",
     )
 
 
@@ -577,14 +610,10 @@ def jl_project(
     SQL-text construction (r12): the Column form issued one py4j round
     trip per matrix ENTRY (out_dim x in_dim F.lit calls — ~1k for the
     64->16 projector) per construction; the parsed strings embed the
-    same literals in one call per output dim.  `repr(x)D` is the SQL
-    DOUBLE literal — Java's parseDouble of Python's shortest
-    round-trip repr reproduces the exact double, so the analyzed plan
-    literals are bit-identical to F.lit(x)."""
+    same literals in one call per output dim."""
     in_dim = len(matrix[0])
     cols = [
-        f"{_dot_sql(f'`{vec_col}`', 'array(' + ', '.join(f'{x!r}D' for x in row) + ')')}"
-        f" AS `{prefix}{i}`"
+        f"{_dot(f'`{vec_col}`', _array(row))} AS `{prefix}{i}`"
         for i, row in enumerate(matrix)
     ]
     return df.where(
@@ -608,18 +637,22 @@ def jl_rerank_topk(
     proportionally fewer bytes — and keeps a per-query ``shortlist``;
     stage 2 re-ranks ONLY the shortlist pairs with the exact
     full-dimension cosine.  Recall vs the exact brute force is measured
-    in tests; at 100 TB stage 2 semi-join-prunes the corpus to the
-    shortlist ids BEFORE touching full vectors, so its norms and dots
-    run over |queries| x shortlist rows only.
+    in tests.  Stage 2's candidate join is the (|queries| x
+    shortlist)-row shortlist, hinted to broadcast like the bounded
+    query set it grows from (the optimizer's size estimate of a
+    filtered window is no bound), so the corpus joins it on
+    neighbor_id without a shuffle and the dots run over the shortlist
+    pairs only.  The full-dimension norms are taken for every corpus
+    row, map-side, before that join: one fold per row, a fraction
+    1/out_dim of the projection every row already pays.
 
     Stage 1 IS `cosine_topk_bruteforce` over the packed projected
-    arrays (ONE ranking/tie-break definition — a fix there applies
-    here), with k = ``shortlist``.
+    arrays with k = ``shortlist``; stage 2 is the same search with the
+    shortlist as its candidate join (ONE ranking/tie-break definition —
+    a fix there applies here).
 
     Output: (query_id, neighbor_id, cosine, rank) — same contract as
     `cosine_topk_bruteforce`."""
-    from pyspark.sql import Window
-
     out_dim = len(matrix)
     parr = f"array({', '.join(f'p{i}' for i in range(out_dim))})"
     pq = jl_project(queries, matrix, vec_col, id_col).selectExpr(
@@ -630,42 +663,16 @@ def jl_rerank_topk(
     )
     short = cosine_topk_bruteforce(
         pc, pq, id_col=id_col, vec_col="__p", k=shortlist
-    ).select("query_id", "neighbor_id")
-
-    # stage 2: exact full-dim cosine on shortlist pairs only — the
-    # corpus is pruned to shortlist members BEFORE any norm/dot work.
-    # No zero-norm guard needed: a zero full vector projects to zero
-    # and is already excluded by stage 1's norm filter.
-    qv = queries.selectExpr(
-        f"`{id_col}` AS query_id",
-        f"`{vec_col}` AS __qv",
-        f"{_norm_sql(f'`{vec_col}`')} AS __qn2",
     )
-    cv = (
-        corpus.selectExpr(
-            f"`{id_col}` AS neighbor_id", f"`{vec_col}` AS __cv"
-        )
-        .join(
-            short.select("neighbor_id").distinct(),
-            on="neighbor_id",
-            how="left_semi",
-        )
-        .selectExpr("neighbor_id", "__cv", f"{_norm_sql('__cv')} AS __cn2")
+    v = f"`{vec_col}`"
+    sql = _topk_sql(
+        _side_sql("{q}", "q", id_col, v),
+        _side_sql("{c}", "c", id_col, v),
+        _COSINE,
+        "cosine",
+        k,
+        join="JOIN (SELECT query_id, neighbor_id FROM {s}) s USING (neighbor_id) "
+        "JOIN q USING (query_id)",
+        broadcast="q, s",
     )
-    exact = (
-        short.join(F.broadcast(qv), on="query_id")
-        .join(cv, on="neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"({_dot_sql('__qv', '__cv')} / (__qn2 * __cn2)) AS cosine",
-        )
-    )
-    ranked = top_k_per_group_sql(
-        exact, ["query_id"], "cosine DESC, neighbor_id ASC", k
-    )
-    return ranked.selectExpr(
-        "*",
-        "row_number() OVER (PARTITION BY query_id "
-        "ORDER BY cosine DESC, neighbor_id ASC) AS rank",
-    )
+    return corpus.sparkSession.sql(sql, c=corpus, q=queries, s=short)

@@ -749,39 +749,25 @@ def ivf_mutual_nn_bitext(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the standard IVF recall/cost dial.  A pair can now match via
     # several shared cells, so the scored rows (identical per pair)
     # collapse with distinct().
+    probe = f"explode({_probe_clusters('embedding', cents, _NPROBE)}) AS cluster"
     qa = (
         int8_quantize_symmetric(
             emb.where(F.col("label") % 2 == 0), s, "embedding", "qa"
         )
         .where(F.col("qa").isNotNull())
-        .select(
-            F.col("vec_id").alias("id_a"),
-            "qa",
-            F.explode(
-                _probe_clusters(
-                    F.col("embedding").cast("array<double>"), cents, _NPROBE
-                )
-            ).alias("cluster"),
-        )
+        .selectExpr("vec_id AS id_a", "qa", probe)
     )
     qb = (
         int8_quantize_symmetric(
             emb.where(F.col("label") % 2 == 1), s, "embedding", "qb"
         )
         .where(F.col("qb").isNotNull())
-        .select(
-            F.col("vec_id").alias("id_b"),
-            "qb",
-            F.explode(
-                _probe_clusters(
-                    F.col("embedding").cast("array<double>"), cents, _NPROBE
-                )
-            ).alias("cluster"),
-        )
+        .selectExpr("vec_id AS id_b", "qb", probe)
     )
     scored = (
         qa.join(qb, on="cluster")
-        .select("id_a", "id_b", int8_pair_dot("qa", "qb").alias("dot_q"))
+        .where("size(qa) = size(qb)")
+        .selectExpr("id_a", "id_b", f"{int8_pair_dot('qa', 'qb')} AS dot_q")
         .distinct()
     )
     return (

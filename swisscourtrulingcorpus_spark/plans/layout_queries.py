@@ -302,9 +302,11 @@ def mutual_nn_bitext(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bitext_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE definition of the bitext scored-pair table shared by the
     mutual-NN and margin gates: int8-quantize both label groups with the
-    global bound, one broadcast-cross exact bigint dot per (A, B) pair,
-    plus both direction ranks (__ra per A-id, __rb per B-id; ties by
-    the other id ascending)."""
+    global bound, one exact bigint dot per (A, B) pair of a broadcast
+    join, plus both direction ranks (__ra per A-id, __rb per B-id; ties
+    by the other id ascending).  Only pairs of equal length are scored,
+    as in `operators/similarity.py`'s pair body: ``zip_with`` would
+    null-pad the shorter array into a NULL dot that ranks as mutual."""
     from swisscourtrulingcorpus_spark.operators.similarity import (
         int8_pair_dot,
         int8_quantize_symmetric,
@@ -328,8 +330,9 @@ def _bitext_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("qb").isNotNull())
         .select(F.col("vec_id").alias("id_b"), "qb")
     )
-    scored = qb.crossJoin(F.broadcast(qa)).select(
-        "id_a", "id_b", int8_pair_dot("qa", "qb").alias("dot_q")
+    scored = (
+        qb.join(F.broadcast(qa), F.expr("size(qa) = size(qb)"))
+        .selectExpr("id_a", "id_b", f"{int8_pair_dot('qa', 'qb')} AS dot_q")
     )
     return mutual_rank_columns(scored)
 

@@ -601,42 +601,15 @@ WHERE rank <= 5
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: same coarse bucket
-    (label = IVF centroid stand-in), cosine >= 0.3, id_a < id_b.
-    The bucket equi-join keeps the pair space linear-ish at scale —
-    the same plan as lsh_bucketed_topk minus the top-k."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    from swisscourtrulingcorpus_spark.operators.similarity import _dot, _norm
-
-    # Norms are per-ROW projections ahead of the join (one fold per
-    # vector, not three folds per PAIR) — same doubles, same order, so
-    # the oracle values are unchanged.
-    # zero-norm guard mirrored in the oracle's v CTE
-    a = emb.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("__va"),
-        _norm(F.col("embedding")).alias("__na"),
-        F.col("label").alias("__bucket"),
-    ).where(F.col("__na") > 0)
-    b = emb.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("__vb"),
-        _norm(F.col("embedding")).alias("__nb"),
-        F.col("label").alias("__bucket"),
-    ).where(F.col("__nb") > 0)
-    return (
-        a.join(b, on="__bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                _dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb"))
-            ).alias("cosine"),
-        )
-        .where(F.col("cosine") >= 0.3)
+    """Embedding-cosine near-duplicate pairs
+    (`operators/similarity.py::cosine_neardup_pairs`): same coarse
+    bucket (label = IVF centroid stand-in), cosine >= 0.3, id_a < id_b."""
+    from swisscourtrulingcorpus_spark.operators.similarity import (
+        cosine_neardup_pairs,
     )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return cosine_neardup_pairs(emb, "vec_id", "embedding", "label", 0.3)
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ import os
 from conftest import assert_golden_plans, load_golden_plans
 
 
-# Non-headline gates that reach the MinHash / SimHash / cosine top-k
+# Non-headline gates that reach the MinHash / SimHash / vector-search
 # operators through their DataFrame wrappers (``spark.sql(<builder>,
 # df=df)``); their operator suites run only in the slow tier.
 OPERATOR_WRAPPER_GATES = (
@@ -34,6 +34,10 @@ OPERATOR_WRAPPER_GATES = (
     "near_contamination_check",
     "rrf_hybrid_topk",
     "jl_rerank_topk_embeddings",
+    "ivf_topk_bucketed",
+    "embedding_neardup_pairs",
+    "semantic_dedup_groups",
+    "int8_dot_topk_embeddings",
 )
 
 
