@@ -1196,7 +1196,7 @@ def _thash_value(payload: bytes) -> int | None:
     don't decode / normalize to >= 3 words: distinct 3-word shingles
     of the whitespace-normalized lowercase text, per-shingle hash =
     first 14 hex chars of md5('sim|' || shingle) (the `functions/
-    hashing.py::h32` convention widened to 56 bits so every band of
+    hashing.py::h32_sql` convention widened to 56 bits so every band of
     the shared 4x14 join carries entropy — a 32-bit hash would zero
     band 3 for every text doc and quadratically explode that bucket),
     bit b = majority vote with ties to 1 (the `simhash64` rule).

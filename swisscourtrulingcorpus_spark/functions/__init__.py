@@ -1,9 +1,5 @@
 """Scalar/column function layer (SURVEY.md §2.7) + text-analysis functions."""
 
-from swisscourtrulingcorpus_spark.functions.hashing import (  # noqa: F401
-    h32,
-    normalize_ws,
-)
 from swisscourtrulingcorpus_spark.functions.text import (  # noqa: F401
     clean_text_col,
     token_count_ws,

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 
 GOPHER_STOPWORDS = ("the", "a", "and", "of", "to")
 BLOCKLIST_TERMS = ["lorem", "ipsum", "unsubscribe", "clickbait", "spam"]
@@ -26,11 +26,11 @@ BLOCKLIST_TERMS = ["lorem", "ipsum", "unsubscribe", "clickbait", "spam"]
 def gopher_rule_columns(text_col: str = "text") -> dict[str, Column]:
     """The named intermediate and verdict columns of the Gopher rules:
     n_words, stop_hits, wc_ok, wl_ok, stop_ok, keep."""
-    # the SAME normalize_ws as blocklist_hits below — this module's
+    # the SAME words_sql as blocklist_hits below — this module's
     # whole contract is one definition of the curation predicates, and
     # an inline re-spelling of the normalization was the one place the
     # two could still drift (r06 review)
-    words = F.split(normalize_ws(F.col(text_col)), " ")
+    words = F.expr(words_sql(f"`{text_col}`"))
     n_words = F.size(words)
     mean_wl = F.length(F.concat_ws("", words)) / F.greatest(n_words, F.lit(1))
     stop_hits = F.size(
@@ -53,7 +53,7 @@ def blocklist_hits(text_col: str = "text") -> Column:
     """array<string> of blocklist-term occurrences by exact WORD
     membership (not substring regex — 'spambot' must not flag
     'spam')."""
-    words = F.split(normalize_ws(text_col), " ")
+    words = F.expr(words_sql(f"`{text_col}`"))
     return F.filter(words, lambda w: w.isin(*BLOCKLIST_TERMS))
 
 

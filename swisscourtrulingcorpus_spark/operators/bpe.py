@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 
 END = "</w>"  # end-of-word marker: lets merges learn suffixes
 
@@ -52,7 +52,7 @@ def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     corpus pass; everything after runs on this table."""
     return (
         df.where(F.col(text_col).isNotNull())
-        .select(F.explode(F.split(normalize_ws(text_col), " ")).alias("word"))
+        .select(F.expr(f"explode({words_sql(f'`{text_col}`')})").alias("word"))
         .where(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))

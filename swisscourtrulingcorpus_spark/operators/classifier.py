@@ -12,7 +12,7 @@ sums of per-token log-likelihoods, which micro-int rounding
 makes integer-exact and hash-gateable against a SQL oracle.
 
 Scale shape (100 TB posture):
-- features are HASHED token buckets (``h32(word) % n_buckets``) — the
+- features are HASHED token buckets (``h32_sql(word) % n_buckets``) — the
   model is a fixed ``2 * n_buckets``-row table regardless of corpus
   size, like the DSIR bucket models;
 - training = one groupBy on (class, bucket) over slim int rows (the
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import h32, normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import h32_sql, words_sql
 
 MICRO = 1_000_000
 
@@ -49,9 +49,9 @@ def _hashed_buckets(
     frozen-model contract silently breaks.  Output: (*key_cols, b), one
     row per token occurrence."""
     return (
-        df.select(*key_cols, F.split(normalize_ws(text_col), " ").alias("__w"))
+        df.select(*key_cols, F.expr(words_sql(f"`{text_col}`")).alias("__w"))
         .select(*key_cols, F.explode("__w").alias("__word"))
-        .select(*key_cols, (h32("__word") % n_buckets).alias("b"))
+        .select(*key_cols, F.expr(f"{h32_sql('__word')} % {int(n_buckets)}").alias("b"))
     )
 
 

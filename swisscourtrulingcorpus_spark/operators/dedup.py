@@ -17,7 +17,7 @@ Four escalating strategies, all expressed with built-in DataFrame ops
                     shingle can't quadratically explode the join (the
                     classic scale failure mode of naive similarity join).
 
-All hashes go through ``functions.hashing.h32`` (md5-based) so the
+All hashes go through ``functions.hashing.h32_sql`` (md5-based) so the
 DuckDB oracle reproduces every number exactly.
 """
 
@@ -27,14 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import (
-    h32,
     h32_sql,
-    h32_window,
-    md5_seeded,
-    normalize_ws,
+    h32_window_sql,
+    md5_seeded_sql,
     normalize_ws_sql,
-    word_shingles_from_words,
     word_shingles_from_words_sql,
+    words_sql,
 )
 
 NUM_MINHASH = 8
@@ -77,7 +75,7 @@ def _shingle_sets_select(
     map-side.  Each projection binds its intermediate to a real column
     (``__w``, then ``__sh``) so Catalyst evaluates the split / shingle
     construction once per row, not once per reference (see
-    word_shingles_from_words for why that matters).
+    word_shingles_from_words_sql for why that matters).
 
     Docs with < k words drop out — equivalent to (and much cheaper
     than) filtering ``size(__sh) > 0`` afterwards: predicate pushdown
@@ -95,7 +93,7 @@ def _shingle_sets_select(
     3.6s → 1.7s with the spread).  At petabyte scale the scan already
     yields thousands of partitions; callers there pass None and skip
     the extra pass over the text."""
-    norm = normalize_ws_sql(f"`{text_col}`")
+    words = words_sql(f"`{text_col}`")
     sh = word_shingles_from_words_sql("__w", k)
     spread_hint = (
         f"/*+ REPARTITION({int(spread_partitions)}, `{id_col}`) */ "
@@ -104,7 +102,7 @@ def _shingle_sets_select(
     )
     return f"""
       SELECT `{id_col}`, array_distinct({sh}) AS __sh FROM (
-        SELECT `{id_col}`, split({norm}, ' ') AS __w FROM (
+        SELECT `{id_col}`, {words} AS __w FROM (
           SELECT {spread_hint}`{id_col}`, `{text_col}` FROM {table}
         )
       ) WHERE size(__w) >= {k}"""
@@ -230,12 +228,9 @@ def lsh_verified_pairs(
         df.join(ids, on=id_col, how="left_semi")
         .select(
             F.col(id_col),
-            F.substring(
-                F.regexp_replace(
-                    normalize_ws(text_col), r"[^\x20-\x7e]", ""
-                ),
-                1,
-                max_chars,
+            F.expr(
+                f"substring(regexp_replace({normalize_ws_sql(f'`{text_col}`')}, "
+                f"'[^\\\\x20-\\\\x7e]', ''), 1, {int(max_chars)})"
             ).alias("__t"),
         )
     )
@@ -311,7 +306,7 @@ def quality_dedup_representatives(
     )
     nw = df.select(
         F.col(id_col),
-        F.size(F.split(normalize_ws(text_col), " ")).cast("bigint").alias("n_words"),
+        F.expr(f"cast(size({words_sql(f'`{text_col}`')}) as bigint)").alias("n_words"),
     )
     sb = banded.join(nw, on=id_col)
     wb = Window.partitionBy("band", "band_key").orderBy(
@@ -387,17 +382,13 @@ def _minhash_signatures_select(
     """
     n_seeds = (num_hashes + 3) // 4
     digest_cols = ", ".join(
-        f"transform(__sh, x -> md5(concat('{s}|', x))) AS __m{s}"
+        f"transform(__sh, x -> {md5_seeded_sql('x', s)}) AS __m{s}"
         for s in range(n_seeds)
     )
 
     def mh(j: int) -> str:
         s, w = divmod(j, 4)
-        return (
-            f"array_min(transform(__m{s}, x -> "
-            f"cast(conv(substring(x, {1 + 8 * w}, 8), 16, 10) as bigint)"
-            f")) AS mh{j}"
-        )
+        return f"array_min(transform(__m{s}, x -> {h32_window_sql('x', w)})) AS mh{j}"
 
     mh_cols = ", ".join(mh(j) for j in range(num_hashes))
     sets_ = _shingle_sets_select(table, text_col, id_col, k, spread_partitions)
@@ -540,7 +531,7 @@ def simhash64(
         _shingle_sets(df, text_col, id_col, k, spread=spread)
         .select(
             id_col,
-            F.transform(F.col("__sh"), lambda s: h32(s, seed="sim")).alias("__hs"),
+            F.expr(f"transform(__sh, s -> {h32_sql('s', seed='sim')})").alias("__hs"),
         )
     )
     def _ones(b: int):
@@ -780,7 +771,7 @@ def ngram_jaccard_pairs_sql(
     __h bucket before the filter drops it, so a stop-shingle bucket
     spills to disk (never OOMs); both bounded-buffer guards tried were
     slower (OPTIMIZATION_r12.md §4)."""
-    norm = normalize_ws_sql(f"`{text_col}`")
+    words = words_sql(f"`{text_col}`")
     sh = word_shingles_from_words_sql("__w", k)
     spread_hint = (
         f"/*+ REPARTITION({int(spread_partitions)}, `{id_col}`) */ "
@@ -796,7 +787,7 @@ WITH rare AS (
           SELECT `{id_col}`, size(__sh) AS n_sh, explode(__sh) AS shingle
           FROM (
             SELECT `{id_col}`, array_distinct({sh}) AS __sh FROM (
-              SELECT `{id_col}`, split({norm}, ' ') AS __w FROM (
+              SELECT `{id_col}`, {words} AS __w FROM (
                 SELECT {spread_hint}`{id_col}`, `{text_col}` FROM {table}
               )
             ) WHERE size(__w) >= {k}
@@ -842,7 +833,7 @@ def contamination_check_sql(
     side is distinct on the hash, so the LEFT join cannot fan out eval
     rows and total and shared counts come from the same aggregation
     (``count(1)`` vs ``count(__hit)``)."""
-    norm = normalize_ws_sql(f"`{text_col}`")
+    words = words_sql(f"`{text_col}`")
     sh = word_shingles_from_words_sql("__w", k)
     spread_hint = (
         f"/*+ REPARTITION({int(spread_partitions)}, `{id_col}`) */ "
@@ -856,7 +847,7 @@ def contamination_check_sql(
         return f"""
   SELECT {cols}explode(__sh) AS shingle FROM (
     SELECT `{id_col}`, array_distinct({sh}) AS __sh FROM (
-      SELECT `{id_col}`, split({norm}, ' ') AS __w FROM (
+      SELECT `{id_col}`, {words} AS __w FROM (
         SELECT {spread_hint}`{id_col}`, `{text_col}` FROM {table}
       )
     )
@@ -1108,7 +1099,7 @@ def repeated_ngram_spans(
     from pyspark.sql import Window
 
     words = df.select(
-        F.col(id_col), F.split(normalize_ws(text_col), " ").alias("__w")
+        F.col(id_col), F.expr(words_sql(f"`{text_col}`")).alias("__w")
     ).where(F.size("__w") >= k)
     # shared slice+zip_with shingler (measured ~4x faster per row than
     # the indexed-transform shape; see its docstring) — posexplode gives
@@ -1117,22 +1108,18 @@ def repeated_ngram_spans(
     # recompute it (CollapseProject keeps non-cheap aliases referenced
     # more than once in their own project).
     wins = (
-        words.select(
-            id_col,
-            F.posexplode(word_shingles_from_words(F.col("__w"), k)).alias(
-                "pos0", "sh"
-            ),
+        words.selectExpr(
+            f"`{id_col}`",
+            f"posexplode({word_shingles_from_words_sql('__w', k)}) AS (pos0, sh)",
         )
-        .select(
-            id_col,
-            (F.col("pos0") + 1).alias("pos"),
-            md5_seeded("sh", "span").alias("__d"),
+        .selectExpr(
+            f"`{id_col}`", "pos0 + 1 AS pos", f"{md5_seeded_sql('sh', 'span')} AS __d"
         )
-        .select(
-            id_col,
+        .selectExpr(
+            f"`{id_col}`",
             "pos",
-            h32_window(F.col("__d"), 0).alias("h1"),
-            h32_window(F.col("__d"), 1).alias("h2"),
+            f"{h32_window_sql('__d', 0)} AS h1",
+            f"{h32_window_sql('__d', 1)} AS h2",
         )
     )
     dup = (

@@ -26,12 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 
 
 def _doc_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.split(normalize_ws(text_col), " ").alias("__w")
+        F.col(id_col), F.expr(words_sql(f"`{text_col}`")).alias("__w")
     )
 
 

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 
 #: micro-score scale: 1e6 keeps per-term contributions (O(0.1..15))
 #: integer-exact to 6 decimals; a 64-term query sums to < 1e9 —
@@ -47,11 +47,11 @@ SCORE_SCALE = 1_000_000
 
 def tokenize(df: DataFrame, text_col: str = "text", out_col: str = "term") -> DataFrame:
     """Whitespace tokenization after the repo's ONE shared
-    normalization (`functions/hashing.py::normalize_ws`) — the same on
+    normalization (`functions/hashing.py::words_sql`) — the same on
     the index side, the query side, and the DuckDB oracles, so term
     keys always agree."""
     return df.withColumn(
-        out_col, F.explode(F.split(normalize_ws(text_col), " "))
+        out_col, F.expr(f"explode({words_sql(f'`{text_col}`')})")
     )
 
 
@@ -252,7 +252,7 @@ def build_positional_postings(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Positional inverted index: one (term, doc_id, pos) row per token
-    occurrence, positions 0-based over the shared `normalize_ws`
+    occurrence, positions 0-based over the shared `words_sql`
     tokenization.  The positional twin of ``build_postings`` — ~token-
     stream-sized (larger than the tf-postings but still slim fixed-width
     rows), term-partitionable with `write_postings` the same way, and
@@ -260,7 +260,7 @@ def build_positional_postings(
     reaches the serving path."""
     return docs.select(
         id_col,
-        F.posexplode(F.split(normalize_ws(text_col), " ")).alias("pos", "term"),
+        F.expr(f"posexplode({words_sql(f'`{text_col}`')}) AS (pos, term)"),
     ).select("term", id_col, "pos")
 
 
@@ -290,7 +290,7 @@ def phrase_search(
     """
     terms = phrases.select(
         phrase_id_col,
-        F.posexplode(F.split(normalize_ws(phrase_col), " ")).alias("slot", "term"),
+        F.expr(f"posexplode({words_sql(f'`{phrase_col}`')}) AS (slot, term)"),
     )
     n_slots = terms.groupBy(phrase_id_col).agg(
         F.countDistinct("slot").alias("__n_slots")

@@ -94,7 +94,7 @@ def cms_table(
 ) -> DataFrame:
     """Count-min sketch as a RELATIONAL table: one row per (depth row,
     bucket[, slice]) with the collision-summed count.  Buckets come
-    from the portable md5 hash (`functions/hashing.py::h32`) so the
+    from the portable md5 hash (`functions/hashing.py::h32_sql`) so the
     sketch is engine- and cluster-size-independent.
 
     Mergeability is free: the sketch of a union of slices is
@@ -111,28 +111,15 @@ def cms_table(
     map-side combine still collapses to ≤ depth × width partials per
     task before the (tiny) shuffle.
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
     keep = [slice_col] if slice_col else []
-    exploded = df.select(
-        *keep,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        (
-                            h32(
-                                F.col(value_col).cast("string"), f"cms{d}"
-                            )
-                            % width
-                        ).alias("bucket"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("__db"),
+    value = f"cast(`{value_col}` as string)"
+    structs = ", ".join(
+        f"struct({d} AS d, {h32_sql(value, f'cms{d}')} % {int(width)} AS bucket)"
+        for d in range(depth)
     )
+    exploded = df.select(*keep, F.expr(f"explode(array({structs}))").alias("__db"))
     return exploded.groupBy(*keep, "__db.d", "__db.bucket").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -158,7 +145,7 @@ def cms_estimate(
     per-slice rows would silently take the min across slices instead of
     the min across depth rows.
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
     extra = set(sketch.columns) - {"d", "bucket", "cnt"}
     if extra:
@@ -172,9 +159,9 @@ def cms_estimate(
         p = probes.select(
             F.col(probe_col),
             F.lit(d).alias("d"),
-            (h32(F.col(probe_col).cast("string"), f"cms{d}") % width).alias(
-                "bucket"
-            ),
+            F.expr(
+                f"{h32_sql(f'cast(`{probe_col}` as string)', f'cms{d}')} % {int(width)}"
+            ).alias("bucket"),
         )
         probe_buckets = p if probe_buckets is None else probe_buckets.unionByName(p)
     joined = probe_buckets.join(
@@ -251,7 +238,7 @@ def bloom_build(
     present.
 
     Scale shape: each key maps to ``k`` bit positions via the portable
-    md5 hash family (`functions/hashing.py::h32`), positions shuffle as
+    md5 hash family (`functions/hashing.py::h32_sql`), positions shuffle as
     (word_idx, bit) pairs — fixed-width, key text never moves — and
     ``bit_or`` aggregates map-side.  Because OR is associative and
     commutative, per-partition / per-day filter slices merge by the
@@ -263,18 +250,18 @@ def bloom_build(
     match never enter the exchange.  False positives only (bounded by
     the standard (1-e^{-kn/m})^k), never false negatives.
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
-    key = F.col(key_col).cast("string")
-    positions = F.array(
-        *[h32(key, seed=f"bloom{j}") % m_bits for j in range(k)]
+    key = f"cast(`{key_col}` as string)"
+    positions = ", ".join(
+        f"{h32_sql(key, seed=f'bloom{j}')} % {int(m_bits)}" for j in range(k)
     )
     return (
         # NULL keys have no hash (md5(NULL) is NULL) — without the
         # filter they emit a (null, null) word row that crashes the
         # collected-words sort in bloom_might_contain (r04 review)
         df.where(F.col(key_col).isNotNull())
-        .select(F.explode(positions).alias("pos"))
+        .select(F.expr(f"explode(array({positions}))").alias("pos"))
         .select(
             (F.col("pos") / 64).cast("int").alias("word_idx"),
             # shiftleft's python API takes only a literal shift count;
@@ -300,7 +287,7 @@ def bloom_might_contain(
     ``bloom_build`` output (bounded: m_bits/64 longs — kilobytes, the
     broadcast-dim regime); membership tests run as a pure map-side
     expression over a literal word map, zero shuffles, full codegen."""
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
     words = F.create_map(
         *[
@@ -309,14 +296,14 @@ def bloom_might_contain(
             for x in (int(idx), int(word))
         ]
     )
-    key = F.col(key_col).cast("string")
+    key = f"cast(`{key_col}` as string)"
     tmp = probe
     pos_cols = []
     checks = []
     for j in range(k):
         pc = f"__bloom_pos_{j}"
         pos_cols.append(pc)
-        tmp = tmp.withColumn(pc, h32(key, seed=f"bloom{j}") % m_bits)
+        tmp = tmp.withColumn(pc, F.expr(f"{h32_sql(key, seed=f'bloom{j}')} % {int(m_bits)}"))
         word = F.coalesce(
             F.element_at(words, (F.col(pc) / 64).cast("int")),
             F.lit(0).cast("bigint"),
@@ -337,7 +324,7 @@ def portable_hll_registers(
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Engine-independent HyperLogLog register table: (register,
-    max_rank) from the shared md5 hash (`functions/hashing.py::h32`),
+    max_rank) from the shared md5 hash (`functions/hashing.py::h32_sql`),
     every step integer arithmetic — unlike the DataSketches wrappers
     above, this one IS oracle-checkable and driver-gated
     (`plans/sketch_queries.py`, construction documented there).
@@ -348,12 +335,12 @@ def portable_hll_registers(
     incrementally — the 100 TB pattern where distinct-count questions
     over any slice union are answered from stored 2^p-row tables,
     never by rescanning raw data."""
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
     tail_bits = 32 - p
     tail_mod = 1 << tail_bits
     gcols = list(group_cols or [])
-    h = h32(F.col(key_col).cast("string"), seed=seed)
+    h = F.expr(h32_sql(f"cast(`{key_col}` as string)", seed=seed))
     tail = h % F.lit(tail_mod)
     rank = F.when(tail == 0, F.lit(tail_bits + 1)).otherwise(
         F.lit(tail_bits + 1) - F.length(F.conv(tail.cast("string"), 10, 2))

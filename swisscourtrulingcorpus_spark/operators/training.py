@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import (
-    md5_seeded,
-    normalize_ws_sql,
+    h32_sql,
+    md5_seeded_sql,
+    words_sql,
 )
 
 
@@ -60,7 +61,7 @@ def chunk_documents_sql(
     if overlap >= chunk_size:
         raise ValueError("overlap must be smaller than chunk_size")
     step = chunk_size - overlap
-    norm = normalize_ws_sql(f"`{text_col}`")
+    words = words_sql(f"`{text_col}`")
     return f"""
 SELECT `{id_col}`,
        cast((__s - 1) / {step} as int) AS chunk_idx,
@@ -71,7 +72,7 @@ FROM (
          explode(sequence(1, greatest(size(__w) - {overlap}, 1), {step})) AS __s,
          __w
   FROM (
-    SELECT `{id_col}`, split({norm}, ' ') AS __w
+    SELECT `{id_col}`, {words} AS __w
     FROM {table} WHERE `{text_col}` IS NOT NULL
   )
 )
@@ -285,15 +286,13 @@ def deterministic_shuffle_sql(
     re-evaluation of the twice-referenced nondeterministic subtree)
     carries over: the ``rows`` text is spliced twice below.  One parsed
     statement instead of ~126 py4j round trips."""
-    from swisscourtrulingcorpus_spark.functions.hashing import _safe_seed
-
     mask = (1 << 33) - 1
     rows = f"""
     SELECT *, (__mid & {mask}) + 1 AS __local FROM (
       SELECT *, shiftright(__mid, 33) AS __pid FROM (
         SELECT *, monotonically_increasing_id() AS __mid FROM (
           SELECT /*+ REPARTITION_BY_RANGE(__k, `{id_col}`) */ * FROM (
-            SELECT *, md5(concat('{_safe_seed(seed)}|', cast(`{id_col}` as string))) AS __k
+            SELECT *, {md5_seeded_sql(f"cast(`{id_col}` as string)", seed)} AS __k
             FROM {table}
           ) SORT BY __k ASC, `{id_col}` ASC
         )
@@ -337,7 +336,7 @@ def pack_sequences(
     keyed = df.select(
         F.col(id_col),
         F.col(len_col).cast("bigint").alias("__len"),
-        md5_seeded(F.col(id_col).cast("string"), seed).alias("__k"),
+        F.expr(md5_seeded_sql(f"cast(`{id_col}` as string)", seed)).alias("__k"),
     )
     summed = parallel_prefix_sum(
         keyed,
@@ -382,13 +381,11 @@ def domain_mix_sample(
     closure), the hash is codegen md5 — a pure map-side filter with
     zero shuffles, pushed against the scan.
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
-
     rate = F.lit(float(default_rate))
     for value, r in sorted(rates.items()):
         rate = F.when(F.col(group_col) == value, F.lit(float(r))).otherwise(rate)
     threshold = F.floor(rate * F.lit(4294967296.0)).cast("bigint")
-    return df.where(h32(F.col(id_col).cast("string"), seed) < threshold)
+    return df.where(F.expr(h32_sql(f"cast(`{id_col}` as string)", seed)) < threshold)
 
 
 def oracle_domain_mix_predicate(
@@ -433,11 +430,9 @@ def group_aware_split(
     map-side expression — zero shuffles (the group label is already on
     the row after the dedup join).
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
-
     total = sum(weights.values())
     assert abs(total - 1.0) < 1e-9, f"weights sum to {total}, not 1"
-    coin = h32(F.col(group_col).cast("string"), seed)
+    coin = F.expr(h32_sql(f"cast(`{group_col}` as string)", seed))
     expr = None
     acc = 0.0
     items = sorted(weights.items())
@@ -596,7 +591,7 @@ def _two_phase_stratum_topn(
     funnels through one window task: a row in the true global top-cap
     is necessarily in its input-partition's local top-cap, so phase 1
     discards no winner; phase 2 re-ranks the bounded survivors."""
-    key = md5_seeded(F.col(id_col).cast("string"), seed)
+    key = F.expr(md5_seeded_sql(f"cast(`{id_col}` as string)", seed))
     local_w = Window.partitionBy(
         F.spark_partition_id(), F.col(strata_col)
     ).orderBy(key.asc(), F.col(id_col).asc())
@@ -760,8 +755,6 @@ def priority_sample(
     is_sample = 1 for ranks 1..k and 0 for the threshold row."""
     from pyspark.sql import Window
 
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
-
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     # Staged long division (the integer_hits identity, ADVICE r06):
     # q = w*2^32 div m computed as
@@ -777,9 +770,7 @@ def priority_sample(
         .select(
             id_col,
             "weight",
-            (
-                h32(F.col(id_col).cast("string"), seed=seed) + F.lit(1)
-            ).alias("__den"),
+            F.expr(f"{h32_sql(f'cast(`{id_col}` as string)', seed)} + 1").alias("__den"),
         )
         .select(
             id_col,

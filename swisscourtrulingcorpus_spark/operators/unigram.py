@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 
 MICRO = 1_000_000
 #: packing base for (cost_micro, n_pieces): supports words up to 63
@@ -61,7 +61,7 @@ def unigram_vocab(
     from segmentation alike (the DP's chain depth is max_word_len;
     documented contract, mirrored by the oracle)."""
     words = (
-        df.select(F.explode(F.split(normalize_ws(text_col), " ")).alias("w"))
+        df.select(F.expr(f"explode({words_sql(f'`{text_col}`')})").alias("w"))
         .where((F.length("w") >= 1) & (F.length("w") <= max_word_len))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -150,7 +150,7 @@ def unigram_segment_words(
         .localCheckpoint(eager=True)
     )
     words = (
-        df.select(F.explode(F.split(normalize_ws(text_col), " ")).alias("w"))
+        df.select(F.expr(f"explode({words_sql(f'`{text_col}`')})").alias("w"))
         .where((F.length("w") >= 1) & (F.length("w") <= max_word_len))
         .distinct()
     )

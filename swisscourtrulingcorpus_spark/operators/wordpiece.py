@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 
 
 def wordpiece_vocab(
@@ -45,7 +45,7 @@ def wordpiece_vocab(
     `unigram_vocab`.  Words longer than ``max_word_len`` are excluded
     from counting and from segmentation alike (the oracle mirrors)."""
     words = (
-        df.select(F.explode(F.split(normalize_ws(text_col), " ")).alias("w"))
+        df.select(F.expr(f"explode({words_sql(f'`{text_col}`')})").alias("w"))
         .where((F.length("w") >= 1) & (F.length("w") <= max_word_len))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -117,7 +117,7 @@ def wordpiece_segment_words(
         vocab = wordpiece_vocab(df, text_col, max_piece_len, vocab_top, max_word_len)
     vocab = F.broadcast(vocab.localCheckpoint(eager=True))
     frontier = (
-        df.select(F.explode(F.split(normalize_ws(text_col), " ")).alias("w"))
+        df.select(F.expr(f"explode({words_sql(f'`{text_col}`')})").alias("w"))
         .where((F.length("w") >= 1) & (F.length("w") <= max_word_len))
         .distinct()
         .select(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import h32_sql, words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.plans.text_queries import _h32_sql
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
@@ -203,7 +203,7 @@ def q_vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     counts = (
         docs.select(
-            F.explode(F.split(normalize_ws("text"), " ")).alias("token")
+            F.expr(f"explode({words_sql('text')})").alias("token")
         )
         .where(F.length("token") > 0)
         .groupBy("token")
@@ -251,7 +251,7 @@ def q_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = q_vocab_top_tokens(spark, sf_dir).select("token", "vocab_id")
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     return apply_token_vocab(
-        docs, vocab, "doc_id", F.split(normalize_ws("text"), " ")
+        docs, vocab, "doc_id", F.expr(words_sql("text"))
     )
 
 
@@ -288,16 +288,14 @@ def q_hashed_bow_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: explode -> (doc, index) count -> map_from_entries ->
     dense transform.  Counts are integers, so the gate hash-matches
     exactly; emitted exploded as (doc_id, dim, value)."""
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
-
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(normalize_ws("text"), " ")).alias("token"),
+        F.expr(f"explode({words_sql('text')})").alias("token"),
     ).where(F.length("token") > 0)
     counts = (
-        toks.select(
-            "doc_id", (h32(F.col("token")) % _HASH_DIM).cast("int").alias("idx")
+        toks.selectExpr(
+            "doc_id", f"cast({h32_sql('token')} % {_HASH_DIM} as int) AS idx"
         )
         .groupBy("doc_id", "idx")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -506,7 +504,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     words = docs.select(
-        "doc_id", F.split(normalize_ws("text"), " ").alias("__w")
+        "doc_id", F.expr(words_sql("text")).alias("__w")
     ).where(F.size("__w") > 0)
     grams = words.select(
         "doc_id",

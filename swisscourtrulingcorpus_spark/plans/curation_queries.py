@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import h32, normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import h32_sql, words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
@@ -34,7 +34,7 @@ def _bigram_features(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, bucket, cnt): hashed word-bigram occurrences.
     Guarded sequence: F.sequence(1, 0) is DESCENDING in Spark, not
     empty, so single-word docs take the explicit empty-array branch."""
-    w = F.split(normalize_ws("text"), " ")
+    w = F.expr(words_sql("text"))
     bigrams = F.when(
         F.size(w) >= 2,
         F.transform(
@@ -44,7 +44,7 @@ def _bigram_features(docs: DataFrame) -> DataFrame:
     ).otherwise(F.array().cast("array<string>"))
     return (
         docs.select("doc_id", "lang", F.explode(bigrams).alias("shingle"))
-        .select("doc_id", "lang", (h32("shingle", "dsir") % _B).alias("bucket"))
+        .selectExpr("doc_id", "lang", f"{h32_sql('shingle', 'dsir')} % {_B} AS bucket")
         .groupBy("doc_id", "lang", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -597,7 +597,7 @@ def blocklist_filter_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (tiny) rather than a second membership pass over the full array.
     # The hits array is BOUND in its own projection — referenced inline
     # it would re-run the full split+filter per output column (the
-    # word_shingles_from_words re-evaluation trap, ~3x the map CPU).
+    # word_shingles_from_words_sql re-evaluation trap, ~3x the map CPU).
     bound = docs.select("doc_id", _blocklist_hits("text").alias("__hits"))
     n_hits = F.size("__hits")
     return bound.select(
@@ -842,7 +842,7 @@ def script_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the char array is BOUND in its own projection: referenced inline
     # it would re-split the full text once per output column (6x the
-    # map CPU — the word_shingles_from_words re-evaluation trap)
+    # map CPU — the word_shingles_from_words_sql re-evaluation trap)
     bound = docs.select(
         "doc_id",
         F.filter(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.functions.money import dec2 as _dec
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
@@ -188,11 +189,7 @@ def js_token_drift_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull()
     )
     toks = docs.select(
-        F.explode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            )
-        ).alias("token"),
+        F.expr(f"explode({words_sql('text')})").alias("token"),
         (F.col("doc_id") % 2 == 0).alias("is_a"),
     )
     return js_token_divergence(
@@ -477,11 +474,7 @@ def js_token_drift_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         F.col("lang"),
-        F.explode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            )
-        ).alias("token"),
+        F.expr(f"explode({words_sql('text')})").alias("token"),
         (F.col("doc_id") % 2 == 0).alias("is_a"),
     )
     return js_token_divergence_by(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
@@ -83,9 +84,7 @@ def token_counter_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "lang",
-        F.explode(
-            F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-        ).alias("token"),
+        F.expr(f"explode({words_sql('text')})").alias("token"),
     )
     levels = words.groupingSets(
         [["lang", "token"], ["token"]], "lang", "token"
@@ -196,11 +195,7 @@ def unpivot_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = docs.select(
         "doc_id",
         F.col("n_chars").cast("bigint").alias("n_chars"),
-        F.size(
-            F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-        )
-        .cast("bigint")
-        .alias("n_tokens"),
+        F.expr(f"cast(size({words_sql('text')}) as bigint)").alias("n_tokens"),
     )
     return wide.unpivot("doc_id", ["n_chars", "n_tokens"], "stat", "value")
 
@@ -1626,7 +1621,6 @@ def wordpiece_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join of the distinct-word segmentation table back to the
     exploded corpus; words longer than the greedy depth are excluded on
     both engines."""
-    from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
     from swisscourtrulingcorpus_spark.operators.wordpiece import (
         wordpiece_segment_words,
     )
@@ -1635,7 +1629,7 @@ def wordpiece_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = wordpiece_segment_words(docs, "text", _WP_P, _WP_V, _WP_W)
     occ = docs.select(
         "doc_id",
-        F.explode(F.split(normalize_ws("text"), " ")).alias("word"),
+        F.expr(f"explode({words_sql('text')})").alias("word"),
     ).where((F.length("word") >= 1) & (F.length("word") <= _WP_W))
     return (
         occ.join(F.broadcast(seg), on="word")
@@ -1693,13 +1687,12 @@ def unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.unigram import (
         unigram_segment_words,
     )
-    from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
 
     docs = load_table(spark, sf_dir, "documents")
     seg = unigram_segment_words(docs, "text", _UG_P, _UG_V, _UG_W)
     occ = docs.select(
         "doc_id",
-        F.explode(F.split(normalize_ws("text"), " ")).alias("word"),
+        F.expr(f"explode({words_sql('text')})").alias("word"),
     ).where((F.length("word") >= 1) & (F.length("word") <= _UG_W))
     return (
         occ.join(F.broadcast(seg), on="word")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
@@ -41,16 +41,12 @@ def bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing document-sized ever shuffles.  The double score orders
     rows only; output columns are all ints.
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import (
-        normalize_ws_sql,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
 
     def _words(d: DataFrame) -> DataFrame:
         return d.selectExpr(
             "doc_id",
-            f"explode(split({normalize_ws_sql('text')}, ' ')) AS term",
+            f"explode({words_sql('text')}) AS term",
         )
 
     tf = (
@@ -69,7 +65,7 @@ def bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch drops from 2 Exchanges to 1 (plans/r12/bm25_top_terms_*).
     df_ = (
         docs.selectExpr(
-            f"explode(array_distinct(split({normalize_ws_sql('text')}, ' ')))"
+            f"explode(array_distinct({words_sql('text')}))"
             " AS term"
         )
         .groupBy("term")
@@ -497,7 +493,7 @@ def bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(normalize_ws("text"), " ")
+    words = F.expr(words_sql("text"))
     # NULL-text docs make no query on EITHER engine: Spark's concat_ws
     # would coerce NULL to '' (a live empty-term query) while DuckDB's
     # array_to_string propagates NULL — filtering is the mirrored form

@@ -5,7 +5,7 @@ can never hash-match a DuckDB oracle (different algorithms and seeds by
 design) and are therefore covered by accuracy-bound tests only.  This
 module closes that gap with a from-scratch HyperLogLog whose every step
 is engine-independent INTEGER arithmetic on the shared md5 hash
-(`functions/hashing.py::h32`), so the register table AND the cardinality
+(`functions/hashing.py::h32_sql`), so the register table AND the cardinality
 estimate are value-identical between Spark and DuckDB — the sketch
 family's first full-strength driver gates.
 
@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import h32
+from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
@@ -143,7 +143,7 @@ def _kmv_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("k")
     )
-    return ev.select(h32("k", seed="kmv").alias("h")).distinct()
+    return ev.selectExpr(f"{h32_sql('k', seed='kmv')} AS h").distinct()
 
 
 def kmv_sketch_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,9 +188,7 @@ def kmv_jaccard_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.col("user_id").cast("string").alias("k")
     )
-    hashed = ev.select(
-        "event_type", h32("k", seed="kmv").alias("h")
-    ).distinct()
+    hashed = ev.selectExpr("event_type", f"{h32_sql('k', seed='kmv')} AS h").distinct()
     from pyspark.sql import Window
 
     # two-phase bottom-k: a single window partitioned by event_type

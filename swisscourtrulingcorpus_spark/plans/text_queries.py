@@ -9,7 +9,7 @@ relevance (A12), and rolling-hash fingerprinting.
 
 Every oracle is generated from the SAME parameters as the Spark side
 (hash seeds, band layout, stopword lists), so the two can't drift.
-Hashes are md5-based (`functions.hashing.h32`) — engine-independent.
+Hashes are md5-based (`functions.hashing.h32_sql`) — engine-independent.
 """
 
 from __future__ import annotations
@@ -25,7 +25,11 @@ from swisscourtrulingcorpus_spark.functions.text import (
     token_count_bpe,
     token_count_ws,
 )
-from swisscourtrulingcorpus_spark.functions.hashing import h32
+from swisscourtrulingcorpus_spark.functions.hashing import (
+    h32_sql,
+    word_shingles_from_words_sql,
+    words_sql,
+)
 from swisscourtrulingcorpus_spark.operators.dedup import (
     LSH_BANDS,
     NUM_MINHASH,
@@ -43,14 +47,14 @@ from swisscourtrulingcorpus_spark.sources.catalog import load_table
 # ---------------------------------------------------------------- SQL bits
 
 def _h32_sql(expr: str) -> str:
-    """DuckDB twin of functions.hashing.h32 — the first 8 hex chars of
+    """DuckDB twin of functions.hashing.h32_sql — the first 8 hex chars of
     md5 as an unsigned 32-bit value, carried in a BIGINT (the oracles of
     this module and plans/ann_queries.py)."""
     return f"CAST(('0x' || substr(md5({expr}),1,8))::UBIGINT AS BIGINT)"
 
 
 # Words for shingling: lowercase, whitespace-collapse, trim, split(' ') —
-# identical to functions.hashing.normalize_ws + split.  ONE definition of
+# identical to functions.hashing.words_sql.  ONE definition of
 # each CTE piece (the parameterized builders below); the module-level
 # constants used by the standalone oracles are derived from them so a
 # shingling change cannot silently diverge between oracle families.
@@ -80,7 +84,7 @@ _DISTINCT_SH_CTE = _distinct_sh_cte()
 
 def _h32_window_sql(expr: str, window: int) -> str:
     """Window ``window`` (0..3) of an md5 digest as a 32-bit BIGINT —
-    mirrors functions.hashing.md5_seeded + h32_window (hash j = 4s+w is
+    mirrors functions.hashing.md5_seeded_sql + h32_window_sql (hash j = 4s+w is
     hex window w of md5('s|'||shingle); 4 hashes per md5)."""
     return (
         f"CAST(('0x' || substr(md5({expr}),{1 + 8 * window},8))::UBIGINT AS BIGINT)"
@@ -767,15 +771,10 @@ def q_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 n-gram frequency mining (`pattern_extractor.py:154-187`:
     count >= 5 threshold): all 3-gram occurrences across the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    from swisscourtrulingcorpus_spark.functions.hashing import (
-        normalize_ws,
-        word_shingles_from_words,
-    )
-
-    words = docs.select(F.split(normalize_ws("text"), " ").alias("__w"))
+    words = docs.select(F.expr(words_sql("text")).alias("__w"))
     return (
-        words.select(
-            F.explode(word_shingles_from_words(F.col("__w"), 3)).alias("ngram")
+        words.selectExpr(
+            f"explode({word_shingles_from_words_sql('__w', 3)}) AS ngram"
         )
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -816,28 +815,25 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     - rank on round(score, 9): an ULP of ln drift between Spark and
       DuckDB becomes a tie the term column breaks deterministically.
     """
-    from swisscourtrulingcorpus_spark.functions.hashing import (
-        normalize_ws_sql,
-    )
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
         table_view,
     )
 
-    norm = normalize_ws_sql("text")
+    words = words_sql("text")
 
     def build() -> str:
         docs = table_view(spark, sf_dir, "documents")
         return f"""
 WITH tf AS (
   SELECT doc_id, term, count(1) AS tf
-  FROM (SELECT doc_id, explode(split({norm}, ' ')) AS term
+  FROM (SELECT doc_id, explode({words}) AS term
         FROM {docs} WHERE doc_id < 20)
   GROUP BY doc_id, term
 ),
 df_ AS (
   SELECT term, count(1) AS df
-  FROM (SELECT explode(array_distinct(split({norm}, ' '))) AS term
+  FROM (SELECT explode(array_distinct({words})) AS term
         FROM {docs})
   GROUP BY term
 ),
@@ -880,16 +876,11 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^31-1 over the word sequence — order-sensitive, so reordered
     near-dups fingerprint differently (unlike MinHash)."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
+    return docs.selectExpr(
+        "doc_id",
+        f"aggregate(transform({words_sql('text')}, w -> {h32_sql('w')}), "
+        "cast(0 as bigint), (acc, h) -> (acc * 31 + h) % 2147483647) AS fingerprint",
     )
-    hashes = F.transform(words, lambda w: h32(w))
-    fp = F.aggregate(
-        hashes,
-        F.lit(0).cast("bigint"),
-        lambda acc, h: (acc * 31 + h) % 2147483647,
-    )
-    return docs.select("doc_id", fp.alias("fingerprint"))
 
 
 FINGERPRINT_ORACLE = f"""
@@ -1162,8 +1153,7 @@ def lexical_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.sources.catalog import load_table as _lt
 
     docs = _lt(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-    with_words = docs.select("doc_id", words.alias("__w"))
+    with_words = docs.select("doc_id", F.expr(words_sql("text")).alias("__w"))
     return with_words.select(
         "doc_id",
         F.size("__w").alias("n_words"),
@@ -1418,13 +1408,11 @@ def rake_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side CPU dominated everything (measured 56.6 s -> 1.41 s on
     the 10x scale corpus after the switch); it also sidesteps any
     engine \\b-semantics divergence."""
-    from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
-
     stop = _rake_stoplist()
     docs = load_table(spark, sf_dir, "documents")
     phrases = (
         docs.select(
-            F.split(normalize_ws(F.lower(F.col("text"))), " ").alias("ws")
+            F.expr(words_sql("text")).alias("ws")
         )
         .select(
             F.array_join(
@@ -1509,19 +1497,15 @@ def cooccurrence_lift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-association mining over ±5-token windows — the counts
     behind PMI / GloVe-style statistics.  Pair generation is ENTIRELY
     map-side: for each offset k the token array zips with its own
-    k-shifted slice (the `word_shingles_from_words` trick), so no
+    k-shifted slice (the `word_shingles_from_words_sql` trick), so no
     self-join ever runs; the only shuffles are the pair-count and
     word-count groupBys on slim string keys.  Association strength is
     the integer lift: pair_n * total_tokens * 10^6 div (c1 * c2) —
     PMI's exp-free core, identical in both engines (ln is not
     portable; lift orders pairs the same way).  Top-50 pairs seen at
     least {p} times, ties by pair text."""
-    from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
-
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.split(normalize_ws(F.lower(F.col("text"))), " ").alias("ws")
-    )
+    words = docs.select(F.expr(words_sql("text")).alias("ws"))
     pair_arrays = []
     for off in range(1, _COOC_MAX_OFF + 1):
         n = F.greatest(F.size("ws") - off, F.lit(0))

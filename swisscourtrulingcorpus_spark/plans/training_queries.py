@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import normalize_ws
+from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.functions.redaction import (
     count_pii,
     oracle_count_sql,
@@ -39,7 +39,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     with_len = docs.select(
         "doc_id",
-        F.size(F.split(normalize_ws("text"), " ")).alias("__n"),
+        F.expr(f"size({words_sql('text')})").alias("__n"),
     )
     return pack_sequences(with_len, "__n", "doc_id", context_len=_CTX)
 
@@ -152,7 +152,7 @@ def q_length_grouped_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     with_len = docs.select(
-        "doc_id", F.size(F.split(normalize_ws("text"), " ")).alias("n_tokens")
+        "doc_id", F.expr(f"size({words_sql('text')})").alias("n_tokens")
     )
     return length_grouped_shards(with_len, "n_tokens", "doc_id", _N_SHARDS)
 

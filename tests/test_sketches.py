@@ -262,9 +262,9 @@ def test_portable_hll_registers_max_merge(spark):
     halves = []
     for pred in [F.col("event_id") % 2 == 0, F.col("event_id") % 2 == 1]:
         part = ev.where(pred)
-        from swisscourtrulingcorpus_spark.functions.hashing import h32
+        from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
-        h = h32(F.col("user_id").cast("string"), seed="hll")
+        h = F.expr(h32_sql("cast(user_id as string)", seed="hll"))
         tail = h % F.lit(1 << 26)
         rank = F.when(tail == 0, F.lit(27)).otherwise(
             F.lit(27) - F.length(F.conv(tail.cast("string"), 10, 2))
@@ -310,7 +310,7 @@ def test_kmv_union_merge_equals_whole(spark):
     slice sketches must equal the bottom-k computed over the combined
     raw data — what makes pairwise overlap answerable from sketches
     alone (plans/sketch_queries.py::kmv_jaccard_event_types)."""
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
     from swisscourtrulingcorpus_spark.plans.sketch_queries import _KMV_K
 
     sf01 = "/root/testdata/sf0.01"
@@ -320,7 +320,7 @@ def test_kmv_union_merge_equals_whole(spark):
         return sorted(
             r.h
             for r in df.select(
-                h32(F.col("user_id").cast("string"), seed="kmv").alias("h")
+                F.expr(h32_sql("cast(user_id as string)", seed="kmv")).alias("h")
             )
             .distinct()
             .orderBy("h")
@@ -457,14 +457,14 @@ def test_kmv_matches_python_reference_model(spark):
     recomputation."""
     import hashlib
 
-    from swisscourtrulingcorpus_spark.functions.hashing import h32
+    from swisscourtrulingcorpus_spark.functions.hashing import h32_sql
 
     keys = list(range(200))
     df = spark.createDataFrame([(v,) for v in keys], "user_id: long")
     got = sorted(
         r.h
         for r in df.select(
-            h32(F.col("user_id").cast("string"), seed="kmv").alias("h")
+            F.expr(h32_sql("cast(user_id as string)", seed="kmv")).alias("h")
         )
         .orderBy("h")
         .limit(16)

@@ -239,3 +239,69 @@ def test_table_view_and_catalog_sql_self_heal(spark, sf_dir):
         spark, lambda: f"SELECT count(1) AS n FROM {table_view(spark, sf_dir, 'region')}"
     )
     assert out.collect()[0].n > 0
+
+
+#: the Column forms the hashing module no longer has: its helpers are
+#: SQL text only, and ``words_sql`` is the one tokenizer body
+DELETED_HASH_FORMS = {
+    "normalize_ws",
+    "h32",
+    "md5_seeded",
+    "h32_window",
+    "word_shingles_from_words",
+}
+
+
+def _package_modules():
+    import pathlib
+
+    import swisscourtrulingcorpus_spark
+
+    root = pathlib.Path(swisscourtrulingcorpus_spark.__file__).parent
+    return sorted(root.rglob("*.py"))
+
+
+def test_hashing_helpers_have_one_body():
+    """``functions/hashing.py`` returns SQL text only; no package module
+    imports a deleted Column form; and outside the hashing module no
+    Spark code writes the tokenizer's ``regexp_replace(lower(...`` chain
+    (a DuckDB oracle string, which carries RE2's ``'g'`` flag, may)."""
+    import ast
+    import inspect
+    import re
+
+    from swisscourtrulingcorpus_spark.functions import hashing
+
+    builders = inspect.getmembers(hashing, inspect.isfunction)
+    assert {n for n, f in builders if f.__module__ == hashing.__name__} >= {
+        "normalize_ws_sql",
+        "words_sql",
+        "h32_sql",
+        "md5_seeded_sql",
+        "h32_window_sql",
+        "word_shingles_from_words_sql",
+    }
+    for name, fn in builders:
+        assert fn.__annotations__.get("return") == "str", name
+    assert not DELETED_HASH_FORMS & set(vars(hashing)), "Column hash form is back"
+
+    chain = re.compile(r"regexp_replace\(\s*(?:F\.)?lower\(")
+    bad = []
+    for path in _package_modules():
+        src = path.read_text()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "swisscourtrulingcorpus_spark.functions"
+            ):
+                bad += [
+                    f"{path.name}: imports {a.name}"
+                    for a in node.names
+                    if a.name in DELETED_HASH_FORMS
+                ]
+        if path.name == "hashing.py":
+            continue
+        for m in chain.finditer(src):
+            if "'g')" not in src[m.end() : m.end() + 120]:
+                line = src.count("\n", 0, m.start()) + 1
+                bad.append(f"{path.name}:{line}: tokenizer chain outside words_sql")
+    assert not bad, bad
