@@ -22,13 +22,25 @@ it.  ``words_sql`` is the one whitespace tokenizer of the package.
 
 from __future__ import annotations
 
+#: The Unicode space separators (category Zs), as SQL ``\\u`` escapes.
+_ZS = "".join(
+    f"\\u{c:04x}"
+    for c in (0x20, 0xA0, 0x1680, *range(0x2000, 0x200B), 0x202F, 0x205F, 0x3000)
+)
+
 
 def normalize_ws_sql(col_expr: str) -> str:
     """Lowercase + whitespace-collapse + trim — the normalization both the
     Spark side and the oracle apply before tokenizing (mirrors the
     whitespace-collapse step of the reference's ``clean_text``,
-    `scrc/utils/main_utils.py:130-133`)."""
-    return f"trim(regexp_replace(lower({col_expr}), '\\\\s+', ' '))"
+    `scrc/utils/main_utils.py:130-133`).
+
+    Both steps are spelled as DuckDB's: the collapsed class is RE2's
+    ``\\s`` (Java's also matches a vertical tab, how Word stores a manual
+    line break), and ``trim`` strips every space separator (DuckDB's
+    does; Spark's plain ``trim`` strips only ``' '``)."""
+    ws = "'[ \\\\t\\\\n\\\\f\\\\r]+'"
+    return f"trim(BOTH '{_ZS}' FROM regexp_replace(lower({col_expr}), {ws}, ' '))"
 
 
 def words_sql(col_expr: str) -> str:
