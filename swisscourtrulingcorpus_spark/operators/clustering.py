@@ -86,7 +86,7 @@ def centroid_scores(vec: str, centroids: list[list[float]]) -> str:
     )
 
 
-def _valid_vec(vec_col: str) -> F.Column:
+def _valid_vec(vec_col: str, dim: int | None = None) -> F.Column:
     """Row guard shared by every assignment/encode entry point: the
     vector is non-null AND every component is a finite number.  A NaN
     (or null-element) component makes its distance score NaN, and
@@ -97,12 +97,16 @@ def _valid_vec(vec_col: str) -> F.Column:
     domain; surface bad embeddings with the data-quality checks.
     ±Infinity components are excluded too: a -inf score also ties or
     beats every finite distance through inf arithmetic (inf - inf =
-    NaN), landing in the same unreachable -1 bucket."""
+    NaN), landing in the same unreachable -1 bucket.  With ``dim`` (the
+    centroids' or codebooks' length), a vector of any other length is
+    excluded too: ``zip_with`` null-pads the shorter side, every score
+    is NULL, and the row would land in the same -1 bucket."""
     c = F.col(vec_col)
-    return c.isNotNull() & ~F.exists(
+    valid = c.isNotNull() & ~F.exists(
         c,
         lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf"))),
     )
+    return valid if dim is None else valid & (F.size(c) == dim)
 
 
 def _indexed(scores: str) -> str:
@@ -181,11 +185,11 @@ def assign_clusters(
     500k x 64 on the test box — the expression form replaced it
     (SCALE.md).
 
-    NULL vectors are EXCLUDED (a null embedding has no nearest
-    centroid; the fold would otherwise emit the -1 seed, a cluster no
-    probe ever reaches — surface nulls with the data-quality
-    ``not_null`` check instead)."""
-    return df.where(_valid_vec(vec_col)).selectExpr(
+    NULL vectors, and vectors whose length differs from the centroids',
+    are EXCLUDED (neither has a nearest centroid; the fold would
+    otherwise emit the -1 seed, a cluster no probe ever reaches —
+    surface them with the data-quality checks instead)."""
+    return df.where(_valid_vec(vec_col, len(centroids[0]))).selectExpr(
         f"`{id_col}`",
         f"{_argmin_of(centroid_scores(f'`{vec_col}`', centroids))} AS cluster",
     )
@@ -288,9 +292,9 @@ def ivf_index(
     is contiguous and cluster-pruned at scan time); search calls then
     skip the assignment entirely.  Measured at 50k x 64: assignment is the
     bulk of a cold ``ivf_topk`` call — indexing once is what makes IVF
-    beat brute force (see SCALE.md).  Null vectors are excluded (see
-    ``assign_clusters``)."""
-    return corpus.where(_valid_vec(vec_col)).withColumn(
+    beat brute force (see SCALE.md).  Null and wrong-length vectors are
+    excluded (see ``assign_clusters``)."""
+    return corpus.where(_valid_vec(vec_col, len(centroids[0]))).withColumn(
         "cluster", F.expr(_argmin_of(centroid_scores(f"`{vec_col}`", centroids)))
     )
 
@@ -412,9 +416,10 @@ def pq_encode(
     (an earlier explode + broadcast-join + two-groupBy version was
     replaced; at 100 TB an extra corpus shuffle in the encode pass is
     the whole cost).  Output: (id, codes array<int>) — the compressed
-    representation an ANN index actually stores.  Null vectors are
-    excluded (see ``assign_clusters``)."""
-    return df.where(_valid_vec(vec_col)).selectExpr(
+    representation an ANN index actually stores.  Null and wrong-length
+    vectors are excluded (see ``assign_clusters``)."""
+    dim = sum(len(cb[0]) for cb in codebooks)
+    return df.where(_valid_vec(vec_col, dim)).selectExpr(
         f"`{id_col}`", f"{_pq_codes(f'`{vec_col}`', codebooks)} AS codes"
     )
 
@@ -433,7 +438,7 @@ def _residuals(
     and its residual to it.  The assignment fold is projected first, so
     the residual reads it instead of folding again."""
     return (
-        df.where(_valid_vec(vec_col))
+        df.where(_valid_vec(vec_col, len(centroids[0])))
         .selectExpr(
             f"`{id_col}`",
             f"{_argmin_of(centroid_scores(f'`{vec_col}`', centroids))} AS cluster",

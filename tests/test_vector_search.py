@@ -124,3 +124,16 @@ def test_int8_zero_vector_matches_oracle(spark, tmp_path):
     assert got == want
     assert (ZERO, 1, 0, 1) in got  # as a query
     assert (6, ZERO, 0, 4) in got  # as a neighbor
+
+
+@pytest.mark.parametrize("assign", [C.assign_clusters, C.ivf_index])
+def test_wrong_length_vector_gets_no_cluster(spark, assign):
+    """A vector of another length than the centroids' has no nearest
+    centroid: without the length check its NULL scores leave it in
+    cluster -1, the bucket no probe ever reaches."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 0.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = assign(df, [[1.0, 0.0], [0.0, 1.0]], "embedding", "vec_id")
+    assert sorted((r.vec_id, r.cluster) for r in got.collect()) == [(1, 0), (2, 1)]
