@@ -118,7 +118,6 @@ def clean_text_py(
     return t.strip()
 
 
+# (text[, spider[, file_number]]): with a spider, its boilerplate rules
+# plus the decision's own docket number scrubbed from the text
 clean_text_udf = row_udf("clean_text_udf", clean_text_py, StringType())
-# (text, spider, file_number): per-row boilerplate rules plus the
-# decision's own docket number scrubbed from the text
-clean_text_spider_udf = row_udf("clean_text_spider_udf", clean_text_py, StringType())

@@ -203,9 +203,8 @@ def html_citations_py(html: str | None) -> list[dict] | None:
     return out
 
 
-html_to_text_udf = row_udf("html_to_text_udf", html_to_text_py, StringType())
-# (html, spider): applies SPIDER_HTML_RULES (content selection / node
-# drops) before text assembly
+# (html[, spider]): with a spider, applies SPIDER_HTML_RULES (content
+# selection / node drops) before text assembly
 html_to_text_spider_udf = row_udf(
     "html_to_text_spider_udf", html_to_text_py, StringType()
 )

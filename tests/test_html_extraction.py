@@ -60,12 +60,14 @@ def test_html_pipeline_distributed(spark):
         extract_judgments_udf,
         split_sections_udf,
     )
-    from swisscourtrulingcorpus_spark.extraction.html import html_to_text_udf
+    from swisscourtrulingcorpus_spark.extraction.html import (
+        html_to_text_spider_udf,
+    )
 
     df = spark.createDataFrame([(HTML_DOC,)], ["html_raw"])
     sections = df.select(
         split_sections_udf(
-            html_to_text_udf("html_raw"), F.lit("de")
+            html_to_text_spider_udf("html_raw"), F.lit("de")
         ).alias("secs")
     ).select(F.explode("secs").alias("s"))
     rulings = sections.where(F.col("s.section") == "rulings").select("s.text")

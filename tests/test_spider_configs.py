@@ -711,7 +711,7 @@ def test_composition_cantonal_judge_titles():
 def test_spider_cleaning_rules(spark):
     from swisscourtrulingcorpus_spark.extraction.cleaning import (
         clean_text_py,
-        clean_text_spider_udf,
+        clean_text_udf,
     )
 
     # SG platform boilerplate + ISO artifact
@@ -743,7 +743,7 @@ def test_spider_cleaning_rules(spark):
         "text string, spider string, file_number string",
     )
     out = df.select(
-        clean_text_spider_udf("text", "spider", "file_number").alias("t")
+        clean_text_udf("text", "spider", "file_number").alias("t")
     ).collect()[0].t
     assert "A-1234/2020" not in out and "aufgehoben" in out
 
