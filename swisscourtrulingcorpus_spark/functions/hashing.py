@@ -67,7 +67,7 @@ def _safe_seed(seed) -> str:
     return s
 
 
-def md5_seeded_sql(expr: str, seed: str) -> str:
+def md5_seeded_sql(expr: str, seed: str | int) -> str:
     """Full 32-hex-char md5 of ``seed|x`` — sliced into four independent
     8-hex windows by :func:`h32_window_sql`, giving four 32-bit hashes
     per md5 computation (md5's output bits are independent across

@@ -303,7 +303,8 @@ def bloom_might_contain(
     for j in range(k):
         pc = f"__bloom_pos_{j}"
         pos_cols.append(pc)
-        tmp = tmp.withColumn(pc, F.expr(f"{h32_sql(key, seed=f'bloom{j}')} % {int(m_bits)}"))
+        pos = f"{h32_sql(key, seed=f'bloom{j}')} % {int(m_bits)}"
+        tmp = tmp.withColumn(pc, F.expr(pos))
         word = F.coalesce(
             F.element_at(words, (F.col(pc) / 64).cast("int")),
             F.lit(0).cast("bigint"),

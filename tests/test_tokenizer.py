@@ -35,6 +35,7 @@ def test_words_sql_matches_duckdb(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE t (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    want = dict(con.execute(f"WITH {_words_cte('t')} SELECT doc_id, w FROM words").fetchall())
+    oracle = f"WITH {_words_cte('t')} SELECT doc_id, w FROM words"
+    want = dict(con.execute(oracle).fetchall())
     con.close()
     assert [(t, got[i]) for i, t in rows] == [(t, want[i]) for i, t in rows]
