@@ -1411,9 +1411,7 @@ def rake_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = _rake_stoplist()
     docs = load_table(spark, sf_dir, "documents")
     phrases = (
-        docs.select(
-            F.expr(words_sql("text")).alias("ws")
-        )
+        docs.select(F.expr(words_sql("text")).alias("ws"))
         .select(
             F.array_join(
                 F.transform(
