@@ -3,10 +3,8 @@
 The reference's ``clean_text`` (`scrc/utils/main_utils.py:113-139`)
 NFKC-normalizes, strips control characters by unicode category,
 de-hyphenates line breaks, replaces NBSP, collapses whitespace and
-repeated underscores.  The regex-only subset lives as built-ins in
-``functions.text.clean_text_col`` (codegen-friendly, keeps pushdown);
-this pandas_udf is the full-fidelity path including the
-``unicodedata`` steps Spark has no built-in for.
+repeated underscores.  This pandas_udf is the full-fidelity path,
+including the ``unicodedata`` steps Spark has no built-in for.
 
 Vectorized per Arrow batch; the per-string work is pure-Python but
 bounded by batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``)

@@ -1,10 +1,9 @@
 """Scalar/column function layer (SURVEY.md §2.7) + text-analysis functions."""
 
 from swisscourtrulingcorpus_spark.functions.text import (  # noqa: F401
-    clean_text_col,
     token_count_ws,
     token_count_bpe,
-    quality_features,
+    quality_features_sql,
     language_id_score,
     STOPWORDS,
 )

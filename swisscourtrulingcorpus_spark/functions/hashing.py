@@ -17,7 +17,11 @@ is backquoted by the caller, e.g. ``words_sql(f"`{text_col}`")``): one
 string parsed JVM-side costs one py4j round trip, where the same
 expression built from Column operations cost one per operation.
 Column-API code wraps the text in ``F.expr``; SQL-text builders splice
-it.  ``words_sql`` is the one whitespace tokenizer of the package.
+it.  ``collapse_ws_sql`` is the one definition of whitespace on the
+Spark side (``WS_CHARS`` for a regex class that must exclude it), and
+``words_sql`` the one word split; their DuckDB twins, which every
+oracle calls, are ``plans/text_queries.py::_collapse_duck`` /
+``_split_duck`` / ``_words_duck``.
 """
 
 from __future__ import annotations
@@ -28,25 +32,40 @@ _ZS = "".join(
     for c in (0x20, 0xA0, 0x1680, *range(0x2000, 0x200B), 0x202F, 0x205F, 0x3000)
 )
 
+#: The whitespace characters as regex escapes: RE2's (DuckDB's) ``\s``.
+#: Java's ``\s`` also matches a vertical tab (how Word stores a manual
+#: line break), so no Spark regex of the package writes ``\s``.
+WS_CHARS = r" \t\n\f\r"
+
+
+def collapse_ws_sql(col_expr: str) -> str:
+    """Whitespace-collapse + trim, case kept: every run of ``WS_CHARS``
+    becomes one ``' '``, and ``trim`` strips every space separator
+    (DuckDB's does; Spark's plain ``trim`` strips only ``' '``).  The
+    one whitespace rule of the package (DuckDB twin:
+    ``plans/text_queries.py::_collapse_duck``)."""
+    ws = sql_str(f"[{WS_CHARS}]+")
+    return f"trim(BOTH '{_ZS}' FROM regexp_replace({col_expr}, {ws}, ' '))"
+
 
 def normalize_ws_sql(col_expr: str) -> str:
-    """Lowercase + whitespace-collapse + trim — the normalization both the
+    """Lowercase + :func:`collapse_ws_sql` — the normalization both the
     Spark side and the oracle apply before tokenizing (mirrors the
     whitespace-collapse step of the reference's ``clean_text``,
-    `scrc/utils/main_utils.py:130-133`).
+    `scrc/utils/main_utils.py:130-133`)."""
+    return collapse_ws_sql(f"lower({col_expr})")
 
-    Both steps are spelled as DuckDB's: the collapsed class is RE2's
-    ``\\s`` (Java's also matches a vertical tab, how Word stores a manual
-    line break), and ``trim`` strips every space separator (DuckDB's
-    does; Spark's plain ``trim`` strips only ``' '``)."""
-    ws = "'[ \\\\t\\\\n\\\\f\\\\r]+'"
-    return f"trim(BOTH '{_ZS}' FROM regexp_replace(lower({col_expr}), {ws}, ' '))"
+
+def split_ws_sql(col_expr: str) -> str:
+    """:func:`collapse_ws_sql`, split on ``' '``: the word split, case
+    kept (DuckDB twin: ``plans/text_queries.py::_split_duck``)."""
+    return f"split({collapse_ws_sql(col_expr)}, ' ')"
 
 
 def words_sql(col_expr: str) -> str:
-    """The whitespace tokenizer: :func:`normalize_ws_sql`, split on
-    ``' '`` (DuckDB twin: ``plans/text_queries.py::_words_cte``)."""
-    return f"split({normalize_ws_sql(col_expr)}, ' ')"
+    """The whitespace tokenizer: :func:`split_ws_sql` of the lowercased
+    text (DuckDB twin: ``plans/text_queries.py::_words_duck``)."""
+    return split_ws_sql(f"lower({col_expr})")
 
 
 def sql_str(s: str) -> str:

@@ -1,10 +1,11 @@
 """Text-analysis column functions (SURVEY.md §2.7 + LLM-pipeline ops).
 
 Everything here is built-in-expression-only (whole-stage codegen, oracle
-reproducible).  The reference's ``clean_text`` (`scrc/utils/main_utils.py:
-113-139`) mixes regex steps with ``unicodedata`` NFKC normalization; the
-regex steps live here as a codegen-friendly chain (so pushdown/pruning
-survive — SURVEY.md §4 note), while the NFKC step lives in
+reproducible).  Every whitespace split goes through
+``functions/hashing.py::words_sql`` (DuckDB twin:
+``plans/text_queries.py::_words_duck``), and a regex class that
+excludes whitespace spells it ``hashing.WS_CHARS``.  The reference's
+``clean_text`` (`scrc/utils/main_utils.py:113-139`) lives in
 ``extraction.cleaning`` as a pandas_udf (no built-in NFKC in Spark).
 """
 
@@ -13,7 +14,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from swisscourtrulingcorpus_spark.functions.hashing import sql_str
+from swisscourtrulingcorpus_spark.functions.hashing import (
+    WS_CHARS,
+    sql_str,
+    words_sql,
+)
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic (E1 analogue: the reference uses a fastText model,
@@ -28,36 +33,26 @@ STOPWORDS: dict[str, list[str]] = {
     "es": ["el", "la", "que", "y", "no", "con", "por", "una"],
 }
 
-# Regex steps of the reference's clean_text, re-expressed as built-ins
-# (order matters; each tuple = (pattern, replacement)):
-_CLEAN_STEPS = [
-    (r" ", " "),          # NBSP -> space
-    (r"\x00", ""),             # NUL removal (text_to_database.py:280-282)
-    (r"(\w)-\n(\w)", r"$1$2"),  # de-hyphenate linebreaks
-    (r"_+", "_"),              # collapse repeated underscores
-    (r"\s+", " "),             # whitespace collapse
-]
 
-
-def clean_text_col(col: Column | str) -> Column:
-    """The regex portion of clean_text as a regexp_replace chain; pair
-    with ``extraction.cleaning.nfkc_normalize`` for full fidelity."""
-    c = F.col(col) if isinstance(col, str) else col
-    for pat, rep in _CLEAN_STEPS:
-        c = F.regexp_replace(c, pat, rep)
-    return F.trim(c)
+def token_count_ws_sql(col_expr: str) -> str:
+    """SQL text of the whitespace token count (num_tokens analogue,
+    SURVEY.md §1.2): the length of :func:`words_sql`."""
+    return f"size({words_sql(col_expr)})"
 
 
 def token_count_ws(col: str) -> Column:
-    """Whitespace token count (num_tokens analogue, SURVEY.md §1.2) of
-    column ``col`` (body: :func:`token_count_ws_sql`)."""
+    """Whitespace token count of column ``col`` (body:
+    :func:`token_count_ws_sql`)."""
     return F.expr(token_count_ws_sql(f"`{col}`"))
 
+
+#: Punctuation: neither an ASCII letter, a digit nor whitespace.
+PUNCT_CLASS = f"[^A-Za-z0-9{WS_CHARS}]"
 
 # BPE-ish pre-tokenizer: words | single digits | single punctuation —
 # the shape GPT-2-style byte-pair pre-tokenization produces, as a
 # portable regex (Java + RE2 compatible for oracle parity).
-BPE_REGEX = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
+BPE_REGEX = f"[A-Za-z]+|[0-9]|{PUNCT_CLASS}"
 
 
 def token_count_bpe(col: Column | str) -> Column:
@@ -65,45 +60,36 @@ def token_count_bpe(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_REGEX), 0))
 
 
-def quality_features(col: Column | str) -> dict[str, Column]:
+def quality_features_sql(col_expr: str) -> dict[str, str]:
     """Document-quality scoring features (length / punctuation ratio /
     stopword ratio / mean word length) — the standard pre-training
-    corpus filters (C4/Gopher-style), JVM-side only."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_chars = F.length(c)
-    words = F.split(F.trim(F.lower(c)), r"\s+")
-    n_words = F.size(words)
-    n_punct = F.size(F.regexp_extract_all(c, F.lit(r"[^A-Za-z0-9\s]"), 0))
+    corpus filters (C4/Gopher-style), as SQL text per output column.
+    int/int divisions only — identical doubles in Spark and DuckDB (no
+    round(): the engines' double rounding differs; raw bits match)."""
+    words = words_sql(col_expr)
     all_stop = sorted({w for ws in STOPWORDS.values() for w in ws})
-    n_stop = F.size(
-        F.filter(words, lambda w: w.isin(*[F.lit(s) for s in all_stop]))
-    )
-    # int/int divisions only — identical doubles in Spark and DuckDB
-    # (no round(): the engines' double rounding differs; raw bits match).
+    stop = ", ".join(sql_str(s) for s in all_stop)
+    n_chars = f"length({col_expr})"
+    n_words = f"size({words})"
+    n_punct = f"size(regexp_extract_all({col_expr}, {sql_str(PUNCT_CLASS)}, 0))"
     return {
         "n_chars": n_chars,
         "n_words": n_words,
-        "punct_ratio": n_punct / F.greatest(n_chars, F.lit(1)),
-        "stopword_ratio": n_stop / F.greatest(n_words, F.lit(1)),
-        "mean_word_len": (
-            F.length(F.concat_ws("", words)) / F.greatest(n_words, F.lit(1))
+        "punct_ratio": f"{n_punct} / greatest({n_chars}, 1)",
+        "stopword_ratio": (
+            f"size(filter({words}, w -> w IN ({stop}))) / greatest({n_words}, 1)"
         ),
+        "mean_word_len": f"length(array_join({words}, '')) / greatest({n_words}, 1)",
     }
-
-
-def token_count_ws_sql(col_expr: str) -> str:
-    """SQL text of the whitespace token count over an expression string
-    (parsed SQL text: one py4j call per construction, r12 session 2)."""
-    return f"size(split(trim({col_expr}), '\\\\s+'))"
 
 
 def language_id_score_sql(col_expr: str) -> str:
     """SQL text of :func:`language_id_score` over an expression string:
-    ONE ``aggregate`` over ONE ``split`` of the text.  The accumulator
-    is a struct of per-language stopword hit counts, and the finish
-    lambda takes the argmax (zero hits or a tie -> 'und').  A fold,
-    not one hit expression per language: higher-order functions get no
-    common-subexpression elimination, so each re-spliced ``split``
+    ONE ``aggregate`` over :func:`words_sql` of the text.  The
+    accumulator is a struct of per-language stopword hit counts, and
+    the finish lambda takes the argmax (zero hits or a tie -> 'und').
+    A fold, not one hit expression per language: higher-order functions
+    get no common-subexpression elimination, so each re-spliced split
     re-tokenized the row.  A NULL text folds to NULL -> 'und'."""
     langs = sorted(STOPWORDS)
     hit = {
@@ -121,7 +107,7 @@ def language_id_score_sql(col_expr: str) -> str:
         f"WHEN acc.{lang} = {max_hits} THEN {sql_str(lang)}" for lang in langs
     )
     return (
-        f"coalesce(aggregate(split(trim(lower({col_expr})), '\\\\s+'), "
+        f"coalesce(aggregate({words_sql(col_expr)}, "
         f"named_struct({zero}), (acc, w) -> named_struct({merge}), "
         f"acc -> CASE WHEN {max_hits} = 0 OR ({n_at_max}) > 1 THEN 'und' "
         f"{pick} ELSE 'und' END), 'und')"

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from swisscourtrulingcorpus_spark.functions.hashing import WS_CHARS
+
 # language -> phrases announcing a fundamental-importance question
 # (condensed from `fundamental_importance.py:37-42`)
 FUNDAMENTAL_PHRASES: dict[str, list[str]] = {
@@ -45,7 +47,7 @@ NEGATION_WORDS: dict[str, list[str]] = {
     "it": ["non", "nessun", "nessuna", "mai", "senza", "né", "nega"],
 }
 
-_SENTENCE_SPLIT = r"(?<=[.!?])\s+"
+_SENTENCE_SPLIT = rf"(?<=[.!?])[{WS_CHARS}]+"
 _WORD_SPLIT = r"[^\wäöüéèàçì']+"
 
 

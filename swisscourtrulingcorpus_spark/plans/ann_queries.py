@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import h32_sql, words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
-from swisscourtrulingcorpus_spark.plans.text_queries import _h32_sql
+from swisscourtrulingcorpus_spark.plans.text_queries import _h32_sql, _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 _K = 8  # IVF centroids
@@ -222,7 +222,7 @@ def q_vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VOCAB_ORACLE = rf"""
 WITH toks AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS token
+  SELECT unnest({_words_duck("text")}) AS token
   FROM documents WHERE text IS NOT NULL),
 counts AS (
   SELECT token, count(*) AS freq FROM toks
@@ -257,7 +257,7 @@ def q_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOKEN_IDS_ORACLE = rf"""
 WITH toks AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS token
+  SELECT unnest({_words_duck("text")}) AS token
   FROM documents WHERE text IS NOT NULL),
 counts AS (
   SELECT token, count(*) AS freq FROM toks
@@ -267,8 +267,8 @@ vocab AS (
   FROM counts QUALIFY vocab_id <= {_VOCAB_TOP}),
 docw AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS w,
-         unnest(range(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')))) AS pos
+         unnest({_words_duck("text")}) AS w,
+         unnest(range(len({_words_duck("text")}))) AS pos
   FROM documents WHERE text IS NOT NULL)
 SELECT d.doc_id, CAST(d.pos AS INTEGER) AS pos,
        CAST(coalesce(v.vocab_id, 0) AS INTEGER) AS token_id
@@ -325,7 +325,7 @@ def q_hashed_bow_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 HASHED_BOW_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS token
+         unnest({_words_duck("text")}) AS token
   FROM documents WHERE text IS NOT NULL),
 counts AS (
   SELECT doc_id, CAST({_h32_sql('token')} % {_HASH_DIM} AS INTEGER) AS idx,
@@ -558,10 +558,10 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REPETITION_ORACLE = r"""
+REPETITION_ORACLE = fr"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
+         {_words_duck("text")} AS words
   FROM documents WHERE text IS NOT NULL),
 base AS (SELECT doc_id, words, len(words) AS n_words FROM w WHERE len(words) > 0),
 grams AS (

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import h32_sql, words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 _B = 1024  # hash-feature buckets
@@ -113,8 +114,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # _B is interpolated (not hardcoded) so retuning the bucket count can
 # never silently diverge the oracle from the Spark side (r06 review)
 _BIGRAM_CTE = (
-    "words AS (SELECT doc_id, lang, string_split(trim(regexp_replace(lower(text), "
-    r"'\s+', ' ', 'g')), ' ') AS w FROM documents), "
+    f"words AS (SELECT doc_id, lang, {_words_duck('text')} AS w FROM documents), "
     "bg AS (SELECT doc_id, lang, unnest(list_transform(range(1, greatest(len(w),1)), "
     "i -> w[i]||' '||w[i+1])) AS shingle FROM words), "
     "feats AS (SELECT doc_id, lang, "
@@ -613,7 +613,7 @@ _BL_SQL = ", ".join(f"'{t}'" for t in _BLOCKLIST)
 BLOCKLIST_FILTER_ORACLE = f"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
+         {_words_duck("text")} AS words
   FROM documents)
 SELECT doc_id,
        CAST(len(list_filter(words, x -> x IN ({_BL_SQL}))) AS BIGINT) AS n_hits,
@@ -781,7 +781,7 @@ def _funnel_oracle() -> str:
     return f"""
 WITH base AS (
   SELECT doc_id, lang, text,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
+         {_words_duck("text")} AS words
   FROM documents),
 k1 AS (
   SELECT * FROM base
@@ -935,9 +935,9 @@ def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle (the one-definition convention of text_queries' CTE builders:
 # a rule tweak applied to one oracle cannot silently diverge another)
 def _gopher_label_ctes() -> str:
-    return """WITH w AS (
+    return f"""WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
+         {_words_duck("text")} AS words
   FROM documents),
 lab AS (
   SELECT doc_id, words,

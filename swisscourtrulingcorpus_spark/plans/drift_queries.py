@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.functions.money import dec2 as _dec
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 
@@ -197,10 +198,9 @@ def js_token_drift_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JS_TOKEN_ORACLE = """
+JS_TOKEN_ORACLE = f"""
 WITH toks AS (
-  SELECT unnest(string_split(
-           trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS t,
+  SELECT unnest({_words_duck("text")}) AS t,
          doc_id % 2 = 0 AS a
   FROM documents WHERE text IS NOT NULL),
 per AS (
@@ -482,11 +482,10 @@ def js_token_drift_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JS_BY_LANG_ORACLE = """
+JS_BY_LANG_ORACLE = f"""
 WITH toks AS (
   SELECT lang AS s,
-         unnest(string_split(
-           trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS t,
+         unnest({_words_duck("text")}) AS t,
          doc_id % 2 = 0 AS a
   FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
 per AS (

@@ -14,6 +14,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 
@@ -96,10 +97,10 @@ def token_counter_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("cnt") >= 50)
 
 
-TOKEN_COUNTER_ORACLE = """
+TOKEN_COUNTER_ORACLE = f"""
 WITH words AS (
   SELECT lang,
-         unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS token
+         unnest({_words_duck("text")}) AS token
   FROM documents)
 SELECT coalesce(lang, '<ALL>') AS lang, token, count(*) AS cnt
 FROM words
@@ -200,12 +201,12 @@ def unpivot_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.unpivot("doc_id", ["n_chars", "n_tokens"], "stat", "value")
 
 
-UNPIVOT_ORACLE = """
+UNPIVOT_ORACLE = f"""
 SELECT doc_id, 'n_chars' AS stat, CAST(n_chars AS BIGINT) AS value
 FROM documents
 UNION ALL
 SELECT doc_id, 'n_tokens' AS stat,
-       CAST(len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS value
+       CAST(len({_words_duck("text")}) AS BIGINT) AS value
 FROM documents
 """
 
@@ -1462,7 +1463,7 @@ def _unigram_ctes() -> str:
     chain = ",\n".join(steps)
     return f"""
 WITH toks AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS w
+  SELECT unnest({_words_duck("text")}) AS w
   FROM documents),
 fwords AS (
   SELECT w, count(*) AS freq FROM toks
@@ -1569,7 +1570,7 @@ g{j} AS MATERIALIZED (
     chain = ",\n".join(steps)
     return f"""
 WITH toks AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS w
+  SELECT unnest({_words_duck("text")}) AS w
   FROM documents),
 fwords AS (
   SELECT w, count(*) AS freq FROM toks
@@ -1654,7 +1655,7 @@ seg AS MATERIALIZED (
   FROM g{_WP_W}),
 occ AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS word
+         unnest({_words_duck("text")}) AS word
   FROM documents)
 SELECT o.doc_id,
        count(*) AS n_words,
@@ -1717,7 +1718,7 @@ seg AS MATERIALIZED (
   WHERE b.pos = len(b.w)),
 occ AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS word
+         unnest({_words_duck("text")}) AS word
   FROM documents)
 SELECT o.doc_id,
        count(*) AS n_words,

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -759,10 +760,10 @@ def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GOPHER_FILTER_ORACLE = """
+GOPHER_FILTER_ORACLE = f"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
+         {_words_duck("text")} AS words
   FROM documents),
 f AS (
   SELECT doc_id,

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.functions.hashing import words_sql
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 
@@ -107,7 +108,7 @@ def bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BM25_ORACLE = f"""
 WITH words AS (
-  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
+  SELECT doc_id, unnest({_words_duck("text")}) AS term
   FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM words WHERE doc_id < 20 GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM words GROUP BY 1),
@@ -172,10 +173,10 @@ BM25_TOPK_ORACLE = f"""
 WITH q(query_id, qtext) AS (VALUES {_bm25_query_values()}),
 qterms AS (
   SELECT DISTINCT query_id,
-         unnest(string_split(trim(regexp_replace(lower(qtext), '\\s+', ' ', 'g')), ' ')) AS term
+         unnest({_words_duck("qtext")}) AS term
   FROM q),
 words AS (
-  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
+  SELECT doc_id, unnest({_words_duck("text")}) AS term
   FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM words GROUP BY 1, 2),
 dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
@@ -235,9 +236,9 @@ def postings_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-POSTINGS_MERGE_ORACLE = """
+POSTINGS_MERGE_ORACLE = f"""
 WITH words AS (
-  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
+  SELECT doc_id, unnest({_words_duck("text")}) AS term
   FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM words GROUP BY 1, 2),
 dl AS (SELECT doc_id, count(*) AS dl FROM words GROUP BY 1),
@@ -351,10 +352,10 @@ def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 RRF_HYBRID_ORACLE = f"""
 WITH qterms AS (
   SELECT DISTINCT doc_id AS qid,
-         unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
+         unnest({_words_duck("text")}) AS term
   FROM documents WHERE doc_id < 5),
 words AS (
-  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
+  SELECT doc_id, unnest({_words_duck("text")}) AS term
   FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM words GROUP BY 1, 2),
 dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
@@ -515,7 +516,7 @@ def bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BM25_HARD_NEG_ORACLE = f"""
 WITH w0 AS (
-  SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+  SELECT doc_id, {_words_duck("text")} AS w
   FROM documents),
 q AS (
   SELECT doc_id AS query_id, array_to_string(w[1:8], ' ') AS qtext
@@ -600,7 +601,7 @@ _PHRASE_VALUES = ", ".join(f"({i}, '{p}')" for i, p in enumerate(_PHRASES))
 PHRASE_SEARCH_ORACLE = rf"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+         {_words_duck("text")} AS w
   FROM documents WHERE text IS NOT NULL),
 tok AS (SELECT doc_id, unnest(range(1, len(w) + 1)) AS p, w FROM w),
 posidx AS (SELECT doc_id, w[p] AS term, p - 1 AS pos FROM tok),

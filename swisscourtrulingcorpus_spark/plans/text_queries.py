@@ -20,13 +20,16 @@ from pyspark.sql import functions as F
 from swisscourtrulingcorpus_spark.functions.text import (
     STOPWORDS,
     BPE_REGEX,
+    PUNCT_CLASS,
     language_id_score,
-    quality_features,
+    quality_features_sql,
     token_count_bpe,
     token_count_ws,
 )
 from swisscourtrulingcorpus_spark.functions.hashing import (
+    collapse_ws_sql,
     h32_sql,
+    split_ws_sql,
     word_shingles_from_words_sql,
     words_sql,
 )
@@ -53,17 +56,32 @@ def _h32_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}),1,8))::UBIGINT AS BIGINT)"
 
 
-# Words for shingling: lowercase, whitespace-collapse, trim, split(' ') —
-# identical to functions.hashing.words_sql.  ONE definition of
-# each CTE piece (the parameterized builders below); the module-level
-# constants used by the standalone oracles are derived from them so a
-# shingling change cannot silently diverge between oracle families.
+# The DuckDB twin of the whitespace tokenizer: every oracle splits and
+# collapses whitespace through these three, never a pasted copy.
+def _collapse_duck(expr: str) -> str:
+    """Whitespace-collapse + trim, case kept — twin of
+    functions.hashing.collapse_ws_sql (RE2's ``\\s`` is its class, and
+    DuckDB's ``trim`` strips every space separator)."""
+    return rf"trim(regexp_replace({expr}, '\s+', ' ', 'g'))"
+
+
+def _split_duck(expr: str) -> str:
+    """The word split, case kept — twin of functions.hashing.split_ws_sql."""
+    return f"string_split({_collapse_duck(expr)}, ' ')"
+
+
+def _words_duck(expr: str) -> str:
+    """The whitespace tokenizer — twin of functions.hashing.words_sql."""
+    return _split_duck(f"lower({expr})")
+
+
+# Words for shingling.  ONE definition of each CTE piece (the
+# parameterized builders below); the module-level constants used by the
+# standalone oracles are derived from them so a shingling change cannot
+# silently diverge between oracle families.
 def _words_cte(source: str, suffix: str = "") -> str:
-    return (
-        f"words{suffix} AS (SELECT doc_id, string_split(trim(regexp_replace(lower(text), "
-        r"'\s+', ' ', 'g')), ' ') AS w "
-        f"FROM {source})"
-    )
+    w = _words_duck("text")
+    return f"words{suffix} AS (SELECT doc_id, {w} AS w FROM {source})"
 
 
 def _shingle_cte(suffix: str = "") -> str:
@@ -258,7 +276,7 @@ cand AS (
   FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
 t AS (
   SELECT doc_id,
-         substr(regexp_replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
+         substr(regexp_replace({_collapse_duck("lower(text)")},
                                '[^\\x20-\\x7e]', '', 'g'), 1, {max_chars}) AS tt
   FROM documents),
 scored AS (
@@ -350,7 +368,7 @@ cand AS (
   FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
 t AS (
   SELECT doc_id,
-         substr(regexp_replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
+         substr(regexp_replace({_collapse_duck("lower(text)")},
                                '[^\\x20-\\x7e]', '', 'g'), 1, 2000) AS tt
   FROM documents),
 vp AS (
@@ -684,7 +702,7 @@ def _lang_id_oracle() -> str:
         f"WHEN hits_{lang} = {max_expr} THEN '{lang}'" for lang in langs
     )
     return f"""
-WITH w_cte AS (SELECT doc_id, lang, string_split_regex(trim(lower(text)), '\\s+') AS w FROM documents),
+WITH w_cte AS (SELECT doc_id, lang, {_words_duck("text")} AS w FROM documents),
 hits AS (SELECT doc_id, lang, {hit_defs} FROM w_cte)
 SELECT doc_id, lang,
        CASE WHEN {max_expr} = 0 OR ({n_at_max}) > 1 THEN 'und' {pick} ELSE 'und' END AS lang_pred
@@ -694,24 +712,21 @@ FROM hits
 
 def q_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    feats = quality_features("text")
-    return docs.select(
-        "doc_id", *[expr.alias(name) for name, expr in feats.items()]
-    )
+    feats = quality_features_sql("text")
+    return docs.selectExpr("doc_id", *[f"{e} AS {n}" for n, e in feats.items()])
 
 
 def _quality_oracle() -> str:
     all_stop = sorted({w for ws in STOPWORDS.values() for w in ws})
     stop_list = ", ".join(repr(s) for s in all_stop)
     return f"""
-WITH w_cte AS (
-  SELECT doc_id, text, string_split_regex(trim(lower(text)), '\\s+') AS w FROM documents)
+WITH w_cte AS (SELECT doc_id, text, {_words_duck("text")} AS w FROM documents)
 SELECT doc_id,
        length(text) AS n_chars,
        len(w) AS n_words,
-       len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) / greatest(length(text), 1) AS punct_ratio,
+       len(regexp_extract_all(text, '{PUNCT_CLASS}')) / greatest(length(text), 1) AS punct_ratio,
        len(list_filter(w, x -> list_contains([{stop_list}], x))) / greatest(len(w), 1) AS stopword_ratio,
-       length(regexp_replace(trim(lower(text)), '\\s+', '', 'g')) / greatest(len(w), 1) AS mean_word_len
+       length(array_to_string(w, '')) / greatest(len(w), 1) AS mean_word_len
 FROM w_cte
 """
 
@@ -727,7 +742,7 @@ def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOKEN_COUNTS_ORACLE = f"""
 SELECT doc_id,
-       len(string_split_regex(trim(text), '\\s+')) AS n_tokens_ws,
+       len({_words_duck("text")}) AS n_tokens_ws,
        len(regexp_extract_all(text, '{BPE_REGEX}')) AS n_tokens_bpe
 FROM documents
 """
@@ -750,10 +765,10 @@ def q_input_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INPUT_LENGTH_BUCKETS_ORACLE = r"""
+INPUT_LENGTH_BUCKETS_ORACLE = f"""
 WITH t AS (
   SELECT doc_id,
-         len(string_split_regex(trim(text), '\s+')) AS n_tokens
+         len({_words_duck("text")}) AS n_tokens
   FROM documents
 )
 SELECT doc_id, n_tokens,
@@ -853,9 +868,9 @@ SELECT doc_id, term, tf, df, rank FROM (
     return catalog_sql(spark, build)
 
 
-TFIDF_ORACLE = """
+TFIDF_ORACLE = f"""
 WITH words AS (
-  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
+  SELECT doc_id, unnest({_words_duck("text")}) AS term
   FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM words GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM words GROUP BY 1),
@@ -930,7 +945,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAMINATION_ORACLE = f"""
 WITH words AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+         {_words_duck("text")} AS w
   FROM documents),
 sh AS (
   SELECT DISTINCT doc_id,
@@ -980,10 +995,10 @@ def q_chunked_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CHUNKED_ORACLE = """
+CHUNKED_ORACLE = f"""
 WITH words AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS w
+         {_words_duck("text")} AS w
   FROM documents WHERE text IS NOT NULL),
 starts AS (
   SELECT doc_id, w, len(w) AS n,
@@ -1162,10 +1177,10 @@ def lexical_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LEXICAL_DIVERSITY_ORACLE = """
+LEXICAL_DIVERSITY_ORACLE = f"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS ws
+         {_words_duck("text")} AS ws
   FROM documents)
 SELECT doc_id,
        len(ws) AS n_words,
@@ -1307,15 +1322,13 @@ def q_pos_proxy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    salted = F.concat(
-        F.col("text"),
-        F.lit(" Bundesgericht Art. "),
-        (F.col("doc_id") % 250 + 1).cast("string"),
-        F.lit(" BGG , 4C.55/2003 !"),
+    salted = (
+        "concat(text, ' Bundesgericht Art. ', CAST(doc_id % 250 + 1 AS STRING),"
+        " ' BGG , 4C.55/2003 !')"
     )
-    toks = docs.select(
-        "lang", F.explode(F.split(salted, r"\s+")).alias("t")
-    ).where(F.length("t") > 0)
+    toks = docs.selectExpr("lang", f"explode({split_ws_sql(salted)}) AS t").where(
+        F.length("t") > 0
+    )
     return (
         toks.select("lang", pos_proxy_class_col().alias("pos_class"))
         .groupBy("lang", "pos_class")
@@ -1331,12 +1344,14 @@ def _pos_proxy_oracle() -> str:
 
     stop = lemma_stopword_sql("lower(t)", "lang")
     de_noun = de_noun_suffix_sql("t", "lang")
+    salted = (
+        "text || ' Bundesgericht Art. ' || CAST(doc_id % 250 + 1 AS VARCHAR)"
+        " || ' BGG , 4C.55/2003 !'"
+    )
     return rf"""
 WITH toks AS (
   SELECT lang,
-         unnest(string_split_regex(
-           text || ' Bundesgericht Art. ' || CAST(doc_id % 250 + 1 AS VARCHAR)
-                || ' BGG , 4C.55/2003 !', '\s+')) AS t
+         unnest({_split_duck(salted)}) AS t
   FROM documents)
 SELECT lang,
        CASE WHEN regexp_matches(t, '^[0-9]') THEN 'NUM'
@@ -1422,7 +1437,7 @@ def rake_keywords_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("seg")
         )
         .select(F.explode(F.split("seg", r"\|")).alias("raw"))
-        .select(F.trim(F.regexp_replace("raw", r"\s+", " ")).alias("phrase"))
+        .select(F.expr(collapse_ws_sql("raw")).alias("phrase"))
         .where(F.col("phrase") != "")
     )
     pw = phrases.select(
@@ -1455,15 +1470,15 @@ def _rake_oracle() -> str:
 WITH seg AS (
   SELECT array_to_string(
            list_transform(
-             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
+             {_words_duck("text")},
              w -> CASE WHEN w IN ({stop}) THEN '|' ELSE w END),
            ' ') AS seg
   FROM documents),
 raws AS (SELECT unnest(string_split(seg, '|')) AS raw FROM seg),
 phrases AS (
-  SELECT trim(regexp_replace(raw, '\s+', ' ', 'g')) AS phrase
+  SELECT {_collapse_duck("raw")} AS phrase
   FROM raws
-  WHERE trim(regexp_replace(raw, '\s+', ' ', 'g')) != ''),
+  WHERE {_collapse_duck("raw")} != ''),
 pw AS (
   SELECT phrase, len(string_split(phrase, ' ')) AS plen,
          unnest(string_split(phrase, ' ')) AS word
@@ -1562,7 +1577,7 @@ def cooccurrence_lift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cooc_oracle() -> str:
     return rf"""
 WITH w AS (
-  SELECT string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS ws
+  SELECT {_words_duck("text")} AS ws
   FROM documents),
 pos AS (
   SELECT ws, unnest(generate_series(1, len(ws))) AS i FROM w),
@@ -1777,7 +1792,7 @@ def q_ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 NGRAM_LM_ORACLE = rf"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+         {_words_duck("text")} AS w
   FROM documents WHERE text IS NOT NULL),
 uni AS (
   SELECT t AS w1, count(*) AS c1
@@ -1821,10 +1836,10 @@ def q_lm_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LM_COVERAGE_ORACLE = r"""
+LM_COVERAGE_ORACLE = fr"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+         {_words_duck("text")} AS w
   FROM documents WHERE text IS NOT NULL),
 refbg AS (
   SELECT DISTINCT w[pos] AS w1, w[pos + 1] AS w2
@@ -1868,9 +1883,9 @@ def q_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repeated_ngram_spans(docs, "text", "doc_id", k=10)
 
 
-REPEATED_SPANS_ORACLE = r"""
+REPEATED_SPANS_ORACLE = fr"""
 WITH words AS (
-  SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+  SELECT doc_id, {_words_duck("text")} AS w
   FROM documents),
 ww AS (SELECT doc_id, w FROM words WHERE len(w) >= 10),
 wins AS (
@@ -1949,10 +1964,10 @@ def q_ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CCNET_BUCKETS_ORACLE = r"""
+CCNET_BUCKETS_ORACLE = fr"""
 WITH w AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+         {_words_duck("text")} AS w
   FROM documents WHERE text IS NOT NULL),
 refuni AS (
   SELECT t AS token, count(*) AS c1

@@ -23,6 +23,7 @@ from swisscourtrulingcorpus_spark.functions.redaction import (
     redact_pii,
 )
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
+from swisscourtrulingcorpus_spark.plans.text_queries import _words_duck
 from swisscourtrulingcorpus_spark.sources.catalog import load_table
 
 
@@ -47,7 +48,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACKING_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id,
-         CAST(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS BIGINT) AS n,
+         CAST(len({_words_duck("text")}) AS BIGINT) AS n,
          md5('pack|' || CAST(doc_id AS VARCHAR)) AS k
   FROM documents WHERE text IS NOT NULL),
 c AS (
@@ -160,7 +161,7 @@ def q_length_grouped_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 LENGTH_SHARDS_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id,
-         CAST(len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens
+         CAST(len({_words_duck("text")}) AS BIGINT) AS n_tokens
   FROM documents WHERE text IS NOT NULL)
 SELECT doc_id, n_tokens,
        CAST((row_number() OVER (ORDER BY n_tokens, doc_id) - 1) * {_N_SHARDS}
@@ -254,10 +255,10 @@ def q_priority_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSAMP_RANKED_CTE = f"""
 WITH raw AS (
   SELECT doc_id,
-         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS w_tokens,
+         CAST(len({_words_duck("text")}) AS BIGINT) AS w_tokens,
          CAST(('0x' || substr(md5('psamp|' || CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT + 1 AS BIGINT) AS m
   FROM documents
-  WHERE len(string_split_regex(trim(text), '\\s+')) > 0),
+  WHERE len({_words_duck("text")}) > 0),
 -- staged long division (the integer_hits identity, mirrored from the
 -- Spark side): w*2^32 // m without the w*2^32 intermediate, so the
 -- oracle doesn't hit DuckDB's int64 overflow error where Spark's
@@ -355,7 +356,7 @@ _BUDGET_W_SQL = "CASE lang " + " ".join(
 TOKEN_BUDGET_ORACLE = f"""
 WITH avail AS (
   SELECT lang, count(*) AS n_docs,
-         CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
+         CAST(sum(len({_words_duck("text")})) AS BIGINT)
            AS available_tokens,
          {_BUDGET_W_SQL} AS w
   FROM documents GROUP BY lang)

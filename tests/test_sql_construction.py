@@ -261,11 +261,82 @@ def _package_modules():
     return sorted(root.rglob("*.py"))
 
 
+#: Whitespace splits out of the one-body rule, by ``module::function``:
+#: name and file-number normalizers with no DuckDB twin; and the DuckDB
+#: twin's own body.
+WS_EXEMPT = {
+    "person_registry.py::_name_tokens",
+    "filenumbers.py::normalize_file_number",
+    "text_queries.py::_collapse_duck",
+}
+
+
+def _whitespace_sites(path) -> list[str]:
+    """The sites of one package module that define whitespace outside
+    the one body per engine: ``\\s`` in a ``F.split`` /
+    ``F.regexp_replace`` / ``F.regexp_extract_all`` pattern (a literal
+    or a module-level constant), ``\\s`` in SQL text (either engine) that
+    calls ``split``, ``regexp_replace``, ``regexp_extract_all`` or
+    ``string_split_regex``, and the DuckDB word-split chain."""
+    import ast
+    import re
+
+    sql_call = re.compile(
+        r"\b(?:split|regexp_replace|regexp_extract_all|string_split_regex)\("
+    )
+    duck_chain = re.compile(r"string_split\(\s*trim\(regexp_replace\(lower\(")
+    tree = ast.parse(path.read_text())
+    consts = {
+        t.id: n.value.value
+        for n in tree.body
+        if isinstance(n, ast.Assign) and isinstance(n.value, ast.Constant)
+        for t in n.targets
+        if isinstance(t, ast.Name) and isinstance(n.value.value, str)
+    }
+
+    def text(node) -> str:
+        if isinstance(node, ast.JoinedStr):
+            parts = node.values
+            return "".join(text(v) if isinstance(v, ast.Constant) else "{}" for v in parts)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return consts.get(node.id, "") if isinstance(node, ast.Name) else ""
+
+    bad = []
+
+    def visit(node, fn):
+        if f"{path.name}::{fn}" in WS_EXEMPT:
+            return
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        f = node.func if isinstance(node, ast.Call) else None
+        if (
+            isinstance(f, ast.Attribute)
+            and getattr(f.value, "id", None) == "F"
+            and f.attr in ("split", "regexp_replace", "regexp_extract_all")
+            and any("\\s" in text(a) for a in ast.walk(node))
+        ):
+            bad.append(f"{path.name}:{node.lineno}: \\s in F.{f.attr}")
+        t = text(node) if isinstance(node, (ast.JoinedStr, ast.Constant)) else ""
+        if sql_call.search(t) and "\\s" in t:
+            bad.append(f"{path.name}:{node.lineno}: \\s in SQL text")
+        if duck_chain.search(t):
+            bad.append(f"{path.name}:{node.lineno}: word split outside _words_duck")
+        if not isinstance(node, ast.JoinedStr):
+            for child in ast.iter_child_nodes(node):
+                visit(child, fn)
+
+    visit(tree, None)
+    return bad
+
+
 def test_hashing_helpers_have_one_body():
     """``functions/hashing.py`` returns SQL text only; no package module
-    imports a deleted Column form; and outside the hashing module no
-    Spark code writes the tokenizer's ``regexp_replace(lower(...`` chain
-    (a DuckDB oracle string, which carries RE2's ``'g'`` flag, may)."""
+    imports a deleted Column form; outside the hashing module no Spark
+    code writes the tokenizer's ``regexp_replace(lower(...`` chain (a
+    DuckDB oracle string, which carries RE2's ``'g'`` flag, may); and
+    outside it and the DuckDB twin no package code defines whitespace
+    (:func:`_whitespace_sites`; Python's ``re`` is not checked)."""
     import ast
     import inspect
     import re
@@ -274,7 +345,9 @@ def test_hashing_helpers_have_one_body():
 
     builders = inspect.getmembers(hashing, inspect.isfunction)
     assert {n for n, f in builders if f.__module__ == hashing.__name__} >= {
+        "collapse_ws_sql",
         "normalize_ws_sql",
+        "split_ws_sql",
         "words_sql",
         "h32_sql",
         "md5_seeded_sql",
@@ -304,4 +377,5 @@ def test_hashing_helpers_have_one_body():
             if "'g')" not in src[m.end() : m.end() + 120]:
                 line = src.count("\n", 0, m.start()) + 1
                 bad.append(f"{path.name}:{line}: tokenizer chain outside words_sql")
+        bad += _whitespace_sites(path)
     assert not bad, bad
