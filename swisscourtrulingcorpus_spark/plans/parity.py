@@ -135,7 +135,9 @@ def normalize_plan(plan: str) -> str:
     p = re.sub(r"\b(gid#\d+) = (\d+)",
                lambda m: f"{m[1]} = {gids.get(m[1], {}).get(m[2], m[2])}", p)
     p = re.sub(r"plan_id=\d+", "plan_id=x", ids(p))
-    return re.sub(r"\s+", " ", p)
+    # fold the plan's own layout (ASCII whitespace) only: a Unicode
+    # space inside a literal (the tokenizer's trim set) is plan content
+    return re.sub(r"\s+", " ", p, flags=re.ASCII)
 
 
 def plan_fingerprint(df) -> str:

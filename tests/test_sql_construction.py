@@ -127,6 +127,16 @@ def test_plan_fingerprint_ignores_catalog_view_suffix(spark, sf_dir):
     assert normalize_plan(plan) == normalize_plan(relabeled) != normalize_plan(miswired)
 
 
+def test_normalize_plan_keeps_unicode_spaces():
+    """Only the plan's layout (ASCII whitespace) folds: two plans whose
+    literals differ by an NBSP against a ``' '`` normalize differently."""
+    from swisscourtrulingcorpus_spark.plans.parity import normalize_plan
+
+    plan = "Project [trim(text#12, Some({}a)) AS t#13]\n+- Relation [text#12] parquet"
+    assert normalize_plan(plan.format(" ")) != normalize_plan(plan.format("\xa0"))
+    assert normalize_plan("Project [a#1]\n  +- \tRelation") == "Project [a#x] +- Relation"
+
+
 def test_plan_fingerprint_ignores_lambda_counter(spark):
     """Column-API lambda variables are named ``x_<n>`` from a counter
     global to the JVM: a later build must fingerprint the same."""
