@@ -1307,6 +1307,13 @@ def pos_proxy_class_col(token: str = "t", lang: str = "lang"):
     )
 
 
+#: The POS proxy's salted text, as SQL both engines parse alike.
+_POS_SALTED = (
+    "text || ' Bundesgericht Art. ' || CAST(doc_id % 250 + 1 AS STRING)"
+    " || ' BGG , 4C.55/2003 !'"
+)
+
+
 def q_pos_proxy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E11 counter_pos/counter_tag counterpart
     (`abstract_preprocessor.py:404-409`: per-token POS/tag counts).
@@ -1317,18 +1324,9 @@ def q_pos_proxy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (tokenize → classify → count per language) and is
     engine-reproducible.  Text is salted with a digits/punctuation/
     capitalized suffix so every class is exercised at every SF."""
-    from swisscourtrulingcorpus_spark.functions.text import (
-        lemma_stopword_sql,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    salted = (
-        "concat(text, ' Bundesgericht Art. ', CAST(doc_id % 250 + 1 AS STRING),"
-        " ' BGG , 4C.55/2003 !')"
-    )
-    toks = docs.selectExpr("lang", f"explode({split_ws_sql(salted)}) AS t").where(
-        F.length("t") > 0
-    )
+    toks = docs.selectExpr("lang", f"explode({split_ws_sql(_POS_SALTED)}) AS t")
+    toks = toks.where(F.length("t") > 0)
     return (
         toks.select("lang", pos_proxy_class_col().alias("pos_class"))
         .groupBy("lang", "pos_class")
@@ -1344,14 +1342,10 @@ def _pos_proxy_oracle() -> str:
 
     stop = lemma_stopword_sql("lower(t)", "lang")
     de_noun = de_noun_suffix_sql("t", "lang")
-    salted = (
-        "text || ' Bundesgericht Art. ' || CAST(doc_id % 250 + 1 AS VARCHAR)"
-        " || ' BGG , 4C.55/2003 !'"
-    )
     return rf"""
 WITH toks AS (
   SELECT lang,
-         unnest({_split_duck(salted)}) AS t
+         unnest({_split_duck(_POS_SALTED)}) AS t
   FROM documents)
 SELECT lang,
        CASE WHEN regexp_matches(t, '^[0-9]') THEN 'NUM'
