@@ -135,14 +135,11 @@ def _write_tables(
 
 
 def build_corpus(
-    spark: SparkSession,
-    raw: DataFrame,
-    out_dir: str,
-    incremental: bool = True,
+    spark: SparkSession, raw: DataFrame, out_dir: str
 ) -> dict[str, int]:
     """Materialize the domain tables from a raw landing-zone batch.
 
-    With ``incremental=True`` (the reference's process_new_files_only),
+    Incremental, like the reference's process_new_files_only: the
     file_names the decision table holds are anti-joined away and the
     new rows APPEND to the existing tables; a rerun over an unchanged
     landing zone is a no-op.  Returns cumulative per-table row counts
@@ -154,7 +151,7 @@ def build_corpus(
     table write has the batch's partition count.  ``decision`` is
     written last; its appended part is the run's commit marker.
     """
-    done = _processed_keys(spark, out_dir) if incremental else None
+    done = _processed_keys(spark, out_dir)
     return _write_tables(
         spark,
         new_rows_only(raw, done, _KEYS),
@@ -211,9 +208,7 @@ def load_tables(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     }
 
 
-def build_datasets(
-    spark: SparkSession, out_dir: str, leading: DataFrame | None = None
-) -> dict[str, int]:
+def build_datasets(spark: SparkSession, out_dir: str) -> dict[str, int]:
     """Run the dataset creators (§2.9) over the materialized tables and
     write each as a split-partitioned export.  Returns rows per dataset.
     """
@@ -222,8 +217,7 @@ def build_datasets(
     )
 
     tables = load_tables(spark, out_dir)
-    if leading is None:
-        leading = leading_rulings_df(spark)
+    leading = leading_rulings_df(spark)
     creators: dict[str, DataFrame] = {
         "judgment_prediction": judgment_dataset(tables),
         "criticality": criticality_dataset(tables, leading),

@@ -32,7 +32,7 @@ from swisscourtrulingcorpus_spark.functions.money import (
     disc_price_sql,
 )
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
-from swisscourtrulingcorpus_spark.sources.catalog import load_table
+from swisscourtrulingcorpus_spark.sources.catalog import catalog_sql, load_table
 
 _revenue = disc_price
 _revenue_sql = disc_price_sql
@@ -48,33 +48,26 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
-    def build() -> str:
-        li = table_view(spark, sf_dir, "lineitem")
-        orders = table_view(spark, sf_dir, "orders")
-        cust = table_view(spark, sf_dir, "customer")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT l_orderkey, date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate,
        o_orderpriority, revenue
 FROM (
   SELECT l_orderkey, o_orderdate, o_orderpriority,
          cast(sum({_revenue_sql()}) as double) AS revenue
-  FROM (SELECT * FROM {li} WHERE l_shipdate > '1998-07-01')
-  JOIN (SELECT * FROM {orders} WHERE o_orderdate < '1998-07-01')
+  FROM (SELECT * FROM {view('lineitem')} WHERE l_shipdate > '1998-07-01')
+  JOIN (SELECT * FROM {view('orders')} WHERE o_orderdate < '1998-07-01')
     ON l_orderkey = o_orderkey
-  JOIN (SELECT * FROM {cust} WHERE c_mktsegment = 'BUILDING')
+  JOIN (SELECT * FROM {view('customer')} WHERE c_mktsegment = 'BUILDING')
     ON o_custkey = c_custkey
   GROUP BY l_orderkey, o_orderdate, o_orderpriority
 )
 ORDER BY revenue DESC, l_orderkey ASC
 LIMIT 10
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 Q3_ORACLE = """
@@ -106,33 +99,23 @@ def q5_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
-    def build() -> str:
-        li = table_view(spark, sf_dir, "lineitem")
-        orders = table_view(spark, sf_dir, "orders")
-        cust = table_view(spark, sf_dir, "customer")
-        supp = table_view(spark, sf_dir, "supplier")
-        nation = table_view(spark, sf_dir, "nation")
-        region = table_view(spark, sf_dir, "region")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT /*+ BROADCAST(n), BROADCAST(r) */
        r_name, n_name, cast(sum({_revenue_sql()}) as double) AS revenue
-FROM {li}
-JOIN (SELECT * FROM {orders}
+FROM {view('lineitem')}
+JOIN (SELECT * FROM {view('orders')}
       WHERE o_orderdate >= '1997-01-01' AND o_orderdate < '1999-01-01')
   ON l_orderkey = o_orderkey
-JOIN {cust} ON o_custkey = c_custkey
-JOIN {supp} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN {nation} n ON s_nationkey = n_nationkey
-JOIN {region} r ON n_regionkey = r_regionkey
+JOIN {view('customer')} ON o_custkey = c_custkey
+JOIN {view('supplier')} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN {view('nation')} n ON s_nationkey = n_nationkey
+JOIN {view('region')} r ON n_regionkey = r_regionkey
 GROUP BY r_name, n_name
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 Q5_ORACLE = """
@@ -164,31 +147,24 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
-    def build() -> str:
-        li = table_view(spark, sf_dir, "lineitem")
-        orders = table_view(spark, sf_dir, "orders")
-        cust = table_view(spark, sf_dir, "customer")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT c_name, c_custkey, o_orderkey,
        date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate,
        o_totalprice AS totalprice,
        cast(sum_qty as double) AS sum_qty
 FROM (
   SELECT * FROM (
-    SELECT l_orderkey, sum(l_quantity) AS sum_qty FROM {li}
+    SELECT l_orderkey, sum(l_quantity) AS sum_qty FROM {view('lineitem')}
     GROUP BY l_orderkey
   ) WHERE sum_qty > 300
 )
-JOIN {orders} ON l_orderkey = o_orderkey
-JOIN {cust} ON o_custkey = c_custkey
-"""
-
-    return catalog_sql(spark, build)
+JOIN {view('orders')} ON l_orderkey = o_orderkey
+JOIN {view('customer')} ON o_custkey = c_custkey
+""",
+    )
 
 
 Q18_ORACLE = """

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.operators.relational import map_join
+from swisscourtrulingcorpus_spark.plans.domain_pipeline import _sections_pivot
 
 
 def mask_citations(
@@ -177,13 +178,7 @@ def law_area_dataset(tables: dict[str, DataFrame]) -> DataFrame:
             )
         )
     )
-    pivot = (
-        tables["section"]
-        .where(F.col("section").isin("facts", "considerations"))
-        .groupBy("decision_id")
-        .pivot("section", ["facts", "considerations"])
-        .agg(F.first("section_text"))
-    )
+    pivot = _sections_pivot(tables["section"], ["facts", "considerations"])
     return (
         decisions.select("decision_id", "chamber", "date")
         .withColumn("label", mapping[F.col("chamber")])
@@ -258,13 +253,7 @@ def doc2doc_corpus(
     universe of leading rulings.  The reference pulls leading-ruling
     text from a hub dataset (offline here — S13 seam); the BGE key
     stands in as the text so ids and join shapes stay real."""
-    sec = tables["section"]
-    pivot = (
-        sec.where(F.col("section").isin("facts", "considerations"))
-        .groupBy("decision_id")
-        .pivot("section", ["facts", "considerations"])
-        .agg(F.first("section_text"))
-    )
+    pivot = _sections_pivot(tables["section"], ["facts", "considerations"])
     rulings = (
         tables["decision"]
         .select("decision_id", "file_name", "language")

@@ -278,13 +278,16 @@ def resolve_lower_court_ids(
     )
 
 
-def _sections_pivot(sections: DataFrame) -> DataFrame:
-    """Flatten section rows to one column per feature section (the
-    reference's expand_df, `dataset_creator.py:779-817`) — a pivot,
-    replacing its O(n²) row patching with one shuffle."""
+def _sections_pivot(sections: DataFrame, names: list[str]) -> DataFrame:
+    """Flatten section rows to one column per section type in ``names``
+    (the reference's expand_df, `dataset_creator.py:779-817`) — a pivot,
+    replacing its O(n²) row patching with one shuffle of only the
+    wanted types.  ``first`` is exact: the splitter emits at most one
+    row per section type and decision."""
     return (
-        sections.groupBy("decision_id")
-        .pivot("section", ["facts", "considerations", "rulings", "header"])
+        sections.where(F.col("section").isin(names))
+        .groupBy("decision_id")
+        .pivot("section", names)
         .agg(F.first("section_text"))
     )
 
@@ -334,7 +337,9 @@ def judgment_dataset(tables: dict[str, DataFrame]) -> DataFrame:
         )
 
         decisions = tables["decision"]
-        pivot = _sections_pivot(tables["section"])
+        pivot = _sections_pivot(
+            tables["section"], ["facts", "considerations", "rulings", "header"]
+        )
         df = decisions.select(
             "decision_id", "spider", "chamber", "date", "language"
         ).join(pivot, on="decision_id", how="left").withColumn(

@@ -24,7 +24,7 @@ from swisscourtrulingcorpus_spark.operators.relational import (
 )
 from swisscourtrulingcorpus_spark.functions.money import dec2 as _dec
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
-from swisscourtrulingcorpus_spark.sources.catalog import load_table
+from swisscourtrulingcorpus_spark.sources.catalog import catalog_sql, load_table
 
 
 # --- A1/P1: pricing summary (TPC-H Q1 shape: scan+filter+agg) ----------
@@ -39,14 +39,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
-    def build() -> str:
-        li = table_view(spark, sf_dir, "lineitem")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT l_returnflag, l_linestatus,
   cast(sum(l_quantity) as double) AS sum_qty,
   cast(sum({money.dec2_sql('l_extendedprice')}) as double) AS sum_base_price,
@@ -55,12 +52,11 @@ SELECT l_returnflag, l_linestatus,
   sum(l_quantity) / count(1) AS avg_qty,
   cast(sum({money.dec2_sql('l_extendedprice')}) as double) / count(1) AS avg_price,
   count(1) AS count_order
-FROM {li}
+FROM {view('lineitem')}
 WHERE l_shipdate <= '2000-12-01'
 GROUP BY l_returnflag, l_linestatus
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 Q1_ORACLE = """
@@ -91,30 +87,23 @@ def coverage_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
-    def build() -> str:
-        orders = table_view(spark, sf_dir, "orders")
-        cust = table_view(spark, sf_dir, "customer")
-        nation = table_view(spark, sf_dir, "nation")
-        region = table_view(spark, sf_dir, "region")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT /*+ BROADCAST(c), BROADCAST(n), BROADCAST(r) */
   r_name,
   count(DISTINCT o_custkey) AS n_customers,
   count(1) AS n_orders,
   cast(sum({money.dec2_sql('o_totalprice')}) as double) AS total_value
-FROM {orders}
-JOIN {cust} c ON o_custkey = c_custkey
-JOIN {nation} n ON c_nationkey = n_nationkey
-JOIN {region} r ON n_regionkey = r_regionkey
+FROM {view('orders')}
+JOIN {view('customer')} c ON o_custkey = c_custkey
+JOIN {view('nation')} n ON c_nationkey = n_nationkey
+JOIN {view('region')} r ON n_regionkey = r_regionkey
 GROUP BY r_name
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 COVERAGE_ORACLE = """
@@ -141,30 +130,24 @@ def map_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
-    def build() -> str:
-        orders = table_view(spark, sf_dir, "orders")
-        li = table_view(spark, sf_dir, "lineitem")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT o_orderkey, o_orderstatus, coalesce(items, '') AS items
-FROM (SELECT o_orderkey, o_orderstatus FROM {orders})
+FROM (SELECT o_orderkey, o_orderstatus FROM {view('orders')})
 LEFT JOIN (
   SELECT o_orderkey, concat_ws(',', sort_array(collect_list(__item))) AS items
   FROM (
     SELECT l_orderkey AS o_orderkey,
            concat_ws(':', cast(l_linenumber as string),
                      cast(l_partkey as string)) AS __item
-    FROM {li}
+    FROM {view('lineitem')}
   )
   GROUP BY o_orderkey
 ) USING (o_orderkey)
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 MAP_JOIN_ORACLE = """
@@ -226,34 +209,27 @@ def semi_join_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
-    def build() -> str:
-        li = table_view(spark, sf_dir, "lineitem")
-        orders = table_view(spark, sf_dir, "orders")
-        cust = table_view(spark, sf_dir, "customer")
-        nation = table_view(spark, sf_dir, "nation")
-        region = table_view(spark, sf_dir, "region")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 WITH nations_in AS (
-  SELECT /*+ BROADCAST(r) */ * FROM {nation}
-  LEFT SEMI JOIN (SELECT * FROM {region} WHERE r_name = 'AMERICA') r
+  SELECT /*+ BROADCAST(r) */ * FROM {view('nation')}
+  LEFT SEMI JOIN (SELECT * FROM {view('region')} WHERE r_name = 'AMERICA') r
     ON n_regionkey = r_regionkey
 ),
 custs_in AS (
-  SELECT /*+ BROADCAST(n) */ * FROM {cust}
+  SELECT /*+ BROADCAST(n) */ * FROM {view('customer')}
   LEFT SEMI JOIN nations_in n ON c_nationkey = n_nationkey
 ),
 orders_in AS (
-  SELECT /*+ BROADCAST(ci) */ * FROM {orders}
+  SELECT /*+ BROADCAST(ci) */ * FROM {view('orders')}
   LEFT SEMI JOIN (SELECT c_custkey FROM custs_in) ci
     ON o_custkey = c_custkey
 ),
 li_in AS (
-  SELECT * FROM {li}
+  SELECT * FROM {view('lineitem')}
   LEFT SEMI JOIN (SELECT o_orderkey FROM orders_in)
     ON l_orderkey = o_orderkey
 )
@@ -261,9 +237,8 @@ SELECT l_returnflag, count(1) AS n_items,
        cast(sum({money.dec2_sql('l_extendedprice')}) as double) AS value
 FROM li_in
 GROUP BY l_returnflag
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 SEMI_JOIN_ORACLE = """
@@ -317,31 +292,27 @@ def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     events fixture types — bigint ids, timestamp_ntz ts; a generator
     schema change moves the golden fingerprint loudly).  Optimized plan pinned in
     tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
     over = (
         "OVER (PARTITION BY user_id ORDER BY __ord ASC, __is_left ASC"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     within = "((__ord - __m_on) < INTERVAL 30 MINUTES)"
 
-    def build() -> str:
-        ev = table_view(spark, sf_dir, "events")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 WITH u AS (
   SELECT user_id, purchase_id, ts, ts AS __ord, 1 AS __is_left,
          cast(null as bigint) AS __r_click_id,
          cast(null as timestamp_ntz) AS __r_on
-  FROM (SELECT user_id, event_id AS purchase_id, ts FROM {ev}
+  FROM (SELECT user_id, event_id AS purchase_id, ts FROM {view('events')}
         WHERE event_type = 'purchase')
   UNION ALL
   SELECT user_id, cast(null as bigint) AS purchase_id,
          cast(null as timestamp_ntz) AS ts, ts AS __ord, 0 AS __is_left,
          click_id AS __r_click_id, ts AS __r_on
-  FROM (SELECT user_id, event_id AS click_id, ts FROM {ev}
+  FROM (SELECT user_id, event_id AS click_id, ts FROM {view('events')}
         WHERE event_type = 'click')
 ),
 carried AS (
@@ -362,9 +333,8 @@ FROM (
     FROM carried WHERE __is_left = 1
   )
 )
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 ASOF_ORACLE = """
@@ -388,20 +358,16 @@ def topk_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     over = (
         "OVER (PARTITION BY c_mktsegment"
         " ORDER BY price DESC, o_orderkey ASC)"
     )
 
-    def build() -> str:
-        orders = table_view(spark, sf_dir, "orders")
-        cust = table_view(spark, sf_dir, "customer")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT c_mktsegment, o_orderkey, cast(price as double) AS price, rank
 FROM (
   SELECT *, row_number() {over} AS rank
@@ -412,14 +378,13 @@ FROM (
       FROM (
         SELECT /*+ BROADCAST(c) */ c_mktsegment, o_orderkey,
                {money.dec2_sql('o_totalprice')} AS price
-        FROM {orders} JOIN {cust} c ON o_custkey = c_custkey
+        FROM {view('orders')} JOIN {view('customer')} c ON o_custkey = c_custkey
       )
     ) WHERE __rn <= 3
   )
 )
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 TOPK_ORACLE = """
@@ -474,16 +439,11 @@ def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
     from swisscourtrulingcorpus_spark.functions import money
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
-    def build() -> str:
-        cust = table_view(spark, sf_dir, "customer")
-        nation = table_view(spark, sf_dir, "nation")
-        region = table_view(spark, sf_dir, "region")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT coalesce(r_name, '<ALL>') AS region,
        coalesce(n_name, '<ALL>') AS nation,
        n_customers, total_balance
@@ -491,14 +451,13 @@ FROM (
   SELECT /*+ BROADCAST(n), BROADCAST(r) */ r_name, n_name,
          count(1) AS n_customers,
          cast(sum({money.dec2_sql('c_acctbal')}) as double) AS total_balance
-  FROM {cust}
-  JOIN {nation} n ON c_nationkey = n_nationkey
-  JOIN {region} r ON n_regionkey = r_regionkey
+  FROM {view('customer')}
+  JOIN {view('nation')} n ON c_nationkey = n_nationkey
+  JOIN {view('region')} r ON n_regionkey = r_regionkey
   GROUP BY ROLLUP (r_name, n_name)
 )
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 ROLLUP_ORACLE = """

@@ -45,7 +45,7 @@ from swisscourtrulingcorpus_spark.operators.similarity import (
     lsh_bucketed_topk,
 )
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
-from swisscourtrulingcorpus_spark.sources.catalog import load_table
+from swisscourtrulingcorpus_spark.sources.catalog import catalog_sql, load_table
 
 # ---------------------------------------------------------------- SQL bits
 
@@ -189,16 +189,13 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_lsh_candidates_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     spread = spark.sparkContext.defaultParallelism
     return catalog_sql(
         spark,
-        lambda: minhash_lsh_candidates_sql(
-            table_view(spark, sf_dir, "documents"),
+        sf_dir,
+        lambda view: minhash_lsh_candidates_sql(
+            view("documents"),
             "text",
             "doc_id",
             spread_partitions=spread,
@@ -224,16 +221,13 @@ def q_minhash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_dedup_groups_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     spread = spark.sparkContext.defaultParallelism
     return catalog_sql(
         spark,
-        lambda: minhash_dedup_groups_sql(
-            table_view(spark, sf_dir, "documents"),
+        sf_dir,
+        lambda view: minhash_dedup_groups_sql(
+            view("documents"),
             "text",
             "doc_id",
             spread_partitions=spread,
@@ -528,16 +522,13 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.dedup import (
         ngram_jaccard_pairs_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     spread = spark.sparkContext.defaultParallelism
     return catalog_sql(
         spark,
-        lambda: ngram_jaccard_pairs_sql(
-            table_view(spark, sf_dir, "documents"),
+        sf_dir,
+        lambda view: ngram_jaccard_pairs_sql(
+            view("documents"),
             "text",
             "doc_id",
             spread_partitions=spread,
@@ -569,18 +560,14 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.similarity import (
         cosine_topk_bruteforce_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
-    def build() -> str:
-        emb = table_view(spark, sf_dir, "embeddings")
+    def build(view) -> str:
+        emb = view("embeddings")
         return cosine_topk_bruteforce_sql(
             emb, f"(SELECT * FROM {emb} WHERE vec_id < 8)", k=5
         )
 
-    return catalog_sql(spark, build)
+    return catalog_sql(spark, sf_dir, build)
 
 
 COSINE_TOPK_ORACLE = """
@@ -830,29 +817,25 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     - rank on round(score, 9): an ULP of ln drift between Spark and
       DuckDB becomes a tie the term column breaks deterministically.
     """
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
     words = words_sql("text")
 
-    def build() -> str:
-        docs = table_view(spark, sf_dir, "documents")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 WITH tf AS (
   SELECT doc_id, term, count(1) AS tf
   FROM (SELECT doc_id, explode({words}) AS term
-        FROM {docs} WHERE doc_id < 20)
+        FROM {view('documents')} WHERE doc_id < 20)
   GROUP BY doc_id, term
 ),
 df_ AS (
   SELECT term, count(1) AS df
   FROM (SELECT explode(array_distinct({words})) AS term
-        FROM {docs})
+        FROM {view('documents')})
   GROUP BY term
 ),
-n AS (SELECT count(1) AS n_docs FROM {docs}),
+n AS (SELECT count(1) AS n_docs FROM {view('documents')}),
 scored AS (
   SELECT /*+ BROADCAST(tf), BROADCAST(n) */ *,
          (tf * (ln((1 + n_docs) / (1 + df)) + 1)) AS score
@@ -863,9 +846,8 @@ SELECT doc_id, term, tf, df, rank FROM (
            ORDER BY round(score, 9) DESC, term ASC) AS rank
   FROM scored
 ) WHERE rank <= 5
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 TFIDF_ORACLE = f"""
@@ -921,15 +903,11 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.dedup import (
         contamination_check_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     spread = spark.sparkContext.defaultParallelism
 
-    def build() -> str:
-        docs = table_view(spark, sf_dir, "documents")
+    def build(view) -> str:
+        docs = view("documents")
         return contamination_check_sql(
             f"(SELECT * FROM {docs} WHERE (doc_id % 10) = 0)",
             f"(SELECT * FROM {docs} WHERE NOT ((doc_id % 10) = 0))",
@@ -939,7 +917,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             spread_partitions=spread,
         )
 
-    return catalog_sql(spark, build)
+    return catalog_sql(spark, sf_dir, build)
 
 
 CONTAMINATION_ORACLE = f"""
@@ -978,15 +956,12 @@ def q_chunked_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.training import (
         chunk_documents_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     return catalog_sql(
         spark,
-        lambda: chunk_documents_sql(
-            table_view(spark, sf_dir, "documents"),
+        sf_dir,
+        lambda view: chunk_documents_sql(
+            view("documents"),
             "text",
             "doc_id",
             chunk_size=64,
@@ -1021,16 +996,11 @@ def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swisscourtrulingcorpus_spark.operators.training import (
         deterministic_shuffle_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
 
     return catalog_sql(
         spark,
-        lambda: deterministic_shuffle_sql(
-            table_view(spark, sf_dir, "documents"), "doc_id"
-        ),
+        sf_dir,
+        lambda view: deterministic_shuffle_sql(view("documents"), "doc_id"),
     )
 
 

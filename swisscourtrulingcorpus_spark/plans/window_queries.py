@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from swisscourtrulingcorpus_spark.plans.registry import QuerySpec
-from swisscourtrulingcorpus_spark.sources.catalog import load_table
+from swisscourtrulingcorpus_spark.sources.catalog import catalog_sql, load_table
 
 
 def tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -27,25 +27,20 @@ def tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
-    def build() -> str:
-        ev = table_view(spark, sf_dir, "events")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS window_start,
        event_type, cnt, total_value
 FROM (
   SELECT window(ts, '1 hour') AS w, event_type, count(1) AS cnt,
          cast(sum(cast(value as decimal(18,2))) as double) AS total_value
-  FROM {ev}
+  FROM {view('events')}
   GROUP BY window(ts, '1 hour'), event_type
 )
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 TUMBLING_ORACLE = """
@@ -92,14 +87,10 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Whole-query SQL-text construction (r12, session 2); optimized plan
     pinned in tests/fixtures/plan_fingerprints.json."""
-    from swisscourtrulingcorpus_spark.sources.catalog import (
-        catalog_sql,
-        table_view,
-    )
-
-    def build() -> str:
-        ev = table_view(spark, sf_dir, "events")
-        return f"""
+    return catalog_sql(
+        spark,
+        sf_dir,
+        lambda view: f"""
 SELECT user_id,
        date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS session_start,
        date_format(__last, 'yyyy-MM-dd HH:mm:ss') AS last_ts,
@@ -107,12 +98,11 @@ SELECT user_id,
 FROM (
   SELECT user_id, session_window(ts, '30 minutes') AS w,
          count(1) AS n_events, max(ts) AS __last
-  FROM {ev}
+  FROM {view('events')}
   GROUP BY user_id, session_window(ts, '30 minutes')
 )
-"""
-
-    return catalog_sql(spark, build)
+""",
+    )
 
 
 SESSION_ORACLE = """

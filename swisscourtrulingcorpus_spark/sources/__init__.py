@@ -3,7 +3,6 @@
 from swisscourtrulingcorpus_spark.sources.catalog import (  # noqa: F401
     TABLES,
     load_table,
-    load_tables,
     register_views,
 )
 from swisscourtrulingcorpus_spark.sources.sinks import (  # noqa: F401

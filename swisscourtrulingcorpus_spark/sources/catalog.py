@@ -1,10 +1,24 @@
 """Parquet star-schema catalog (SURVEY.md §2.1 S6 — the chunk-stream scan).
 
 The reference streams 1000-row pandas chunks off a server-side Postgres
-cursor (`scrc/preprocessors/abstract_preprocessor.py:179-200`).  Under
-Spark that whole mechanism is just a parquet scan: partitioned execution
-subsumes chunking, and Catalyst pushes projections/filters into the scan
+cursor (`scrc/preprocessors/abstract_preprocessor.py:179-200`) and
+issues raw SQL against it (`scrc/utils/sql_select_utils.py`).  Under
+Spark the chunking is just a parquet scan: partitioned execution
+subsumes it, and Catalyst pushes projections/filters into the scan
 (verify with ``df.explain`` → ``PushedFilters`` / ``ReadSchema``).
+
+Each table's prepared scan is registered as a session temp view once
+per (session, path, mtime, size).  That view-name cache is the module's
+one cache; it holds metadata only, and every execution still scans the
+parquet.  Two entry points read it:
+
+- :func:`load_table` returns a DataFrame over the view;
+- :func:`catalog_sql` runs SQL text built by ``build(view)``, where
+  ``view(name)`` is the registered view name: the one way SQL text
+  names a catalog table.
+
+Both re-register a view dropped behind the cache through one body
+(:func:`_with_views`).
 
 At 100 TB the same code path holds: ``spark.read.parquet`` over an
 object-store prefix, with partition pruning on any directory-partitioned
@@ -14,7 +28,6 @@ columns.  Nothing here materializes on the driver.
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -37,11 +50,12 @@ TABLES = (
     "embeddings",
 )
 
-@lru_cache(maxsize=None)
+
 def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as
-    BIGINT (legacy nanosAsLong) and we restore timestamps below.  One
-    footer read per path, cached; driver-side only."""
+    """Columns stored as parquet TIMESTAMP(NANOS), which Spark reads as
+    BIGINT (legacy nanosAsLong).  One driver-side footer read, made when
+    the table's view is registered, so it always describes the file the
+    view scans."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -58,8 +72,8 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     # type) and legacy INT96 timestamps as timestamp[ns] — but Spark
     # only reads the former as BIGINT under nanosAsLong; INT96 comes
     # back as a real TIMESTAMP and must NOT be div-1000'ed (Spark 4
-    # writes INT96 by default, so any Spark-written copy of a table
-    # with timestamps used to break load_table here).
+    # writes INT96 by default, so a Spark-written copy of a table with
+    # timestamps holds INT96).
     pf = pq.ParquetFile(path)
     physical = {
         pf.schema.column(i).name: pf.schema.column(i).physical_type
@@ -74,130 +88,81 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     )
 
 
-# Schema cache for load_table (r11 optimization round).  A bare
-# ``spark.read.parquet(path)`` re-infers the schema on EVERY call —
-# measured 115 ms warm per call on the driver (file listing + footer
-# read through the Hadoop path), ~85 ms of which vanishes when the
-# reader is handed an explicit schema.  The bench constructs each query
-# fresh 3×, so the ~43 load_table calls per bench pass paid ~11 s of
-# pure re-inference.  The cache holds ONLY metadata (a StructType — the
-# 100 TB analogue is a real catalog/metastore, guide §6), never data or
-# results: every call still returns a FRESH DataFrame (fresh expression
-# IDs, so self-joins of two loads keep working) and every execution
-# still scans the parquet.  Keyed on (path, mtime_ns, size) so a
-# rewritten file re-infers.
-_SCHEMA_CACHE: dict = {}
-
-
-def _table_schema(spark: SparkSession, path: str):
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = sch
-    return sch
-
-
-# View-name cache for load_table (r11 optimization round, session 2).
-# Even with the schema cache above, every load_table call still paid
-# ~20 ms of py4j/driver work — DataFrameReader setup, the ``parquet()``
-# call's relation + file-index construction — and the bench makes ~150
-# such calls (each headline query is constructed fresh 3×; profiled:
-# load_table was 0.7 s of q5's 1.7 s 5-construction profile, 80% of it
-# socket recv).  Fix: register the fully-prepared table (schema'd scan
-# + nanos conversion) as a session TEMP VIEW once per (session, path,
-# mtime, size) and return ``spark.table(view)`` — one py4j call.  Each
-# call yields a FRESH UnresolvedRelation, so two loads of one table
-# still self-join with distinct expression IDs (the analyzer
-# deduplicates relation instances, exactly as SQL self-joins do);
-# memoizing the DataFrame OBJECT instead would alias the IDs and break
-# them.  The view is pure metadata in the session catalog — every
-# execution still scans the parquet — and the stat-key invalidates on
-# any file change (a changed file gets a new view name; the stale view
-# is just never referenced again).
+# Temp-view name per (session, path, mtime_ns, size): the catalog's one
+# cache.  Each ``spark.read.parquet`` lists files, reads a footer and
+# builds a relation through py4j; registering the prepared scan once
+# makes a warm ``load_table`` one ``spark.table`` call and a warm
+# ``catalog_sql`` view name an ``os.stat``.  Conditions the key relies on:
+# - the stat is of the top-level path: every engine table is one
+#   parquet file that the generator replaces whole, so a part file
+#   cannot change under an unchanged stat;
+# - a rewritten file gets a new key and so a new view (the stale view
+#   is never named again);
+# - the session is the SparkSession object, not ``id(spark)``: the held
+#   reference pins it, so a later session cannot reuse a collected id
+#   and alias a stale view.  Sessions per process are few.
 _VIEW_CACHE: dict = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One table = one parquet path; schema comes from parquet footers
-    (explicit and stable — written by the deterministic generator),
-    cached per (path, mtime, size) so repeated loads skip re-inference,
-    and the prepared scan is registered once per session as a temp view
-    so repeated loads cost one catalog lookup (see _VIEW_CACHE).
+def _table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Temp-view name of catalog table ``name``, registered on first use
+    of the file's current stat.  The warm path is an ``os.stat`` and a
+    dict lookup: no py4j call, and no check that the view still exists,
+    so every caller runs inside :func:`_with_views`.
 
-    TIMESTAMP(NANOS) columns arrive as nano BIGINTs; convert with
+    TIMESTAMP(NANOS) columns arrive as nano BIGINTs; they convert with
     integer ``DIV 1000`` (never double math — 1e18 ns exceeds 2^53),
     truncating toward zero exactly like DuckDB's ns→us read path, so
-    oracle comparisons stay exact.
-    """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(path)
-    # Cache key notes (ADVICE r11): the stat key is the stats of the
-    # top-level path — every engine table is a SINGLE parquet file
-    # written via whole-file replacement by the deterministic generator,
-    # so an in-place rewrite of a contained part-file (which would not
-    # change a directory's mtime/size) cannot occur here.  The session
-    # key is the SparkSession OBJECT (not id(spark)): the held
-    # reference pins the object, so a later session can never reuse a
-    # garbage-collected id and alias a stale view entry.  Sessions per
-    # process are few; the pinned objects are negligible.
-    key = (spark, path, st.st_mtime_ns, st.st_size)
-    view = _VIEW_CACHE.get(key)
-    if view is not None:
-        try:
-            return spark.table(view)
-        except AnalysisException:
-            # the view was dropped (or the catalog was cleared):
-            # fall through and re-register.  Narrow catch (ADVICE r11) —
-            # any other analyzer/runtime error propagates instead of
-            # being masked by a silent re-register.
-            _VIEW_CACHE.pop(key, None)
-    df = spark.read.schema(_table_schema(spark, path)).parquet(path)
-    for c in _nanos_timestamp_cols(path):
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    view = f"__catalog_{name}_{abs(hash(key)) % 10**12}"
-    df.createOrReplaceTempView(view)
-    _VIEW_CACHE[key] = view
-    return spark.table(view)
-
-
-def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Registered temp-view NAME for a catalog table — the building
-    block for whole-query ``spark.sql`` construction (r12: one parsed
-    statement instead of a py4j round trip per DataFrame method; the
-    bench times construction, guide §1).  Shares ``load_table``'s
-    cache and invalidation key; the warm path costs ZERO py4j calls
-    (``os.stat`` only).  Call it ONLY inside a :func:`catalog_sql` build
-    callable: the warm path returns the cached name unchecked, and only
-    ``catalog_sql`` self-heals a view dropped behind us (it invalidates
-    the cache and rebuilds the text once).  A direct
-    ``spark.sql(f"... FROM {table_view(...)}")`` fails unrecoverably
-    on a dropped view."""
+    oracle comparisons stay exact."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     st = os.stat(path)
     key = (spark, path, st.st_mtime_ns, st.st_size)
     view = _VIEW_CACHE.get(key)
     if view is None:
-        load_table(spark, sf_dir, name)
-        view = _VIEW_CACHE[key]
+        df = spark.read.parquet(path)
+        for c in _nanos_timestamp_cols(path):
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
+        view = f"__catalog_{name}_{abs(hash(key)) % 10**12}"
+        df.createOrReplaceTempView(view)
+        _VIEW_CACHE[key] = view
     return view
 
 
-def catalog_sql(spark: SparkSession, build) -> DataFrame:
-    """``spark.sql`` over text produced by ``build()`` (a zero-arg
-    callable composing view names from :func:`table_view`).  One py4j
-    call on the happy path.  If a cached temp view was dropped (e.g.
-    the session catalog was reset), every ``_VIEW_CACHE`` entry for
-    this session is invalidated and the text is rebuilt once —
-    ``table_view`` then re-registers through ``load_table``, matching
-    the self-healing ``load_table`` itself has."""
+def _with_views(spark: SparkSession, run):
+    """``run()``, run once more after a dropped view.  A view dropped
+    behind the cache (or a cleared session catalog) surfaces as an
+    ``AnalysisException`` when ``run`` resolves its name; every cached
+    view of this session is then forgotten, and the second ``run``
+    re-registers the views it names.  The catch is narrow: any other
+    error propagates, and so does a second failure."""
     try:
-        return spark.sql(build())
+        return run()
     except AnalysisException:
         for k in [k for k in _VIEW_CACHE if k[0] is spark]:
-            _VIEW_CACHE.pop(k, None)
-        return spark.sql(build())
+            del _VIEW_CACHE[k]
+        return run()
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Catalog table ``name`` (``<sf_dir>/<name>.parquet``) as a
+    DataFrame over its registered view: one py4j call when warm.  Each
+    call yields a fresh relation, so two loads of one table self-join
+    with distinct expression IDs (a memoized DataFrame object would
+    alias them)."""
+    return _with_views(spark, lambda: spark.table(_table_view(spark, sf_dir, name)))
+
+
+def catalog_sql(spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    """``spark.sql(build(view))``, where ``view(name)`` returns the
+    registered temp-view name of catalog table ``name`` under ``sf_dir``.
+    This is the one way SQL text names a catalog table.  A whole query
+    is one parsed statement and ``view`` makes no py4j call when warm,
+    so a warm construction costs the ``spark.sql`` call alone.  After a
+    dropped view ``build`` runs again (:func:`_with_views`), so it must
+    only compose text."""
+    return _with_views(
+        spark, lambda: spark.sql(build(lambda name: _table_view(spark, sf_dir, name)))
+    )
 
 
 def epoch_us(col) -> F.Column:
@@ -213,12 +178,6 @@ def epoch_us(col) -> F.Column:
     return F.timestamp_diff(
         "MICROSECOND", F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"), col
     )
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
 def register_views(

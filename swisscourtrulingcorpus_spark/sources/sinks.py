@@ -99,7 +99,6 @@ def write_partitioned(
     path: str,
     partition_by: list[str] | None = None,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     compression: str | None = None,
 ) -> None:
     """Split-partitioned export (S10/S11): the reference writes one JSONL
@@ -109,8 +108,8 @@ def write_partitioned(
     (e.g. ``gzip``/``zstd`` for json, ``zstd`` for parquet) replaces the
     external `xz -T0` step with codec-on-write — Spark has no xz codec,
     and a post-hoc recompression pass would serialize through one host
-    anyway."""
-    writer = df.write.mode(mode).format(fmt)
+    anyway.  Overwrites ``path``."""
+    writer = df.write.mode("overwrite").format(fmt)
     if compression:
         writer = writer.option("compression", compression)
     if partition_by:

@@ -219,8 +219,8 @@ def test_dedup_self_joins_reuse_exchange(spark, sf_dir):
     hang both sides off ONE exchange (ReusedExchange) — without it the
     whole shingle+hash map pipeline executes once per join side."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
+        catalog_sql,
         load_table,
-        table_view,
     )
     from swisscourtrulingcorpus_spark.operators.dedup import (
         minhash_lsh_candidates,
@@ -228,14 +228,15 @@ def test_dedup_self_joins_reuse_exchange(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    view = table_view(spark, sf_dir, "documents")
     spread = spark.sparkContext.defaultParallelism
     for df in (
         minhash_lsh_candidates(docs, "text", "doc_id", spread=True),
-        spark.sql(
-            ngram_jaccard_pairs_sql(
-                view, "text", "doc_id", spread_partitions=spread
-            )
+        catalog_sql(
+            spark,
+            sf_dir,
+            lambda view: ngram_jaccard_pairs_sql(
+                view("documents"), "text", "doc_id", spread_partitions=spread
+            ),
         ),
     ):
         plan = _final_plan(df)

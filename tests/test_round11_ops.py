@@ -571,3 +571,25 @@ def test_load_table_view_cache_selfjoin_and_invalidation(spark, tmp_path):
     spark.range(8).select(F.col("id").alias("k")).write.mode("overwrite").parquet(p)
     c = load_table(spark, sf_dir, name)
     assert c.count() == 8
+
+
+def test_load_table_rewrite_to_nanos_timestamp(spark, tmp_path):
+    """A file rewritten in place with a TIMESTAMP(NANOS) column where
+    it had a plain int64 one loads that column as a timestamp: the
+    nanosecond columns are read from the file the view scans, not
+    remembered per path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from swisscourtrulingcorpus_spark.sources.catalog import load_table
+
+    sf_dir, ns = str(tmp_path), 1_700_000_000_000_000_000
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2], pa.int64())}), p)
+    assert load_table(spark, sf_dir, "t").dtypes == [("ts", "bigint")]
+
+    pq.write_table(pa.table({"ts": pa.array([ns] * 3, pa.timestamp("ns"))}), p)
+    df = load_table(spark, sf_dir, "t")
+    assert df.dtypes == [("ts", "timestamp")]
+    rows = df.selectExpr("unix_micros(ts) AS us").collect()
+    assert [r.us for r in rows] == [ns // 1000] * 3

@@ -71,15 +71,16 @@ def test_ngram_postings_exchange_reused(spark, sf_dir):
     from swisscourtrulingcorpus_spark.operators.dedup import (
         ngram_jaccard_pairs_sql,
     )
-    from swisscourtrulingcorpus_spark.sources.catalog import table_view
+    from swisscourtrulingcorpus_spark.sources.catalog import catalog_sql
 
-    docs = table_view(spark, sf_dir, "documents")
     spread = spark.sparkContext.defaultParallelism
     plan = _final_plan(
-        spark.sql(
-            ngram_jaccard_pairs_sql(
-                docs, "text", "doc_id", spread_partitions=spread
-            )
+        catalog_sql(
+            spark,
+            sf_dir,
+            lambda view: ngram_jaccard_pairs_sql(
+                view("documents"), "text", "doc_id", spread_partitions=spread
+            ),
         )
     )
     # the postings exchange must be shared by the self-join sides (one

@@ -7,9 +7,9 @@ optimized plans (``plans/parity.py::plan_fingerprint``) are pinned in
 gates built on the SQL-text operator wrappers and the pipeline outputs
 here, every gate in the slow registry lint.
 
-Also covers the catalog helpers: ``table_view`` returns a registered
-name with a warm zero-py4j path, and ``catalog_sql`` self-heals when a
-cached temp view is dropped behind the cache.
+Also covers the catalog binding: SQL text names a catalog table only
+through ``catalog_sql``'s ``view`` callable, and both ``load_table``
+and ``catalog_sql`` re-register a temp view dropped behind the cache.
 """
 
 from __future__ import annotations
@@ -235,20 +235,86 @@ def test_lazy_tables_defer_and_memoize(spark):
         assert copy["citation"] is c1
 
 
-def test_table_view_and_catalog_sql_self_heal(spark, sf_dir):
+def test_load_table_and_catalog_sql_recover_dropped_view(spark, sf_dir):
+    """A catalog view dropped behind the cache is re-registered by both
+    public entry points, and each returns rows: ``load_table`` on its
+    next call, ``catalog_sql`` by running ``build`` once more."""
     from swisscourtrulingcorpus_spark.sources.catalog import (
         catalog_sql,
-        table_view,
+        load_table,
     )
 
-    v1 = table_view(spark, sf_dir, "region")
-    assert spark.sql(f"SELECT count(1) AS n FROM {v1}").collect()[0].n > 0
-    # drop the view behind the cache: catalog_sql must re-register
-    spark.catalog.dropTempView(v1)
-    out = catalog_sql(
-        spark, lambda: f"SELECT count(1) AS n FROM {table_view(spark, sf_dir, 'region')}"
-    )
-    assert out.collect()[0].n > 0
+    names = []
+
+    def build(view):
+        names.append(view("region"))
+        return f"SELECT count(1) AS n FROM {names[-1]}"
+
+    n = catalog_sql(spark, sf_dir, build).collect()[0].n
+    assert n > 0 and len(names) == 1
+    region = names[0]
+
+    spark.catalog.dropTempView(region)
+    assert load_table(spark, sf_dir, "region").count() == n
+    assert spark.catalog.tableExists(region)
+
+    spark.catalog.dropTempView(region)
+    assert catalog_sql(spark, sf_dir, build).collect()[0].n == n
+    assert names == [region] * 3  # the failed build, then the re-run
+    assert spark.catalog.tableExists(region)
+
+
+def test_catalog_binding_is_private():
+    """No module outside ``sources/catalog.py`` (package, tests, tools,
+    bench) imports or reaches the private view helper or the view
+    cache, and ``catalog.py`` keeps one module-level cache and no
+    ``lru_cache``: ``catalog_sql`` is the one way SQL text names a
+    catalog table, and a dropped view is recovered wherever it is."""
+    import ast
+    import pathlib
+
+    from swisscourtrulingcorpus_spark.sources import catalog
+
+    private = {"table_view", "_table_view", "_VIEW_CACHE"}
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    paths = [
+        *_package_modules(),
+        *repo.joinpath("tests").rglob("*.py"),
+        *repo.joinpath("tools").rglob("*.py"),
+        repo / "bench.py",
+    ]
+    bad = []
+    for path in paths:
+        if path.name == "catalog.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                used = {a.name for a in node.names}
+            elif isinstance(node, ast.Attribute):
+                used = {node.attr}
+            else:
+                continue
+            bad += [f"{path.name}:{node.lineno}: {n}" for n in used & private]
+    assert not bad, bad
+
+    tree = ast.parse(pathlib.Path(catalog.__file__).read_text())
+    caches = [
+        t.id
+        for n in tree.body
+        if isinstance(n, (ast.Assign, ast.AnnAssign))
+        and isinstance(n.value, (ast.Dict, ast.List, ast.Set))
+        for t in (n.targets if isinstance(n, ast.Assign) else [n.target])
+    ]
+    assert caches == ["_VIEW_CACHE"], caches
+    decorated = [
+        f"{n.name}: {ast.unparse(d)}"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef)
+        for d in n.decorator_list
+    ]
+    assert not decorated, decorated
+    assert "lru_cache" not in ast.unparse(tree)
+    assert not hasattr(catalog, "table_view")
 
 
 #: the Column forms the hashing module no longer has: its helpers are
